@@ -28,9 +28,13 @@ groups and produces byte-identical output (tests/test_segments.py).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import sys
+import threading
 import time
+import weakref
 from dataclasses import dataclass
 
 import numpy as np
@@ -38,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import empty_df
+from ..session import empty_df, local_relation
 from .builder import InvertedIndex
 from .codec import (
     decode_blocks,
@@ -96,6 +100,11 @@ class SegmentIndex:
     # tokenize identically to the postings or rankings silently
     # diverge; recorded in the manifest, defaulted by the handlers
     tok_kwargs: dict | None = None
+    # driver-side reader of the local serving tier (_LocalReader): opened
+    # at the first query, reopened when manifest.json changes
+    _reader: "_LocalReader | None" = dataclasses.field(
+        default=None, init=False, repr=False, compare=False
+    )
 
     @classmethod
     def load(cls, path: str) -> "SegmentIndex":
@@ -105,20 +114,71 @@ class SegmentIndex:
             raise ValueError(f"codec version mismatch: {m['codec_version']}")
         if set(m["completed_groups"]) != set(range(m["n_groups"])):
             raise ValueError("index incomplete — resume the build first")
-        return cls(
-            path=path,
-            n_docs=m["n_docs"],
-            avgdl=m["avgdl"],
-            n_segments=m["n_segments"],
-            seg_size=m["seg_size"],
-            has_positions=m.get("has_positions"),
-            has_payloads=m.get("has_payloads"),
-            value_cols=tuple(m.get("value_cols", [])),
-            string_cols=tuple(m.get("string_cols", [])),
-            store_cols=tuple(m.get("store_cols", [])),
-            store_schema=m.get("store_schema"),
-            tok_kwargs=m.get("tok_kwargs"),
-        )
+        return cls(path=path, **_manifest_fields(m))
+
+    def reader(self, check: bool = True) -> "_LocalReader":
+        """The driver-side reader of this index (see the local-tier
+        block below). ``check`` stats manifest.json and reopens the
+        reader when the file changed since it was opened — every
+        delete_docs / update_docs / compaction commit rewrites it — and
+        then refreshes this handle's manifest fields, so a compacted
+        index's live-doc statistics take effect. A query checks once,
+        at its first sidecar lookup; its later steps pass
+        ``check=False``."""
+        rd = self._reader
+        if rd is not None and not check:
+            return rd
+        key = _manifest_key(self.path)
+        if key is None:
+            # no manifest to key on: nothing can be cached safely
+            return _LocalReader(self.path, None)
+        if rd is not None and rd.key == key:
+            return rd
+        with _REOPEN_LOCK:  # one reopen per commit, however many queries race it
+            rd = self._reader
+            if rd is None or rd.key != key:
+                rd = _LocalReader(self.path, key)
+                if {"n_docs", "avgdl", "n_segments", "seg_size"} <= rd.manifest.keys():
+                    # one dict update: a racing query never sees half of it
+                    self.__dict__.update(_manifest_fields(rd.manifest))
+                self._reader = rd
+        return rd
+
+    def __getstate__(self):
+        # the reader is driver-side state: never ship it in a closure
+        state = dict(self.__dict__)
+        state["_reader"] = None
+        return state
+
+
+_REOPEN_LOCK = threading.Lock()
+
+
+def _manifest_fields(m: dict) -> dict:
+    """SegmentIndex constructor fields recorded in a manifest."""
+    return dict(
+        n_docs=m["n_docs"],
+        avgdl=m["avgdl"],
+        n_segments=m["n_segments"],
+        seg_size=m["seg_size"],
+        has_positions=m.get("has_positions"),
+        has_payloads=m.get("has_payloads"),
+        value_cols=tuple(m.get("value_cols", [])),
+        string_cols=tuple(m.get("string_cols", [])),
+        store_cols=tuple(m.get("store_cols", [])),
+        store_schema=m.get("store_schema"),
+        tok_kwargs=m.get("tok_kwargs"),
+    )
+
+
+def _manifest_key(path: str) -> tuple | None:
+    """Identity of an index's manifest.json (None if absent): every
+    manifest write is a tmp-file rename, so any commit changes it."""
+    try:
+        st = os.stat(_manifest_path(path))
+    except OSError:
+        return None
+    return (st.st_dev, st.st_ino, st.st_mtime_ns, st.st_size)
 
 
 def _manifest_path(path: str) -> str:
@@ -585,16 +645,42 @@ SINGLE_STAGE_MAX_SEGMENTS = 64
 SINGLE_STAGE_MAX_BYTES = 64 << 20
 
 # ---------------------------------------------------------------------------
-# driver-local serving tier (r07): when the bytes a query must touch are
+# driver-local serving tier: when the bytes a query must touch are
 # provably bounded (estimated DRIVER-SIDE from the termstats sidecar and
-# stream-directory sizes, before anything is read), the pruned postings/
-# doclen rows are read with pyarrow and the SAME per-segment kernels run
+# stream sizes, before anything is read), the pruned postings/doclen
+# rows are read with pyarrow and the SAME per-segment kernels run
 # in-process — the Lucene/Solr shard-serving shape, where a bounded top-k
 # never launches a distributed job. Above the byte budget (head terms at
 # 10^12 docs, large indexes) every surface falls back to the unchanged
 # Spark fan-out, so the 100-TB plan shape is untouched. Same kernels +
 # same inputs = bit-identical scores (tests/test_local_tier.py pins
 # local == exchange-path equality across surfaces).
+#
+# The reader. Each SegmentIndex owns one _LocalReader, the state Solr
+# keeps per searcher (opened once per commit, reused across requests):
+# - lifetime: opened lazily by the first query (never at build time) and
+#   reopened when manifest.json changes. Every commit to a packed index
+#   (build, delete_docs, update_docs, compact_packed) rewrites the
+#   manifest by tmp-file rename, so a query checks the manifest's
+#   identity with ONE os.stat and a stale reader is dropped whole.
+# - contents: the pyarrow datasets of postings and termstats (discovered
+#   once; the Spark path shares only the termstats one), the byte size
+#   of every stream directory the estimate counts (stat-walked once, so
+#   a query walks nothing), and the doclens, tombstone, docvalues and
+#   ordinal streams plus the facet dictionaries, each read whole on its
+#   first local-tier use and kept while the bound below allows.
+#   Term-pruned postings stay a per-query read.
+# - memory bound: the streams and dictionaries that ALL open readers of
+#   the process hold share one pool, capped at the local-tier budget
+#   (_HELD, charged at their in-memory size). A stream that would push
+#   the pool past the budget is read per query and not kept, so the
+#   driver holds at most one budget of streams however many handles and
+#   generations are open. A dropped
+#   reader returns its bytes to the pool. Datasets and sizes are
+#   per-file metadata and are not charged. No knob beyond the budget.
+# - payoff: the reader saves work only while one handle serves several
+#   queries between commits; a handle that sees one query per commit
+#   reads as much as it did without one.
 # ---------------------------------------------------------------------------
 
 # Driver byte budget for the local tier. ~64 MB decodes in well under a
@@ -627,6 +713,161 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _read_stream(path: str, rel: str, hive: bool = True):
+    """(seg, doc_lo, data) columns of one dense per-segment stream
+    directory (doclens, deletes, docvalues, ordinal streams) read with
+    pyarrow; None if the directory is absent."""
+    import pyarrow.dataset as ds
+
+    d = os.path.join(path, rel)
+    if not os.path.isdir(d):
+        return None
+    tbl = ds.dataset(
+        d, format="parquet", partitioning="hive" if hive else None
+    ).to_table(columns=["seg", "doc_lo", "dl_data"])
+    return (
+        tbl.column("seg").to_numpy().astype(np.int64),
+        tbl.column("doc_lo").to_numpy().astype(np.int64),
+        tbl.column("dl_data").to_numpy(zero_copy_only=False),
+    )
+
+
+def _dv_rel(col: str, subdir: str = "docvalues") -> str:
+    """Stream directory of a numeric (docvalues) or ordinal
+    (docvalues_str) column, relative to the index root."""
+    if subdir == "docvalues":
+        return os.path.join(subdir, col)
+    return os.path.join(subdir, col, "streams")
+
+
+class _Held:
+    """Bytes of streams and dictionaries held by the process's open
+    readers — one pool, capped at the local-tier budget."""
+
+    def __init__(self):
+        self.total = 0
+        self._lock = threading.RLock()  # re-entrant: release may run from GC
+
+    def take(self, charge: list, n: int) -> bool:
+        """Charge ``n`` bytes to a reader's ``charge`` cell if the pool
+        stays within the budget; False (nothing charged) otherwise."""
+        with self._lock:
+            if self.total + n > _local_tier_budget():
+                return False
+            self.total += n
+            charge[0] += n
+            return True
+
+    def release(self, charge: list) -> None:
+        with self._lock:
+            self.total -= charge[0]
+            charge[0] = 0
+
+
+_HELD = _Held()
+
+
+def _stream_nbytes(st) -> int:
+    """In-memory bytes of one (seg, doc_lo, data) stream."""
+    if st is None:
+        return 0
+    seg, doc_lo, data = st
+    return (
+        seg.nbytes + doc_lo.nbytes + data.nbytes
+        + sum(sys.getsizeof(b) for b in data)
+    )
+
+
+def _dict_nbytes(d: dict) -> int:
+    """In-memory bytes of one ord -> value dictionary."""
+    return sys.getsizeof(d) + sum(
+        sys.getsizeof(o) + sys.getsizeof(v) for o, v in d.items()
+    )
+
+
+class _LocalReader:
+    """Driver-side reader of one packed index directory for the local
+    tier (see the block comment above): lazily filled caches, valid for
+    one manifest identity ``key``, safe to share between threads."""
+
+    def __init__(self, path: str, key: tuple | None):
+        self.path = path
+        self.key = key
+        self.manifest = _read_manifest(path) or {}
+        self._cache: dict = {}
+        self._lock = threading.RLock()
+        # bytes this reader holds in the pool, returned when it dies
+        self.pool, self.charge = _HELD, [0]
+        weakref.finalize(self, self.pool.release, self.charge)
+
+    def _cached(self, key: tuple, load, nbytes=None):
+        """``load()``, computed once per reader (under its lock, so
+        racing first queries read a stream once). With ``nbytes`` the
+        value is held only if its size fits the _HELD pool; otherwise
+        it is returned uncached and the next query reads it again."""
+        try:
+            return self._cache[key]
+        except KeyError:
+            pass
+        with self._lock:
+            if key in self._cache:
+                return self._cache[key]
+            value = load()
+            if nbytes is None or self.pool.take(self.charge, nbytes(value)):
+                self._cache[key] = value
+            return value
+
+    def dataset(self, rel: str):
+        """pyarrow dataset of ``postings`` or ``termstats``, discovered
+        once; None if the directory is absent (pre-sidecar index)."""
+
+        def load():
+            import pyarrow.dataset as ds
+
+            d = os.path.join(self.path, rel)
+            if not os.path.isdir(d):
+                return None
+            return ds.dataset(
+                d, format="parquet",
+                partitioning="hive" if rel == "postings" else None,
+            )
+
+        return self._cached(("dataset", rel), load)
+
+    def size(self, rel: str) -> int:
+        """On-disk bytes of one stream directory, walked once."""
+        return self._cached(
+            ("size", rel), lambda: _dir_bytes(os.path.join(self.path, rel))
+        )
+
+    def stream(self, rel: str):
+        """(seg, doc_lo, data) of one dense stream, read once if it
+        fits the _HELD pool; None if absent (the deletes stream of an
+        undeleted index)."""
+        return self._cached(
+            ("stream", rel),
+            lambda: _read_stream(self.path, rel, hive=rel != "deletes"),
+            _stream_nbytes,
+        )
+
+    def dictionary(self, col: str) -> dict:
+        """ord -> value of one ordinal docvalues column, read once if
+        it fits the _HELD pool."""
+
+        def load():
+            import pyarrow.parquet as pq
+
+            tbl = pq.read_table(
+                os.path.join(self.path, "docvalues_str", col, "dict"),
+                columns=["value", "ord"],
+            )
+            return dict(
+                zip(tbl.column("ord").to_pylist(), tbl.column("value").to_pylist())
+            )
+
+        return self._cached(("dictionary", col), load, _dict_nbytes)
+
+
 def _local_tier_budget() -> int:
     """Re-read the env override at call time so tests/ops can flip the
     tier without re-importing; falls back to the module default."""
@@ -637,24 +878,24 @@ def _local_tier_budget() -> int:
 def _local_estimate(
     pairs: list[tuple["SegmentIndex", list[str]]],
     with_subs: bool,
-    extra_dirs: list[str] = (),
+    extra_streams: list[tuple["SegmentIndex", str]] = (),
     stats_list: list | None = None,
 ) -> int | None:
     """Upper-bound estimate of the bytes a local-tier execution would
     read: per-term postings (df/cf from the termstats sidecar — the
-    same driver-side pyarrow read every query already does for idf) +
-    the full doclens / deletes streams + any docvalues/ordinal stream
-    directories the caller needs. None = no sidecar (pre-sidecar
-    index) -> distributed path. ``stats_list`` (aligned with
-    ``pairs``) lets callers that already fetched the sidecar stats
-    for idf skip a second read — dataset discovery alone costs
-    ~10-20 ms per read."""
+    same lookup every query already does for idf) + the full doclens /
+    deletes streams + any docvalues/ordinal streams (``extra_streams``:
+    (index, stream directory) pairs) the caller needs. Stream sizes come
+    from the index's reader, walked once per commit. None = no sidecar
+    (pre-sidecar index) -> distributed path. ``stats_list`` (aligned
+    with ``pairs``) lets callers that already fetched the sidecar stats
+    for idf skip a second lookup."""
     total = 0
     for i, (si, terms) in enumerate(pairs):
         stats = (
             stats_list[i]
             if stats_list is not None
-            else _sidecar_stats(si.path, terms)
+            else _sidecar_stats(si, terms)
         )
         if stats is None:
             return None
@@ -665,24 +906,47 @@ def _local_estimate(
                     int(df_t) * _EST_BYTES_POS_OFF
                     + int(cf_t) * _EST_BYTES_PER_OCCURRENCE
                 )
-        total += _dir_bytes(os.path.join(si.path, "doclens"))
-        total += _dir_bytes(_deletes_dir(si.path))
-    for d in extra_dirs:
-        total += _dir_bytes(d)
+        rd = si.reader(check=False)
+        total += rd.size("doclens") + rd.size("deletes")
+    for si, rel in extra_streams:
+        total += si.reader(check=False).size(rel)
     return total
 
 
-def _local_ok(
+def _tier(
     pairs: list[tuple["SegmentIndex", list[str]]],
     with_subs: bool,
-    extra_dirs: list[str] = (),
+    extra_streams: list[tuple["SegmentIndex", str]] = (),
     stats_list: list | None = None,
-) -> bool:
+) -> tuple[bool, int | None]:
+    """The serving-tier decision for what a query touches: (local,
+    estimate) — local when the byte estimate fits the budget."""
+    est = _local_estimate(pairs, with_subs, extra_streams, stats_list)
     budget = _local_tier_budget()
-    if budget <= 0:
-        return False
-    est = _local_estimate(pairs, with_subs, extra_dirs, stats_list)
-    return est is not None and est <= budget
+    return 0 < budget and est is not None and est <= budget, est
+
+
+def _mark_big(unified, local: bool, est: int | None):
+    """Route a big pruned Spark frame to the exchange path (parallel
+    kernels) instead of one serial coalesce(1) task; returns it."""
+    if not local and est is not None and est > SINGLE_STAGE_MAX_BYTES:
+        unified._spl_big_frame = True
+    return unified
+
+
+def _gen_stats(
+    gens: list[tuple[int, "SegmentIndex"]], pooled: bool
+) -> tuple[int, float]:
+    """(n_docs, avgdl) to score with: the one index's own, or pooled
+    over generations (disjoint doc sets: n sums, avgdl is the
+    token-weighted mean). Read after the query's sidecar lookup, which
+    refreshes a handle whose manifest changed."""
+    if not pooled:
+        si = gens[0][1]
+        return si.n_docs, si.avgdl
+    n = sum(si.n_docs for _, si in gens)
+    total_tokens = sum(si.avgdl * si.n_docs for _, si in gens)
+    return n, total_tokens / n if n else 0.0
 
 
 _UNIFIED_COLS = [
@@ -693,25 +957,22 @@ _SUB_COLS = ["pos_off", "pos_data", "pay_data"]
 
 
 def _unified_part(
-    n: int,
-    seg: np.ndarray,
-    kind: str,
-    field: str,
-    with_subs: bool,
-    **cols,
+    seg: np.ndarray, kind: str, field: str, with_subs: bool, cols: dict
 ) -> pd.DataFrame:
-    """One _kind slice of the local unified frame, with every column of
-    the Spark twin present (None-filled where that kind has no data) so
-    the kernels see the exact applyInPandas shape."""
-    out = pd.DataFrame({"seg": seg.astype(np.int64)})
-    out["_kind"] = kind
-    out["fld"] = field
+    """One _kind slice of the local unified frame in ONE constructor,
+    with every column of the Spark twin present (None-filled where that
+    kind has no data) so the kernels see the exact applyInPandas
+    shape. ``seg`` is already generation-namespaced."""
+    n = len(seg)
+    none = np.full(n, None, dtype=object)
+    data = {
+        "seg": seg,
+        "_kind": np.full(n, kind, dtype=object),
+        "fld": np.full(n, field, dtype=object),
+    }
     for c in _UNIFIED_COLS[3:] + (_SUB_COLS if with_subs else []):
-        if c in cols:
-            out[c] = cols[c]
-        else:
-            out[c] = pd.Series([None] * n, dtype="object")
-    return out
+        data[c] = cols.get(c, none)
+    return pd.DataFrame(data)
 
 
 def _unified_pdf(
@@ -723,73 +984,39 @@ def _unified_pdf(
     """Local-tier twin of _unified_frame: the SAME rows (term-pruned
     postings + doclens + tombstones, per-generation seg namespacing,
     identical column set and within-segment row order — postings files
-    are (seg, term)-sorted) assembled driver-side with pyarrow."""
+    are (seg, term)-sorted) assembled driver-side from each index's
+    reader: the postings read is the only per-query I/O."""
     import pyarrow.dataset as ds
 
     if not term_list:
         term_list = ["\x00none"]  # empty isin crashes pyarrow's set bind
-    parts: list[pd.DataFrame] = []
     post_cols = [
         "seg", "term", "df", "block_last", "block_max", "block_off", "data",
     ] + (_SUB_COLS if with_subs else [])
+    parts: list[pd.DataFrame] = []
     for gen_id, si in gens:
-        tbl = ds.dataset(
-            os.path.join(si.path, "postings"),
-            format="parquet",
-            partitioning="hive",
-        ).to_table(columns=post_cols, filter=ds.field("term").isin(term_list))
-        pdf = tbl.to_pandas()
-        kw = {
-            "term": pdf["term"].astype(object),
-            "df": pdf["df"].to_numpy(np.int64),
-            "block_last": pdf["block_last"].astype(object),
-            "block_max": pdf["block_max"].astype(object),
-            "block_off": pdf["block_off"].astype(object),
-            "data": pdf["data"].astype(object),
+        tbl = si.reader(check=False).dataset("postings").to_table(
+            columns=post_cols, filter=ds.field("term").isin(term_list)
+        )
+        cols = {
+            c: tbl.column(c).to_numpy(zero_copy_only=False)
+            for c in post_cols[1:]
         }
-        if with_subs:
-            kw.update(
-                pos_off=pdf["pos_off"].astype(object),
-                pos_data=pdf["pos_data"].astype(object),
-                pay_data=pdf["pay_data"].astype(object),
-            )
+        cols["df"] = cols["df"].astype(np.int64)
+        seg = tbl.column("seg").to_numpy().astype(np.int64)
         parts.append(
-            _unified_part(
-                len(pdf),
-                pdf["seg"].to_numpy(np.int64) + gen_id * 1_000_000,
-                "post", field, with_subs, **kw,
-            )
+            _unified_part(seg + gen_id * 1_000_000, "post", field, with_subs, cols)
         )
-    for gen_id, si in gens:
-        tbl = ds.dataset(
-            os.path.join(si.path, "doclens"),
-            format="parquet",
-            partitioning="hive",
-        ).to_table(columns=["seg", "doc_lo", "dl_data"])
-        pdf = tbl.to_pandas()
-        parts.append(
-            _unified_part(
-                len(pdf),
-                pdf["seg"].to_numpy(np.int64) + gen_id * 1_000_000,
-                "dl", field, with_subs,
-                doc_lo=pdf["doc_lo"].to_numpy(np.int64),
-                data=pdf["dl_data"].astype(object),
-            )
-        )
-    for gen_id, si in gens:
-        ddir = _deletes_dir(si.path)
-        if os.path.isdir(ddir):
-            tbl = ds.dataset(ddir, format="parquet").to_table(
-                columns=["seg", "doc_lo", "dl_data"]
-            )
-            pdf = tbl.to_pandas()
+    for kind, rel in (("dl", "doclens"), ("del", "deletes")):
+        for gen_id, si in gens:
+            st = si.reader(check=False).stream(rel)
+            if st is None:
+                continue
+            seg, doc_lo, data = st
             parts.append(
                 _unified_part(
-                    len(pdf),
-                    pdf["seg"].to_numpy(np.int64) + gen_id * 1_000_000,
-                    "del", field, with_subs,
-                    doc_lo=pdf["doc_lo"].to_numpy(np.int64),
-                    data=pdf["dl_data"].astype(object),
+                    seg + gen_id * 1_000_000, kind, field, with_subs,
+                    {"doc_lo": doc_lo, "data": data},
                 )
             )
     return pd.concat(parts, ignore_index=True)
@@ -803,25 +1030,15 @@ def _dv_pdf(
     seg_offset: int = 0,
 ) -> pd.DataFrame:
     """Local-tier twin of _dv_frame (one numeric/ordinal docvalues
-    stream shaped as _kind='dv' rows)."""
-    import pyarrow.dataset as ds
-
-    base = (
-        os.path.join(si.path, subdir, col)
-        if subdir == "docvalues"
-        else os.path.join(si.path, subdir, col, "streams")
-    )
-    tbl = ds.dataset(base, format="parquet", partitioning="hive").to_table(
-        columns=["seg", "doc_lo", "dl_data"]
-    )
-    pdf = tbl.to_pandas()
+    stream shaped as _kind='dv' rows), from the index's reader."""
+    rel = _dv_rel(col, subdir)
+    st = si.reader(check=False).stream(rel)
+    if st is None:
+        raise FileNotFoundError(f"no {rel!r} stream under {si.path!r}")
+    seg, doc_lo, data = st
     return _unified_part(
-        len(pdf),
-        pdf["seg"].to_numpy(np.int64) + seg_offset,
-        "dv", "", with_subs,
-        term=pd.Series([col] * len(pdf), dtype="object"),
-        doc_lo=pdf["doc_lo"].to_numpy(np.int64),
-        data=pdf["dl_data"].astype(object),
+        seg + seg_offset, "dv", "", with_subs,
+        {"term": np.full(len(seg), col, dtype=object), "doc_lo": doc_lo, "data": data},
     )
 
 
@@ -863,62 +1080,98 @@ def _kernel_pdf(unified_pdf: pd.DataFrame, per_segment) -> pd.DataFrame | None:
     return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
 
 
+_TOPK_SCHEMA = "doc_id long, score double"
+
+
+def _empty_topk() -> pd.DataFrame:
+    return _topk_frame(np.array([], np.int64), np.array([], np.float64), 0)
+
+
 def _local_topk_frame(
-    spark: SparkSession,
     res: pd.DataFrame | None,
     k: int,
     round_to: int,
     after: tuple[float, int] | None = None,
-) -> DataFrame:
-    """Driver-side finalization of a local-tier top-k: the Spark tail
-    (round -> cursor re-check -> orderBy -> limit) over a bounded
-    local relation still scheduled one mini job (~70-100 ms on this
-    host); the identical semantics are pure arithmetic here —
-    _spark_round IS F.round (exact HALF_UP) and the (score desc,
-    doc_id asc) lexsort IS the orderBy — so a local-tier top-k query
-    runs ZERO Spark jobs (the returned pre-computed local relation
-    collects via executeCollect on the driver). The returned frame is
-    tagged ``_spl_local`` so bounded handler tails (seed exclusion +
-    re-top-k) can finalize driver-side instead of scheduling a
-    filter/orderBy/limit job over a local relation."""
+) -> pd.DataFrame:
+    """Driver-side finalization of a local-tier top-k: the Spark tail's
+    semantics (round -> cursor re-check -> orderBy -> limit) as pure
+    arithmetic — _spark_round IS F.round (exact HALF_UP) and the
+    (score desc, doc_id asc) lexsort IS the orderBy — so a local-tier
+    top-k runs ZERO Spark jobs. Returns the pandas answer; the public
+    surface converts it once (_relation), and bounded internal
+    consumers (rerank passes, handler seed exclusion) use it as is."""
     if res is None or not len(res):
-        out = empty_df(spark, "doc_id long, score double")
-        out._spl_local = True
-        return out
+        return _empty_topk()
     ids = res["doc_id"].to_numpy(np.int64)
     scores = _spark_round(res["score"].to_numpy(np.float64), round_to)
     if after is not None:
         s_a, d_a = float(after[0]), int(after[1])
         keep = (scores < s_a) | ((scores == s_a) & (ids > d_a))
         ids, scores = ids[keep], scores[keep]
-        if not len(ids):
-            out = empty_df(spark, "doc_id long, score double")
-            out._spl_local = True
-            return out
     order = np.lexsort((ids, -scores))[: min(k, len(ids))]
-    out = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ids[order], "score": scores[order]}),
-        schema="doc_id long, score double",
+    return pd.DataFrame({"doc_id": ids[order], "score": scores[order]})
+
+
+def _serve_topk(
+    spark: SparkSession,
+    unified,
+    per_segment,
+    k: int,
+    round_to: int,
+    n_segments_hint: int | None,
+    after: tuple[float, int] | None = None,
+):
+    """Run a (doc_id, score) top-k kernel and finalize it: driver-side
+    into a pandas answer on the local tier (``unified`` is a pandas
+    frame), or the Spark merge tail (round -> cursor re-check ->
+    orderBy -> limit) over the per-segment partials otherwise."""
+    if isinstance(unified, pd.DataFrame):
+        return _local_topk_frame(
+            _kernel_pdf(unified, per_segment), k, round_to, after=after
+        )
+    seg_tops = _apply_per_segment(
+        unified, per_segment, _TOPK_SCHEMA, n_segments_hint, spark=spark
     )
-    out._spl_local = True
+    out = seg_tops.select("doc_id", F.round("score", round_to).alias("score"))
+    if after is not None:
+        # idempotent re-check on the Spark-rounded score (the kernel
+        # already filtered on the numpy rounding of the same values)
+        s_a, d_a = float(after[0]), int(after[1])
+        out = out.filter(
+            (F.col("score") < s_a)
+            | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
+        )
+    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _relation(spark: SparkSession, out) -> DataFrame:
+    """A surface's (doc_id, score) answer as a DataFrame: a driver-side
+    (pandas) answer crosses into the JVM here, once, as a local
+    relation; a Spark plan passes through."""
+    if isinstance(out, pd.DataFrame):
+        return local_relation(spark, out, _TOPK_SCHEMA)
     return out
 
 
-def _local_dict_map(gens, col: str) -> dict:
-    """(gen, ord) -> value from the per-generation ordinal
+def _topk_pdf(out) -> pd.DataFrame:
+    """A bounded (doc_id, score) answer as a driver-side frame: a
+    local-tier answer as is, a Spark plan collected (k rows)."""
+    if isinstance(out, pd.DataFrame):
+        return out
+    rows = out.collect()
+    return pd.DataFrame(
+        {
+            "doc_id": np.array([int(r["doc_id"]) for r in rows], np.int64),
+            "score": np.array([float(r["score"]) for r in rows], np.float64),
+        }
+    )
+
+
+def _local_dicts(gens, col: str) -> dict:
+    """gen -> {ord -> value} from the per-generation ordinal
     dictionaries — the driver-side twin of the broadcast dictionary
     join (facet vocabularies are bounded by construction)."""
-    import pyarrow.parquet as pq
-
-    out: dict = {}
-    for gen_id, si in gens:
-        dpath = os.path.join(si.path, "docvalues_str", col, "dict")
-        tbl = pq.read_table(dpath, columns=["value", "ord"])
-        for v, o in zip(
-            tbl.column("value").to_pylist(), tbl.column("ord").to_pylist()
-        ):
-            out[(gen_id, int(o))] = v
-    return out
+    return {gen_id: si.reader(check=False).dictionary(col) for gen_id, si in gens}
 
 
 def _null_first_sorted(keys) -> list:
@@ -937,22 +1190,21 @@ def _local_facet_counts(spark, res, gens, facet_col: str) -> DataFrame:
     schema = f"{facet_col} string, cnt long"
     if res is None:
         return empty_df(spark, schema)
-    dmap = _local_dict_map(gens, facet_col)
+    dmap = _local_dicts(gens, facet_col)
     agg: dict = {}
     for g, o, c in zip(
         res["gen"].to_numpy(), res["ord"].to_numpy(), res["cnt"].to_numpy()
     ):
-        v = dmap.get((int(g), int(o)))
+        v = dmap[int(g)].get(int(o))
         agg[v] = agg.get(v, 0) + int(c)
     vals = _null_first_sorted(agg)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                facet_col: vals,
-                "cnt": np.array([agg[v] for v in vals], np.int64),
-            }
-        ),
-        schema=schema,
+    return local_relation(
+        spark,
+        {
+            facet_col: vals,
+            "cnt": np.array([agg[v] for v in vals], np.int64),
+        },
+        schema,
     )
 
 
@@ -964,13 +1216,13 @@ def _local_collapse_topk(spark, res, gens, collapse_col: str, k: int) -> DataFra
     schema = f"{collapse_col} string, doc_id long, score double"
     if res is None:
         return empty_df(spark, schema)
-    dmap = _local_dict_map(gens, collapse_col)
+    dmap = _local_dicts(gens, collapse_col)
     best: dict = {}
     for g, o, d, s in zip(
         res["gen"].to_numpy(), res["ord"].to_numpy(),
         res["doc_id"].to_numpy(), res["score"].to_numpy(),
     ):
-        v = dmap.get((int(g), int(o)))
+        v = dmap[int(g)].get(int(o))
         key = (float(s), -int(d))
         cur = best.get(v)
         if cur is None or key > cur[0]:
@@ -979,15 +1231,14 @@ def _local_collapse_topk(spark, res, gens, collapse_col: str, k: int) -> DataFra
     ids = np.array([best[v][1] for v in vals], np.int64)
     scores = np.array([best[v][2] for v in vals], np.float64)
     order = np.lexsort((ids, -scores))[: min(k, len(ids))]
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                collapse_col: [vals[i] for i in order],
-                "doc_id": ids[order],
-                "score": scores[order],
-            }
-        ),
-        schema=schema,
+    return local_relation(
+        spark,
+        {
+            collapse_col: [vals[i] for i in order],
+            "doc_id": ids[order],
+            "score": scores[order],
+        },
+        schema,
     )
 
 
@@ -1002,9 +1253,8 @@ def _local_facet_range(spark, res, start: int, gap: int, n_buckets: int) -> Data
             if 0 <= o < n_buckets:
                 cnts[o] += int(c)
     buckets = np.int64(start) + np.arange(n_buckets, dtype=np.int64) * np.int64(gap)
-    return spark.createDataFrame(
-        pd.DataFrame({"bucket": buckets, "cnt": cnts}),
-        schema="bucket long, cnt long",
+    return local_relation(
+        spark, {"bucket": buckets, "cnt": cnts}, "bucket long, cnt long"
     )
 
 
@@ -1049,15 +1299,14 @@ def _local_stats(spark, res, round_to: int) -> DataFrame:
     if n <= 0:
         return empty_df(spark, _STATS_SCHEMA)
     cnt, min_v, max_v, sum_v, mean, std = _stats_row(n, s, ss, mn, mx, round_to)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "cnt": [cnt], "min_v": [min_v], "max_v": [max_v],
-                "sum_v": [sum_v], "mean_v": [mean],
-                "stddev_v": pd.array([std], dtype=object),
-            }
-        ),
-        schema=_STATS_SCHEMA,
+    return local_relation(
+        spark,
+        {
+            "cnt": [cnt], "min_v": [min_v], "max_v": [max_v],
+            "sum_v": [sum_v], "mean_v": [mean],
+            "stddev_v": [std],
+        },
+        _STATS_SCHEMA,
     )
 
 
@@ -1071,11 +1320,10 @@ def _local_facet_query_counts(spark, res) -> DataFrame:
     for nm, c in zip(res["name"], res["cnt"].to_numpy()):
         agg[nm] = agg.get(nm, 0) + int(c)
     names = sorted(agg)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {"name": names, "cnt": np.array([agg[n] for n in names], np.int64)}
-        ),
-        schema=schema,
+    return local_relation(
+        spark,
+        {"name": names, "cnt": np.array([agg[n] for n in names], np.int64)},
+        schema,
     )
 
 
@@ -1087,14 +1335,14 @@ def _local_stats_facet(spark, res, gens, facet_col: str, round_to: int) -> DataF
     schema = f"{facet_col} string, " + _STATS_SCHEMA
     if res is None:
         return empty_df(spark, schema)
-    dmap = _local_dict_map(gens, facet_col)
+    dmap = _local_dicts(gens, facet_col)
     acc: dict = {}
     for g, o, c, sv, ssv, mnv, mxv in zip(
         res["gen"].to_numpy(), res["ord"].to_numpy(), res["cnt"].to_numpy(),
         res["s"].to_numpy(), res["ss"].to_numpy(),
         res["mn"].to_numpy(), res["mx"].to_numpy(),
     ):
-        v = dmap.get((int(g), int(o)))
+        v = dmap[int(g)].get(int(o))
         a = acc.get(v)
         if a is None:
             acc[v] = [int(c), float(sv), float(ssv), float(mnv), float(mxv)]
@@ -1108,19 +1356,18 @@ def _local_stats_facet(spark, res, gens, facet_col: str, round_to: int) -> DataF
     if not vals:
         return empty_df(spark, schema)
     rows = [_stats_row(*acc[v], round_to) for v in vals]
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                facet_col: vals,
-                "cnt": [r[0] for r in rows],
-                "min_v": [r[1] for r in rows],
-                "max_v": [r[2] for r in rows],
-                "sum_v": [r[3] for r in rows],
-                "mean_v": [r[4] for r in rows],
-                "stddev_v": pd.array([r[5] for r in rows], dtype=object),
-            }
-        ),
-        schema=schema,
+    return local_relation(
+        spark,
+        {
+            facet_col: vals,
+            "cnt": [r[0] for r in rows],
+            "min_v": [r[1] for r in rows],
+            "max_v": [r[2] for r in rows],
+            "sum_v": [r[3] for r in rows],
+            "mean_v": [r[4] for r in rows],
+            "stddev_v": [r[5] for r in rows],
+        },
+        schema,
     )
 
 
@@ -1156,9 +1403,8 @@ def _local_percentiles(spark, res, percentiles: list[float]) -> DataFrame:
             out_v.append(np.int64(values[idx]))
     if not out_p:
         return empty_df(spark, schema)
-    return spark.createDataFrame(
-        pd.DataFrame({"pct": np.array(out_p, np.float64), "value": out_v}),
-        schema=schema,
+    return local_relation(
+        spark, {"pct": np.array(out_p, np.float64), "value": out_v}, schema
     )
 
 
@@ -1174,13 +1420,13 @@ def _local_group_topn(
     )
     if res is None:
         return empty_df(spark, schema)
-    dmap = _local_dict_map(gens, group_col)
+    dmap = _local_dicts(gens, group_col)
     groups: dict = {}
     for g, o, d, s in zip(
         res["gen"].to_numpy(), res["ord"].to_numpy(),
         res["doc_id"].to_numpy(), res["score"].to_numpy(),
     ):
-        v = dmap.get((int(g), int(o)))
+        v = dmap[int(g)].get(int(o))
         groups.setdefault(v, []).append((-float(s), int(d), float(s)))
     heads = []
     for v, members in groups.items():
@@ -1199,7 +1445,7 @@ def _local_group_topn(
             rows["pos"].append(np.int32(pos))
             rows["doc_id"].append(np.int64(d))
             rows["score"].append(s)
-    return spark.createDataFrame(pd.DataFrame(rows), schema=schema)
+    return local_relation(spark, rows, schema)
 
 
 def _apply_per_segment(
@@ -1212,11 +1458,19 @@ def _apply_per_segment(
     """Run a per-segment Arrow kernel over the unified frame — one
     semantics, three physical strategies:
 
-    - local tier (serving latency, r07): ``unified`` is a pandas frame
-      (the byte-bounded pyarrow read, see _local_ok) — the same
-      kernels run in-process per segment and the bounded result
-      becomes a local relation; no scan stage, no exchange, no
-      per-query Arrow worker round-trip.
+    - local tier (serving latency): ``unified`` is a pandas frame and
+      the caller runs the same kernels in-process (_kernel_pdf) before
+      it gets here; no scan stage, no exchange, no per-query Arrow
+      worker round-trip. Its inputs come from the index's driver-side
+      reader (SegmentIndex.reader): opened by the first local-tier query
+      and kept until manifest.json changes — one os.stat per query
+      checks that, and delete_docs / update_docs / compact_packed all
+      rewrite the manifest. It holds the postings and termstats datasets
+      (discovered once), the stream sizes the tier estimate reads, and
+      the doclens, tombstone, docvalues and ordinal streams, each read
+      once while the process-wide pool of held streams stays within the
+      local-tier budget (past it, a stream is read per query); only
+      term-pruned postings are always read per query.
     - exchange path (the 10^12-doc default): groupBy(seg).applyInPandas
       scores segments in parallel across executors; the shuffle moves
       only the term-pruned rows.
@@ -1228,16 +1482,6 @@ def _apply_per_segment(
       doclen rows live in different FILES, so any n > 1 could split a
       segment across partitions and score it on partial inputs.
     """
-    if isinstance(unified, pd.DataFrame):
-        res = _kernel_pdf(unified, per_segment)
-        spark = spark or SparkSession.getActiveSession()
-        if res is None:
-            return empty_df(spark, schema)
-        # coalesce(1): createDataFrame slices even a 40-row local
-        # relation across defaultParallelism partitions, turning the
-        # downstream orderBy/limit into a 32-task job; one partition
-        # makes the tail a single-task job (~3x faster, measured)
-        return spark.createDataFrame(res, schema=schema).coalesce(1)
     if (
         not getattr(unified, "_spl_big_frame", False)
         and n_segments_hint is not None
@@ -1300,29 +1544,29 @@ def _deletes_dir(path: str) -> str:
     return os.path.join(path, "deletes")
 
 
-def _load_tombstones(path: str) -> dict[int, np.ndarray]:
-    """seg -> sorted unique absolute deleted doc ids, read driver-side
-    with pyarrow (no Spark job — tombstone streams are delete-by-id
-    scale, the same bounded-driver-read contract as the termstats
-    sidecar)."""
-    d = _deletes_dir(path)
-    if not os.path.isdir(d):
+def _tombstones_by_seg(stream) -> dict[int, np.ndarray]:
+    """seg -> sorted unique absolute deleted doc ids from the
+    (seg, doc_lo, data) columns of a deletes stream (None = no
+    deletions)."""
+    if stream is None:
         return {}
-    import pyarrow.dataset as ds
-
-    tbl = ds.dataset(d, format="parquet").to_table(
-        columns=["seg", "doc_lo", "dl_data"]
-    )
     out: dict[int, list] = {}
-    for seg, lo, blob in zip(
-        tbl["seg"].to_pylist(), tbl["doc_lo"].to_pylist(), tbl["dl_data"].to_pylist()
-    ):
+    for seg, lo, blob in zip(*stream):
         out.setdefault(int(seg), []).append(
             _decode_tombstones(bytes(blob), int(lo))
         )
     return {
         s: np.unique(np.concatenate(parts)) for s, parts in out.items()
     }
+
+
+def _load_tombstones(path: str) -> dict[int, np.ndarray]:
+    """seg -> sorted unique absolute deleted doc ids, read driver-side
+    with pyarrow (no Spark job — tombstone streams are delete-by-id
+    scale, the same bounded-driver-read contract as the termstats
+    sidecar). A fresh read: writers (delete_docs, compaction) must not
+    see a query reader's cache."""
+    return _tombstones_by_seg(_read_stream(path, "deletes", hive=False))
 
 
 def delete_docs(path: str, doc_ids) -> dict:
@@ -1445,18 +1689,37 @@ def delete_by_query(
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         return _segment_boolean_topk(pdf, tree, field_ctx, 1 << 40, k1, b)
 
-    matches = _apply_per_segment(
-        unified, per_segment, "doc_id long, score double",
-        _n_segments_hint(si, *(field_segments or {}).values()), spark=spark,
-    )
-    rows = matches.select("doc_id").limit(max_ids + 1).collect()
-    if len(rows) > max_ids:
+    if isinstance(unified, pd.DataFrame):
+        res = _kernel_pdf(unified, per_segment)
+        ids = [] if res is None else [int(d) for d in res["doc_id"]]
+    else:
+        matches = _apply_per_segment(
+            unified, per_segment, _TOPK_SCHEMA,
+            _n_segments_hint(si, *(field_segments or {}).values()), spark=spark,
+        )
+        rows = matches.select("doc_id").limit(max_ids + 1).collect()
+        ids = [r["doc_id"] for r in rows]
+    if len(ids) > max_ids:
         raise ValueError(
             f"delete_by_query matched more than max_ids={max_ids} docs — "
             "this is a corpus-scale delete; rebuild from a filtered "
             "corpus (or raise max_ids explicitly)"
         )
-    return delete_docs(path, [r["doc_id"] for r in rows])
+    return delete_docs(path, ids)
+
+
+def _records(
+    frame: pd.DataFrame, keys: list[str], defaults: dict | None = None
+) -> list[dict]:
+    """Rows of ``frame`` as {key: value} dicts, read column by column
+    (iterrows builds a Series per row); a key whose column is absent
+    reads as its ``defaults`` entry (None)."""
+    cols = [
+        frame[c].to_numpy() if c in frame.columns
+        else [(defaults or {}).get(c)] * len(frame)
+        for c in keys
+    ]
+    return [dict(zip(keys, vals)) for vals in zip(*cols)]
 
 
 def _deleted_from_pdf(pdf: pd.DataFrame) -> np.ndarray:
@@ -1465,13 +1728,11 @@ def _deleted_from_pdf(pdf: pd.DataFrame) -> np.ndarray:
     frames may stack duplicate del rows; np.unique dedups."""
     if "_kind" not in pdf.columns:
         return np.array([], np.int64)
-    rows = pdf[pdf["_kind"] == "del"]
-    if len(rows) == 0:
+    at = np.flatnonzero(pdf["_kind"].to_numpy() == "del")
+    if len(at) == 0:
         return np.array([], np.int64)
-    parts = [
-        _decode_tombstones(r["data"], int(r["doc_lo"]))
-        for _, r in rows.iterrows()
-    ]
+    data, lo = pdf["data"].to_numpy(), pdf["doc_lo"].to_numpy()
+    parts = [_decode_tombstones(data[i], int(lo[i])) for i in at]
     return np.unique(np.concatenate(parts))
 
 
@@ -1669,21 +1930,18 @@ def _segment_topk(
     avgdl: float,
 ) -> pd.DataFrame:
     """Exact top-k for one segment (see _segment_topk_core)."""
-    dl_row = pdf[pdf["_kind"] == "dl"]
-    posts = pdf[pdf["_kind"] == "post"]
-    if len(dl_row) == 0 or len(posts) == 0:
+    kind = pdf["_kind"].to_numpy()
+    dl_at = np.flatnonzero(kind == "dl")
+    post_at = np.flatnonzero(kind == "post")
+    if len(dl_at) == 0 or len(post_at) == 0:
         return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                              "score": pd.Series([], dtype="float64")})
-    doc_lo = int(dl_row["doc_lo"].iloc[0])
-    dls = _decode_doclens(dl_row["data"].iloc[0])
-    term_rows = [
-        {
-            "term": r["term"], "data": r["data"], "df": r["df"],
-            "block_last": r["block_last"], "block_max": r["block_max"],
-            "block_off": r["block_off"],
-        }
-        for _, r in posts.iterrows()
-    ]
+    doc_lo = int(pdf["doc_lo"].to_numpy()[dl_at[0]])
+    dls = _decode_doclens(pdf["data"].to_numpy()[dl_at[0]])
+    term_rows = _records(
+        pdf.iloc[post_at],
+        ["term", "data", "df", "block_last", "block_max", "block_off"],
+    )
     acc_docs, acc_scores, _ = _segment_topk_core(
         term_rows, dls, doc_lo, boosts, idfs, k, k1, b, avgdl,
         deleted=_deleted_from_pdf(pdf),
@@ -1799,7 +2057,7 @@ def _segment_topk_sim(
     acc_docs = np.array([], dtype=np.int64)
     acc_scores = np.array([], dtype=np.float64)
     acc_counts = np.array([], dtype=np.int64)
-    for _, row in posts.iterrows():
+    for row in _records(posts, ["term", "data", "pay_data"]):
         t = row["term"]
         docs, tfs = decode_postings(row["data"])
         payload = None
@@ -2014,7 +2272,9 @@ def _segment_phrase_topk(
     dls = _decode_doclens(dl_row["data"].iloc[0])
 
     rows: dict[str, object] = {}
-    for _, row in posts.iterrows():
+    for row in _records(
+        posts, ["term", "data", "df", "block_last", "block_off", "pos_off", "pos_data"]
+    ):
         if row["pos_data"] is None:
             raise ValueError("packed index lacks positions (codec<3 build)")
         rows[row["term"]] = row
@@ -2134,42 +2394,54 @@ def wand_phrase_search(
     candidate narrowing keeps the rarest-first block-skip decode, then
     the in-order chain window test runs on the survivors
     (_sloppy_chain_docs)."""
+    return _relation(spark, _phrase_frames(
+        spark, [(0, seg_index)], phrase_terms, k, k1, b, round_to, slop,
+        pooled=False,
+    ))
+
+
+def _phrase_frames(
+    spark: SparkSession,
+    gens: list[tuple[int, SegmentIndex]],
+    phrase_terms: list[str],
+    k: int,
+    k1: float,
+    b: float,
+    round_to: int,
+    slop: int,
+    pooled: bool,
+):
+    """Shared body of wand_phrase_search(_multi): global df summed over
+    the generations' sidecars; ``pooled`` aggregates n and avgdl across
+    generations (token-weighted), else the one index's own stats.
+    Returns the local tier's pandas answer or the Spark plan."""
     term_list = sorted(set(phrase_terms))
-    stats = _sidecar_stats(seg_index.path, term_list)
-    if stats is None:
-        raise ValueError("phrase search needs the termstats sidecar (codec v3)")
-    dfs = {t: d for t, (d, _c) in stats.items()}
+    all_stats = [_sidecar_stats(si, term_list) for _, si in gens]
+    dfs: dict[str, int] = {}
+    for st in all_stats:
+        if st is None:
+            raise ValueError("phrase search needs the termstats sidecar (codec v3)")
+        for t, (v, _c) in st.items():
+            dfs[t] = dfs.get(t, 0) + int(v)
     if any(dfs.get(t, 0) == 0 for t in term_list):
-        return empty_df(spark, "doc_id long, score double")
-    est = _local_estimate(
-        [(seg_index, term_list)], with_subs=True, stats_list=[stats]
+        return _empty_topk()
+    n, avgdl = _gen_stats(gens, pooled)
+    local, est = _tier(
+        [(si, term_list) for _, si in gens], True, stats_list=all_stats
     )
-    budget = _local_tier_budget()
-    local = 0 < budget and est is not None and est <= budget
-    unified = _unified_frame(
-        spark, [(0, seg_index)], term_list, with_subs=True, local=local
+    unified = _mark_big(
+        _unified_frame(spark, gens, term_list, with_subs=True, local=local),
+        local, est,
     )
-    if not local and est is not None and est > SINGLE_STAGE_MAX_BYTES:
-        unified._spl_big_frame = True
-    n, avgdl = seg_index.n_docs, seg_index.avgdl
 
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         return _segment_phrase_topk(
             pdf, list(phrase_terms), dfs, k, k1, b, n, avgdl, slop=slop
         )
 
-    if isinstance(unified, pd.DataFrame):
-        return _local_topk_frame(
-            spark, _kernel_pdf(unified, per_segment), k, round_to
-        )
-    seg_tops = _apply_per_segment(
-        unified, per_segment, "doc_id long, score double",
-        _n_segments_hint(seg_index), spark=spark,
-    )
-    return (
-        seg_tops.select("doc_id", F.round("score", round_to).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    return _serve_topk(
+        spark, unified, per_segment, k, round_to,
+        _n_segments_hint(*(si for _, si in gens)),
     )
 
 
@@ -2216,8 +2488,10 @@ def _segment_boolean_topk(
     empty = _topk_frame(np.array([], np.int64), np.array([], np.float64), k)
     dls_by_field: dict[str, np.ndarray] = {}
     doc_lo_by_field: dict[str, int] = {}
-    for _, r in pdf[pdf["_kind"] == "dl"].iterrows():
-        f = r["fld"] if "fld" in pdf.columns else ""
+    for r in _records(
+        pdf[pdf["_kind"] == "dl"], ["fld", "data", "doc_lo"], {"fld": ""}
+    ):
+        f = r["fld"]
         dls_by_field[f] = _decode_doclens(r["data"])
         doc_lo_by_field[f] = int(r["doc_lo"])
     if "" not in dls_by_field:
@@ -2254,7 +2528,7 @@ def _segment_boolean_topk(
 
     dvs: dict[str, np.ndarray] = {}
     dv_lo: dict[str, int] = {}
-    for _, r in pdf[pdf["_kind"] == "dv"].iterrows():
+    for r in _records(pdf[pdf["_kind"] == "dv"], ["term", "data", "doc_lo"]):
         dvs[r["term"]] = _decode_doclens(r["data"])
         dv_lo[r["term"]] = int(r["doc_lo"])
 
@@ -2262,8 +2536,8 @@ def _segment_boolean_topk(
     has_pos = "pos_data" in posts.columns
     decoded: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
     positions: dict[tuple[str, str], np.ndarray] = {}
-    for idx, r in posts.iterrows():
-        f = r["fld"] if "fld" in pdf.columns else ""
+    for r in _records(posts, ["fld", "term", "data", "pos_data"], {"fld": ""}):
+        f = r["fld"]
         docs_tfs = decode_postings(r["data"])
         decoded[(f, r["term"])] = docs_tfs
         if has_pos and r["pos_data"] is not None:
@@ -2835,24 +3109,16 @@ def _prepare_boolean(
     for fname, fsi in [("", seg_index)] + sorted(field_segments.items()):
         f_terms = sorted(by_field.get(fname, set()))
         for gid, si in (gens if fname == "" else [(0, fsi)]):
-            st = _sidecar_stats(si.path, f_terms)
+            st = _sidecar_stats(si, f_terms)
             local_pairs.append((si, f_terms))
             pair_stats.append(st)
             stats_by[(fname, gid)] = st
-    local_dirs = [
-        os.path.join(si.path, "docvalues", col)
-        for col in dv_needed
-        for _, si in gens
+    local_streams = [
+        (si, _dv_rel(col)) for col in dv_needed for _, si in gens
     ] + [
-        os.path.join(si.path, "docvalues_str", col, "streams")
-        for col in str_cols
-        for _, si in gens
+        (si, _dv_rel(col, "docvalues_str")) for col in str_cols for _, si in gens
     ]
-    est = _local_estimate(
-        local_pairs, with_subs, local_dirs, stats_list=pair_stats
-    )
-    budget = _local_tier_budget()
-    local = 0 < budget and est is not None and est <= budget
+    local, est = _tier(local_pairs, with_subs, local_streams, stats_list=pair_stats)
 
     field_ctx: dict[str, dict] = {}
     unified = None
@@ -2916,12 +3182,7 @@ def _prepare_boolean(
                     seg_offset=gen_id * 1_000_000, local=local,
                 ),
             )
-
-    if not local and est is not None and est > SINGLE_STAGE_MAX_BYTES:
-        # big pruned frame: route _apply_per_segment to the exchange
-        # path (parallel kernels) instead of one coalesce(1) task
-        unified._spl_big_frame = True
-    return tree, field_ctx, unified
+    return tree, field_ctx, _mark_big(unified, local, est)
 
 
 def _boost_dv_cols(boost_fn: tuple | None) -> tuple:
@@ -2962,6 +3223,26 @@ def wand_boolean_search(
     disjoint doc sets): dfs sum across the generations' sidecars and
     n/avgdl aggregate globally, so results equal the compacted
     index's — boolean serving never waits for compaction."""
+    return _relation(spark, _boolean_top(
+        spark, seg_index, query, k, k1, b, round_to, field_segments,
+        field_sims, boost_fn,
+    ))
+
+
+def _boolean_top(
+    spark: SparkSession,
+    seg_index,
+    query: str,
+    k: int,
+    k1: float = 1.2,
+    b: float = 0.75,
+    round_to: int = 5,
+    field_segments: dict[str, SegmentIndex] | None = None,
+    field_sims: dict | None = None,
+    boost_fn: tuple | None = None,
+):
+    """wand_boolean_search's answer before it crosses into the JVM:
+    the local tier's pandas frame, or the Spark plan."""
     tree, field_ctx, unified = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         extra_dv_cols=_boost_dv_cols(boost_fn),
@@ -2972,18 +3253,9 @@ def wand_boolean_search(
             pdf, tree, field_ctx, k, k1, b, boost_fn_spec=boost_fn
         )
 
-    if isinstance(unified, pd.DataFrame):
-        return _local_topk_frame(
-            spark, _kernel_pdf(unified, per_segment), k, round_to
-        )
-    seg_tops = _apply_per_segment(
-        unified, per_segment, "doc_id long, score double",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
-    )
-    return (
-        seg_tops.select("doc_id", F.round("score", round_to).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    return _serve_topk(
+        spark, unified, per_segment, k, round_to,
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
 
 
@@ -3019,19 +3291,10 @@ def wand_boolean_boosted_search(
             boost_fn_spec=boost_fn,
         )
 
-    if isinstance(unified, pd.DataFrame):
-        return _local_topk_frame(
-            spark, _kernel_pdf(unified, per_segment), k, round_to
-        )
-    seg_tops = _apply_per_segment(
-        unified, per_segment, "doc_id long, score double",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
-    )
-    return (
-        seg_tops.select("doc_id", F.round("score", round_to).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _relation(spark, _serve_topk(
+        spark, unified, per_segment, k, round_to,
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
+    ))
 
 
 def fetch_docs(
@@ -3142,7 +3405,9 @@ def fetch_docs_local(seg_index, doc_ids: list[int], columns: list[str] | None = 
     ids = [int(d) for d in doc_ids]
     frames = []
     for _, si in gens:
-        tombs = _load_tombstones(si.path)
+        # the index's reader holds the tombstone stream and manifest
+        rd = si.reader()
+        tombs = _tombstones_by_seg(rd.stream("deletes"))
         if tombs:
             dead = {int(x) for v in tombs.values() for x in v}
             ids_g = [d for d in ids if d not in dead]
@@ -3150,7 +3415,7 @@ def fetch_docs_local(seg_index, doc_ids: list[int], columns: list[str] | None = 
             ids_g = ids
         if not ids_g:
             continue
-        n_groups = int((_read_manifest(si.path) or {}).get("n_groups", 1))
+        n_groups = int(rd.manifest.get("n_groups", 1))
         segs = sorted({d // si.seg_size for d in ids_g})
         files: list[str] = []
         for s in segs:
@@ -3782,7 +4047,10 @@ def wand_group_search(
     (<= n * n_segments rows per group) into the group's member list;
     groups rank by their head element via TakeOrderedAndProject and
     the k_groups winners explode back to rows. Returns (grp_rank,
-    group_col, pos, doc_id, score) ordered by (grp_rank, pos)."""
+    group_col, pos, doc_id, score) ordered by (grp_rank, pos).
+    ``group_limit`` must be >= 1 (ValueError on both tiers)."""
+    if group_limit < 1:
+        raise ValueError(f"group_limit must be >= 1, got {group_limit}")
     gens = _as_gens(seg_index)
     for _, si in gens:
         if group_col not in si.string_cols:
@@ -3886,6 +4154,25 @@ def wand_scores_for_ids(
     segment emits at most |allowlist| rows, and ids the query does not
     match are simply absent. ONE Spark job; the match set never leaves
     the kernels."""
+    return _relation(spark, _scores_for_ids(
+        spark, seg_index, query, doc_ids, k1, b, round_to, field_segments,
+        field_sims,
+    ))
+
+
+def _scores_for_ids(
+    spark: SparkSession,
+    seg_index,
+    query: str,
+    doc_ids: list[int],
+    k1: float = 1.2,
+    b: float = 0.75,
+    round_to: int = 5,
+    field_segments: dict[str, SegmentIndex] | None = None,
+    field_sims: dict | None = None,
+):
+    """wand_scores_for_ids' answer before it crosses into the JVM: the
+    local tier's pandas frame, or the Spark plan."""
     allow = np.unique(np.asarray([int(d) for d in doc_ids], np.int64))
     tree, field_ctx, unified = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
@@ -3899,20 +4186,17 @@ def wand_scores_for_ids(
     if isinstance(unified, pd.DataFrame):
         res = _kernel_pdf(unified, per_segment)
         if res is None:
-            return empty_df(spark, "doc_id long, score double")
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": res["doc_id"].to_numpy(np.int64),
-                    "score": _spark_round(
-                        res["score"].to_numpy(np.float64), round_to
-                    ),
-                }
-            ),
-            schema="doc_id long, score double",
+            return _empty_topk()
+        return pd.DataFrame(
+            {
+                "doc_id": res["doc_id"].to_numpy(np.int64),
+                "score": _spark_round(
+                    res["score"].to_numpy(np.float64), round_to
+                ),
+            }
         )
     return _apply_per_segment(
-        unified, per_segment, "doc_id long, score double",
+        unified, per_segment, _TOPK_SCHEMA,
         _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
     ).select("doc_id", F.round("score", round_to).alias("score"))
 
@@ -3957,19 +4241,21 @@ def wand_rerank_search(
             f"rerank serves from the top-{rerank_docs} prefix; page size "
             f"k={k} exceeds it — raise rerank_docs or page the base query"
         )
-    base_rows = wand_boolean_search(
-        spark, seg_index, base_query, k=rerank_docs, k1=k1, b=b,
-        round_to=round_to, field_segments=field_segments,
-        field_sims=field_sims,
-    ).collect()  # bounded: rerank_docs rows
-    if not base_rows:
-        return empty_df(spark, "doc_id long, score double")
-    rr_rows = wand_scores_for_ids(
-        spark, seg_index, rerank_query,
-        [int(r["doc_id"]) for r in base_rows],
-        k1=k1, b=b, round_to=round_to,
-        field_segments=field_segments, field_sims=field_sims,
-    ).collect()  # bounded: at most |base_rows| rows
+    # pass 1: the base top-N; on the local tier it stays a driver-side
+    # frame, on the Spark path it is collected (bounded: rerank_docs rows)
+    base = _topk_pdf(_boolean_top(
+        spark, seg_index, base_query, rerank_docs, k1, b, round_to,
+        field_segments, field_sims,
+    ))
+    if not len(base):
+        return empty_df(spark, _TOPK_SCHEMA)
+    ids = base["doc_id"].to_numpy(np.int64)
+    # pass 2: the rerank tree against the N-id allowlist (bounded: at
+    # most |base| rows)
+    rr_pdf = _topk_pdf(_scores_for_ids(
+        spark, seg_index, rerank_query, ids.tolist(), k1, b, round_to,
+        field_segments, field_sims,
+    ))
 
     # both sides are bounded driver-side rows, so the combine is pure
     # arithmetic over <= rerank_docs entries — r07: the former
@@ -3978,14 +4264,15 @@ def wand_rerank_search(
     # numbers. Rounding via _spark_round == F.round (exact HALF_UP),
     # ordering via the same (score desc, doc_id asc) lexsort the
     # packed kernels use, so results are identical to the join plan.
-    rr = {int(r["doc_id"]): float(r["score"]) for r in rr_rows}
-    ids = np.array([int(r["doc_id"]) for r in base_rows], np.int64)
-    base = np.array([float(r["score"]) for r in base_rows], np.float64)
+    rr = dict(zip(rr_pdf["doc_id"].tolist(), rr_pdf["score"].tolist()))
     boost = np.array([rr.get(int(d), 0.0) for d in ids], np.float64)
-    total = _spark_round(base + float(weight) * boost, round_to)
+    total = _spark_round(
+        base["score"].to_numpy(np.float64) + float(weight) * boost, round_to
+    )
     order = np.lexsort((ids, -total))[: min(k, len(ids))]
-    out = pd.DataFrame({"doc_id": ids[order], "score": total[order]})
-    return spark.createDataFrame(out, schema="doc_id long, score double")
+    return local_relation(
+        spark, {"doc_id": ids[order], "score": total[order]}, _TOPK_SCHEMA
+    )
 
 
 def compact_packed(
@@ -4580,50 +4867,10 @@ def wand_phrase_search_multi(
     BM25 independently (with summed df and token-weighted avgdl) and
     the k-rows-per-segment partials merge globally. Identical to
     querying the compacted index (tests)."""
-    term_list = sorted(set(phrase_terms))
-    all_stats = [_sidecar_stats(si.path, term_list) for si in seg_indexes]
-    dfs: dict[str, int] = {}
-    for st in all_stats:
-        if st is None:
-            raise ValueError("phrase search needs the termstats sidecar")
-        for t, (v, _c) in st.items():
-            dfs[t] = dfs.get(t, 0) + int(v)
-    if any(dfs.get(t, 0) == 0 for t in term_list):
-        return empty_df(spark, "doc_id long, score double")
-    n = sum(s.n_docs for s in seg_indexes)
-    total_tokens = sum(s.avgdl * s.n_docs for s in seg_indexes)
-    avgdl = total_tokens / n if n else 0.0
-    est = _local_estimate(
-        [(s, term_list) for s in seg_indexes], with_subs=True,
-        stats_list=all_stats,
-    )
-    budget = _local_tier_budget()
-    local = 0 < budget and est is not None and est <= budget
-    unified = _unified_frame(
-        spark, list(enumerate(seg_indexes)), term_list, with_subs=True,
-        local=local,
-    )
-    if not local and est is not None and est > SINGLE_STAGE_MAX_BYTES:
-        unified._spl_big_frame = True
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_phrase_topk(
-            pdf, list(phrase_terms), dfs, k, k1, b, n, avgdl
-        )
-
-    if isinstance(unified, pd.DataFrame):
-        return _local_topk_frame(
-            spark, _kernel_pdf(unified, per_segment), k, round_to
-        )
-    seg_tops = _apply_per_segment(
-        unified, per_segment, "doc_id long, score double",
-        _n_segments_hint(seg_indexes), spark=spark,
-    )
-    return (
-        seg_tops.select("doc_id", F.round("score", round_to).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _relation(spark, _phrase_frames(
+        spark, list(enumerate(seg_indexes)), phrase_terms, k, k1, b,
+        round_to, 0, pooled=True,
+    ))
 
 
 def wand_search_multi(
@@ -4649,23 +4896,12 @@ def wand_search_multi(
     (tests/test_streaming_payloads.py) — querying never has to wait
     for compaction.
     """
-    n_docs = sum(s.n_docs for s in seg_indexes)
-    total_tokens = sum(s.avgdl * s.n_docs for s in seg_indexes)
-    avgdl = total_tokens / n_docs if n_docs else 0.0
-    merged = SegmentIndex(
-        path="", n_docs=n_docs, avgdl=avgdl,
-        n_segments=sum(s.n_segments for s in seg_indexes),
-        seg_size=max(s.seg_size for s in seg_indexes),
-    )
-    return _wand_search_frames(
-        spark,
-        [(i, s) for i, s in enumerate(seg_indexes)],
-        merged,
-        terms_boosts,
+    return _relation(spark, _wand_search_frames(
+        spark, list(enumerate(seg_indexes)), terms_boosts,
         k=k, k1=k1, b=b, round_to=round_to, sim=sim,
         min_should_match=min_should_match, boost_fn=boost_fn,
-        after=after,
-    )
+        after=after, pooled=True,
+    ))
 
 
 def wand_search(
@@ -4720,28 +4956,35 @@ def wand_search(
     the exact scorer (the block-max heap prunes against the
     unfiltered top-k, which would drop page-2 docs).
     """
-    return _wand_search_frames(
-        spark, [(0, seg_index)], seg_index, terms_boosts,
+    return _relation(spark, _wand_search_frames(
+        spark, [(0, seg_index)], terms_boosts,
         k=k, k1=k1, b=b, round_to=round_to, sim=sim,
         min_should_match=min_should_match, boost_fn=boost_fn,
-        after=after,
-    )
+        after=after, pooled=False,
+    ))
 
 
 def _sidecar_stats(
-    path: str, term_list: list[str]
+    si: "SegmentIndex", term_list: list[str]
 ) -> dict[str, tuple[int, int]] | None:
     """term -> (df, cf) from the build-time termstats sidecar, read
     driver-side with pyarrow (row-group pruning on the sorted term
-    column) — no Spark job. None if the index predates the sidecar."""
-    p = os.path.join(path, "termstats")
-    if not path or not os.path.isdir(p):
+    column) — no Spark job. None if the index predates the sidecar.
+
+    Every query looks its terms up here first, so this is where it
+    checks its index's reader (one os.stat) and reuses the reader's
+    sidecar dataset on both tiers."""
+    if not si.path:
+        return None
+    rd = si.reader()
+    dset = rd.dataset("termstats")
+    if dset is None:
         return None
     if not term_list:
         return {}
     import pyarrow.dataset as ds
 
-    tbl = ds.dataset(p, format="parquet").to_table(
+    tbl = dset.to_table(
         columns=["term", "df", "cf"], filter=ds.field("term").isin(term_list)
     )
     return {
@@ -4754,9 +4997,11 @@ def _sidecar_stats(
     }
 
 
-def _sidecar_dfs(path: str, term_list: list[str]) -> dict[str, int] | None:
+def _sidecar_dfs(
+    si: "SegmentIndex", term_list: list[str]
+) -> dict[str, int] | None:
     """term->df from the termstats sidecar (see _sidecar_stats)."""
-    st = _sidecar_stats(path, term_list)
+    st = _sidecar_stats(si, term_list)
     if st is None:
         return None
     return {t: d for t, (d, _c) in st.items()}
@@ -4779,7 +5024,7 @@ def _unified_frame(
     same seg covers the same doc range, so field routing stays
     segment-local (wand_boolean_search field_segments).
 
-    ``local=True`` (byte budget pre-checked via _local_ok) returns the
+    ``local=True`` (byte budget pre-checked via _tier) returns the
     pandas twin assembled driver-side — the local serving tier."""
     if local:
         return _unified_pdf(gens, term_list, with_subs=with_subs, field=field)
@@ -4894,11 +5139,7 @@ def _dv_frame(
         return _dv_pdf(
             si, col, with_subs, subdir=subdir, seg_offset=seg_offset
         )
-    base = (
-        os.path.join(si.path, subdir, col)
-        if subdir == "docvalues"
-        else os.path.join(si.path, subdir, col, "streams")
-    )
+    base = os.path.join(si.path, _dv_rel(col, subdir))
     dv = (
         spark.read.option("basePath", base)
         .schema(DOCLEN_SCHEMA + ", group int")
@@ -4936,7 +5177,7 @@ def _gen_dfs(
     postings-metadata job for pre-sidecar indexes."""
     dfs: dict[str, int] | None = {}
     for _, si in gens:
-        d = _sidecar_dfs(si.path, term_list)
+        d = _sidecar_dfs(si, term_list)
         if d is None:
             dfs = None
             break
@@ -4951,17 +5192,21 @@ def _gen_dfs(
 def _wand_search_frames(
     spark: SparkSession,
     gens: list[tuple[int, SegmentIndex]],
-    stats: SegmentIndex,
     terms_boosts: list[tuple[str, float]],
     k: int,
-    k1: float,
-    b: float,
-    round_to: int,
+    k1: float = 1.2,
+    b: float = 0.75,
+    round_to: int = 5,
     sim=None,
     min_should_match: int = 1,
     boost_fn: tuple | None = None,
     after: tuple[float, int] | None = None,
-) -> DataFrame:
+    pooled: bool = False,
+):
+    """Shared body of wand_search(_multi); ``pooled`` scores with
+    statistics pooled over the generations (_gen_stats). Returns the
+    local tier's pandas answer (an empty answer is always one) or the
+    Spark plan; the public surfaces convert it once (_relation)."""
     term_list = sorted({t for t, _ in terms_boosts})
     boosts: dict[str, float] = {}
     for t, w in terms_boosts:
@@ -4988,41 +5233,20 @@ def _wand_search_frames(
     # similarity) — parquet column pruning skips pos/pay bytes for
     # classic/toggle sims and the mm>1 BM25 path
     with_subs = sim is not None and sim.use_payload
-    dv_dirs = [
-        os.path.join(si.path, "docvalues", boost_fn[0])
-        for _, si in gens
-        if boost_fn is not None and boost_fn[0] != "doc_id"
-    ]
-    # ONE sidecar read feeds both the local-tier byte estimate and the
-    # idf stats below (r07: the duplicate reads cost ~2x dataset
-    # discovery per query)
-    gen_stats = [_sidecar_stats(si.path, term_list) for _, si in gens]
-    est = _local_estimate(
-        [(si, term_list) for _, si in gens], with_subs, dv_dirs,
-        stats_list=gen_stats,
+    value_col = (
+        boost_fn[0] if boost_fn is not None and boost_fn[0] != "doc_id" else None
     )
-    budget = _local_tier_budget()
-    local = 0 < budget and est is not None and est <= budget
-    unified = _unified_frame(
-        spark, gens, term_list, with_subs=with_subs, local=local
-    )
-    if boost_fn is not None and boost_fn[0] != "doc_id":
-        value_col = boost_fn[0]
-        for gen_id, si in gens:
+    if value_col is not None:
+        for _, si in gens:
             if value_col not in si.value_cols:
                 raise ValueError(
                     f"boost_fn over {value_col!r} needs a docvalues "
                     "stream — rebuild with build_segments(..., "
                     f"value_cols=[{value_col!r}]) (doc_id is intrinsic)"
                 )
-            unified = _stack(
-                unified,
-                _dv_frame(
-                    spark, si, value_col, with_subs,
-                    seg_offset=gen_id * 1_000_000, local=local,
-                ),
-            )
-
+    # ONE sidecar lookup feeds both the local-tier byte estimate and the
+    # idf stats below
+    gen_stats = [_sidecar_stats(si, term_list) for _, si in gens]
     if all(st is not None for st in gen_stats):
         dfs = {}
         for st in gen_stats:
@@ -5037,14 +5261,29 @@ def _wand_search_frames(
         )
     dfs = {t: d for t, d in dfs.items() if d > 0}
     if not dfs:
-        return empty_df(spark, "doc_id long, score double")
-    n = stats.n_docs
-    avgdl = stats.avgdl
+        # known empty before any frame is read: a driver-side answer on
+        # both tiers, so handler tails over it schedule no job either
+        return _empty_topk()
+    n, avgdl = _gen_stats(gens, pooled)
 
-    if not local and est is not None and est > SINGLE_STAGE_MAX_BYTES:
-        # big pruned frame: parallelize the kernels (exchange path)
-        # instead of one serial coalesce(1) task
-        unified._spl_big_frame = True
+    local, est = _tier(
+        [(si, term_list) for _, si in gens], with_subs,
+        [(si, _dv_rel(value_col)) for _, si in gens if value_col is not None],
+        stats_list=gen_stats,
+    )
+    unified = _unified_frame(
+        spark, gens, term_list, with_subs=with_subs, local=local
+    )
+    if value_col is not None:
+        for gen_id, si in gens:
+            unified = _stack(
+                unified,
+                _dv_frame(
+                    spark, si, value_col, with_subs,
+                    seg_offset=gen_id * 1_000_000, local=local,
+                ),
+            )
+    _mark_big(unified, local, est)
 
     if plain_bm25:
         if sim is not None:
@@ -5078,27 +5317,12 @@ def _wand_search_frames(
                 after=cursor,
             )
 
-    if isinstance(unified, pd.DataFrame):
-        # local tier: finalize driver-side (zero Spark jobs) — the
-        # after re-check stays idempotent on the same exact rounding
-        return _local_topk_frame(
-            spark, _kernel_pdf(unified, per_segment), k, round_to,
-            after=after,
-        )
-    seg_tops = _apply_per_segment(
-        unified, per_segment, "doc_id long, score double",
-        _n_segments_hint(*(si for _, si in gens)), spark=spark,
+    # the local tier finalizes driver-side (zero Spark jobs); the after
+    # re-check stays idempotent on the same exact rounding
+    return _serve_topk(
+        spark, unified, per_segment, k, round_to,
+        _n_segments_hint(*(si for _, si in gens)), after=after,
     )
-    out = seg_tops.select("doc_id", F.round("score", round_to).alias("score"))
-    if after is not None:
-        # idempotent re-check on the Spark-rounded score (the kernel
-        # already filtered on the numpy rounding of the same values)
-        s_a, d_a = float(after[0]), int(after[1])
-        out = out.filter(
-            (F.col("score") < s_a)
-            | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
-        )
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def describe_index(path: str) -> dict:

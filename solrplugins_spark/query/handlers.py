@@ -14,10 +14,11 @@ multiplicatively AFTER clause scoring, exactly like BoostedQuery.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import empty_df
+from ..session import empty_df, local_relation
 from ..index.builder import InvertedIndex
 from .feedback import unsupervised_feedback
 from .mlt import (
@@ -225,8 +226,10 @@ def packed_select_handler(
              "facet_<field>": (value, cnt), ...}.
     """
     from ..index.segments import (
+        _boolean_top,
+        _relation,
+        _topk_pdf,
         fetch_docs_local,
-        wand_boolean_search,
         wand_facet_query_search,
         wand_facet_search,
         wand_stats_facet_search,
@@ -234,23 +237,20 @@ def packed_select_handler(
     )
 
     first = seg_index[0] if isinstance(seg_index, (list, tuple)) else seg_index
-    top = wand_boolean_search(
-        spark, seg_index, query, k=k, k1=k1, b=b,
+    top = _boolean_top(
+        spark, seg_index, query, k, k1=k1, b=b,
         field_segments=field_segments, field_sims=field_sims,
     )
-    docs = top
     if with_stored and first.store_cols:
-        # collect the k-row page ONCE (joining the lazy `top` against
-        # the docstore would re-execute the whole per-segment
-        # evaluation a second time), then merge the stored fields via
-        # a DRIVER-SIDE docstore point read — zero further Spark jobs;
+        # materialize the k-row page ONCE (joining a lazy Spark `top`
+        # against the docstore would re-execute the whole per-segment
+        # evaluation a second time; a local-tier page is already a
+        # driver-side frame), then merge the stored fields via a
+        # DRIVER-SIDE docstore point read — zero further Spark jobs;
         # the caller's collect serves from a local frame
-        rows = top.collect()
-        ids = [int(r["doc_id"]) for r in rows]
+        page = _topk_pdf(top)
+        ids = page["doc_id"].tolist()
         if ids:
-            import pandas as pd
-
-            page = pd.DataFrame([r.asDict() for r in rows])
             stored = fetch_docs_local(seg_index, ids)
             merged = page.merge(stored, on="doc_id", how="left").sort_values(
                 ["score", "doc_id"], ascending=[False, True]
@@ -264,12 +264,13 @@ def packed_select_handler(
                 schema = "doc_id bigint, score double" + (
                     ", " + extra if extra else ""
                 )
-                names = [f.split(" ")[0] for f in schema.split(", ")]
-                docs = spark.createDataFrame(merged[names], schema=schema)
+                docs = local_relation(spark, merged, schema)
             else:
                 docs = spark.createDataFrame(merged)
         else:
-            docs = empty_df(spark, top.schema)
+            docs = _relation(spark, page)
+    else:
+        docs = _relation(spark, top)
     out: dict[str, DataFrame] = {"docs": docs}
     for field in facet_fields or []:
         out[f"facet_{field}"] = wand_facet_search(
@@ -361,7 +362,7 @@ def _packed_interesting_terms(
     counts = seed_term_counts(texts, tok_kwargs)
     df_map: dict[str, int] = {}
     for si in sis:
-        d = _sidecar_dfs(si.path, sorted(counts)) if counts else {}
+        d = _sidecar_dfs(si, sorted(counts)) if counts else {}
         if d is None:
             raise ValueError(
                 "packed MLT needs the termstats sidecar — rebuild the "
@@ -371,25 +372,6 @@ def _packed_interesting_terms(
             df_map[t] = df_map.get(t, 0) + int(v)
     n_docs = sum(si.n_docs for si in sis)
     return mlt_queue(counts, df_map, n_docs, params, round_to)
-
-
-def _local_page(spark, rows) -> DataFrame:
-    """Bounded, already-ordered (score desc, doc_id asc) result rows
-    as a local relation — collects driver-side with zero jobs."""
-    if not rows:
-        return empty_df(spark, "doc_id long, score double")
-    import numpy as np
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": np.array([int(r["doc_id"]) for r in rows], np.int64),
-                "score": np.array([float(r["score"]) for r in rows], np.float64),
-            }
-        ),
-        schema="doc_id long, score double",
-    )
 
 
 def packed_mlt_handler(
@@ -428,10 +410,13 @@ def packed_mlt_handler(
     boolean query over the packed index, seed = the match at
     ``matchOffset``; fetches match_offset+1 rows, one execution)."""
     from ..index.segments import (
+        _as_gens,
+        _boolean_top,
+        _empty_topk,
+        _relation,
+        _topk_pdf,
+        _wand_search_frames,
         fetch_docs_local,
-        wand_boolean_search,
-        wand_search,
-        wand_search_multi,
     )
 
     is_multi = isinstance(seg_index, (list, tuple))
@@ -443,9 +428,9 @@ def packed_mlt_handler(
             )
         seed_doc_ids = [
             _seed_at_offset(
-                lambda q, k: wand_boolean_search(
-                    spark, seg_index, q, k=k
-                ).collect(),
+                lambda q, k: _topk_pdf(
+                    _boolean_top(spark, seg_index, q, k)
+                ).to_dict("records"),
                 match_query,
                 match_offset,
             )
@@ -455,44 +440,37 @@ def packed_mlt_handler(
         spark, seg_index, seed_ids, params, text_col,
         tok_kwargs=tok_kwargs, like_text=like_text,
     )
-    terms = spark.createDataFrame(queue, schema=_MLT_TERMS_SCHEMA)
+    terms = local_relation(spark, queue, _MLT_TERMS_SCHEMA)
     if not interesting_terms_detail:
         terms = terms.select("term", "score")  # mlt.interestingTerms=list
     boosts = [(t, float(s)) for t, s in zip(queue["term"], queue["score"])]
-    if not boosts:
-        docs = empty_df(spark, "doc_id long, score double")
-    else:
-        mm = params.min_should_match
-        # boost_fn rides into the wand execution (multiplied BEFORE
-        # ranking, the flat mlt_handler's _apply_boost_fn semantics);
-        # the k+|seeds| over-fetch stays exact — a per-doc multiplier
-        # cannot let seeds displace more than |seeds| rows
-        docs = (
-            wand_search_multi(
-                spark, list(seg_index), boosts, k=k + len(seed_ids),
-                min_should_match=mm, boost_fn=boost_fn,
-            )
-            if is_multi
-            else wand_search(
-                spark, seg_index, boosts, k=k + len(seed_ids),
-                min_should_match=mm, boost_fn=boost_fn,
-            )
+    # boost_fn rides into the wand execution (multiplied BEFORE
+    # ranking, the flat mlt_handler's _apply_boost_fn semantics); the
+    # k+|seeds| over-fetch stays exact — a per-doc multiplier cannot
+    # let seeds displace more than |seeds| rows
+    top = (
+        _wand_search_frames(
+            spark, _as_gens(seg_index), boosts, k=k + len(seed_ids),
+            min_should_match=params.min_should_match, boost_fn=boost_fn,
+            pooled=is_multi,
         )
-        if getattr(docs, "_spl_local", False):
-            # r07: the local-tier result is a pre-sorted (score desc,
-            # doc_id asc) local relation of <= k+|seeds| rows — the
-            # seed-exclusion + re-top-k tail is a list slice, not a
-            # Spark job (the filter/orderBy/limit over the local
-            # relation scheduled two, ~0.3 s of pure scheduling)
-            seeds = set(seed_ids)
-            rows = [r for r in docs.collect() if int(r["doc_id"]) not in seeds]
-            docs = _local_page(spark, rows[:k])
-        else:
-            docs = (
-                docs.filter(~F.col("doc_id").isin(seed_ids))
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
+        if boosts
+        else _empty_topk()
+    )
+    if isinstance(top, pd.DataFrame):
+        # a local-tier (or known-empty) answer is a pre-sorted (score
+        # desc, doc_id asc) driver-side frame of <= k+|seeds| rows: the
+        # seed-exclusion + re-top-k tail is a mask and a slice, and the
+        # page crosses into the JVM once
+        hits = top[~top["doc_id"].isin(seed_ids)].head(k)
+        docs = _relation(spark, hits)
+    else:
+        hits = None
+        docs = (
+            top.filter(~F.col("doc_id").isin(seed_ids))
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+        )
     out: dict[str, DataFrame] = {"docs": docs, "interesting_terms": terms}
     if facet_fields:
         missing = [f for f in facet_fields if f not in first.store_cols]
@@ -501,14 +479,14 @@ def packed_mlt_handler(
                 f"packed /mlt facets need stored columns {missing} — "
                 "rebuild with build_segments(..., store_cols=[...])"
             )
-        # collect the k-row result page ONCE and rebuild it as a local
-        # frame (the packed_select_handler pattern): the facet section
-        # needs the result ids, and leaving out["docs"] lazy would
-        # re-execute the whole expansion search when the caller
-        # collects it
-        rows = docs.collect()
-        out["docs"] = _local_page(spark, rows)
-        ids = [int(r["doc_id"]) for r in rows]
+        # materialize the k-row result page ONCE as a local frame (the
+        # packed_select_handler pattern): the facet section needs the
+        # result ids, and leaving out["docs"] lazy would re-execute the
+        # whole expansion search when the caller collects it
+        if hits is None:
+            hits = _topk_pdf(docs)
+            out["docs"] = _relation(spark, hits)
+        ids = hits["doc_id"].tolist()
         # facets count over the RESULT page (DiceMoreLikeThisHandler
         # .java:263-271): k rows — one DRIVER-SIDE docstore point read
         # covers all requested fields, zero Spark jobs
@@ -538,7 +516,7 @@ def packed_mlt_handler(
                 counts[field] = counts[field].astype(object).where(
                     counts[field].notna(), None
                 )
-                out[f"facet_{field}"] = spark.createDataFrame(counts, schema=ddl)
+                out[f"facet_{field}"] = local_relation(spark, counts, ddl)
     return out
 
 
@@ -561,14 +539,20 @@ def packed_feedback_handler(
     excluded) as ONE boosted per-segment job — three Spark jobs total
     plus the bounded docstore point read, matching the flat path's
     driver-crossing count."""
-    from ..index.segments import wand_boolean_boosted_search, wand_boolean_search
+    from ..index.segments import (
+        _boolean_top,
+        _topk_pdf,
+        wand_boolean_boosted_search,
+        wand_boolean_search,
+    )
 
-    seeds = wand_boolean_search(spark, seg_index, query, k=max_seed_docs)
-    seed_ids = [int(r["doc_id"]) for r in seeds.collect()]
+    # the seed page stays a driver-side frame on the local tier
+    seeds = _topk_pdf(_boolean_top(spark, seg_index, query, max_seed_docs))
+    seed_ids = seeds["doc_id"].tolist()
     queue = _packed_interesting_terms(
         spark, seg_index, seed_ids, params, text_col, tok_kwargs=tok_kwargs
     )
-    terms = spark.createDataFrame(queue, schema=_MLT_TERMS_SCHEMA)
+    terms = local_relation(spark, queue, _MLT_TERMS_SCHEMA)
     boosts = [(t, float(s)) for t, s in zip(queue["term"], queue["score"])]
     # boost_fn: the multiplicative ValueSource applied to the FINAL
     # query before ranking (the flat feedback_handler's boost_fn);

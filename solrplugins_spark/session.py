@@ -6,7 +6,9 @@ that matter at cluster scale too (AQE, Arrow, shuffle partitions).
 
 from __future__ import annotations
 
+import functools
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -85,27 +87,80 @@ def get_spark(
     return spark
 
 
-def empty_df(spark: SparkSession, schema):
-    """Empty DataFrame that plans as ``LocalRelation <empty>``.
+_FALLBACK_WARNED = False
 
-    ``spark.createDataFrame([], schema)`` plans a LogicalRDD over an
-    empty RDD, and every ``collect()`` of it schedules one Spark job —
-    ~0.3 s of pure scheduling on a 32-core local session for zero
-    rows. An empty Arrow table takes the Arrow conversion path and
-    becomes a LocalRelation, which collects driver-side with no job
-    (measured 0.30 s/1 job -> 0.024 s/0 jobs). Falls back to the RDD
-    construction if the Arrow conversion is unavailable.
+
+@functools.lru_cache(maxsize=256)
+def _schemas(ddl: str):
+    """(StructType, Arrow schema) for a DDL string, parsed once per
+    process: ``createDataFrame(..., schema="<ddl>")`` re-parses the
+    string in the JVM on every call (~10 ms a relation, measured)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def local_relation(spark: SparkSession, data, schema):
+    """A bounded driver-side answer as a DataFrame that plans as
+    ``LocalRelation``: it collects on the driver with no Spark job.
+
+    The one place a local-tier answer crosses into the JVM. ``data`` is
+    a pandas frame, a dict of columns, or None for an empty relation;
+    ``schema`` is a DDL string (its StructType and Arrow schema are
+    parsed once and cached) or a StructType. The rows become an Arrow
+    table with that schema, and the table becomes the relation, so the
+    JVM neither re-parses a schema nor infers one.
+
+    ``spark.createDataFrame([], schema)`` would plan a LogicalRDD whose
+    every ``collect()`` schedules one job (measured 0.30 s/1 job ->
+    0.024 s/0 jobs for an empty answer). If this PySpark lacks the
+    Arrow-table path, the relation is built by ``createDataFrame`` from
+    the rows instead (an empty one then takes the RDD path), with one
+    warning per process.
     """
+    global _FALLBACK_WARNED
     try:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType, _parse_datatype_string
+        from pyspark.sql.types import StructType
 
-        if isinstance(schema, str):
-            schema = _parse_datatype_string(schema)
-        assert isinstance(schema, StructType)
-        return spark.createDataFrame(
-            pa.Table.from_pylist([], schema=to_arrow_schema(schema))
-        )
-    except Exception:
-        return spark.createDataFrame([], schema)
+        if isinstance(schema, StructType):
+            struct, arrow_schema = schema, to_arrow_schema(schema)
+        else:
+            struct, arrow_schema = _schemas(schema)
+        if data is None:
+            table = arrow_schema.empty_table()
+        elif isinstance(data, dict):
+            table = pa.table(data, schema=arrow_schema)
+        else:
+            table = pa.Table.from_pandas(
+                data, schema=arrow_schema, preserve_index=False
+            )
+        # a copy: the DataFrame hands its schema object to its callers
+        return spark.createDataFrame(table, schema=StructType(struct.fields))
+    except (ImportError, TypeError) as e:
+        if not _FALLBACK_WARNED:
+            _FALLBACK_WARNED = True
+            warnings.warn(
+                "local_relation: no Arrow-table DataFrame path "
+                f"({type(e).__name__}: {e}); answers are built with "
+                "createDataFrame from rows, and empty ones schedule a "
+                "Spark job on collect",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        if data is None:
+            data = []
+        elif isinstance(data, dict):
+            import pandas as pd
+
+            data = pd.DataFrame(data)
+        return spark.createDataFrame(data, schema)
+
+
+def empty_df(spark: SparkSession, schema):
+    """Empty DataFrame that plans as ``LocalRelation <empty>`` (see
+    ``local_relation``)."""
+    return local_relation(spark, None, schema)

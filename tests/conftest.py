@@ -11,6 +11,18 @@ from solrplugins_spark.corpus import transcripts_pandas  # noqa: E402
 from solrplugins_spark.index.builder import build_index  # noqa: E402
 
 
+def count_jobs(spark, fn, group: str) -> int:
+    """Spark jobs that ``fn()`` schedules, counted through a job group
+    — the suite's one ``statusTracker`` helper."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cores=8, shuffle_partitions=8)

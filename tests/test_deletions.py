@@ -337,7 +337,7 @@ def test_compacted_equals_fresh_build_of_survivors(spark, del_setup, compacted):
     assert np.isclose(comp.avgdl, fresh.avgdl)
     # sidecar df reflects the purge
     for t in ("w0001", "w0002"):
-        assert _sidecar_dfs(comp.path, [t]) == _sidecar_dfs(fresh.path, [t])
+        assert _sidecar_dfs(comp, [t]) == _sidecar_dfs(fresh, [t])
 
     got = wand_search(spark, comp, TERMS, k=10).toPandas()
     want = wand_search(spark, fresh, TERMS, k=10).toPandas()

@@ -9,20 +9,11 @@ which collects driver-side with zero jobs."""
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import count_jobs
 
 from solrplugins_spark.index import segments as S
 from solrplugins_spark.index.builder import build_index, mint_doc_ids
 from solrplugins_spark.session import empty_df
-
-
-def _jobs(spark, fn, name: str) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(name, name)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(name))
 
 
 @pytest.mark.parametrize(
@@ -39,7 +30,7 @@ def test_empty_df_schema_and_zero_jobs(spark, schema):
     assert new.schema == old.schema
     assert new.collect() == []
     assert "LocalRelation" in new._jdf.queryExecution().optimizedPlan().toString()
-    assert _jobs(spark, lambda: empty_df(spark, schema).collect(), "ed0") == 0
+    assert count_jobs(spark, lambda: empty_df(spark, schema).collect(), "ed0") == 0
 
 
 @pytest.fixture(scope="module")
@@ -60,7 +51,7 @@ def test_empty_result_surfaces_zero_jobs(spark, eseg):
     # a term absent from the corpus: the search is empty end-to-end
     df = S.wand_search(spark, eseg, [("xxnosuchtermxx", 1.0)], k=10)
     assert df.collect() == []
-    assert _jobs(
+    assert count_jobs(
         spark,
         lambda: S.wand_search(spark, eseg, [("xxnosuchtermxx", 1.0)], k=10).collect(),
         "ed1",
@@ -73,7 +64,7 @@ def test_empty_result_surfaces_zero_jobs(spark, eseg):
     ids = [int(r["doc_id"]) for r in base]
     rr = S.wand_scores_for_ids(spark, eseg, "xxnosuchtermxx", ids)
     assert rr.collect() == []
-    assert _jobs(
+    assert count_jobs(
         spark,
         lambda: S.wand_scores_for_ids(spark, eseg, "xxnosuchtermxx", ids).collect(),
         "ed2",
@@ -100,3 +91,42 @@ def test_empty_df_matches_old_after_union(spark):
     real = spark.createDataFrame(pdf, schema="doc_id long, score double")
     both = empty_df(spark, "doc_id long, score double").unionByName(real)
     assert sorted(r["doc_id"] for r in both.collect()) == [0, 1, 2]
+
+
+def test_known_empty_answer_stays_driver_side_on_both_tiers(spark, eseg, monkeypatch):
+    """An all-unknown-term expansion is answered before any frame is
+    read, as a driver-side frame on either tier — so the /mlt tail
+    over it (seed exclusion, re-top-k) schedules no Spark job."""
+    for budget in (None, "0"):
+        if budget is None:
+            monkeypatch.delenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", raising=False)
+        else:
+            monkeypatch.setenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", budget)
+        top = S._wand_search_frames(
+            spark, [(0, eseg)], [("xxnosuchtermxx", 1.0)], k=10
+        )
+        assert isinstance(top, pd.DataFrame) and top.empty
+
+
+def test_local_relation_fallback_warns_once(spark, monkeypatch):
+    import warnings
+
+    import pyarrow as pa
+
+    from solrplugins_spark import session
+
+    real = type(spark).createDataFrame
+
+    def no_arrow_tables(self, data, *args, **kwargs):
+        if isinstance(data, pa.Table):
+            raise TypeError("no Arrow-table path")
+        return real(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark), "createDataFrame", no_arrow_tables)
+    monkeypatch.setattr(session, "_FALLBACK_WARNED", False)
+    with pytest.warns(RuntimeWarning, match="Arrow-table"):
+        df = empty_df(spark, "doc_id long, score double")
+    assert df.collect() == []
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        empty_df(spark, "doc_id long, score double")  # warned once already

@@ -97,3 +97,21 @@ def test_groups_ordered_by_head_and_members_within(spark, tiny_index, tiny_corpu
     for _, g in got.groupby("tool"):
         s = list(g.sort_values("pos")["score"])
         assert s == sorted(s, reverse=True)
+
+
+@pytest.mark.parametrize("budget", [None, "0"])
+@pytest.mark.parametrize("group_limit", [0, -1])
+def test_group_limit_below_one_is_rejected_on_both_tiers(
+    spark, grp_segments, hot_query, monkeypatch, budget, group_limit
+):
+    # the local tier's driver-side tail and the Spark tail must refuse
+    # the same input the same way (not IndexError on one tier only)
+    if budget is None:
+        monkeypatch.delenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", raising=False)
+    else:
+        monkeypatch.setenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", budget)
+    with pytest.raises(ValueError, match="group_limit"):
+        wand_group_search(
+            spark, grp_segments, hot_query, "tool", k_groups=4,
+            group_limit=group_limit,
+        )

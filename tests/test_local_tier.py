@@ -7,6 +7,7 @@ any drift is a frame-assembly bug."""
 import os
 
 import pytest
+from conftest import count_jobs
 
 from solrplugins_spark.index import segments as S
 from solrplugins_spark.index.builder import build_index, mint_doc_ids
@@ -127,10 +128,10 @@ def test_local_tier_engages_on_small_index(spark, lt):
     the distributed frame."""
     est = S._local_estimate([(lt["seg"], ["w0003"])], False)
     assert est is not None and 0 < est <= S.LOCAL_TIER_MAX_BYTES
-    assert S._local_ok([(lt["seg"], ["w0003"])], False)
+    assert S._tier([(lt["seg"], ["w0003"])], False)[0]
     os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"] = "0"
     try:
-        assert not S._local_ok([(lt["seg"], ["w0003"])], False)
+        assert not S._tier([(lt["seg"], ["w0003"])], False)[0]
     finally:
         del os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"]
 
@@ -161,10 +162,4 @@ def test_packed_mlt_handler_local_zero_jobs(spark, lt):
     fn = lambda: packed_mlt_handler(spark, lt["seg"], [7], params, k=10)["docs"]
     local, dist = _both(fn)
     assert local == dist and local
-    sc = spark.sparkContext
-    sc.setJobGroup("mlt0", "mlt0")
-    try:
-        fn().collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("mlt0")) == 0
+    assert count_jobs(spark, lambda: fn().collect(), "mlt0") == 0

@@ -10,6 +10,7 @@ rank-identical to the flat index (round-1 verdict item #2):
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from solrplugins_spark.analysis.payloads import build_payload_index
@@ -166,7 +167,7 @@ def test_packed_bm25_still_matches_flat(spark, pos_index, pos_segments, tiny_cor
 
 def test_termstats_sidecar(pos_segments, pos_index, tiny_corpus_pd):
     t0 = _corpus_terms(tiny_corpus_pd)[0]
-    dfs = _sidecar_dfs(pos_segments.path, [t0, "zzznope"])
+    dfs = _sidecar_dfs(pos_segments, [t0, "zzznope"])
     assert dfs is not None and "zzznope" not in dfs
     want = {
         r["term"]: r["df"]
@@ -267,17 +268,14 @@ def test_wand_query_is_one_action(spark, pos_segments, tmp_path):
     and strictly fewer than the sidecar-less fallback path."""
     import shutil
 
-    sc = spark.sparkContext
+    def count_wand_jobs(group, seg):
+        return count_jobs(
+            spark,
+            lambda: wand_search(spark, seg, [("zephyrblade", 1.0)], k=10).collect(),
+            group,
+        )
 
-    def count_jobs(group, seg):
-        sc.setJobGroup(group, group)
-        try:
-            wand_search(spark, seg, [("zephyrblade", 1.0)], k=10).collect()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    with_sidecar = count_jobs("wand-jobs-sidecar", pos_segments)
+    with_sidecar = count_wand_jobs("wand-jobs-sidecar", pos_segments)
     assert with_sidecar <= 2, f"sidecar path ran {with_sidecar} jobs"
 
     # copy the index minus the sidecar -> the fallback stats job returns
@@ -290,7 +288,7 @@ def test_wand_query_is_one_action(spark, pos_segments, tmp_path):
         path=str(nosc), n_docs=pos_segments.n_docs, avgdl=pos_segments.avgdl,
         n_segments=pos_segments.n_segments, seg_size=pos_segments.seg_size,
     )
-    without = count_jobs("wand-jobs-fallback", seg2)
+    without = count_wand_jobs("wand-jobs-fallback", seg2)
     assert with_sidecar < without, (with_sidecar, without)
 
 

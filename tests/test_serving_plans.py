@@ -15,6 +15,7 @@ or the Spark job counter, not just prose:
 """
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from solrplugins_spark.index.segments import (
@@ -45,16 +46,6 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _count_jobs(spark, name, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(name, name)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(name))
-
-
 def _tier_off():
     """Force the distributed path (r07 local tier finalizes the
     facet/collapse/stats tails driver-side, so plan-shape asserts on
@@ -64,11 +55,16 @@ def _tier_off():
 
     @contextlib.contextmanager
     def ctx():
+        prev = os.environ.get("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES")
         os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"] = "0"
         try:
             yield
         finally:
-            del os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"]
+            # restore an externally configured budget, if any
+            if prev is None:
+                del os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"]
+            else:
+                os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"] = prev
 
     return ctx()
 
@@ -124,10 +120,10 @@ def test_packed_rerank_is_two_jobs(spark, plan_segments, hot_query, tiny_index):
         .limit(3)
         .collect()[2]["term"]
     )
-    n = _count_jobs(
+    n = count_jobs(
         spark,
-        "rerank_jobs",
-        lambda: wand_rerank_search(
+        group="rerank_jobs",
+        fn=lambda: wand_rerank_search(
             spark, plan_segments, hot_query, rr_term, k=10, rerank_docs=20
         ).collect(),
     )
@@ -137,10 +133,10 @@ def test_packed_rerank_is_two_jobs(spark, plan_segments, hot_query, tiny_index):
 
 
 def test_packed_elevation_bounded_jobs(spark, plan_segments, hot_query):
-    n = _count_jobs(
+    n = count_jobs(
         spark,
-        "elev_jobs",
-        lambda: wand_elevation_search(
+        group="elev_jobs",
+        fn=lambda: wand_elevation_search(
             spark, plan_segments, hot_query, [399, 7], k=10
         ).collect(),
     )
@@ -173,19 +169,19 @@ def test_packed_facet_query_one_job(spark, sfp_segments, hot_query):
     distributed path; the local tier finalizes driver-side (r07),
     zero jobs."""
     fq = {"a": hot_query.split(" or ")[0], "r": "turn_idx:[0 TO 5]"}
-    n = _count_jobs(
+    n = count_jobs(
         spark,
-        "fq_jobs_local",
-        lambda: wand_facet_query_search(
+        group="fq_jobs_local",
+        fn=lambda: wand_facet_query_search(
             spark, sfp_segments, hot_query, fq
         ).collect(),
     )
     assert n == 0, f"local-tier facet.query took {n} jobs, expected 0"
     with _tier_off():
-        n = _count_jobs(
+        n = count_jobs(
             spark,
-            "fq_jobs",
-            lambda: wand_facet_query_search(
+            group="fq_jobs",
+            fn=lambda: wand_facet_query_search(
                 spark, sfp_segments, hot_query, fq
             ).collect(),
         )
@@ -198,7 +194,7 @@ def test_packed_stats_facet_one_job_and_broadcast(spark, sfp_segments, hot_query
         spark, sfp_segments, hot_query, "turn_idx", "role"
     )
     assert "LocalTableScan" in _plan(local_df) and "Join" not in _plan(local_df)
-    n = _count_jobs(spark, "sfq_jobs_local", lambda: local_df.collect())
+    n = count_jobs(spark, lambda: local_df.collect(), "sfq_jobs_local")
     assert n == 0, f"local-tier stats.facet took {n} jobs, expected 0"
     with _tier_off():
         df = wand_stats_facet_search(
@@ -208,7 +204,7 @@ def test_packed_stats_facet_one_job_and_broadcast(spark, sfp_segments, hot_query
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
         assert "NestedLoop" not in plan and "CartesianProduct" not in plan
-        n = _count_jobs(spark, "sfq_jobs", lambda: df.collect())
+        n = count_jobs(spark, lambda: df.collect(), "sfq_jobs")
     assert n <= 2, f"packed stats.facet took {n} jobs"
 
 
@@ -237,10 +233,10 @@ def test_flat_sloppy_phrase_no_python_udf(posplan_index):
 
 
 def test_packed_sloppy_phrase_one_job(spark, posplan_segments):
-    n = _count_jobs(
+    n = count_jobs(
         spark,
-        "slop_jobs",
-        lambda: wand_phrase_search(
+        group="slop_jobs",
+        fn=lambda: wand_phrase_search(
             spark, posplan_segments, ["w0000", "w0001"], k=10, slop=2
         ).collect(),
     )
