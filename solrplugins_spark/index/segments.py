@@ -29,6 +29,7 @@ groups and produces byte-identical output (tests/test_segments.py).
 from __future__ import annotations
 
 import dataclasses
+import functools
 import json
 import os
 import sys
@@ -651,10 +652,18 @@ SINGLE_STAGE_MAX_BYTES = 64 << 20
 # rows are read with pyarrow and the SAME per-segment kernels run
 # in-process — the Lucene/Solr shard-serving shape, where a bounded top-k
 # never launches a distributed job. Above the byte budget (head terms at
-# 10^12 docs, large indexes) every surface falls back to the unchanged
-# Spark fan-out, so the 100-TB plan shape is untouched. Same kernels +
-# same inputs = bit-identical scores (tests/test_local_tier.py pins
-# local == exchange-path equality across surfaces).
+# 10^12 docs, large indexes) the kernels run as a Spark stage, so the
+# 100-TB plan shape is untouched.
+#
+# The two tiers differ only in WHERE the kernels run. Every surface
+# hands its kernel's partials to ONE associative merge (_partials) and
+# finishes the merged partials with ONE driver-side function (the top-k
+# cut, the facet/stats/group tails): in-process on the local tier;
+# inside the kernels' own stage, then one collect, on the Spark path.
+# So both tiers serve the same rows in the same order because they run
+# the same merge and finish code, not because tests pin a pair of
+# twins; the tier tests (tests/test_local_tier.py) stay as end-to-end
+# checks of the two ways the kernel inputs are read.
 #
 # The reader. Each SegmentIndex owns one _LocalReader, the state Solr
 # keeps per searcher (opened once per commit, reused across requests):
@@ -664,12 +673,13 @@ SINGLE_STAGE_MAX_BYTES = 64 << 20
 #   manifest by tmp-file rename, so a query checks the manifest's
 #   identity with ONE os.stat and a stale reader is dropped whole.
 # - contents: the pyarrow datasets of postings and termstats (discovered
-#   once; the Spark path shares only the termstats one), the byte size
-#   of every stream directory the estimate counts (stat-walked once, so
-#   a query walks nothing), and the doclens, tombstone, docvalues and
-#   ordinal streams plus the facet dictionaries, each read whole on its
-#   first local-tier use and kept while the bound below allows.
-#   Term-pruned postings stay a per-query read.
+#   once), the byte size of every stream directory the estimate counts
+#   (stat-walked once, so a query walks nothing), and the doclens,
+#   tombstone, docvalues and ordinal streams plus the facet
+#   dictionaries, each read whole on its first use and kept while the
+#   bound below allows. The Spark path uses the termstats dataset and
+#   the dictionaries (the facet finishes map ordinals through them on
+#   both tiers). Term-pruned postings stay a per-query read.
 # - memory bound: the streams and dictionaries that ALL open readers of
 #   the process hold share one pool, capped at the local-tier budget
 #   (_HELD, charged at their in-memory size). A stream that would push
@@ -1066,9 +1076,10 @@ def _n_segments_hint(*seg_objs) -> int:
 
 
 def _kernel_pdf(unified_pdf: pd.DataFrame, per_segment) -> pd.DataFrame | None:
-    """Run the per-segment kernel over a local-tier unified frame —
-    the driver-side twin of groupBy(seg).applyInPandas. None when no
-    segment produced rows."""
+    """Run the per-segment kernel over a pandas unified frame, one
+    segment group at a time (what groupBy(seg).applyInPandas does):
+    the local tier's kernel pass, and the single-stage strategy's
+    inside its one task. None when no segment produced rows."""
     outs = []
     if len(unified_pdf):
         for _, g in unified_pdf.groupby("seg", sort=False):
@@ -1087,21 +1098,89 @@ def _empty_topk() -> pd.DataFrame:
     return _topk_frame(np.array([], np.int64), np.array([], np.float64), 0)
 
 
-def _local_topk_frame(
-    res: pd.DataFrame | None,
+def _partials(unified, per_segment, schema: str, merge, n_segments_hint):
+    """Run the per-segment kernels over ``unified`` and return their
+    partials merged by ``merge`` (associative and idempotent: partials
+    -> partials of the same ``schema``) as one driver-side pandas
+    frame, or None when no segment produced rows.
+
+    On the local tier (``unified`` is a pandas frame) the kernels and
+    the merge run in-process. On the Spark path the merge runs inside
+    the kernels' own stage (_apply_per_segment), the merged partitions
+    are collected in ONE job, and the driver merges them once more —
+    at most partitions x (k | facet vocabulary | 1) rows cross, the
+    per-shard response of Solr's distributed search. Either way each
+    surface then finishes the merged partials with the same code."""
+    if isinstance(unified, pd.DataFrame):
+        res = _kernel_pdf(unified, per_segment)
+    else:
+        res = _apply_per_segment(
+            unified, per_segment, schema, n_segments_hint, merge=merge
+        ).toPandas()
+    if res is None or not len(res):
+        return None
+    return merge(res)
+
+
+_FOLDS = {"sum": np.add, "min": np.minimum, "max": np.maximum}
+
+
+def _fold(res: pd.DataFrame, keys: list[str], how: dict) -> pd.DataFrame:
+    """Merge of count/moment partials: rows grouped by ``keys`` (one
+    row for all of them when empty) in key order, each column of
+    ``how`` folded with its "sum" / "min" / "max". Integer counts and
+    the moments of integer docvalues are exact in any order (below
+    2^53). Plain numpy: a pandas groupby's fixed cost (milliseconds)
+    would dominate a local-tier facet request."""
+    out: dict = {}
+    if not keys:
+        inv, first = np.zeros(len(res), np.intp), np.zeros(1, np.intp)
+    elif len(keys) == 1:
+        uniq, first, inv = np.unique(
+            res[keys[0]].to_numpy(), return_index=True, return_inverse=True
+        )
+        out[keys[0]] = uniq
+    else:
+        uniq, first, inv = np.unique(
+            np.stack([res[k].to_numpy() for k in keys], axis=1), axis=0,
+            return_index=True, return_inverse=True,
+        )
+        out.update((k, uniq[:, i]) for i, k in enumerate(keys))
+    inv = inv.reshape(-1)
+    for c, f in how.items():
+        v = res[c].to_numpy()
+        acc = np.zeros(len(first), v.dtype) if f == "sum" else v[first].copy()
+        _FOLDS[f].at(acc, inv, v)
+        out[c] = acc
+    return pd.DataFrame(out)
+
+
+def _top_per_ord(res: pd.DataFrame, limit: int) -> pd.DataFrame:
+    """Merge of collapse/group partials: the best ``limit`` rows of
+    each (gen, ord) under (score desc, doc_id asc); scores are already
+    kernel-rounded, so every segment's winners compare exactly."""
+    cols = {c: res[c].to_numpy() for c in ("gen", "ord", "doc_id", "score")}
+    order = np.lexsort((cols["doc_id"], -cols["score"], cols["ord"], cols["gen"]))
+    g, o = cols["gen"][order], cols["ord"][order]
+    starts = np.flatnonzero(
+        np.concatenate([[True], (g[1:] != g[:-1]) | (o[1:] != o[:-1])])
+    )
+    rank = np.arange(len(order)) - np.repeat(starts, np.diff(np.append(starts, len(order))))
+    keep = order[rank < limit]
+    return pd.DataFrame({c: v[keep] for c, v in cols.items()})
+
+
+def _topk_cut(
+    res: pd.DataFrame,
     k: int,
     round_to: int,
     after: tuple[float, int] | None = None,
 ) -> pd.DataFrame:
-    """Driver-side finalization of a local-tier top-k: the Spark tail's
-    semantics (round -> cursor re-check -> orderBy -> limit) as pure
-    arithmetic — _spark_round IS F.round (exact HALF_UP) and the
-    (score desc, doc_id asc) lexsort IS the orderBy — so a local-tier
-    top-k runs ZERO Spark jobs. Returns the pandas answer; the public
-    surface converts it once (_relation), and bounded internal
-    consumers (rerank passes, handler seed exclusion) use it as is."""
-    if res is None or not len(res):
-        return _empty_topk()
+    """Merge AND finish of a (doc_id, score) top-k: round (_spark_round
+    IS F.round, exact HALF_UP, idempotent) -> cursor re-check -> the
+    (score desc, doc_id asc) lexsort -> the first k — rows in that
+    order. Internal consumers (rerank passes, handler seed exclusion)
+    use the frame as is; public surfaces convert it once (_relation)."""
     ids = res["doc_id"].to_numpy(np.int64)
     scores = _spark_round(res["score"].to_numpy(np.float64), round_to)
     if after is not None:
@@ -1113,64 +1192,34 @@ def _local_topk_frame(
 
 
 def _serve_topk(
-    spark: SparkSession,
     unified,
     per_segment,
     k: int,
     round_to: int,
     n_segments_hint: int | None,
     after: tuple[float, int] | None = None,
-):
-    """Run a (doc_id, score) top-k kernel and finalize it: driver-side
-    into a pandas answer on the local tier (``unified`` is a pandas
-    frame), or the Spark merge tail (round -> cursor re-check ->
-    orderBy -> limit) over the per-segment partials otherwise."""
-    if isinstance(unified, pd.DataFrame):
-        return _local_topk_frame(
-            _kernel_pdf(unified, per_segment), k, round_to, after=after
-        )
-    seg_tops = _apply_per_segment(
-        unified, per_segment, _TOPK_SCHEMA, n_segments_hint, spark=spark
+) -> pd.DataFrame:
+    """Run a (doc_id, score) top-k kernel: per-partition and driver
+    merges are both the _topk_cut (so the TakeOrderedAndProject bound
+    of k rows per partition holds); returns the pandas answer."""
+    out = _partials(
+        unified, per_segment, _TOPK_SCHEMA,
+        functools.partial(_topk_cut, k=k, round_to=round_to, after=after),
+        n_segments_hint,
     )
-    out = seg_tops.select("doc_id", F.round("score", round_to).alias("score"))
-    if after is not None:
-        # idempotent re-check on the Spark-rounded score (the kernel
-        # already filtered on the numpy rounding of the same values)
-        s_a, d_a = float(after[0]), int(after[1])
-        out = out.filter(
-            (F.col("score") < s_a)
-            | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
-        )
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _empty_topk() if out is None else out
 
 
-def _relation(spark: SparkSession, out) -> DataFrame:
-    """A surface's (doc_id, score) answer as a DataFrame: a driver-side
-    (pandas) answer crosses into the JVM here, once, as a local
-    relation; a Spark plan passes through."""
-    if isinstance(out, pd.DataFrame):
-        return local_relation(spark, out, _TOPK_SCHEMA)
-    return out
+def _relation(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
+    """A surface's (doc_id, score) answer as a DataFrame: it crosses
+    into the JVM here, once, as a local relation."""
+    return local_relation(spark, out, _TOPK_SCHEMA)
 
 
-def _topk_pdf(out) -> pd.DataFrame:
-    """A bounded (doc_id, score) answer as a driver-side frame: a
-    local-tier answer as is, a Spark plan collected (k rows)."""
-    if isinstance(out, pd.DataFrame):
-        return out
-    rows = out.collect()
-    return pd.DataFrame(
-        {
-            "doc_id": np.array([int(r["doc_id"]) for r in rows], np.int64),
-            "score": np.array([float(r["score"]) for r in rows], np.float64),
-        }
-    )
-
-
-def _local_dicts(gens, col: str) -> dict:
+def _ord_dicts(gens, col: str) -> dict:
     """gen -> {ord -> value} from the per-generation ordinal
-    dictionaries — the driver-side twin of the broadcast dictionary
-    join (facet vocabularies are bounded by construction)."""
+    dictionaries, read through each index's reader (facet
+    vocabularies are bounded by construction)."""
     return {gen_id: si.reader(check=False).dictionary(col) for gen_id, si in gens}
 
 
@@ -1180,17 +1229,14 @@ def _null_first_sorted(keys) -> list:
     return sorted(keys, key=lambda v: (v is not None, v if v is not None else ""))
 
 
-def _local_facet_counts(spark, res, gens, facet_col: str) -> DataFrame:
-    """Driver-side tail of wand_facet_search on the local tier: the
-    (gen,ord) partial-sum -> dictionary join -> value sum chain over a
-    bounded local relation scheduled two mini Spark jobs of pure
-    scheduling; integer count sums are order-independent, so the same
-    merge is exact here. Output order is value-sorted (the surface has
-    no ordering contract — callers sort)."""
+def _facet_counts(spark, res, gens, facet_col: str) -> DataFrame:
+    """Finish of wand_facet_search: merged (gen, ord, cnt) partials
+    through each generation's dictionary, summed by value, rows in
+    value order ASC NULLS FIRST."""
     schema = f"{facet_col} string, cnt long"
     if res is None:
         return empty_df(spark, schema)
-    dmap = _local_dicts(gens, facet_col)
+    dmap = _ord_dicts(gens, facet_col)
     agg: dict = {}
     for g, o, c in zip(
         res["gen"].to_numpy(), res["ord"].to_numpy(), res["cnt"].to_numpy()
@@ -1208,15 +1254,14 @@ def _local_facet_counts(spark, res, gens, facet_col: str) -> DataFrame:
     )
 
 
-def _local_collapse_topk(spark, res, gens, collapse_col: str, k: int) -> DataFrame:
-    """Driver-side tail of wand_collapse_search: per-value winner under
-    the (score, -doc_id) comparator (max_by's struct comparison IS
-    Python tuple comparison; scores are already kernel-rounded), then
-    the (score desc, doc_id asc) top-k lexsort."""
+def _collapse_topk(spark, res, gens, collapse_col: str, k: int) -> DataFrame:
+    """Finish of wand_collapse_search: per-value winner under the
+    (score, -doc_id) comparator across generations, then the top k
+    winners, rows in (score desc, doc_id asc) order."""
     schema = f"{collapse_col} string, doc_id long, score double"
     if res is None:
         return empty_df(spark, schema)
-    dmap = _local_dicts(gens, collapse_col)
+    dmap = _ord_dicts(gens, collapse_col)
     best: dict = {}
     for g, o, d, s in zip(
         res["gen"].to_numpy(), res["ord"].to_numpy(),
@@ -1242,10 +1287,10 @@ def _local_collapse_topk(spark, res, gens, collapse_col: str, k: int) -> DataFra
     )
 
 
-def _local_facet_range(spark, res, start: int, gap: int, n_buckets: int) -> DataFrame:
-    """Driver-side tail of wand_facet_range_search: the full bucket
-    lattice with zero counts served (Solr returns every bucket), in
-    bucket order — integer sums, exact."""
+def _range_counts(spark, res, start: int, gap: int, n_buckets: int) -> DataFrame:
+    """Finish of wand_facet_range_search: the full bucket lattice with
+    zero counts served (Solr returns every bucket), rows in bucket
+    order."""
     cnts = np.zeros(n_buckets, np.int64)
     if res is not None:
         for o, c in zip(res["ord"].to_numpy(), res["cnt"].to_numpy()):
@@ -1261,13 +1306,15 @@ def _local_facet_range(spark, res, start: int, gap: int, n_buckets: int) -> Data
 _STATS_SCHEMA = (
     "cnt long, min_v long, max_v long, sum_v long, mean_v double, stddev_v double"
 )
+_MOMENTS = {"cnt": "sum", "s": "sum", "ss": "sum", "mn": "min", "mx": "max"}
 
 
 def _stats_row(n: int, s: float, ss: float, mn: float, mx: float, round_to: int):
     """One merged-moments stats row — StatsValuesFactory's corrected
-    formula with the same n==1 NULL rule and cancellation clamp as the
-    Spark tail; double->long casts truncate toward zero exactly like
-    Spark's cast."""
+    formula: sample stddev NULL at n == 1, the variance operand clamped
+    at 0 (floating-point cancellation on near-constant columns must not
+    serve NaN), mean and stddev HALF_UP-rounded; double->long casts
+    truncate toward zero like Spark's cast."""
     mean = float(_spark_round(np.array([s / n]), round_to)[0])
     if n > 1:
         var = max(ss - s * s / n, 0.0) / (n - 1)
@@ -1278,27 +1325,16 @@ def _stats_row(n: int, s: float, ss: float, mn: float, mx: float, round_to: int)
             np.int64(int(s)), mean, std)
 
 
-def _local_stats(spark, res, round_to: int) -> DataFrame:
-    """Driver-side tail of wand_stats_search: sequential left-to-right
-    float accumulation in partials row order — bit-for-bit what
-    Spark's single-partition agg over the same local relation does."""
-    if res is None:
+def _stats_answer(spark, res, round_to: int) -> DataFrame:
+    """Finish of wand_stats_search: the one merged moment row (see
+    _stats_row); no row when nothing matched."""
+    if res is None or int(res["cnt"].iloc[0]) <= 0:
         return empty_df(spark, _STATS_SCHEMA)
-    n = 0
-    s = ss = 0.0
-    mn = mx = None
-    for c, sv, ssv, mnv, mxv in zip(
-        res["cnt"].to_numpy(), res["s"].to_numpy(), res["ss"].to_numpy(),
-        res["mn"].to_numpy(), res["mx"].to_numpy(),
-    ):
-        n += int(c)
-        s += float(sv)
-        ss += float(ssv)
-        mn = float(mnv) if mn is None else min(mn, float(mnv))
-        mx = float(mxv) if mx is None else max(mx, float(mxv))
-    if n <= 0:
-        return empty_df(spark, _STATS_SCHEMA)
-    cnt, min_v, max_v, sum_v, mean, std = _stats_row(n, s, ss, mn, mx, round_to)
+    r = res.iloc[0]
+    cnt, min_v, max_v, sum_v, mean, std = _stats_row(
+        int(r["cnt"]), float(r["s"]), float(r["ss"]), float(r["mn"]),
+        float(r["mx"]), round_to,
+    )
     return local_relation(
         spark,
         {
@@ -1310,9 +1346,9 @@ def _local_stats(spark, res, round_to: int) -> DataFrame:
     )
 
 
-def _local_facet_query_counts(spark, res) -> DataFrame:
-    """Driver-side tail of wand_facet_query_search: per-name integer
-    count sums, name-ordered (the orderBy of the Spark tail)."""
+def _facet_query_counts(spark, res) -> DataFrame:
+    """Finish of wand_facet_query_search: per-name count sums (zero
+    counts served), rows in name order."""
     schema = "name string, cnt long"
     if res is None:
         return empty_df(spark, schema)
@@ -1327,15 +1363,15 @@ def _local_facet_query_counts(spark, res) -> DataFrame:
     )
 
 
-def _local_stats_facet(spark, res, gens, facet_col: str, round_to: int) -> DataFrame:
-    """Driver-side tail of wand_stats_facet_search: moments merge per
-    facet value (sequential accumulation in partials row order, the
-    broadcast-join row order of the Spark tail), empty buckets absent,
-    value-ordered ASC NULLS FIRST."""
+def _stats_facet(spark, res, gens, facet_col: str, round_to: int) -> DataFrame:
+    """Finish of wand_stats_facet_search: merged (gen, ord) moments
+    through each generation's dictionary, merged again by value, one
+    _stats_row per non-empty value, rows in value order ASC NULLS
+    FIRST."""
     schema = f"{facet_col} string, " + _STATS_SCHEMA
     if res is None:
         return empty_df(spark, schema)
-    dmap = _local_dicts(gens, facet_col)
+    dmap = _ord_dicts(gens, facet_col)
     acc: dict = {}
     for g, o, c, sv, ssv, mnv, mxv in zip(
         res["gen"].to_numpy(), res["ord"].to_numpy(), res["cnt"].to_numpy(),
@@ -1371,14 +1407,18 @@ def _local_stats_facet(spark, res, gens, facet_col: str, round_to: int) -> DataF
     )
 
 
-def _local_percentiles(spark, res, percentiles: list[float]) -> DataFrame:
-    """Driver-side tail of wand_stats_percentiles_search: the same
-    k-th-smallest rule (k = ceil(p*n), float product and ceil exactly
-    as the Spark expressions compute them) over the bounded merged
-    histogram — integer sums, exact."""
+def _check_percentiles(percentiles: list[float]) -> None:
     for p in percentiles:
         if not 0.0 < p <= 1.0:
             raise ValueError(f"percentiles must be in (0, 1], got {p}")
+
+
+def _percentiles(spark, res, percentiles: list[float]) -> DataFrame:
+    """Finish of wand_stats_percentiles_search: the k-th-smallest rule
+    (k = ceil(p*n)) over the merged (value, cnt) histogram, one row per
+    distinct percentile, rows in pct order."""
+    import math
+
     schema = "pct double, value long"
     if res is None:
         return empty_df(spark, schema)
@@ -1386,18 +1426,12 @@ def _local_percentiles(spark, res, percentiles: list[float]) -> DataFrame:
     for o, c in zip(res["ord"].to_numpy(), res["cnt"].to_numpy()):
         o = int(o)
         hist[o] = hist.get(o, 0) + int(c)
-    if not hist:
-        return empty_df(spark, schema)
     n = sum(hist.values())
     values = sorted(hist)
     cums = np.cumsum(np.array([hist[v] for v in values], np.int64))
-    import math
-
-    pcts = sorted(set(float(p) for p in percentiles))
     out_p, out_v = [], []
-    for p in pcts:
-        kth = math.ceil(n * p)
-        idx = int(np.searchsorted(cums, kth, side="left"))
+    for p in sorted(set(float(p) for p in percentiles)):
+        idx = int(np.searchsorted(cums, math.ceil(n * p), side="left"))
         if idx < len(values):
             out_p.append(p)
             out_v.append(np.int64(values[idx]))
@@ -1408,19 +1442,19 @@ def _local_percentiles(spark, res, percentiles: list[float]) -> DataFrame:
     )
 
 
-def _local_group_topn(
+def _group_topn(
     spark, res, gens, group_col: str, k_groups: int, group_limit: int
 ) -> DataFrame:
-    """Driver-side tail of wand_group_search: member lists sorted by
-    the (ns=-score, doc_id) struct order (Python tuple comparison IS
-    Spark's struct comparison; scores kernel-rounded), groups ranked
-    by head element, top k_groups exploded back to rows."""
+    """Finish of wand_group_search: member lists sorted by (score desc,
+    doc_id asc) and cut to ``group_limit``, groups ranked by their head
+    member, the top ``k_groups`` exploded back to rows in (grp_rank,
+    pos) order."""
     schema = (
         f"grp_rank int, {group_col} string, pos int, doc_id long, score double"
     )
     if res is None:
         return empty_df(spark, schema)
-    dmap = _local_dicts(gens, group_col)
+    dmap = _ord_dicts(gens, group_col)
     groups: dict = {}
     for g, o, d, s in zip(
         res["gen"].to_numpy(), res["ord"].to_numpy(),
@@ -1449,39 +1483,33 @@ def _local_group_topn(
 
 
 def _apply_per_segment(
-    unified,
+    unified: DataFrame,
     per_segment,
     schema: str,
     n_segments_hint: int | None,
-    spark: SparkSession | None = None,
+    merge=None,
 ) -> DataFrame:
-    """Run a per-segment Arrow kernel over the unified frame — one
-    semantics, three physical strategies:
+    """The Spark plan of a per-segment Arrow kernel over the unified
+    frame, its outputs merged per partition by ``merge`` (see
+    _partials; None keeps every kernel row). One semantics, two
+    physical strategies:
 
-    - local tier (serving latency): ``unified`` is a pandas frame and
-      the caller runs the same kernels in-process (_kernel_pdf) before
-      it gets here; no scan stage, no exchange, no per-query Arrow
-      worker round-trip. Its inputs come from the index's driver-side
-      reader (SegmentIndex.reader): opened by the first local-tier query
-      and kept until manifest.json changes — one os.stat per query
-      checks that, and delete_docs / update_docs / compact_packed all
-      rewrite the manifest. It holds the postings and termstats datasets
-      (discovered once), the stream sizes the tier estimate reads, and
-      the doclens, tombstone, docvalues and ordinal streams, each read
-      once while the process-wide pool of held streams stays within the
-      local-tier budget (past it, a stream is read per query); only
-      term-pruned postings are always read per query.
     - exchange path (the 10^12-doc default): groupBy(seg).applyInPandas
       scores segments in parallel across executors; the shuffle moves
-      only the term-pruned rows.
+      only the term-pruned rows, and the merge is a mapInPandas in the
+      same stage as the kernels, so it adds no job.
     - single-stage path: when the index holds few segments (known
-      driver-side from the manifests) but the query is over the local
-      tier's byte budget, coalesce(1) + mapInPandas groups in-process
-      — the same kernels, no exchange, one scheduling wave instead of
-      two. coalesce(1) and never coalesce(n): a segment's postings and
-      doclen rows live in different FILES, so any n > 1 could split a
-      segment across partitions and score it on partial inputs.
-    """
+      driver-side from the manifests) and the estimate is under
+      SINGLE_STAGE_MAX_BYTES, coalesce(1) + mapInPandas groups
+      in-process and merges — the same kernels, no exchange, one
+      scheduling wave instead of two. coalesce(1) and never
+      coalesce(n): a segment's postings and doclen rows live in
+      different FILES, so any n > 1 could split a segment across
+      partitions and score it on partial inputs.
+
+    The local tier never gets here: _partials runs the same kernels
+    and the same merge in-process (_kernel_pdf), and both tiers finish
+    the merged partials with the same driver-side code."""
     if (
         not getattr(unified, "_spl_big_frame", False)
         and n_segments_hint is not None
@@ -1490,16 +1518,24 @@ def _apply_per_segment(
 
         def all_segments(batches):
             parts = [p for p in batches if len(p)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            for _, g in pdf.groupby("seg", sort=False):
-                out = per_segment(g.reset_index(drop=True))
-                if len(out):
-                    yield out
+            res = (
+                _kernel_pdf(pd.concat(parts, ignore_index=True), per_segment)
+                if parts else None
+            )
+            if res is not None:
+                yield res if merge is None else merge(res)
 
         return unified.coalesce(1).mapInPandas(all_segments, schema=schema)
-    return unified.groupBy("seg").applyInPandas(per_segment, schema=schema)
+    out = unified.groupBy("seg").applyInPandas(per_segment, schema=schema)
+    if merge is None:
+        return out
+
+    def merged(batches):
+        parts = [p for p in batches if len(p)]
+        if parts:
+            yield merge(pd.concat(parts, ignore_index=True))
+
+    return out.mapInPandas(merged, schema=schema)
 
 
 def _decode_doclens(dl_data: bytes) -> np.ndarray:
@@ -1695,7 +1731,7 @@ def delete_by_query(
     else:
         matches = _apply_per_segment(
             unified, per_segment, _TOPK_SCHEMA,
-            _n_segments_hint(si, *(field_segments or {}).values()), spark=spark,
+            _n_segments_hint(si, *(field_segments or {}).values()),
         )
         rows = matches.select("doc_id").limit(max_ids + 1).collect()
         ids = [r["doc_id"] for r in rows]
@@ -2414,7 +2450,7 @@ def _phrase_frames(
     """Shared body of wand_phrase_search(_multi): global df summed over
     the generations' sidecars; ``pooled`` aggregates n and avgdl across
     generations (token-weighted), else the one index's own stats.
-    Returns the local tier's pandas answer or the Spark plan."""
+    Returns the pandas answer (_serve_topk)."""
     term_list = sorted(set(phrase_terms))
     all_stats = [_sidecar_stats(si, term_list) for _, si in gens]
     dfs: dict[str, int] = {}
@@ -2440,7 +2476,7 @@ def _phrase_frames(
         )
 
     return _serve_topk(
-        spark, unified, per_segment, k, round_to,
+        unified, per_segment, k, round_to,
         _n_segments_hint(*(si for _, si in gens)),
     )
 
@@ -3241,8 +3277,8 @@ def _boolean_top(
     field_sims: dict | None = None,
     boost_fn: tuple | None = None,
 ):
-    """wand_boolean_search's answer before it crosses into the JVM:
-    the local tier's pandas frame, or the Spark plan."""
+    """wand_boolean_search's pandas answer, before it crosses into
+    the JVM."""
     tree, field_ctx, unified = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         extra_dv_cols=_boost_dv_cols(boost_fn),
@@ -3254,7 +3290,7 @@ def _boolean_top(
         )
 
     return _serve_topk(
-        spark, unified, per_segment, k, round_to,
+        unified, per_segment, k, round_to,
         _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
 
@@ -3292,7 +3328,7 @@ def wand_boolean_boosted_search(
         )
 
     return _relation(spark, _serve_topk(
-        spark, unified, per_segment, k, round_to,
+        unified, per_segment, k, round_to,
         _n_segments_hint(seg_index, *(field_segments or {}).values()),
     ))
 
@@ -3468,14 +3504,16 @@ def wand_facet_search(
     the tree evaluates per segment, matched docs map to ordinals from
     the ``facet_col`` SortedDocValues stream (build_segments
     string_cols), and per-segment (ordinal, count) partials — at most
-    |facet vocabulary| rows each — merge in one vocab-bounded agg and
-    join the broadcast ordinal dictionary back to values. The corpus
-    is never touched at query time; ONE Spark job.
+    |facet vocabulary| rows each — sum by ordinal inside the kernels'
+    stage (_partials); the driver maps the merged ordinals through the
+    dictionary back to values. The corpus is never touched at query
+    time; ONE Spark job on the Spark path, none on the local tier.
+    Returns (facet_col, cnt), rows in value order ASC NULLS FIRST.
 
     ``seg_index`` may be a LIST of generations (disjoint doc sets):
     each generation has its OWN ordinal dictionary, so partials carry
-    the generation id, join their generation's dictionary, and merge
-    by VALUE — counts equal the compacted index's."""
+    the generation id, map through their generation's dictionary, and
+    merge by VALUE — counts equal the compacted index's."""
     gens = _as_gens(seg_index)
     for _, si in gens:
         if facet_col not in si.string_cols:
@@ -3496,32 +3534,12 @@ def wand_facet_search(
         out.insert(0, "gen", np.int64(int(pdf["seg"].iloc[0]) // 1_000_000))
         return out
 
-    if isinstance(unified, pd.DataFrame):
-        # r07: the partial-sum -> broadcast dict join -> value-sum tail
-        # over a bounded local relation scheduled two mini Spark jobs
-        # of pure scheduling; integer sums are exact driver-side
-        return _local_facet_counts(
-            spark, _kernel_pdf(unified, per_segment), gens, facet_col
-        )
-    partials = _apply_per_segment(
+    res = _partials(
         unified, per_segment, "gen long, ord long, cnt long",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
+        functools.partial(_fold, keys=["gen", "ord"], how={"cnt": "sum"}),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
-    dicts = None
-    for gen_id, si in gens:
-        dpath = os.path.join(si.path, "docvalues_str", facet_col, "dict")
-        d = spark.read.parquet(dpath).withColumn(
-            "gen", F.lit(gen_id).cast("long")
-        )
-        dicts = d if dicts is None else dicts.unionByName(d)
-    return (
-        partials.groupBy("gen", "ord")
-        .agg(F.sum("cnt").alias("cnt"))
-        .join(F.broadcast(dicts), ["gen", "ord"], "left")
-        .groupBy("value")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(F.col("value").alias(facet_col), "cnt")
-    )
+    return _facet_counts(spark, res, gens, facet_col)
 
 
 def wand_collapse_search(
@@ -3547,15 +3565,16 @@ def wand_collapse_search(
     docs map to ordinals from the collapse column's SortedDocValues
     stream (build_segments string_cols), and the kernel emits ONE
     winner row per segment-local ordinal — at most |group vocab| rows
-    per segment, never the match set. Winners merge in one
-    vocab-bounded max_by agg and join the broadcast ordinal
-    dictionary back to values; the corpus is never touched at query
-    time. ONE Spark job, exactly the wand_facet_search shape with
-    max_by in place of sum.
+    per segment, never the match set. Winners merge per ordinal inside
+    the kernels' stage; the driver maps them through the dictionary
+    and keeps the best per value. ONE Spark job, exactly the
+    wand_facet_search shape with a max in place of the sum. Returns
+    (collapse_col, doc_id, score), rows in (score desc, doc_id asc)
+    order.
 
     ``seg_index`` may be a LIST of generations (disjoint doc sets):
-    partials carry the generation id, join their generation's own
-    dictionary, and merge by VALUE — winners equal the compacted
+    partials carry the generation id, map through their generation's
+    own dictionary, and merge by VALUE — winners equal the compacted
     index's."""
     gens = _as_gens(seg_index)
     for _, si in gens:
@@ -3578,41 +3597,12 @@ def wand_collapse_search(
         out.insert(0, "gen", np.int64(int(pdf["seg"].iloc[0]) // 1_000_000))
         return out
 
-    if isinstance(unified, pd.DataFrame):
-        # r07: per-value winner + top-k finalize driver-side (same
-        # comparator, scores already kernel-rounded) — zero Spark jobs
-        return _local_collapse_topk(
-            spark, _kernel_pdf(unified, per_segment), gens, collapse_col, k
-        )
-    partials = _apply_per_segment(
+    res = _partials(
         unified, per_segment, "gen long, ord long, doc_id long, score double",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
+        functools.partial(_top_per_ord, limit=1),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
-    dicts = None
-    for gen_id, si in gens:
-        dpath = os.path.join(si.path, "docvalues_str", collapse_col, "dict")
-        d = spark.read.parquet(dpath).withColumn(
-            "gen", F.lit(gen_id).cast("long")
-        )
-        dicts = d if dicts is None else dicts.unionByName(d)
-    # (gen, ord) -> value, then ONE max_by per value: the winner
-    # comparator (score, -doc_id) reproduces (score desc, doc_id asc)
-    winner = F.max_by(
-        F.struct("doc_id", "score"),
-        F.struct(F.col("score"), (-F.col("doc_id")).alias("nd")),
-    )
-    return (
-        partials.join(F.broadcast(dicts), ["gen", "ord"], "left")
-        .groupBy("value")
-        .agg(winner.alias("w"))
-        .select(
-            F.col("value").alias(collapse_col),
-            F.col("w.doc_id").alias("doc_id"),
-            F.col("w.score").alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _collapse_topk(spark, res, gens, collapse_col, k)
 
 
 def wand_facet_range_search(
@@ -3637,10 +3627,11 @@ def wand_facet_range_search(
 
     Plan: the boolean tree evaluates per segment, matched docs map to
     bucket ids by pure arithmetic over the dense numeric stream, and
-    per-segment partials — at most n_buckets rows each — merge in one
-    bounded agg joined to a generated bucket lattice. The corpus is
-    never touched; ONE Spark job, the wand_facet_search shape with
-    floor-divide in place of the ordinal dictionary."""
+    per-segment partials — at most n_buckets rows each — sum by bucket
+    inside the kernels' stage; the driver lays them on the bucket
+    lattice. The corpus is never touched; ONE Spark job, the
+    wand_facet_search shape with floor-divide in place of the ordinal
+    dictionary. Returns (bucket, cnt), rows in bucket order."""
     if gap <= 0 or end <= start:
         raise ValueError("facet.range needs gap > 0 and end > start")
     n_buckets = -(-(end - start) // gap)
@@ -3663,29 +3654,12 @@ def wand_facet_range_search(
             pdf, tree, field_ctx, 0, k1, b, facet_range_spec=spec
         )
 
-    if isinstance(unified, pd.DataFrame):
-        # r07: the lattice left-join + sum tail scheduled three mini
-        # jobs (range + agg + join) over bounded local relations;
-        # integer bucket sums are exact driver-side
-        return _local_facet_range(
-            spark, _kernel_pdf(unified, per_segment), int(start), int(gap),
-            n_buckets,
-        )
-    partials = _apply_per_segment(
+    res = _partials(
         unified, per_segment, "ord long, cnt long",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
+        functools.partial(_fold, keys=["ord"], how={"cnt": "sum"}),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
-    lattice = spark.range(n_buckets).select(F.col("id").alias("ord"))
-    return (
-        lattice.join(
-            partials.groupBy("ord").agg(F.sum("cnt").alias("cnt")), "ord", "left"
-        )
-        .select(
-            (F.lit(int(start)) + F.col("ord") * F.lit(int(gap))).alias("bucket"),
-            F.coalesce("cnt", F.lit(0)).alias("cnt"),
-        )
-        .orderBy("bucket")
-    )
+    return _range_counts(spark, res, int(start), int(gap), n_buckets)
 
 
 def wand_stats_search(
@@ -3704,10 +3678,12 @@ def wand_stats_search(
     numeric docvalues column over the query's matched docset.
 
     Plan: each segment emits ONE moment row (count, sum, sum of
-    squares, min, max) — the classic mergeable-moments trick — and
-    the driver-side agg derives mean and the corrected (sample)
-    stddev exactly: sqrt((ss - s^2/n) / (n-1)), StatsValuesFactory's
-    formula. The matched docset never leaves the kernels."""
+    squares, min, max) — the classic mergeable-moments trick — the
+    rows merge inside the kernels' stage, and the driver derives mean
+    and the corrected (sample) stddev exactly: sqrt((ss - s^2/n) /
+    (n-1)), StatsValuesFactory's formula. The matched docset never
+    leaves the kernels. Returns one row, or none when nothing
+    matched."""
     gens = _as_gens(seg_index)
     for _, si in gens:
         if stats_col not in si.value_cols:
@@ -3726,41 +3702,13 @@ def wand_stats_search(
             pdf, tree, field_ctx, 0, k1, b, stats_col=stats_col
         )
 
-    if isinstance(unified, pd.DataFrame):
-        # r07: the one-row moment merge finalizes driver-side —
-        # sequential float accumulation in partials row order is
-        # bit-for-bit the single-partition Spark agg
-        return _local_stats(spark, _kernel_pdf(unified, per_segment), round_to)
-    partials = _apply_per_segment(
+    res = _partials(
         unified, per_segment,
         "cnt long, s double, ss double, mn double, mx double",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
+        functools.partial(_fold, keys=[], how=_MOMENTS),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
-    n = F.sum("cnt")
-    s = F.sum("s")
-    ss = F.sum("ss")
-    # n == 1: the corrected variance is undefined — NULL, matching
-    # both stddev_samp engines (Spark's NaN is normalized the same
-    # way on the flat path)
-    # clamp the variance operand at 0: floating-point cancellation on
-    # near-constant or large-magnitude columns can push ss - s^2/n
-    # fractionally negative, which would serve NaN where the flat
-    # stddev_samp twin serves 0.0
-    stddev = F.when(
-        n > 1,
-        F.round(
-            F.sqrt(F.greatest(ss - s * s / n, F.lit(0.0)) / (n - F.lit(1))),
-            round_to,
-        ),
-    )
-    return partials.agg(
-        n.alias("cnt"),
-        F.min("mn").cast("long").alias("min_v"),
-        F.max("mx").cast("long").alias("max_v"),
-        s.cast("long").alias("sum_v"),
-        F.round(s / n, round_to).alias("mean_v"),
-        stddev.alias("stddev_v"),
-    ).filter(F.col("cnt") > 0)
+    return _stats_answer(spark, res, round_to)
 
 
 def wand_facet_query_search(
@@ -3837,18 +3785,12 @@ def wand_facet_query_search(
             pdf, tree, field_ctx, 0, k1, b, count_trees=fq_trees
         )
 
-    if isinstance(unified, pd.DataFrame):
-        # r07: per-name integer sums finalize driver-side — zero jobs
-        return _local_facet_query_counts(
-            spark, _kernel_pdf(unified, per_segment)
-        )
-    partials = _apply_per_segment(
+    res = _partials(
         unified, per_segment, "name string, cnt long",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
+        functools.partial(_fold, keys=["name"], how={"cnt": "sum"}),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
-    return (
-        partials.groupBy("name").agg(F.sum("cnt").alias("cnt")).orderBy("name")
-    )
+    return _facet_query_counts(spark, res)
 
 
 def wand_stats_facet_search(
@@ -3872,11 +3814,12 @@ def wand_stats_facet_search(
 
     Plan: each segment emits ONE mergeable moment row per facet
     ordinal (at most |segment facet vocab| rows — never the match
-    set); partials merge by (generation, ordinal), join the broadcast
-    ordinal dictionary, merge again by VALUE across generations, and
-    mean/stddev derive exactly from the merged moments
-    (StatsValuesFactory's corrected formula, the wand_stats_search
-    math applied per bucket)."""
+    set); partials merge by (generation, ordinal) inside the kernels'
+    stage, the driver maps them through each generation's dictionary
+    and merges again by VALUE, and mean/stddev derive exactly from the
+    merged moments (StatsValuesFactory's corrected formula, the
+    wand_stats_search math applied per bucket). Rows in value order
+    ASC NULLS FIRST."""
     gens = _as_gens(seg_index)
     for _, si in gens:
         if facet_col not in si.string_cols:
@@ -3904,61 +3847,14 @@ def wand_stats_facet_search(
         out.insert(0, "gen", np.int64(int(pdf["seg"].iloc[0]) // 1_000_000))
         return out
 
-    if isinstance(unified, pd.DataFrame):
-        # r07: per-value moment merge finalizes driver-side (sequential
-        # accumulation in partials row order == the broadcast-join row
-        # order of the Spark tail) — zero Spark jobs
-        return _local_stats_facet(
-            spark, _kernel_pdf(unified, per_segment), gens, facet_col, round_to
-        )
-    partials = _apply_per_segment(
+    res = _partials(
         unified, per_segment,
         "gen long, ord long, cnt long, s double, ss double, "
         "mn double, mx double",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
+        functools.partial(_fold, keys=["gen", "ord"], how=_MOMENTS),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
-    dicts = None
-    for gen_id, si in gens:
-        dpath = os.path.join(si.path, "docvalues_str", facet_col, "dict")
-        d = spark.read.parquet(dpath).withColumn(
-            "gen", F.lit(gen_id).cast("long")
-        )
-        dicts = d if dicts is None else dicts.unionByName(d)
-    merged = (
-        partials.join(F.broadcast(dicts), ["gen", "ord"], "left")
-        .groupBy("value")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("s").alias("s"),
-            F.sum("ss").alias("ss"),
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
-        )
-    )
-    n = F.col("cnt")
-    s = F.col("s")
-    ss = F.col("ss")
-    # same n==1 NULL rule + cancellation clamp as wand_stats_search
-    stddev = F.when(
-        n > 1,
-        F.round(
-            F.sqrt(F.greatest(ss - s * s / n, F.lit(0.0)) / (n - F.lit(1))),
-            round_to,
-        ),
-    )
-    return (
-        merged.select(
-            F.col("value").alias(facet_col),
-            n.alias("cnt"),
-            F.col("mn").cast("long").alias("min_v"),
-            F.col("mx").cast("long").alias("max_v"),
-            s.cast("long").alias("sum_v"),
-            F.round(s / n, round_to).alias("mean_v"),
-            stddev.alias("stddev_v"),
-        )
-        .filter(F.col("cnt") > 0)
-        .orderBy(facet_col)
-    )
+    return _stats_facet(spark, res, gens, facet_col, round_to)
 
 
 def wand_stats_percentiles_search(
@@ -3977,14 +3873,15 @@ def wand_stats_percentiles_search(
     matched docs from the numeric docvalues stream — bounded by the
     segment's distinct-value count, never the match set — histograms
     merge in one sum, and the k-th-smallest rule (k = ceil(p*n))
-    derives each percentile from the bounded cumulative frame
-    (components.percentiles_from_hist; flat twin
-    stats_percentiles_search). Solr itself approximates with t-digest;
+    derives each percentile from the bounded cumulative histogram
+    (the rule of components.percentiles_from_hist; flat twin
+    stats_percentiles_search). Returns (pct, value), one row per
+    distinct percentile in pct order; ValueError unless every
+    percentile is in (0, 1]. Solr itself approximates with t-digest;
     for bounded-cardinality docvalues the exact histogram is smaller
     than a digest — swap a mergeable digest into the kernel for
     genuinely unbounded columns, the derivation is unchanged."""
-    from ..query.components import percentiles_from_hist
-
+    _check_percentiles(percentiles)
     gens = _as_gens(seg_index)
     for _, si in gens:
         if stats_col not in si.value_cols:
@@ -4003,21 +3900,12 @@ def wand_stats_percentiles_search(
             pdf, tree, field_ctx, 0, k1, b, hist_col=stats_col
         )
 
-    if isinstance(unified, pd.DataFrame):
-        # r07: histogram merge + k-th-smallest derivation driver-side
-        return _local_percentiles(
-            spark, _kernel_pdf(unified, per_segment), percentiles
-        )
-    partials = _apply_per_segment(
+    res = _partials(
         unified, per_segment, "ord long, cnt long",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
+        functools.partial(_fold, keys=["ord"], how={"cnt": "sum"}),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
-    hist = (
-        partials.groupBy("ord")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(F.col("ord").alias("value"), "cnt")
-    )
-    return percentiles_from_hist(hist, percentiles)
+    return _percentiles(spark, res, percentiles)
 
 
 def wand_group_search(
@@ -4041,13 +3929,13 @@ def wand_group_search(
     flat one-row-per-group shape).
 
     Plan: the kernel emits the per-segment top-n PER ORDINAL (at most
-    n * |segment group vocab| rows — never the match set); partials
-    join their generation's broadcast dictionary and one
-    vocab-bounded agg per value sorts/slices the cross-segment union
-    (<= n * n_segments rows per group) into the group's member list;
-    groups rank by their head element via TakeOrderedAndProject and
-    the k_groups winners explode back to rows. Returns (grp_rank,
-    group_col, pos, doc_id, score) ordered by (grp_rank, pos).
+    n * |segment group vocab| rows — never the match set); the
+    partials keep the top n per ordinal inside the kernels' stage, and
+    the driver maps them through each generation's dictionary, sorts
+    and slices each value's member list, ranks groups by their head
+    member and explodes the k_groups winners back to rows. Returns
+    (grp_rank, group_col, pos, doc_id, score), rows in (grp_rank, pos)
+    order.
     ``group_limit`` must be >= 1 (ValueError on both tiers)."""
     if group_limit < 1:
         raise ValueError(f"group_limit must be >= 1, got {group_limit}")
@@ -4073,68 +3961,12 @@ def wand_group_search(
         out.insert(0, "gen", np.int64(int(pdf["seg"].iloc[0]) // 1_000_000))
         return out
 
-    if isinstance(unified, pd.DataFrame):
-        # r07: member-list sort/slice + group ranking driver-side
-        return _local_group_topn(
-            spark, _kernel_pdf(unified, per_segment), gens, group_col,
-            k_groups, group_limit,
-        )
-    partials = _apply_per_segment(
+    res = _partials(
         unified, per_segment, "gen long, ord long, doc_id long, score double",
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
+        functools.partial(_top_per_ord, limit=group_limit),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
-    dicts = None
-    for gen_id, si in gens:
-        dpath = os.path.join(si.path, "docvalues_str", group_col, "dict")
-        d = spark.read.parquet(dpath).withColumn(
-            "gen", F.lit(gen_id).cast("long")
-        )
-        dicts = d if dicts is None else dicts.unionByName(d)
-    # sort_array ascending over (ns=-score, doc_id) == (score desc,
-    # doc_id asc); slice keeps the group's true top-n because every
-    # segment already contributed its local top-n
-    member = F.struct(
-        (-F.col("score")).alias("ns"), F.col("doc_id").alias("doc_id"),
-        F.col("score").alias("score"),
-    )
-    grouped = (
-        partials.join(F.broadcast(dicts), ["gen", "ord"], "left")
-        .groupBy("value")
-        .agg(
-            F.slice(
-                F.sort_array(F.collect_list(member)), 1, int(group_limit)
-            ).alias("members")
-        )
-        .select(
-            F.col("value").alias(group_col),
-            "members",
-            F.element_at("members", 1).alias("head"),
-        )
-        .orderBy(F.asc("head.ns"), F.asc("head.doc_id"))
-        .limit(k_groups)
-    )
-    from pyspark.sql import Window
-
-    # grp_rank over <= k_groups rows — a bounded ranking, not a sort
-    # of the match set
-    ranked = grouped.select(
-        F.row_number()
-        .over(Window.orderBy(F.asc("head.ns"), F.asc("head.doc_id")))
-        .alias("grp_rank"),
-        group_col,
-        "members",
-    )
-    return ranked.select(
-        "grp_rank",
-        group_col,
-        F.posexplode("members").alias("pos0", "m"),
-    ).select(
-        "grp_rank",
-        group_col,
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.col("m.doc_id").alias("doc_id"),
-        F.col("m.score").alias("score"),
-    ).orderBy("grp_rank", "pos")
+    return _group_topn(spark, res, gens, group_col, k_groups, group_limit)
 
 
 def wand_scores_for_ids(
@@ -4150,10 +3982,11 @@ def wand_scores_for_ids(
 ) -> DataFrame:
     """Scores of a BOUNDED doc-id set under a boolean query — the
     second-pass primitive behind re-ranking and query elevation: the
-    tree evaluates per segment against the broadcast allowlist, each
-    segment emits at most |allowlist| rows, and ids the query does not
-    match are simply absent. ONE Spark job; the match set never leaves
-    the kernels."""
+    tree evaluates per segment against the allowlist, each segment
+    emits at most |allowlist| rows, and ids the query does not match
+    are simply absent; rows in (score desc, doc_id asc) order. ONE
+    Spark job on the Spark path; the match set never leaves the
+    kernels."""
     return _relation(spark, _scores_for_ids(
         spark, seg_index, query, doc_ids, k1, b, round_to, field_segments,
         field_sims,
@@ -4171,8 +4004,8 @@ def _scores_for_ids(
     field_segments: dict[str, SegmentIndex] | None = None,
     field_sims: dict | None = None,
 ):
-    """wand_scores_for_ids' answer before it crosses into the JVM: the
-    local tier's pandas frame, or the Spark plan."""
+    """wand_scores_for_ids' pandas answer, before it crosses into the
+    JVM."""
     allow = np.unique(np.asarray([int(d) for d in doc_ids], np.int64))
     tree, field_ctx, unified = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
@@ -4183,22 +4016,13 @@ def _scores_for_ids(
             pdf, tree, field_ctx, 0, k1, b, only_doc_ids=allow
         )
 
-    if isinstance(unified, pd.DataFrame):
-        res = _kernel_pdf(unified, per_segment)
-        if res is None:
-            return _empty_topk()
-        return pd.DataFrame(
-            {
-                "doc_id": res["doc_id"].to_numpy(np.int64),
-                "score": _spark_round(
-                    res["score"].to_numpy(np.float64), round_to
-                ),
-            }
-        )
-    return _apply_per_segment(
+    res = _partials(
         unified, per_segment, _TOPK_SCHEMA,
-        _n_segments_hint(seg_index, *(field_segments or {}).values()), spark=spark,
-    ).select("doc_id", F.round("score", round_to).alias("score"))
+        # each doc lives in one segment: a cut at |allowlist| keeps all
+        functools.partial(_topk_cut, k=len(allow), round_to=round_to),
+        _n_segments_hint(seg_index, *(field_segments or {}).values()),
+    )
+    return _empty_topk() if res is None else res
 
 
 def wand_rerank_search(
@@ -4225,13 +4049,12 @@ def wand_rerank_search(
     Job shape (the bounded-driver-crossing discipline of the packed
     /mlt and /uf handlers): pass 1 = base top-N (per-segment fan-out,
     N rows cross the driver); pass 2 = the rerank tree evaluated per
-    segment against the broadcast N-id allowlist — each segment emits
-    at most |allowlist| rows, the match set never leaves the kernel.
-    The final combine joins the N-row local base frame, whose
-    broadcast build schedules as its own (driver-local, N-row) job —
-    3 Spark jobs total, the same budget as the packed /uf handler,
-    every one k/N-row bounded regardless of how many docs match
-    either query (asserted in tests/test_serving_plans.py).
+    segment against the N-id allowlist — each segment emits at most
+    |allowlist| rows, the match set never leaves the kernel. The
+    combine is driver-side arithmetic over <= N rows. On the Spark
+    path that is one job per pass, each N-row bounded regardless of
+    how many docs match either query; on the local tier, none
+    (asserted in tests/test_serving_plans.py).
 
     ``k`` must be <= ``rerank_docs`` (Solr serves reranked rows from
     within the reRankDocs prefix; the below-N tail keeps base order —
@@ -4241,29 +4064,26 @@ def wand_rerank_search(
             f"rerank serves from the top-{rerank_docs} prefix; page size "
             f"k={k} exceeds it — raise rerank_docs or page the base query"
         )
-    # pass 1: the base top-N; on the local tier it stays a driver-side
-    # frame, on the Spark path it is collected (bounded: rerank_docs rows)
-    base = _topk_pdf(_boolean_top(
+    # pass 1: the base top-N as a driver-side frame (bounded:
+    # rerank_docs rows)
+    base = _boolean_top(
         spark, seg_index, base_query, rerank_docs, k1, b, round_to,
         field_segments, field_sims,
-    ))
+    )
     if not len(base):
         return empty_df(spark, _TOPK_SCHEMA)
     ids = base["doc_id"].to_numpy(np.int64)
     # pass 2: the rerank tree against the N-id allowlist (bounded: at
     # most |base| rows)
-    rr_pdf = _topk_pdf(_scores_for_ids(
+    rr_pdf = _scores_for_ids(
         spark, seg_index, rerank_query, ids.tolist(), k1, b, round_to,
         field_segments, field_sims,
-    ))
+    )
 
     # both sides are bounded driver-side rows, so the combine is pure
-    # arithmetic over <= rerank_docs entries — r07: the former
-    # createDataFrame + left-join + TakeOrdered plan scheduled a third
-    # Spark job (~0.4 s at the 2M-turn bench shape) to add <=30
-    # numbers. Rounding via _spark_round == F.round (exact HALF_UP),
-    # ordering via the same (score desc, doc_id asc) lexsort the
-    # packed kernels use, so results are identical to the join plan.
+    # arithmetic over <= rerank_docs entries: rounding via _spark_round
+    # == F.round (exact HALF_UP), ordering via the same (score desc,
+    # doc_id asc) lexsort the packed kernels use.
     rr = dict(zip(rr_pdf["doc_id"].tolist(), rr_pdf["score"].tolist()))
     boost = np.array([rr.get(int(d), 0.0) for d in ids], np.float64)
     total = _spark_round(
@@ -4921,11 +4741,11 @@ def wand_search(
 
     Plan: term->df from the build-time sidecar (driver-side pyarrow,
     no job) -> parquet scan with term-isin pushdown (few rows per
-    segment) -> per-segment pruned scoring in one Arrow batch ->
-    global merge of n_segments*k rows (TakeOrderedAndProject): ONE
-    Spark job. At 10^12 docs this is the query fast path: work per
-    segment is bounded by the query's posting sizes, the merge is k
-    rows per segment.
+    segment) -> per-segment pruned scoring in one Arrow batch -> a
+    k-row top-k cut per partition in the same stage -> one collect and
+    the same cut on the driver (_serve_topk): ONE Spark job. At 10^12
+    docs this is the query fast path: work per segment is bounded by
+    the query's posting sizes, the merge is k rows per partition.
 
     ``sim``: any query.scorer.Similarity — plain BM25 takes the
     block-max pruned path; payload/classic/toggle variants run the
@@ -5007,6 +4827,53 @@ def _sidecar_dfs(
     return {t: d for t, (d, _c) in st.items()}
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (the parser unescapes the
+    backslash and quote escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _scan(spark: SparkSession, si: SegmentIndex, rel: str, schema: str):
+    """One hive-partitioned stream directory of ``si`` as a Spark scan.
+    Explicit schemas: the layout is fixed by the codec, and schema
+    inference would cost a footer-read job per query."""
+    base = os.path.join(si.path, rel)
+    return spark.read.option("basePath", base).schema(schema).parquet(base)
+
+
+_NULL_POSTING_COLS = (
+    "CAST(NULL AS bigint) AS df",
+    "CAST(NULL AS array<bigint>) AS block_last",
+    "CAST(NULL AS array<int>) AS block_max",
+    "CAST(NULL AS array<bigint>) AS block_off",
+)
+_NULL_SUB_COLS = (
+    "CAST(NULL AS array<bigint>) AS pos_off",
+    "CAST(NULL AS binary) AS pos_data",
+    "CAST(NULL AS binary) AS pay_data",
+)
+
+
+def _stream_rows(
+    stream, kind: str, field: str, term: str | None, seg_offset: int,
+    with_subs: bool,
+):
+    """A dense per-segment stream (doclens, deletes, docvalues) as
+    unified-frame rows, in ONE selectExpr: ``seg_offset`` namespaces
+    seg ids per generation, ``term`` tags docvalues rows with their
+    column (NULL otherwise)."""
+    return stream.selectExpr(
+        f"seg + {int(seg_offset)} AS seg",
+        f"{_sql_str(kind)} AS _kind",
+        f"{_sql_str(field)} AS fld",
+        ("CAST(NULL AS string)" if term is None else _sql_str(term)) + " AS term",
+        *_NULL_POSTING_COLS,
+        "doc_lo",
+        "dl_data AS data",
+        *(_NULL_SUB_COLS if with_subs else ()),
+    )
+
+
 def _unified_frame(
     spark: SparkSession,
     gens: list[tuple[int, SegmentIndex]],
@@ -5016,109 +4883,58 @@ def _unified_frame(
     local: bool = False,
 ):
     """Postings (term-pruned scan) + doclen rows stacked into one frame
-    keyed by seg, for a single groupBy(seg).applyInPandas stage.
-    ``with_subs`` adds the v3 positions/payload sub-stream columns
-    (left out of the plain-BM25 scan so parquet column pruning skips
-    those bytes). ``field`` tags every row (fld column) so per-field
-    packed indexes over the SAME doc space can stack into one frame —
-    same seg covers the same doc range, so field routing stays
-    segment-local (wand_boolean_search field_segments).
+    keyed by seg, for a single per-segment kernel stage. ``with_subs``
+    adds the v3 positions/payload sub-stream columns (left out of the
+    plain-BM25 scan so parquet column pruning skips those bytes).
+    ``field`` tags every row (fld column) so per-field packed indexes
+    over the SAME doc space can stack into one frame — same seg covers
+    the same doc range, so field routing stays segment-local
+    (wand_boolean_search field_segments). Tombstone streams
+    (delete_docs) ride the same frame as _kind='del' rows, so every
+    kernel sees its segment's deletions in the same Arrow group.
 
-    ``local=True`` (byte budget pre-checked via _tier) returns the
-    pandas twin assembled driver-side — the local serving tier."""
+    Each part is one scan and one selectExpr (a handful of JVM round
+    trips, not one per column). ``local=True`` (byte budget
+    pre-checked via _tier) returns the pandas twin assembled
+    driver-side — the local serving tier."""
     if local:
         return _unified_pdf(gens, term_list, with_subs=with_subs, field=field)
-    posts = None
-    dls = None
-    dels = None
-    for gen_id, si in gens:
-        # explicit schemas: the layout is fixed by the codec, and
-        # schema inference would cost a footer-read job per query
-        p = (
-            spark.read.option("basePath", os.path.join(si.path, "postings"))
-            .schema(POSTINGS_SCHEMA + ", group int")
-            .parquet(os.path.join(si.path, "postings"))
-            .filter(F.col("term").isin(term_list))
-            # namespace segment ids per generation so groups don't collide
-            .withColumn("seg", F.col("seg") + F.lit(gen_id * 1_000_000))
+    # an empty IN list does not parse: match nothing instead
+    in_terms = "term IN (" + ", ".join(
+        _sql_str(t) for t in term_list or ["\x00none"]
+    ) + ")"
+    parts = [
+        _scan(spark, si, "postings", POSTINGS_SCHEMA + ", group int")
+        .filter(in_terms)
+        .selectExpr(
+            f"seg + {gen_id * 1_000_000} AS seg",
+            "'post' AS _kind",
+            f"{_sql_str(field)} AS fld",
+            "term", "df", "block_last", "block_max", "block_off",
+            "CAST(NULL AS bigint) AS doc_lo",
+            "data",
+            *(_SUB_COLS if with_subs else ()),
         )
-        d = (
-            spark.read.option("basePath", os.path.join(si.path, "doclens"))
-            .schema(DOCLEN_SCHEMA + ", group int")
-            .parquet(os.path.join(si.path, "doclens"))
-            .withColumn("seg", F.col("seg") + F.lit(gen_id * 1_000_000))
+        for gen_id, si in gens
+    ]
+    parts += [
+        _stream_rows(
+            _scan(spark, si, "doclens", DOCLEN_SCHEMA + ", group int"),
+            "dl", field, None, gen_id * 1_000_000, with_subs,
         )
-        posts = p if posts is None else posts.unionByName(p)
-        dls = d if dls is None else dls.unionByName(d)
-        # tombstone streams (delete_docs): _kind='del' rows ride the
-        # same per-segment frame so every kernel sees its segment's
-        # deletions in the same Arrow group — no extra join, no extra
-        # job. Existence check is one driver-side stat call; absent dir
-        # (the common case) costs nothing.
-        if os.path.isdir(_deletes_dir(si.path)):
-            t = (
-                spark.read.schema(DOCLEN_SCHEMA)
-                .parquet(_deletes_dir(si.path))
-                .withColumn("seg", F.col("seg") + F.lit(gen_id * 1_000_000))
-            )
-            dels = t if dels is None else dels.unionByName(t)
-
-    sub_cols = (
-        [F.col("pos_off"), F.col("pos_data"), F.col("pay_data")] if with_subs else []
-    )
-    sub_nulls = (
-        [
-            F.lit(None).cast("array<long>").alias("pos_off"),
-            F.lit(None).cast("binary").alias("pos_data"),
-            F.lit(None).cast("binary").alias("pay_data"),
-        ]
-        if with_subs
-        else []
-    )
-    out = posts.select(
-        "seg",
-        F.lit("post").alias("_kind"),
-        F.lit(field).alias("fld"),
-        "term",
-        "df",
-        "block_last",
-        "block_max",
-        "block_off",
-        F.lit(None).cast("long").alias("doc_lo"),
-        "data",
-        *sub_cols,
-    ).unionByName(
-        dls.select(
-            "seg",
-            F.lit("dl").alias("_kind"),
-            F.lit(field).alias("fld"),
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("long").alias("df"),
-            F.lit(None).cast("array<long>").alias("block_last"),
-            F.lit(None).cast("array<int>").alias("block_max"),
-            F.lit(None).cast("array<long>").alias("block_off"),
-            "doc_lo",
-            F.col("dl_data").alias("data"),
-            *sub_nulls,
+        for gen_id, si in gens
+    ]
+    # the existence check is one driver-side stat call; an absent
+    # directory (the common case) costs nothing
+    parts += [
+        _stream_rows(
+            spark.read.schema(DOCLEN_SCHEMA).parquet(_deletes_dir(si.path)),
+            "del", field, None, gen_id * 1_000_000, with_subs,
         )
-    )
-    if dels is not None:
-        out = out.unionByName(
-            dels.select(
-                "seg",
-                F.lit("del").alias("_kind"),
-                F.lit(field).alias("fld"),
-                F.lit(None).cast("string").alias("term"),
-                F.lit(None).cast("long").alias("df"),
-                F.lit(None).cast("array<long>").alias("block_last"),
-                F.lit(None).cast("array<int>").alias("block_max"),
-                F.lit(None).cast("array<long>").alias("block_off"),
-                "doc_lo",
-                F.col("dl_data").alias("data"),
-                *sub_nulls,
-            )
-        )
-    return out
+        for gen_id, si in gens
+        if os.path.isdir(_deletes_dir(si.path))
+    ]
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def _dv_frame(
@@ -5139,33 +4955,9 @@ def _dv_frame(
         return _dv_pdf(
             si, col, with_subs, subdir=subdir, seg_offset=seg_offset
         )
-    base = os.path.join(si.path, _dv_rel(col, subdir))
-    dv = (
-        spark.read.option("basePath", base)
-        .schema(DOCLEN_SCHEMA + ", group int")
-        .parquet(base)
-    )
-    sub_nulls = (
-        [
-            F.lit(None).cast("array<long>").alias("pos_off"),
-            F.lit(None).cast("binary").alias("pos_data"),
-            F.lit(None).cast("binary").alias("pay_data"),
-        ]
-        if with_subs
-        else []
-    )
-    return dv.select(
-        (F.col("seg") + F.lit(seg_offset)).alias("seg"),
-        F.lit("dv").alias("_kind"),
-        F.lit("").alias("fld"),
-        F.lit(col).alias("term"),
-        F.lit(None).cast("long").alias("df"),
-        F.lit(None).cast("array<long>").alias("block_last"),
-        F.lit(None).cast("array<int>").alias("block_max"),
-        F.lit(None).cast("array<long>").alias("block_off"),
-        "doc_lo",
-        F.col("dl_data").alias("data"),
-        *sub_nulls,
+    return _stream_rows(
+        _scan(spark, si, _dv_rel(col, subdir), DOCLEN_SCHEMA + ", group int"),
+        "dv", "", col, seg_offset, with_subs,
     )
 
 
@@ -5205,8 +4997,8 @@ def _wand_search_frames(
 ):
     """Shared body of wand_search(_multi); ``pooled`` scores with
     statistics pooled over the generations (_gen_stats). Returns the
-    local tier's pandas answer (an empty answer is always one) or the
-    Spark plan; the public surfaces convert it once (_relation)."""
+    pandas answer on both tiers (a known-empty one before any frame is
+    read); the public surfaces convert it once (_relation)."""
     term_list = sorted({t for t, _ in terms_boosts})
     boosts: dict[str, float] = {}
     for t, w in terms_boosts:
@@ -5317,10 +5109,10 @@ def _wand_search_frames(
                 after=cursor,
             )
 
-    # the local tier finalizes driver-side (zero Spark jobs); the after
-    # re-check stays idempotent on the same exact rounding
+    # the after re-check of the top-k cut is idempotent on the same
+    # exact rounding the kernel filtered on
     return _serve_topk(
-        spark, unified, per_segment, k, round_to,
+        unified, per_segment, k, round_to,
         _n_segments_hint(*(si for _, si in gens)), after=after,
     )
 

@@ -14,7 +14,6 @@ multiplicatively AFTER clause scoring, exactly like BoostedQuery.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -228,7 +227,6 @@ def packed_select_handler(
     from ..index.segments import (
         _boolean_top,
         _relation,
-        _topk_pdf,
         fetch_docs_local,
         wand_facet_query_search,
         wand_facet_search,
@@ -237,40 +235,34 @@ def packed_select_handler(
     )
 
     first = seg_index[0] if isinstance(seg_index, (list, tuple)) else seg_index
-    top = _boolean_top(
+    # the k-row page is a driver-side frame on both tiers
+    page = _boolean_top(
         spark, seg_index, query, k, k1=k1, b=b,
         field_segments=field_segments, field_sims=field_sims,
     )
-    if with_stored and first.store_cols:
-        # materialize the k-row page ONCE (joining a lazy Spark `top`
-        # against the docstore would re-execute the whole per-segment
-        # evaluation a second time; a local-tier page is already a
-        # driver-side frame), then merge the stored fields via a
-        # DRIVER-SIDE docstore point read — zero further Spark jobs;
-        # the caller's collect serves from a local frame
-        page = _topk_pdf(top)
-        ids = page["doc_id"].tolist()
-        if ids:
-            stored = fetch_docs_local(seg_index, ids)
-            merged = page.merge(stored, on="doc_id", how="left").sort_values(
-                ["score", "doc_id"], ascending=[False, True]
+    ids = page["doc_id"].tolist()
+    if with_stored and first.store_cols and ids:
+        # merge the stored fields via a DRIVER-SIDE docstore point read
+        # — zero further Spark jobs; the caller's collect serves from a
+        # local frame
+        stored = fetch_docs_local(seg_index, ids)
+        merged = page.merge(stored, on="doc_id", how="left").sort_values(
+            ["score", "doc_id"], ascending=[False, True]
+        )
+        if first.store_schema:
+            extra = ", ".join(
+                c
+                for c in first.store_schema.split(", ")
+                if not c.startswith("doc_id ")
             )
-            if first.store_schema:
-                extra = ", ".join(
-                    c
-                    for c in first.store_schema.split(", ")
-                    if not c.startswith("doc_id ")
-                )
-                schema = "doc_id bigint, score double" + (
-                    ", " + extra if extra else ""
-                )
-                docs = local_relation(spark, merged, schema)
-            else:
-                docs = spark.createDataFrame(merged)
+            schema = "doc_id bigint, score double" + (
+                ", " + extra if extra else ""
+            )
+            docs = local_relation(spark, merged, schema)
         else:
-            docs = _relation(spark, page)
+            docs = spark.createDataFrame(merged)
     else:
-        docs = _relation(spark, top)
+        docs = _relation(spark, page)
     out: dict[str, DataFrame] = {"docs": docs}
     for field in facet_fields or []:
         out[f"facet_{field}"] = wand_facet_search(
@@ -414,7 +406,6 @@ def packed_mlt_handler(
         _boolean_top,
         _empty_topk,
         _relation,
-        _topk_pdf,
         _wand_search_frames,
         fetch_docs_local,
     )
@@ -428,9 +419,9 @@ def packed_mlt_handler(
             )
         seed_doc_ids = [
             _seed_at_offset(
-                lambda q, k: _topk_pdf(
-                    _boolean_top(spark, seg_index, q, k)
-                ).to_dict("records"),
+                lambda q, k: _boolean_top(spark, seg_index, q, k).to_dict(
+                    "records"
+                ),
                 match_query,
                 match_offset,
             )
@@ -457,21 +448,14 @@ def packed_mlt_handler(
         if boosts
         else _empty_topk()
     )
-    if isinstance(top, pd.DataFrame):
-        # a local-tier (or known-empty) answer is a pre-sorted (score
-        # desc, doc_id asc) driver-side frame of <= k+|seeds| rows: the
-        # seed-exclusion + re-top-k tail is a mask and a slice, and the
-        # page crosses into the JVM once
-        hits = top[~top["doc_id"].isin(seed_ids)].head(k)
-        docs = _relation(spark, hits)
-    else:
-        hits = None
-        docs = (
-            top.filter(~F.col("doc_id").isin(seed_ids))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-    out: dict[str, DataFrame] = {"docs": docs, "interesting_terms": terms}
+    # the answer is a pre-sorted (score desc, doc_id asc) driver-side
+    # frame of <= k+|seeds| rows on both tiers: the seed-exclusion +
+    # re-top-k tail is a mask and a slice, and the page crosses into
+    # the JVM once
+    hits = top[~top["doc_id"].isin(seed_ids)].head(k)
+    out: dict[str, DataFrame] = {
+        "docs": _relation(spark, hits), "interesting_terms": terms,
+    }
     if facet_fields:
         missing = [f for f in facet_fields if f not in first.store_cols]
         if missing:
@@ -479,13 +463,6 @@ def packed_mlt_handler(
                 f"packed /mlt facets need stored columns {missing} — "
                 "rebuild with build_segments(..., store_cols=[...])"
             )
-        # materialize the k-row result page ONCE as a local frame (the
-        # packed_select_handler pattern): the facet section needs the
-        # result ids, and leaving out["docs"] lazy would re-execute the
-        # whole expansion search when the caller collects it
-        if hits is None:
-            hits = _topk_pdf(docs)
-            out["docs"] = _relation(spark, hits)
         ids = hits["doc_id"].tolist()
         # facets count over the RESULT page (DiceMoreLikeThisHandler
         # .java:263-271): k rows — one DRIVER-SIDE docstore point read
@@ -536,18 +513,17 @@ def packed_feedback_handler(
     .java:101-131 at the serve tier): seed top-N via the per-segment
     boolean path, term extraction from docstore + termstats sidecar,
     and the final query (seed MUST + expansion SHOULD, seeds NOT
-    excluded) as ONE boosted per-segment job — three Spark jobs total
-    plus the bounded docstore point read, matching the flat path's
-    driver-crossing count."""
+    excluded) as ONE boosted per-segment pass — two Spark jobs on the
+    Spark path (seed page, final query) and none on the local tier;
+    the docstore and sidecar reads are driver-side."""
     from ..index.segments import (
         _boolean_top,
-        _topk_pdf,
         wand_boolean_boosted_search,
         wand_boolean_search,
     )
 
-    # the seed page stays a driver-side frame on the local tier
-    seeds = _topk_pdf(_boolean_top(spark, seg_index, query, max_seed_docs))
+    # the seed page is a driver-side frame on both tiers
+    seeds = _boolean_top(spark, seg_index, query, max_seed_docs)
     seed_ids = seeds["doc_id"].tolist()
     queue = _packed_interesting_terms(
         spark, seg_index, seed_ids, params, text_col, tok_kwargs=tok_kwargs

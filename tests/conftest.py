@@ -23,6 +23,18 @@ def count_jobs(spark, fn, group: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def tier(monkeypatch, budget: int | None) -> None:
+    """Serve packed requests under a local-tier byte ``budget`` for the
+    rest of the test: None is the default budget, 0 turns the local
+    tier off (every request takes the Spark path). ``monkeypatch``
+    restores the environment when the test ends — the suite's one
+    tier switch."""
+    if budget is None:
+        monkeypatch.delenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", raising=False)
+    else:
+        monkeypatch.setenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", str(budget))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cores=8, shuffle_partitions=8)

@@ -9,7 +9,7 @@ which collects driver-side with zero jobs."""
 import numpy as np
 import pandas as pd
 import pytest
-from conftest import count_jobs
+from conftest import count_jobs, tier
 
 from solrplugins_spark.index import segments as S
 from solrplugins_spark.index.builder import build_index, mint_doc_ids
@@ -97,11 +97,8 @@ def test_known_empty_answer_stays_driver_side_on_both_tiers(spark, eseg, monkeyp
     """An all-unknown-term expansion is answered before any frame is
     read, as a driver-side frame on either tier — so the /mlt tail
     over it (seed exclusion, re-top-k) schedules no Spark job."""
-    for budget in (None, "0"):
-        if budget is None:
-            monkeypatch.delenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", raising=False)
-        else:
-            monkeypatch.setenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", budget)
+    for budget in (None, 0):
+        tier(monkeypatch, budget)
         top = S._wand_search_frames(
             spark, [(0, eseg)], [("xxnosuchtermxx", 1.0)], k=10
         )

@@ -6,6 +6,7 @@ special case; brute force pins the semantics."""
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from conftest import tier
 
 from solrplugins_spark.index.segments import build_segments, wand_group_search
 from solrplugins_spark.query.collapse import collapse_search, group_search
@@ -106,10 +107,7 @@ def test_group_limit_below_one_is_rejected_on_both_tiers(
 ):
     # the local tier's driver-side tail and the Spark tail must refuse
     # the same input the same way (not IndexError on one tier only)
-    if budget is None:
-        monkeypatch.delenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", raising=False)
-    else:
-        monkeypatch.setenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", budget)
+    tier(monkeypatch, budget)
     with pytest.raises(ValueError, match="group_limit"):
         wand_group_search(
             spark, grp_segments, hot_query, "tool", k_groups=4,

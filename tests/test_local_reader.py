@@ -23,7 +23,7 @@ from collections import Counter
 
 import pandas as pd
 import pytest
-from conftest import count_jobs
+from conftest import count_jobs, tier
 
 from solrplugins_spark.index import segments as S
 from solrplugins_spark.index.builder import build_index
@@ -32,7 +32,6 @@ from solrplugins_spark.query.mlt import MLTParams
 from solrplugins_spark.streaming.incremental import process_generation, update_docs
 
 KEYS = ("conv_id", "turn_idx")
-TIER_ENV = "SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"
 BUILD = dict(
     positions=True, store_cols=["text"], value_cols=["turn_idx"],
     string_cols=["role"],
@@ -57,24 +56,14 @@ def _answers(spark, si, terms) -> dict:
     }
 
 
-def _spark_tier(fn):
-    prev = os.environ.get(TIER_ENV)
-    os.environ[TIER_ENV] = "0"
-    try:
-        return fn()
-    finally:
-        if prev is None:
-            del os.environ[TIER_ENV]
-        else:
-            os.environ[TIER_ENV] = prev
-
-
-def _check(spark, si, terms, gone: set) -> dict:
+def _check(spark, monkeypatch, si, terms, gone: set) -> dict:
     """``si`` (a long-lived handle) answers like a fresh load and like
     the Spark tier, and no answer holds a doc of ``gone``."""
     got = _answers(spark, si, terms)
     assert got == _answers(spark, S.SegmentIndex.load(si.path), terms)
-    assert got == _spark_tier(lambda: _answers(spark, si, terms))
+    tier(monkeypatch, 0)
+    assert got == _answers(spark, si, terms)
+    tier(monkeypatch, None)
     assert got["bag"] and got["boolean"] and got["facet"]
     for name in ("bag", "boolean"):
         assert not gone & {int(r[0]) for r in got[name]}, name
@@ -94,11 +83,13 @@ def store(spark, tiny_corpus_pd, tmp_path):
     return path
 
 
-def test_reader_follows_delete_update_and_compaction(spark, tiny_corpus_pd, store):
+def test_reader_follows_delete_update_and_compaction(
+    spark, tiny_corpus_pd, store, monkeypatch
+):
     half = len(tiny_corpus_pd) // 2
     gen0 = S.SegmentIndex.load(os.path.join(store, "segments", "gen=0"))
     terms = _top_terms(tiny_corpus_pd["text"].iloc[:half], 40)[30:33]
-    before = _check(spark, gen0, terms, set())
+    before = _check(spark, monkeypatch, gen0, terms, set())
     first = gen0._reader
     assert first is not None, "the first query opens the reader"
     _answers(spark, gen0, terms)
@@ -107,7 +98,7 @@ def test_reader_follows_delete_update_and_compaction(spark, tiny_corpus_pd, stor
     # delete_docs: tombstone the two best bag hits
     gone = {int(r[0]) for r in before["bag"][:2]}
     S.delete_docs(gen0.path, sorted(gone))
-    _check(spark, gen0, terms, gone)
+    _check(spark, monkeypatch, gen0, terms, gone)
     assert gen0._reader is not first
 
     # update_docs: the next two bag hits get new versions in a new
@@ -121,7 +112,7 @@ def test_reader_follows_delete_update_and_compaction(spark, tiny_corpus_pd, stor
     )
     assert res["replaced_by_gen"] == {0: 2}
     gone |= victims
-    _check(spark, gen0, terms, gone)
+    _check(spark, monkeypatch, gen0, terms, gone)
 
     # compaction committed in place: the compacted index replaces the
     # directory; the handle picks up its live-doc statistics
@@ -130,7 +121,7 @@ def test_reader_follows_delete_update_and_compaction(spark, tiny_corpus_pd, stor
     os.rename(gen0.path, gen0.path + ".old")
     os.rename(staged, gen0.path)
     n_before = gen0.n_docs
-    _check(spark, gen0, terms, gone)
+    _check(spark, monkeypatch, gen0, terms, gone)
     assert gen0.n_docs == S.SegmentIndex.load(gen0.path).n_docs == n_before - len(gone)
     assert S.live_docs(gen0.path)["n_deleted"] == 0
 
@@ -319,7 +310,7 @@ def test_held_streams_stay_within_budget(wide, monkeypatch):
         for rel in rels
     ]
     budget = sum(sizes) // 2
-    monkeypatch.setenv(TIER_ENV, str(budget))
+    tier(monkeypatch, budget)
     monkeypatch.setattr(S, "_HELD", S._Held())
     reads = _count_reads(monkeypatch)
 

@@ -1,13 +1,12 @@
-"""r07 driver-local serving tier: every packed surface must return
+"""Driver-local serving tier: every packed surface must return
 row-identical results whether the byte-budgeted local tier engages
-(default) or the distributed fan-out runs
-(SOLRPLUGINS_LOCAL_TIER_MAX_BYTES=0) — same kernels, same inputs, so
-any drift is a frame-assembly bug."""
-
-import os
+(default) or the Spark path runs (SOLRPLUGINS_LOCAL_TIER_MAX_BYTES=0).
+Both run the same kernels, merges and finishes; only the kernel inputs
+are read two ways (pyarrow vs a Spark scan), so any drift is a
+frame-assembly bug."""
 
 import pytest
-from conftest import count_jobs
+from conftest import count_jobs, tier
 
 from solrplugins_spark.index import segments as S
 from solrplugins_spark.index.builder import build_index, mint_doc_ids
@@ -29,18 +28,13 @@ def lt(spark, tmp_path_factory):
     return {"docs": docs, "idx": idx, "seg": seg, "phrase": phrase}
 
 
-def _both(fn):
-    """Rows with the local tier on (64 MB default) vs forced off."""
-    os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"] = str(64 << 20)
-    try:
-        local = [tuple(r) for r in fn().collect()]
-    finally:
-        os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"] = "0"
-    try:
-        dist = [tuple(r) for r in fn().collect()]
-    finally:
-        os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"] = str(64 << 20)
-        del os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"]
+def _both(fn, monkeypatch):
+    """Rows with the local tier on (default budget) vs forced off."""
+    tier(monkeypatch, None)
+    local = [tuple(r) for r in fn().collect()]
+    tier(monkeypatch, 0)
+    dist = [tuple(r) for r in fn().collect()]
+    tier(monkeypatch, None)
     return local, dist
 
 
@@ -86,13 +80,13 @@ CASES = {
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
-def test_local_equals_distributed(spark, lt, name):
-    local, dist = _both(lambda: CASES[name](spark, lt))
+def test_local_equals_distributed(spark, lt, name, monkeypatch):
+    local, dist = _both(lambda: CASES[name](spark, lt), monkeypatch)
     assert local == dist, name
     assert local, f"{name}: empty result frame defeats the comparison"
 
 
-def test_cursor_page_local_equals_distributed(spark, lt):
+def test_cursor_page_local_equals_distributed(spark, lt, monkeypatch):
     p1 = S.wand_search(
         spark, lt["seg"], [("w0000", 1.0), ("zephyrblade", 2.0)], k=10
     ).collect()
@@ -101,12 +95,13 @@ def test_cursor_page_local_equals_distributed(spark, lt):
         lambda: S.wand_search(
             spark, lt["seg"], [("w0000", 1.0), ("zephyrblade", 2.0)],
             k=10, after=cur,
-        )
+        ),
+        monkeypatch,
     )
     assert local == dist and local
 
 
-def test_tombstones_local_equals_distributed(spark, lt, tmp_path):
+def test_tombstones_local_equals_distributed(spark, lt, tmp_path, monkeypatch):
     import shutil
 
     path = str(tmp_path / "delidx")
@@ -115,51 +110,193 @@ def test_tombstones_local_equals_distributed(spark, lt, tmp_path):
     top = S.wand_search(spark, seg, [("w0003", 1.0)], k=5).collect()
     S.delete_docs(path, [int(r["doc_id"]) for r in top[:3]])
     local, dist = _both(
-        lambda: S.wand_search(spark, seg, [("w0003", 1.0)], k=10)
+        lambda: S.wand_search(spark, seg, [("w0003", 1.0)], k=10), monkeypatch
     )
     assert local == dist and local
     deleted = {int(r["doc_id"]) for r in top[:3]}
     assert not deleted & {d for d, _ in local}
 
 
-def test_local_tier_engages_on_small_index(spark, lt):
+def test_local_tier_engages_on_small_index(spark, lt, monkeypatch):
     """The decision itself: a tiny index must pass the byte budget
     (estimate present and under the default), and budget 0 must force
     the distributed frame."""
     est = S._local_estimate([(lt["seg"], ["w0003"])], False)
     assert est is not None and 0 < est <= S.LOCAL_TIER_MAX_BYTES
     assert S._tier([(lt["seg"], ["w0003"])], False)[0]
-    os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"] = "0"
-    try:
-        assert not S._tier([(lt["seg"], ["w0003"])], False)[0]
-    finally:
-        del os.environ["SOLRPLUGINS_LOCAL_TIER_MAX_BYTES"]
+    tier(monkeypatch, 0)
+    assert not S._tier([(lt["seg"], ["w0003"])], False)[0]
 
 
-def test_stats_single_doc_stddev_null_local_equals_distributed(spark, lt):
-    """r07 driver-side stats finalization: the n==1 corrected-variance
-    NULL rule must match the Spark tail exactly. zephyrblade is a
-    planted rare term; find a single-match query via a unique doc."""
+def test_stats_single_doc_stddev_null_local_equals_distributed(
+    spark, lt, monkeypatch
+):
+    """The n==1 corrected-variance NULL rule holds on both tiers.
+    zephyrblade is a planted rare term; find a single-match query via
+    a unique doc."""
     one = S.wand_search(spark, lt["seg"], [("zephyrblade", 1.0)], k=1).collect()
     did = int(one[0]["doc_id"])
     q = f"zephyrblade and doc_id:[{did} TO {did}]"
     local, dist = _both(
-        lambda: S.wand_stats_search(spark, lt["seg"], q, "turn_idx")
+        lambda: S.wand_stats_search(spark, lt["seg"], q, "turn_idx"),
+        monkeypatch,
     )
     assert local == dist and local
     assert local[0][0] == 1 and local[0][5] is None  # cnt == 1, stddev NULL
 
 
-def test_packed_mlt_handler_local_zero_jobs(spark, lt):
-    """r07: the /mlt seed-exclusion + re-top-k tail finalizes
-    driver-side when the expansion search came from the local tier —
-    zero Spark jobs, rows identical to the Spark filter/orderBy/limit
-    tail of the distributed path."""
+def test_packed_mlt_handler_local_zero_jobs(spark, lt, monkeypatch):
+    """The /mlt seed-exclusion + re-top-k tail is driver-side on both
+    tiers: zero Spark jobs on the local tier, rows identical to the
+    Spark path's."""
     from solrplugins_spark.query.handlers import packed_mlt_handler
     from solrplugins_spark.query.mlt import MLTParams
 
     params = MLTParams(min_doc_freq=2, max_query_terms=20)
     fn = lambda: packed_mlt_handler(spark, lt["seg"], [7], params, k=10)["docs"]
-    local, dist = _both(fn)
+    local, dist = _both(fn, monkeypatch)
     assert local == dist and local
     assert count_jobs(spark, lambda: fn().collect(), "mlt0") == 0
+
+
+# ---- facet-family row order: one contract on every path ---------------
+
+FQ = "zephyrblade or w0003"
+FACETS = {
+    "facet": lambda spark, si: S.wand_facet_search(spark, si, FQ, "role"),
+    "collapse": lambda spark, si: S.wand_collapse_search(spark, si, FQ, "role", k=2),
+    "range": lambda spark, si: S.wand_facet_range_search(
+        spark, si, FQ, "turn_idx", 0, 24, 4),
+    "stats": lambda spark, si: S.wand_stats_search(spark, si, FQ, "turn_idx"),
+    "facet_query": lambda spark, si: S.wand_facet_query_search(
+        spark, si, FQ,
+        {"w3": "w0003", "early": "turn_idx:[0 TO 5]", "nz": "not zephyrblade"}),
+    "stats_facet": lambda spark, si: S.wand_stats_facet_search(
+        spark, si, FQ, "turn_idx", "role"),
+    "percentiles": lambda spark, si: S.wand_stats_percentiles_search(
+        spark, si, FQ, "turn_idx", [0.9, 0.25, 0.5, 0.25]),
+    "group": lambda spark, si: S.wand_group_search(
+        spark, si, FQ, "role", k_groups=3, group_limit=2),
+}
+
+
+def _by_value(r):
+    return (r[0] is not None, r[0] or "")
+
+
+# the order each surface's docstring states
+ORDER = {
+    "facet": _by_value,
+    "stats_facet": _by_value,
+    "range": lambda r: r[0],
+    "facet_query": lambda r: r[0],
+    "percentiles": lambda r: r[0],
+    "collapse": lambda r: (-r[2], r[1]),
+    "group": lambda r: (r[0], r[2]),
+    "stats": lambda r: 0,
+}
+
+
+@pytest.fixture(scope="module")
+def facet_shapes(spark, lt, tmp_path_factory):
+    """The one index, the same docs as two generations (disjoint
+    halves, each with its own ordinal dictionary), and a copy of the
+    one index with some matching docs tombstoned."""
+    root = tmp_path_factory.mktemp("facet_shapes")
+    docs = lt["docs"]
+    gens = [
+        S.build_segments(
+            build_index(part), str(root / f"gen{i}"), seg_size=512, groups=1,
+            string_cols=["role"], value_cols=["turn_idx"],
+        )
+        for i, part in enumerate(
+            (docs.filter("doc_id < 1500"), docs.filter("doc_id >= 1500"))
+        )
+    ]
+    import shutil
+
+    path = str(root / "tombstoned")
+    shutil.copytree(lt["seg"].path, path)
+    top = S.wand_boolean_search(spark, lt["seg"], FQ, k=8).collect()
+    S.delete_docs(path, [int(r["doc_id"]) for r in top[::2]])
+    return {"one": lt["seg"], "two_gens": gens, "tombstoned": S.SegmentIndex.load(path)}
+
+
+@pytest.mark.parametrize("shape", ["one", "two_gens", "tombstoned"])
+def test_facet_family_rows_identical_on_every_path(
+    spark, facet_shapes, monkeypatch, shape
+):
+    """All 8 facet-family surfaces serve the same rows in the same,
+    documented order on the local tier, the single-stage Spark path
+    (budget 0) and the exchange path (budget 0, no single stage)."""
+    si = facet_shapes[shape]
+
+    def rows() -> dict:
+        return {n: [tuple(r) for r in f(spark, si).collect()] for n, f in FACETS.items()}
+
+    tier(monkeypatch, None)
+    local = rows()
+    tier(monkeypatch, 0)
+    single = rows()
+    monkeypatch.setattr(S, "SINGLE_STAGE_MAX_SEGMENTS", 0)
+    exchanged = rows()
+    for name in FACETS:
+        assert local[name], f"{name}: empty answer defeats the comparison"
+        assert local[name] == sorted(local[name], key=ORDER[name]), name
+        assert local[name] == single[name] == exchanged[name], name
+
+
+def test_merges_match_pandas_reference():
+    """The numpy merges every tier shares (_fold, _top_per_ord) equal
+    the plain pandas groupby they stand for, row for row, on random
+    partials (repeated keys, tied scores, string keys)."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+
+    def fold_ref(res, keys, how):
+        if keys:
+            return res.groupby(keys, as_index=False, sort=True).agg(how)
+        return pd.DataFrame({c: [getattr(res[c], f)()] for c, f in how.items()})
+
+    def top_ref(res, limit):
+        return (
+            res.sort_values(
+                ["gen", "ord", "score", "doc_id"],
+                ascending=[True, True, False, True], kind="stable",
+            )
+            .groupby(["gen", "ord"], sort=False).head(limit)
+            .reset_index(drop=True)
+        )
+
+    for _ in range(100):
+        n = int(rng.integers(1, 40))
+
+        def ints(hi):
+            return rng.integers(0, hi, n).astype(np.int64)
+
+        part = pd.DataFrame({
+            "gen": ints(3), "ord": ints(5), "cnt": ints(9),
+            **{c: ints(50).astype(np.float64) for c in ("s", "ss", "mn", "mx")},
+        })
+        for keys, how in (
+            (["gen", "ord"], S._MOMENTS), (["ord"], {"cnt": "sum"}), ([], S._MOMENTS),
+        ):
+            pd.testing.assert_frame_equal(
+                S._fold(part[keys + list(how)], keys, how),
+                fold_ref(part[keys + list(how)], keys, how),
+            )
+        names = pd.DataFrame({"name": rng.choice(["b", "a", "c"], n).astype(object),
+                              "cnt": ints(9)})
+        pd.testing.assert_frame_equal(
+            S._fold(names, ["name"], {"cnt": "sum"}),
+            fold_ref(names, ["name"], {"cnt": "sum"}),
+        )
+        wins = pd.DataFrame({"gen": ints(2), "ord": ints(4),
+                             "doc_id": rng.permutation(1000)[:n].astype(np.int64),
+                             "score": ints(4).astype(np.float64)})
+        for limit in (1, 2, 3):
+            pd.testing.assert_frame_equal(
+                S._top_per_ord(wins, limit), top_ref(wins, limit)
+            )

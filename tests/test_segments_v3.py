@@ -10,7 +10,7 @@ rank-identical to the flat index (round-1 verdict item #2):
 import numpy as np
 import pandas as pd
 import pytest
-from conftest import count_jobs
+from conftest import count_jobs, tier
 from pyspark.sql import functions as F
 
 from solrplugins_spark.analysis.payloads import build_payload_index
@@ -24,6 +24,7 @@ from solrplugins_spark.index.codec import (
 from solrplugins_spark.index.segments import (
     _sidecar_dfs,
     build_segments,
+    delete_docs,
     wand_phrase_search,
     wand_search,
 )
@@ -798,36 +799,52 @@ def test_describe_index(spark, tiny_corpus, tmp_path):
 def test_single_stage_strategy_parity_and_plan(
     spark, pos_index, pos_segments, tiny_corpus_pd, monkeypatch
 ):
-    """_apply_per_segment picks one of THREE physical strategies for
-    the SAME per-segment kernels (r07): the driver-local tier
-    (byte-budgeted pyarrow read, LocalTableScan plan), coalesce(1)+
-    mapInPandas (no exchange — serving latency on small indexes over
-    the local budget) and groupBy(seg).applyInPandas (the 10^12-doc
-    default). Results must be identical across all three; the local
-    plan must be scan-free and the single-stage plan exchange-free
-    with the term filter pushed to parquet."""
+    """The SAME per-segment kernels run three ways: the driver-local
+    tier (byte-budgeted pyarrow read), coalesce(1)+mapInPandas (no
+    exchange — serving latency on small indexes over the local budget)
+    and groupBy(seg).applyInPandas (the 10^12-doc default). Results
+    must be identical across all three. Every answer is a local
+    relation; the single-stage request is ONE job whose kernel stage
+    has no exchange and reads the term-pruned postings with the term
+    filter pushed to parquet."""
     from solrplugins_spark.index import segments as segmod
     from solrplugins_spark.index.segments import wand_search
 
     terms = [(t, 1.0) for t in _corpus_terms(tiny_corpus_pd, n=2)]
 
+    def plan_of(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
     # small index under the byte budget -> driver-local tier
     df_local = wand_search(spark, pos_segments, terms, k=10)
-    plan = df_local._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(df_local)
     assert "LocalTableScan" in plan, plan
     assert "Scan parquet" not in plan, plan
     local = df_local.toPandas()
 
     # budget 0 + small index -> single-stage path (hint <= threshold)
-    monkeypatch.setenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", "0")
+    tier(monkeypatch, 0)
     assert pos_segments.n_segments <= segmod.SINGLE_STAGE_MAX_SEGMENTS
-    df_single = wand_search(spark, pos_segments, terms, k=10)
-    plan = df_single._jdf.queryExecution().executedPlan().toString()
-    # scan -> coalesce(1) -> mapInPandas -> TakeOrderedAndProject:
-    # zero exchanges anywhere, term filter still pushed to parquet
-    assert "Exchange" not in plan, plan
-    assert "PushedFilters: [In(term" in plan, plan
-    single = df_single.toPandas()
+    out = {}
+    n = count_jobs(
+        spark, lambda: out.update(df=wand_search(spark, pos_segments, terms, k=10)),
+        "single-stage",
+    )
+    assert n == 1, n
+    plan = plan_of(out["df"])
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
+    single = out["df"].toPandas()
+    # the kernels' input and stage: term filter pushed to parquet;
+    # scan -> coalesce(1) -> mapInPandas with zero exchanges
+    unified = segmod._unified_frame(
+        spark, [(0, pos_segments)], sorted(t for t, _ in terms)
+    )
+    assert "PushedFilters: [In(term" in plan_of(unified), plan_of(unified)
+    stage = segmod._apply_per_segment(
+        unified, lambda pdf: pdf, "seg int", pos_segments.n_segments,
+        merge=lambda res: res,
+    )
+    assert "Exchange" not in plan_of(stage), plan_of(stage)
 
     # force the exchange path on the same index
     monkeypatch.setattr(segmod, "SINGLE_STAGE_MAX_SEGMENTS", 0)
@@ -839,12 +856,84 @@ def test_single_stage_strategy_parity_and_plan(
     assert np.allclose(local["score"], exchanged["score"], atol=1e-12)
 
 
+_UNIFIED_FIELDS = [
+    ("seg", "int", True), ("_kind", "string", False), ("fld", "string", False),
+    ("term", "string", True), ("df", "bigint", True),
+    ("block_last", "array<bigint>", True), ("block_max", "array<int>", True),
+    ("block_off", "array<bigint>", True), ("doc_lo", "bigint", True),
+    ("data", "binary", True),
+]
+_SUB_FIELDS = [
+    ("pos_off", "array<bigint>", True), ("pos_data", "binary", True),
+    ("pay_data", "binary", True),
+]
+
+
+def _fields(df) -> list:
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
+
+
+def _canon_rows(pdf) -> list:
+    """Rows of a unified frame comparable across Spark (toPandas) and
+    pyarrow assembly: NULL/NaN -> None, arrays -> tuples, numbers ->
+    int, sorted."""
+
+    def canon(v):
+        if v is None or (isinstance(v, float) and np.isnan(v)):
+            return None
+        if isinstance(v, (bytes, bytearray, memoryview)):
+            return bytes(v)
+        if isinstance(v, (list, tuple, np.ndarray)):
+            return tuple(int(x) for x in v)
+        if isinstance(v, (int, float, np.integer, np.floating)):
+            return int(v)
+        return v
+
+    rows = [tuple(canon(v) for v in r) for r in pdf.itertuples(index=False)]
+    return sorted(rows, key=repr)
+
+
+def test_spark_unified_frame_schema_and_rows(spark, pos_index, tiny_corpus_pd, tmp_path):
+    """_unified_frame / _dv_frame keep their column types and
+    nullability (pinned below) and serve exactly the rows the local
+    tier assembles with pyarrow — across two generations, a field tag,
+    a tombstone stream and the positions sub-streams."""
+    from solrplugins_spark.index import segments as segmod
+
+    seg = build_segments(
+        pos_index, str(tmp_path / "u"), seg_size=128, groups=2,
+        string_cols=["role"], value_cols=["turn_idx"],
+    )
+    delete_docs(seg.path, [3, 130, 131])
+    seg = segmod.SegmentIndex.load(seg.path)
+    gens = [(0, seg), (1, seg)]
+    terms = _corpus_terms(tiny_corpus_pd, n=2) + ["it's \\ a \"quoted\" term"]
+    for subs in (False, True):
+        want = _UNIFIED_FIELDS + (_SUB_FIELDS if subs else [])
+        u = segmod._unified_frame(spark, gens, terms, with_subs=subs, field="f")
+        assert _fields(u) == want
+        assert set(u.toPandas()["_kind"]) == {"post", "dl", "del"}
+        assert _canon_rows(u.toPandas()) == _canon_rows(
+            segmod._unified_pdf(gens, terms, with_subs=subs, field="f")
+        )
+        dv_want = [("term", "string", False) if f[0] == "term" else f for f in want]
+        for col, subdir in (("turn_idx", "docvalues"), ("role", "docvalues_str")):
+            d = segmod._dv_frame(
+                spark, seg, col, subs, subdir=subdir, seg_offset=1_000_000
+            )
+            assert _fields(d) == dv_want
+            assert _canon_rows(d.toPandas()) == _canon_rows(
+                segmod._dv_pdf(seg, col, subs, subdir=subdir, seg_offset=1_000_000)
+            )
+
+
 def test_single_stage_facets_and_boolean_parity(
     spark, pos_segments, monkeypatch
 ):
     from solrplugins_spark.index import segments as segmod
     from solrplugins_spark.index.segments import wand_boolean_search
 
+    tier(monkeypatch, 0)
     q = "java OR spark"
     single = wand_boolean_search(spark, pos_segments, q, k=10).toPandas()
     monkeypatch.setattr(segmod, "SINGLE_STAGE_MAX_SEGMENTS", 0)
@@ -876,6 +965,7 @@ def test_exchange_strategy_parity_all_surfaces(
         wand_search_multi,
     )
 
+    tier(monkeypatch, 0)
     idx = build_index(tiny_corpus, positions=True)
     seg = build_segments(
         idx, str(tmp_path / "x"), seg_size=64, groups=2,
