@@ -631,39 +631,28 @@ def _as_gens(seg_index) -> list:
         return list(enumerate(seg_index))
     return [(0, seg_index)]
 
-# below this many total segments, serving queries skip the
-# groupBy(seg) exchange (see _apply_per_segment): the whole pruned
-# frame fits one task and the saved shuffle+stage round-trip dominates
-SINGLE_STAGE_MAX_SEGMENTS = 64
-
-# ... but segment COUNT is the wrong criterion when the pruned bytes
-# are large: a 61-segment index still passes the count check while a
-# head-term phrase decodes ~80 MB in that ONE task (measured 1.6 s at
-# a 4M-turn shape — the worst of all strategies). When the driver-side
-# byte estimate exceeds this, the exchange path parallelizes the
-# per-segment kernels instead; the saved stage round-trip no longer
-# dominates at that size.
-SINGLE_STAGE_MAX_BYTES = 64 << 20
-
 # ---------------------------------------------------------------------------
-# driver-local serving tier: when the bytes a query must touch are
-# provably bounded (estimated DRIVER-SIDE from the termstats sidecar and
-# stream sizes, before anything is read), the pruned postings/doclen
-# rows are read with pyarrow and the SAME per-segment kernels run
-# in-process — the Lucene/Solr shard-serving shape, where a bounded top-k
-# never launches a distributed job. Above the byte budget (head terms at
-# 10^12 docs, large indexes) the kernels run as a Spark stage, so the
-# 100-TB plan shape is untouched.
+# serving plans: each packed request is planned ONCE, by _serving_plan
+# (whose docstring states the three strategies and when each runs),
+# from what it touches: a DRIVER-SIDE byte estimate (termstats sidecar
+# and stream sizes, before anything is read) and the segment count.
+# The plan travels with the kernel input built for it; nothing
+# downstream re-derives it. On the "local" strategy the pruned
+# postings/doclen rows are read with pyarrow and the SAME per-segment
+# kernels run in-process — the Lucene/Solr shard-serving shape, where a
+# bounded top-k never launches a distributed job. Above the byte budget
+# (head terms at 10^12 docs, large indexes) the kernels run as a Spark
+# stage, so the 100-TB plan shape is untouched.
 #
-# The two tiers differ only in WHERE the kernels run. Every surface
-# hands its kernel's partials to ONE associative merge (_partials) and
-# finishes the merged partials with ONE driver-side function (the top-k
-# cut, the facet/stats/group tails): in-process on the local tier;
-# inside the kernels' own stage, then one collect, on the Spark path.
-# So both tiers serve the same rows in the same order because they run
-# the same merge and finish code, not because tests pin a pair of
-# twins; the tier tests (tests/test_local_tier.py) stay as end-to-end
-# checks of the two ways the kernel inputs are read.
+# The tiers differ only in WHERE the kernels run. Every surface hands
+# its kernel's partials to ONE associative merge (_partials) and
+# finishes the merged partials with ONE driver-side function (the
+# top-k cut, the facet/stats/group tails): in-process on the local
+# tier; inside the kernels' own stage, then one collect, on the Spark
+# strategies. So every strategy serves the same rows in the same order
+# because they run the same merge and finish code, not because tests
+# pin a pair of twins; the tier tests (tests/test_local_tier.py) stay
+# as end-to-end checks of the two ways the kernel inputs are read.
 #
 # The reader. Each SegmentIndex owns one _LocalReader, the state Solr
 # keeps per searcher (opened once per commit, reused across requests):
@@ -677,9 +666,9 @@ SINGLE_STAGE_MAX_BYTES = 64 << 20
 #   (stat-walked once, so a query walks nothing), and the doclens,
 #   tombstone, docvalues and ordinal streams plus the facet
 #   dictionaries, each read whole on its first use and kept while the
-#   bound below allows. The Spark path uses the termstats dataset and
-#   the dictionaries (the facet finishes map ordinals through them on
-#   both tiers). Term-pruned postings stay a per-query read.
+#   bound below allows. The Spark strategies use the termstats dataset
+#   and the dictionaries (the facet finishes map ordinals through them
+#   everywhere). Term-pruned postings stay a per-query read.
 # - memory bound: the streams and dictionaries that ALL open readers of
 #   the process hold share one pool, capped at the local-tier budget
 #   (_HELD, charged at their in-memory size). A stream that would push
@@ -693,13 +682,14 @@ SINGLE_STAGE_MAX_BYTES = 64 << 20
 #   reads as much as it did without one.
 # ---------------------------------------------------------------------------
 
-# Driver byte budget for the local tier. ~64 MB decodes in well under a
-# serving latency budget on one core; anything bigger belongs on the
-# cluster. 0 disables the local tier (pure distributed, for A/B and for
-# deployments that want the driver doing strictly no data work).
-LOCAL_TIER_MAX_BYTES = int(
-    os.environ.get("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", str(64 << 20))
-)
+# What one core decodes well within a serving latency budget: the
+# default local-tier budget and the most one single-stage task decodes.
+ONE_CORE_BYTES = 64 << 20
+
+# up to this many total segments a request may skip the groupBy(seg)
+# exchange: the pruned frame fits one task and the saved shuffle+stage
+# round-trip dominates
+SINGLE_STAGE_MAX_SEGMENTS = 64
 
 # conservative per-posting byte costs for the sidecar-based estimate
 # (delta-varint doc + tf is ~2-3 B/posting; block metadata adds
@@ -879,10 +869,12 @@ class _LocalReader:
 
 
 def _local_tier_budget() -> int:
-    """Re-read the env override at call time so tests/ops can flip the
-    tier without re-importing; falls back to the module default."""
-    v = os.environ.get("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES")
-    return int(v) if v is not None else LOCAL_TIER_MAX_BYTES
+    """The local tier's driver byte budget: SOLRPLUGINS_LOCAL_TIER_MAX_BYTES,
+    read at call time so tests and operators can flip the tier without
+    re-importing, else ONE_CORE_BYTES. 0 turns the local tier off (every
+    request on a Spark strategy, for A/B and for deployments that want
+    the driver doing strictly no data work)."""
+    return int(os.environ.get("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", ONE_CORE_BYTES))
 
 
 def _local_estimate(
@@ -923,25 +915,52 @@ def _local_estimate(
     return total
 
 
-def _tier(
+@dataclass(frozen=True)
+class _Plan:
+    """How one packed request is served (_serving_plan): ``strategy``
+    is "local", "single_stage" or "exchange"; ``est`` is the byte
+    estimate it was chosen from (None without a sidecar)."""
+
+    strategy: str
+    est: int | None
+
+
+def _serving_plan(
     pairs: list[tuple["SegmentIndex", list[str]]],
     with_subs: bool,
     extra_streams: list[tuple["SegmentIndex", str]] = (),
     stats_list: list | None = None,
-) -> tuple[bool, int | None]:
-    """The serving-tier decision for what a query touches: (local,
-    estimate) — local when the byte estimate fits the budget."""
+) -> _Plan:
+    """The one serving decision for everything a request touches:
+    ``pairs`` lists every (index, terms) whose postings it reads — each
+    generation and each field index — and ``extra_streams`` the
+    docvalues/ordinal streams (arguments as for _local_estimate). The
+    same per-segment kernels then run one of three ways:
+
+    - "local": the byte estimate is at most the local-tier budget
+      (_local_tier_budget; 0 never goes local). The kernel input is a
+      pandas frame read on the driver and the kernels run in-process:
+      zero Spark jobs.
+    - "single_stage": a Spark strategy over at most
+      SINGLE_STAGE_MAX_SEGMENTS segments whose estimate (if any) is at
+      most ONE_CORE_BYTES: coalesce(1) + mapInPandas scores every
+      segment in one task — no exchange, one scheduling wave.
+    - "exchange": everything else (many segments, or a frame too big
+      for one core): groupBy(seg).applyInPandas scores segments in
+      parallel across executors, the 10^12-doc shape.
+
+    Without a termstats sidecar there is no estimate, so the request
+    takes a Spark strategy."""
     est = _local_estimate(pairs, with_subs, extra_streams, stats_list)
     budget = _local_tier_budget()
-    return 0 < budget and est is not None and est <= budget, est
-
-
-def _mark_big(unified, local: bool, est: int | None):
-    """Route a big pruned Spark frame to the exchange path (parallel
-    kernels) instead of one serial coalesce(1) task; returns it."""
-    if not local and est is not None and est > SINGLE_STAGE_MAX_BYTES:
-        unified._spl_big_frame = True
-    return unified
+    if est is not None and 0 < budget and est <= budget:
+        return _Plan("local", est)
+    n_segments = sum(si.n_segments for si, _ in pairs)
+    if (est is None or est <= ONE_CORE_BYTES) and (
+        0 < n_segments <= SINGLE_STAGE_MAX_SEGMENTS
+    ):
+        return _Plan("single_stage", est)
+    return _Plan("exchange", est)
 
 
 def _gen_stats(
@@ -1052,27 +1071,11 @@ def _dv_pdf(
     )
 
 
-def _stack(a, b):
-    """Union two unified frames of the same tier (Spark DataFrame or
-    local pandas frame)."""
-    if a is None:
-        return b
-    if isinstance(a, pd.DataFrame):
-        return pd.concat([a, b], ignore_index=True)
-    return a.unionByName(b)
-
-
-def _n_segments_hint(*seg_objs) -> int:
-    """Total segment count across SegmentIndexes / generation lists /
-    None — driver-side from manifests, no Spark job. Decides the
-    physical strategy in _apply_per_segment."""
-    tot = 0
-    for so in seg_objs:
-        if so is None:
-            continue
-        for _, si in _as_gens(so):
-            tot += si.n_segments
-    return tot
+def _stack(frames: list, plan: _Plan):
+    """One unified frame from parts built for ``plan``."""
+    if plan.strategy == "local":
+        return pd.concat(frames, ignore_index=True)
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def _kernel_pdf(unified_pdf: pd.DataFrame, per_segment) -> pd.DataFrame | None:
@@ -1098,24 +1101,25 @@ def _empty_topk() -> pd.DataFrame:
     return _topk_frame(np.array([], np.int64), np.array([], np.float64), 0)
 
 
-def _partials(unified, per_segment, schema: str, merge, n_segments_hint):
-    """Run the per-segment kernels over ``unified`` and return their
-    partials merged by ``merge`` (associative and idempotent: partials
-    -> partials of the same ``schema``) as one driver-side pandas
-    frame, or None when no segment produced rows.
+def _partials(unified, plan: _Plan, per_segment, schema: str, merge):
+    """Run the per-segment kernels over ``unified`` (built for
+    ``plan``) and return their partials merged by ``merge``
+    (associative and idempotent: partials -> partials of the same
+    ``schema``) as one driver-side pandas frame, or None when no
+    segment produced rows.
 
-    On the local tier (``unified`` is a pandas frame) the kernels and
-    the merge run in-process. On the Spark path the merge runs inside
-    the kernels' own stage (_apply_per_segment), the merged partitions
-    are collected in ONE job, and the driver merges them once more —
-    at most partitions x (k | facet vocabulary | 1) rows cross, the
-    per-shard response of Solr's distributed search. Either way each
-    surface then finishes the merged partials with the same code."""
-    if isinstance(unified, pd.DataFrame):
+    On the "local" strategy the kernels and the merge run in-process.
+    On the Spark strategies the merge runs inside the kernels' own
+    stage (_apply_per_segment), the merged partitions are collected in
+    ONE job, and the driver merges them once more — at most partitions
+    x (k | facet vocabulary | 1) rows cross, the per-shard response of
+    Solr's distributed search. Every strategy then finishes the merged
+    partials with the same code."""
+    if plan.strategy == "local":
         res = _kernel_pdf(unified, per_segment)
     else:
         res = _apply_per_segment(
-            unified, per_segment, schema, n_segments_hint, merge=merge
+            unified, plan, per_segment, schema, merge=merge
         ).toPandas()
     if res is None or not len(res):
         return None
@@ -1193,19 +1197,18 @@ def _topk_cut(
 
 def _serve_topk(
     unified,
+    plan: _Plan,
     per_segment,
     k: int,
     round_to: int,
-    n_segments_hint: int | None,
     after: tuple[float, int] | None = None,
 ) -> pd.DataFrame:
     """Run a (doc_id, score) top-k kernel: per-partition and driver
     merges are both the _topk_cut (so the TakeOrderedAndProject bound
     of k rows per partition holds); returns the pandas answer."""
     out = _partials(
-        unified, per_segment, _TOPK_SCHEMA,
+        unified, plan, per_segment, _TOPK_SCHEMA,
         functools.partial(_topk_cut, k=k, round_to=round_to, after=after),
-        n_segments_hint,
     )
     return _empty_topk() if out is None else out
 
@@ -1484,37 +1487,29 @@ def _group_topn(
 
 def _apply_per_segment(
     unified: DataFrame,
+    plan: _Plan,
     per_segment,
     schema: str,
-    n_segments_hint: int | None,
     merge=None,
 ) -> DataFrame:
     """The Spark plan of a per-segment Arrow kernel over the unified
-    frame, its outputs merged per partition by ``merge`` (see
-    _partials; None keeps every kernel row). One semantics, two
-    physical strategies:
+    frame, on ``plan``'s Spark strategy (_serving_plan), its outputs
+    merged per partition by ``merge`` (see _partials; None keeps every
+    kernel row):
 
-    - exchange path (the 10^12-doc default): groupBy(seg).applyInPandas
-      scores segments in parallel across executors; the shuffle moves
-      only the term-pruned rows, and the merge is a mapInPandas in the
-      same stage as the kernels, so it adds no job.
-    - single-stage path: when the index holds few segments (known
-      driver-side from the manifests) and the estimate is under
-      SINGLE_STAGE_MAX_BYTES, coalesce(1) + mapInPandas groups
-      in-process and merges — the same kernels, no exchange, one
-      scheduling wave instead of two. coalesce(1) and never
-      coalesce(n): a segment's postings and doclen rows live in
-      different FILES, so any n > 1 could split a segment across
-      partitions and score it on partial inputs.
+    - "exchange": groupBy(seg).applyInPandas; the shuffle moves only
+      the term-pruned rows, and the merge is a mapInPandas in the same
+      stage as the kernels, so it adds no job.
+    - "single_stage": coalesce(1) + mapInPandas groups in-process and
+      merges — the same kernels, no exchange, one scheduling wave
+      instead of two. coalesce(1) and never coalesce(n): a segment's
+      postings and doclen rows live in different FILES, so any n > 1
+      could split a segment across partitions and score it on partial
+      inputs.
 
-    The local tier never gets here: _partials runs the same kernels
-    and the same merge in-process (_kernel_pdf), and both tiers finish
-    the merged partials with the same driver-side code."""
-    if (
-        not getattr(unified, "_spl_big_frame", False)
-        and n_segments_hint is not None
-        and 0 < n_segments_hint <= SINGLE_STAGE_MAX_SEGMENTS
-    ):
+    The "local" strategy never gets here: _partials runs the same
+    kernels and the same merge in-process (_kernel_pdf)."""
+    if plan.strategy == "single_stage":
 
         def all_segments(batches):
             parts = [p for p in batches if len(p)]
@@ -1718,21 +1713,18 @@ def delete_by_query(
     strips them at decode time), so re-running deletes nothing new.
     """
     si = SegmentIndex.load(path)
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, si, query, field_segments
     )
 
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         return _segment_boolean_topk(pdf, tree, field_ctx, 1 << 40, k1, b)
 
-    if isinstance(unified, pd.DataFrame):
+    if plan.strategy == "local":
         res = _kernel_pdf(unified, per_segment)
         ids = [] if res is None else [int(d) for d in res["doc_id"]]
     else:
-        matches = _apply_per_segment(
-            unified, per_segment, _TOPK_SCHEMA,
-            _n_segments_hint(si, *(field_segments or {}).values()),
-        )
+        matches = _apply_per_segment(unified, plan, per_segment, _TOPK_SCHEMA)
         rows = matches.select("doc_id").limit(max_ids + 1).collect()
         ids = [r["doc_id"] for r in rows]
     if len(ids) > max_ids:
@@ -2462,23 +2454,17 @@ def _phrase_frames(
     if any(dfs.get(t, 0) == 0 for t in term_list):
         return _empty_topk()
     n, avgdl = _gen_stats(gens, pooled)
-    local, est = _tier(
+    plan = _serving_plan(
         [(si, term_list) for _, si in gens], True, stats_list=all_stats
     )
-    unified = _mark_big(
-        _unified_frame(spark, gens, term_list, with_subs=True, local=local),
-        local, est,
-    )
+    unified = _unified_frame(spark, gens, term_list, plan, with_subs=True)
 
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         return _segment_phrase_topk(
             pdf, list(phrase_terms), dfs, k, k1, b, n, avgdl, slop=slop
         )
 
-    return _serve_topk(
-        unified, per_segment, k, round_to,
-        _n_segments_hint(*(si for _, si in gens)),
-    )
+    return _serve_topk(unified, plan, per_segment, k, round_to)
 
 
 def _segment_boolean_topk(
@@ -3051,7 +3037,8 @@ def _prepare_boolean(
     generation's segments stack into the one unified frame with
     namespaced seg ids — the wand_search_multi statistics contract
     applied to the whole boolean path. Returns (tree, field_ctx,
-    unified)."""
+    unified, plan): the kernel input and the serving plan it was built
+    for (_serving_plan)."""
     from ..query import ast as qast
     from ..query.compiler import _leaf_terms
     from ..query.parser import parse_query
@@ -3154,10 +3141,12 @@ def _prepare_boolean(
     ] + [
         (si, _dv_rel(col, "docvalues_str")) for col in str_cols for _, si in gens
     ]
-    local, est = _tier(local_pairs, with_subs, local_streams, stats_list=pair_stats)
+    plan = _serving_plan(
+        local_pairs, with_subs, local_streams, stats_list=pair_stats
+    )
 
     field_ctx: dict[str, dict] = {}
-    unified = None
+    frames: list = []
     for fname, fsi in [("", seg_index)] + sorted(field_segments.items()):
         f_gens = gens if fname == "" else [(0, fsi)]
         terms = sorted(by_field.get(fname, set()))
@@ -3195,30 +3184,20 @@ def _prepare_boolean(
                 )
             field_ctx[fname]["k1"] = float(fsim.k1)
             field_ctx[fname]["b"] = float(fsim.b)
-        frame = _unified_frame(
-            spark, f_gens, terms or ["\x00none"],
-            with_subs=with_subs, field=fname, local=local,
+        frames.append(_unified_frame(
+            spark, f_gens, terms or ["\x00none"], plan,
+            with_subs=with_subs, field=fname,
+        ))
+    frames += [
+        _dv_frame(
+            spark, si, col, with_subs, plan, subdir=subdir,
+            seg_offset=gen_id * 1_000_000,
         )
-        unified = _stack(unified, frame)
-    for col in dv_needed:
-        for gen_id, si in gens:
-            unified = _stack(
-                unified,
-                _dv_frame(
-                    spark, si, col, with_subs,
-                    seg_offset=gen_id * 1_000_000, local=local,
-                ),
-            )
-    for col in str_cols:
-        for gen_id, si in gens:
-            unified = _stack(
-                unified,
-                _dv_frame(
-                    spark, si, col, with_subs, subdir="docvalues_str",
-                    seg_offset=gen_id * 1_000_000, local=local,
-                ),
-            )
-    return tree, field_ctx, _mark_big(unified, local, est)
+        for cols, subdir in ((dv_needed, "docvalues"), (str_cols, "docvalues_str"))
+        for col in cols
+        for gen_id, si in gens
+    ]
+    return tree, field_ctx, _stack(frames, plan), plan
 
 
 def _boost_dv_cols(boost_fn: tuple | None) -> tuple:
@@ -3279,7 +3258,7 @@ def _boolean_top(
 ):
     """wand_boolean_search's pandas answer, before it crosses into
     the JVM."""
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         extra_dv_cols=_boost_dv_cols(boost_fn),
     )
@@ -3289,10 +3268,7 @@ def _boolean_top(
             pdf, tree, field_ctx, k, k1, b, boost_fn_spec=boost_fn
         )
 
-    return _serve_topk(
-        unified, per_segment, k, round_to,
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
-    )
+    return _serve_topk(unified, plan, per_segment, k, round_to)
 
 
 def wand_boolean_boosted_search(
@@ -3315,7 +3291,7 @@ def wand_boolean_boosted_search(
     one-job shape as wand_boolean_search — the expansion terms ride
     the same term-isin-pruned postings scan and the same per-segment
     Arrow stage; the merge stays k rows per segment."""
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         extra_terms=tuple(sorted({t for t, _ in boost_terms})),
         extra_dv_cols=_boost_dv_cols(boost_fn),
@@ -3327,10 +3303,7 @@ def wand_boolean_boosted_search(
             boost_fn_spec=boost_fn,
         )
 
-    return _relation(spark, _serve_topk(
-        unified, per_segment, k, round_to,
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
-    ))
+    return _relation(spark, _serve_topk(unified, plan, per_segment, k, round_to))
 
 
 def fetch_docs(
@@ -3522,7 +3495,7 @@ def wand_facet_search(
                 "docvalues stream — rebuild with build_segments(..., "
                 f"string_cols=[{facet_col!r}])"
             )
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         str_cols=(facet_col,),
     )
@@ -3535,9 +3508,8 @@ def wand_facet_search(
         return out
 
     res = _partials(
-        unified, per_segment, "gen long, ord long, cnt long",
+        unified, plan, per_segment, "gen long, ord long, cnt long",
         functools.partial(_fold, keys=["gen", "ord"], how={"cnt": "sum"}),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _facet_counts(spark, res, gens, facet_col)
 
@@ -3584,7 +3556,7 @@ def wand_collapse_search(
                 "docvalues stream — rebuild with build_segments(..., "
                 f"string_cols=[{collapse_col!r}])"
             )
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         str_cols=(collapse_col,),
     )
@@ -3598,9 +3570,8 @@ def wand_collapse_search(
         return out
 
     res = _partials(
-        unified, per_segment, "gen long, ord long, doc_id long, score double",
+        unified, plan, per_segment, "gen long, ord long, doc_id long, score double",
         functools.partial(_top_per_ord, limit=1),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _collapse_topk(spark, res, gens, collapse_col, k)
 
@@ -3643,7 +3614,7 @@ def wand_facet_range_search(
                 "docvalues stream — rebuild with build_segments(..., "
                 f"value_cols=[{facet_col!r}])"
             )
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         extra_dv_cols=(facet_col,),
     )
@@ -3655,9 +3626,8 @@ def wand_facet_range_search(
         )
 
     res = _partials(
-        unified, per_segment, "ord long, cnt long",
+        unified, plan, per_segment, "ord long, cnt long",
         functools.partial(_fold, keys=["ord"], how={"cnt": "sum"}),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _range_counts(spark, res, int(start), int(gap), n_buckets)
 
@@ -3692,7 +3662,7 @@ def wand_stats_search(
                 "docvalues stream — rebuild with build_segments(..., "
                 f"value_cols=[{stats_col!r}])"
             )
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         extra_dv_cols=(stats_col,),
     )
@@ -3703,10 +3673,9 @@ def wand_stats_search(
         )
 
     res = _partials(
-        unified, per_segment,
+        unified, plan, per_segment,
         "cnt long, s double, ss double, mn double, mx double",
         functools.partial(_fold, keys=[], how=_MOMENTS),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _stats_answer(spark, res, round_to)
 
@@ -3774,7 +3743,7 @@ def wand_facet_query_search(
         _walk(t, extra_terms, range_fields)
         fq_trees.append((name, t))
     fq_trees.sort(key=lambda nt: nt[0])
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         extra_terms=tuple(sorted(extra_terms)),
         extra_dv_cols=tuple(sorted(range_fields)),
@@ -3786,9 +3755,8 @@ def wand_facet_query_search(
         )
 
     res = _partials(
-        unified, per_segment, "name string, cnt long",
+        unified, plan, per_segment, "name string, cnt long",
         functools.partial(_fold, keys=["name"], how={"cnt": "sum"}),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _facet_query_counts(spark, res)
 
@@ -3834,7 +3802,7 @@ def wand_stats_facet_search(
                 "docvalues stream — rebuild with build_segments(..., "
                 f"value_cols=[{stats_col!r}])"
             )
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         str_cols=(facet_col,), extra_dv_cols=(stats_col,),
     )
@@ -3848,11 +3816,10 @@ def wand_stats_facet_search(
         return out
 
     res = _partials(
-        unified, per_segment,
+        unified, plan, per_segment,
         "gen long, ord long, cnt long, s double, ss double, "
         "mn double, mx double",
         functools.partial(_fold, keys=["gen", "ord"], how=_MOMENTS),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _stats_facet(spark, res, gens, facet_col, round_to)
 
@@ -3890,7 +3857,7 @@ def wand_stats_percentiles_search(
                 "docvalues stream — rebuild with build_segments(..., "
                 f"value_cols=[{stats_col!r}])"
             )
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         extra_dv_cols=(stats_col,),
     )
@@ -3901,9 +3868,8 @@ def wand_stats_percentiles_search(
         )
 
     res = _partials(
-        unified, per_segment, "ord long, cnt long",
+        unified, plan, per_segment, "ord long, cnt long",
         functools.partial(_fold, keys=["ord"], how={"cnt": "sum"}),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _percentiles(spark, res, percentiles)
 
@@ -3947,7 +3913,7 @@ def wand_group_search(
                 "docvalues stream — rebuild with build_segments(..., "
                 f"string_cols=[{group_col!r}])"
             )
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         str_cols=(group_col,),
     )
@@ -3962,9 +3928,8 @@ def wand_group_search(
         return out
 
     res = _partials(
-        unified, per_segment, "gen long, ord long, doc_id long, score double",
+        unified, plan, per_segment, "gen long, ord long, doc_id long, score double",
         functools.partial(_top_per_ord, limit=group_limit),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _group_topn(spark, res, gens, group_col, k_groups, group_limit)
 
@@ -4007,7 +3972,7 @@ def _scores_for_ids(
     """wand_scores_for_ids' pandas answer, before it crosses into the
     JVM."""
     allow = np.unique(np.asarray([int(d) for d in doc_ids], np.int64))
-    tree, field_ctx, unified = _prepare_boolean(
+    tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
     )
 
@@ -4017,10 +3982,9 @@ def _scores_for_ids(
         )
 
     res = _partials(
-        unified, per_segment, _TOPK_SCHEMA,
+        unified, plan, per_segment, _TOPK_SCHEMA,
         # each doc lives in one segment: a cut at |allowlist| keeps all
         functools.partial(_topk_cut, k=len(allow), round_to=round_to),
-        _n_segments_hint(seg_index, *(field_segments or {}).values()),
     )
     return _empty_topk() if res is None else res
 
@@ -4878,9 +4842,9 @@ def _unified_frame(
     spark: SparkSession,
     gens: list[tuple[int, SegmentIndex]],
     term_list: list[str],
+    plan: _Plan,
     with_subs: bool = False,
     field: str = "",
-    local: bool = False,
 ):
     """Postings (term-pruned scan) + doclen rows stacked into one frame
     keyed by seg, for a single per-segment kernel stage. ``with_subs``
@@ -4894,10 +4858,9 @@ def _unified_frame(
     kernel sees its segment's deletions in the same Arrow group.
 
     Each part is one scan and one selectExpr (a handful of JVM round
-    trips, not one per column). ``local=True`` (byte budget
-    pre-checked via _tier) returns the pandas twin assembled
-    driver-side — the local serving tier."""
-    if local:
+    trips, not one per column). On ``plan``'s "local" strategy it is
+    the pandas twin assembled driver-side (_unified_pdf)."""
+    if plan.strategy == "local":
         return _unified_pdf(gens, term_list, with_subs=with_subs, field=field)
     # an empty IN list does not parse: match nothing instead
     in_terms = "term IN (" + ", ".join(
@@ -4942,16 +4905,16 @@ def _dv_frame(
     si: SegmentIndex,
     col: str,
     with_subs: bool,
+    plan: _Plan,
     subdir: str = "docvalues",
     seg_offset: int = 0,
-    local: bool = False,
 ):
     """Docvalues rows for one numeric/ordinal column, shaped like the
     unified frame (_kind='dv', term=column name, data=varint dense
     stream). ``seg_offset`` namespaces seg ids per generation, matching
-    _unified_frame's gen_id*1e6 scheme. ``local=True`` returns the
-    pandas twin (local serving tier)."""
-    if local:
+    _unified_frame's gen_id*1e6 scheme. On ``plan``'s "local" strategy
+    it is the pandas twin (_dv_pdf)."""
+    if plan.strategy == "local":
         return _dv_pdf(
             si, col, with_subs, subdir=subdir, seg_offset=seg_offset
         )
@@ -5047,9 +5010,9 @@ def _wand_search_frames(
     else:
         dfs = _gen_dfs(
             gens, term_list,
-            lambda: _unified_frame(spark, gens, term_list).filter(
-                F.col("_kind") == "post"
-            ),
+            lambda: _unified_frame(
+                spark, gens, term_list, _Plan("exchange", None)
+            ).filter(F.col("_kind") == "post"),
         )
     dfs = {t: d for t, d in dfs.items() if d > 0}
     if not dfs:
@@ -5058,24 +5021,21 @@ def _wand_search_frames(
         return _empty_topk()
     n, avgdl = _gen_stats(gens, pooled)
 
-    local, est = _tier(
+    plan = _serving_plan(
         [(si, term_list) for _, si in gens], with_subs,
         [(si, _dv_rel(value_col)) for _, si in gens if value_col is not None],
         stats_list=gen_stats,
     )
-    unified = _unified_frame(
-        spark, gens, term_list, with_subs=with_subs, local=local
-    )
+    frames = [_unified_frame(spark, gens, term_list, plan, with_subs=with_subs)]
     if value_col is not None:
-        for gen_id, si in gens:
-            unified = _stack(
-                unified,
-                _dv_frame(
-                    spark, si, value_col, with_subs,
-                    seg_offset=gen_id * 1_000_000, local=local,
-                ),
+        frames += [
+            _dv_frame(
+                spark, si, value_col, with_subs, plan,
+                seg_offset=gen_id * 1_000_000,
             )
-    _mark_big(unified, local, est)
+            for gen_id, si in gens
+        ]
+    unified = _stack(frames, plan)
 
     if plain_bm25:
         if sim is not None:
@@ -5111,10 +5071,7 @@ def _wand_search_frames(
 
     # the after re-check of the top-k cut is idempotent on the same
     # exact rounding the kernel filtered on
-    return _serve_topk(
-        unified, per_segment, k, round_to,
-        _n_segments_hint(*(si for _, si in gens)), after=after,
-    )
+    return _serve_topk(unified, plan, per_segment, k, round_to, after=after)
 
 
 def describe_index(path: str) -> dict:
@@ -5127,16 +5084,8 @@ def describe_index(path: str) -> dict:
     if m is None:
         raise FileNotFoundError(f"no packed index manifest under {path!r}")
 
-    def _du(sub: str) -> int:
-        total = 0
-        root = os.path.join(path, sub)
-        for dirpath, _dirs, files in os.walk(root):
-            for f in files:
-                total += os.path.getsize(os.path.join(dirpath, f))
-        return total
-
     streams = {
-        name: _du(name)
+        name: _dir_bytes(os.path.join(path, name))
         for name in (
             "postings", "doclens", "docstore", "docvalues",
             "docvalues_str", "termstats", "deletes",

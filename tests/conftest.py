@@ -8,6 +8,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from solrplugins_spark.session import get_spark  # noqa: E402
 from solrplugins_spark.corpus import transcripts_pandas  # noqa: E402
+from solrplugins_spark.index import segments  # noqa: E402
 from solrplugins_spark.index.builder import build_index  # noqa: E402
 
 
@@ -23,16 +24,19 @@ def count_jobs(spark, fn, group: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def tier(monkeypatch, budget: int | None) -> None:
+def tier(monkeypatch, budget: int | None, exchange: bool = False) -> None:
     """Serve packed requests under a local-tier byte ``budget`` for the
     rest of the test: None is the default budget, 0 turns the local
-    tier off (every request takes the Spark path). ``monkeypatch``
-    restores the environment when the test ends — the suite's one
-    tier switch."""
+    tier off (every request takes a Spark strategy). ``exchange``
+    forces the exchange strategy wherever a Spark strategy serves (no
+    single stage). ``monkeypatch`` restores both when the test ends —
+    the suite's one serving-strategy switch."""
     if budget is None:
         monkeypatch.delenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", raising=False)
     else:
         monkeypatch.setenv("SOLRPLUGINS_LOCAL_TIER_MAX_BYTES", str(budget))
+    if exchange:
+        monkeypatch.setattr(segments, "SINGLE_STAGE_MAX_SEGMENTS", 0)
 
 
 @pytest.fixture(scope="session")

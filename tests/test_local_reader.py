@@ -169,17 +169,18 @@ def test_zero_walks_after_first_query(spark, seg, tiny_corpus_pd, monkeypatch):
         "mlt": mlt,
     }
     decisions = []
-    real_tier = S._tier
+    real_plan = S._serving_plan
 
-    def tier(*args, **kwargs):
-        out = real_tier(*args, **kwargs)
+    def serving_plan(*args, **kwargs):
+        out = real_plan(*args, **kwargs)
         decisions.append(out)
         return out
 
-    monkeypatch.setattr(S, "_tier", tier)
+    monkeypatch.setattr(S, "_serving_plan", serving_plan)
     first = {name: fn() for name, fn in requests.items()}  # opens the reader
     warm_decisions, decisions[:] = list(decisions), []
-    assert all(local for local, _ in warm_decisions)
+    assert warm_decisions
+    assert all(plan.strategy == "local" for plan in warm_decisions)
     rd = seg.reader()
     # the cached sizes are exactly what a per-query walk would count
     sizes = {key[1]: v for key, v in rd._cache.items() if key[0] == "size"}

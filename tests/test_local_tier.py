@@ -117,15 +117,48 @@ def test_tombstones_local_equals_distributed(spark, lt, tmp_path, monkeypatch):
     assert not deleted & {d for d, _ in local}
 
 
-def test_local_tier_engages_on_small_index(spark, lt, monkeypatch):
-    """The decision itself: a tiny index must pass the byte budget
-    (estimate present and under the default), and budget 0 must force
-    the distributed frame."""
-    est = S._local_estimate([(lt["seg"], ["w0003"])], False)
-    assert est is not None and 0 < est <= S.LOCAL_TIER_MAX_BYTES
-    assert S._tier([(lt["seg"], ["w0003"])], False)[0]
+def test_serving_plan_decision_table(lt, monkeypatch):
+    """The one serving decision, row by row: the local tier takes an
+    estimate up to and including the budget, never at budget 0 and
+    never without a sidecar; a Spark request goes single-stage unless
+    its estimate exceeds one core's bytes or it spans more than
+    SINGLE_STAGE_MAX_SEGMENTS segments."""
+    seg = lt["seg"]
+    pairs = [(seg, ["w0003"])]
+
+    def plan(**kw):
+        return S._serving_plan(pairs, False, **kw)
+
+    tier(monkeypatch, None)
+    est = S._local_estimate(pairs, False)
+    assert est is not None and 0 < est <= S.ONE_CORE_BYTES
+    assert plan() == S._Plan("local", est)  # the default budget
+    tier(monkeypatch, est)
+    assert plan() == S._Plan("local", est)  # est == budget: the <= boundary
+    tier(monkeypatch, est - 1)
+    assert plan() == S._Plan("single_stage", est)
     tier(monkeypatch, 0)
-    assert not S._tier([(lt["seg"], ["w0003"])], False)[0]
+    assert plan() == S._Plan("single_stage", est)  # 0 never goes local
+    tier(monkeypatch, None)
+    assert plan(stats_list=[None]) == S._Plan("single_stage", None)  # no sidecar
+
+    tier(monkeypatch, 0)
+    bound = S.ONE_CORE_BYTES  # the single-stage byte bound
+    for big, strategy in ((bound, "single_stage"), (bound + 1, "exchange")):
+        monkeypatch.setattr(S, "_local_estimate", lambda *a, big=big: big)
+        assert plan() == S._Plan(strategy, big)
+    monkeypatch.setattr(S, "_local_estimate", lambda *a: bound + 1)
+    tier(monkeypatch, None)
+    assert plan() == S._Plan("exchange", bound + 1)  # over the default budget
+    monkeypatch.undo()
+
+    tier(monkeypatch, 0)
+    n = seg.n_segments
+    for limit, strategy in ((n, "single_stage"), (n - 1, "exchange")):
+        monkeypatch.setattr(S, "SINGLE_STAGE_MAX_SEGMENTS", limit)
+        assert plan() == S._Plan(strategy, est)
+    tier(monkeypatch, 0, exchange=True)
+    assert plan() == S._Plan("exchange", est)
 
 
 def test_stats_single_doc_stddev_null_local_equals_distributed(
@@ -238,7 +271,7 @@ def test_facet_family_rows_identical_on_every_path(
     local = rows()
     tier(monkeypatch, 0)
     single = rows()
-    monkeypatch.setattr(S, "SINGLE_STAGE_MAX_SEGMENTS", 0)
+    tier(monkeypatch, 0, exchange=True)
     exchanged = rows()
     for name in FACETS:
         assert local[name], f"{name}: empty answer defeats the comparison"

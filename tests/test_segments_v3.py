@@ -757,15 +757,14 @@ def test_docstore_schema_recorded_and_point_read_is_one_job(
     assert seg.store_schema is not None and "text string" in seg.store_schema
     assert SegmentIndex.load(str(tmp_path / "ss")).store_schema == seg.store_schema
 
-    sc = spark.sparkContext
     fetch_docs(spark, seg, [0, 1]).collect()  # warm (files listed once)
-    sc.setJobGroup("fd_probe", "fd_probe")
-    try:
-        rows = fetch_docs(spark, seg, [0, 1]).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows = []
+    n = count_jobs(
+        spark, lambda: rows.extend(fetch_docs(spark, seg, [0, 1]).collect()),
+        "fd_probe",
+    )
     assert len(rows) == 2
-    assert len(sc.statusTracker().getJobIdsForGroup("fd_probe")) == 1
+    assert n == 1, n
 
     compacted = compact_packed(spark, [seg], str(tmp_path / "ss_c"))
     assert compacted.store_schema == seg.store_schema
@@ -822,9 +821,11 @@ def test_single_stage_strategy_parity_and_plan(
     assert "Scan parquet" not in plan, plan
     local = df_local.toPandas()
 
-    # budget 0 + small index -> single-stage path (hint <= threshold)
+    # budget 0 + small index -> single-stage strategy
     tier(monkeypatch, 0)
-    assert pos_segments.n_segments <= segmod.SINGLE_STAGE_MAX_SEGMENTS
+    pairs = [(pos_segments, sorted(t for t, _ in terms))]
+    serving = segmod._serving_plan(pairs, False)
+    assert serving.strategy == "single_stage", serving
     out = {}
     n = count_jobs(
         spark, lambda: out.update(df=wand_search(spark, pos_segments, terms, k=10)),
@@ -836,18 +837,15 @@ def test_single_stage_strategy_parity_and_plan(
     single = out["df"].toPandas()
     # the kernels' input and stage: term filter pushed to parquet;
     # scan -> coalesce(1) -> mapInPandas with zero exchanges
-    unified = segmod._unified_frame(
-        spark, [(0, pos_segments)], sorted(t for t, _ in terms)
-    )
+    unified = segmod._unified_frame(spark, [(0, pos_segments)], pairs[0][1], serving)
     assert "PushedFilters: [In(term" in plan_of(unified), plan_of(unified)
     stage = segmod._apply_per_segment(
-        unified, lambda pdf: pdf, "seg int", pos_segments.n_segments,
-        merge=lambda res: res,
+        unified, serving, lambda pdf: pdf, "seg int", merge=lambda res: res
     )
     assert "Exchange" not in plan_of(stage), plan_of(stage)
 
-    # force the exchange path on the same index
-    monkeypatch.setattr(segmod, "SINGLE_STAGE_MAX_SEGMENTS", 0)
+    # force the exchange strategy on the same index
+    tier(monkeypatch, 0, exchange=True)
     exchanged = wand_search(spark, pos_segments, terms, k=10).toPandas()
 
     assert list(single["doc_id"]) == list(exchanged["doc_id"])
@@ -908,9 +906,12 @@ def test_spark_unified_frame_schema_and_rows(spark, pos_index, tiny_corpus_pd, t
     seg = segmod.SegmentIndex.load(seg.path)
     gens = [(0, seg), (1, seg)]
     terms = _corpus_terms(tiny_corpus_pd, n=2) + ["it's \\ a \"quoted\" term"]
+    spark_plan = segmod._Plan("exchange", None)
     for subs in (False, True):
         want = _UNIFIED_FIELDS + (_SUB_FIELDS if subs else [])
-        u = segmod._unified_frame(spark, gens, terms, with_subs=subs, field="f")
+        u = segmod._unified_frame(
+            spark, gens, terms, spark_plan, with_subs=subs, field="f"
+        )
         assert _fields(u) == want
         assert set(u.toPandas()["_kind"]) == {"post", "dl", "del"}
         assert _canon_rows(u.toPandas()) == _canon_rows(
@@ -919,7 +920,8 @@ def test_spark_unified_frame_schema_and_rows(spark, pos_index, tiny_corpus_pd, t
         dv_want = [("term", "string", False) if f[0] == "term" else f for f in want]
         for col, subdir in (("turn_idx", "docvalues"), ("role", "docvalues_str")):
             d = segmod._dv_frame(
-                spark, seg, col, subs, subdir=subdir, seg_offset=1_000_000
+                spark, seg, col, subs, spark_plan, subdir=subdir,
+                seg_offset=1_000_000,
             )
             assert _fields(d) == dv_want
             assert _canon_rows(d.toPandas()) == _canon_rows(
@@ -927,32 +929,16 @@ def test_spark_unified_frame_schema_and_rows(spark, pos_index, tiny_corpus_pd, t
             )
 
 
-def test_single_stage_facets_and_boolean_parity(
-    spark, pos_segments, monkeypatch
-):
-    from solrplugins_spark.index import segments as segmod
-    from solrplugins_spark.index.segments import wand_boolean_search
-
-    tier(monkeypatch, 0)
-    q = "java OR spark"
-    single = wand_boolean_search(spark, pos_segments, q, k=10).toPandas()
-    monkeypatch.setattr(segmod, "SINGLE_STAGE_MAX_SEGMENTS", 0)
-    exchanged = wand_boolean_search(spark, pos_segments, q, k=10).toPandas()
-    assert list(single["doc_id"]) == list(exchanged["doc_id"])
-    assert np.allclose(single["score"], exchanged["score"], atol=1e-12)
-
-
 def test_exchange_strategy_parity_all_surfaces(
     spark, tiny_corpus, tiny_corpus_pd, tmp_path, monkeypatch
 ):
     """Every converted serving surface must produce identical results
-    on BOTH physical strategies (single-stage default on small test
-    indexes vs the at-scale groupBy(seg) exchange path) — covers the
-    per-call-site hint wiring (facets, phrase, multi-gen, delete) that
-    the small-index default would otherwise leave exchange-untested."""
+    on BOTH Spark strategies (single-stage, what small test indexes get
+    at budget 0, vs the at-scale groupBy(seg) exchange) — covers the
+    surfaces (facets, phrase, multi-gen, delete) that the small-index
+    plan would otherwise leave exchange-untested."""
     import shutil
 
-    from solrplugins_spark.index import segments as segmod
     from solrplugins_spark.index.builder import build_index
     from solrplugins_spark.index.segments import (
         build_segments,
@@ -991,7 +977,7 @@ def test_exchange_strategy_parity_all_surfaces(
         }
 
     single = run_all()
-    monkeypatch.setattr(segmod, "SINGLE_STAGE_MAX_SEGMENTS", 0)
+    tier(monkeypatch, 0, exchange=True)
     exchanged = run_all()
     for name in single:
         pd.testing.assert_frame_equal(single[name], exchanged[name]), name
