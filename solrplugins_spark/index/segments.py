@@ -36,6 +36,7 @@ import sys
 import threading
 import time
 import weakref
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
@@ -43,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import empty_df, local_relation
+from ..session import _schemas, empty_df, local_relation
 from .builder import InvertedIndex
 from .codec import (
     decode_blocks,
@@ -644,15 +645,18 @@ def _as_gens(seg_index) -> list:
 # (head terms at 10^12 docs, large indexes) the kernels run as a Spark
 # stage, so the 100-TB plan shape is untouched.
 #
-# The tiers differ only in WHERE the kernels run. Every surface hands
-# its kernel's partials to ONE associative merge (_partials) and
-# finishes the merged partials with ONE driver-side function (the
-# top-k cut, the facet/stats/group tails): in-process on the local
-# tier; inside the kernels' own stage, then one collect, on the Spark
+# The tiers differ only in WHERE the kernels run. A boolean-family
+# surface is one _Collector served by _serve: each segment's query is
+# matched once (_segment_match), the collector's collect turns the
+# match into a partial, ONE associative merge folds the partials
+# (_partials) and ONE driver-side finish (the top-k cut, the
+# facet/stats/group tails) answers: in-process on the local tier;
+# inside the kernels' own stage, then one collect, on the Spark
 # strategies. So every strategy serves the same rows in the same order
-# because they run the same merge and finish code, not because tests
-# pin a pair of twins; the tier tests (tests/test_local_tier.py) stay
-# as end-to-end checks of the two ways the kernel inputs are read.
+# because they run the same collect, merge and finish code, not
+# because tests pin a pair of twins; the tier tests
+# (tests/test_local_tier.py) stay as end-to-end checks of the two ways
+# the kernel inputs are read.
 #
 # The reader. Each SegmentIndex owns one _LocalReader, the state Solr
 # keeps per searcher (opened once per commit, reused across requests):
@@ -1097,16 +1101,19 @@ def _kernel_pdf(unified_pdf: pd.DataFrame, per_segment) -> pd.DataFrame | None:
 _TOPK_SCHEMA = "doc_id long, score double"
 
 
-def _empty_topk() -> pd.DataFrame:
-    return _topk_frame(np.array([], np.int64), np.array([], np.float64), 0)
+def _empty(schema: str) -> pd.DataFrame:
+    """A zero-row frame of DDL ``schema`` (its dtypes from the Arrow
+    schema local_relation caches for the same DDL). Driver-side only:
+    parsing a DDL needs the active session."""
+    return _schemas(schema)[1].empty_table().to_pandas()
 
 
 def _partials(unified, plan: _Plan, per_segment, schema: str, merge):
     """Run the per-segment kernels over ``unified`` (built for
     ``plan``) and return their partials merged by ``merge``
     (associative and idempotent: partials -> partials of the same
-    ``schema``) as one driver-side pandas frame, or None when no
-    segment produced rows.
+    ``schema``) as one driver-side pandas frame, a zero-row one of
+    ``schema`` when no segment produced rows.
 
     On the "local" strategy the kernels and the merge run in-process.
     On the Spark strategies the merge runs inside the kernels' own
@@ -1119,10 +1126,10 @@ def _partials(unified, plan: _Plan, per_segment, schema: str, merge):
         res = _kernel_pdf(unified, per_segment)
     else:
         res = _apply_per_segment(
-            unified, plan, per_segment, schema, merge=merge
+            unified, plan, per_segment, schema, merge
         ).toPandas()
     if res is None or not len(res):
-        return None
+        return _empty(schema)
     return merge(res)
 
 
@@ -1206,11 +1213,10 @@ def _serve_topk(
     """Run a (doc_id, score) top-k kernel: per-partition and driver
     merges are both the _topk_cut (so the TakeOrderedAndProject bound
     of k rows per partition holds); returns the pandas answer."""
-    out = _partials(
+    return _partials(
         unified, plan, per_segment, _TOPK_SCHEMA,
         functools.partial(_topk_cut, k=k, round_to=round_to, after=after),
     )
-    return _empty_topk() if out is None else out
 
 
 def _relation(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
@@ -1237,8 +1243,6 @@ def _facet_counts(spark, res, gens, facet_col: str) -> DataFrame:
     through each generation's dictionary, summed by value, rows in
     value order ASC NULLS FIRST."""
     schema = f"{facet_col} string, cnt long"
-    if res is None:
-        return empty_df(spark, schema)
     dmap = _ord_dicts(gens, facet_col)
     agg: dict = {}
     for g, o, c in zip(
@@ -1262,8 +1266,6 @@ def _collapse_topk(spark, res, gens, collapse_col: str, k: int) -> DataFrame:
     (score, -doc_id) comparator across generations, then the top k
     winners, rows in (score desc, doc_id asc) order."""
     schema = f"{collapse_col} string, doc_id long, score double"
-    if res is None:
-        return empty_df(spark, schema)
     dmap = _ord_dicts(gens, collapse_col)
     best: dict = {}
     for g, o, d, s in zip(
@@ -1295,11 +1297,10 @@ def _range_counts(spark, res, start: int, gap: int, n_buckets: int) -> DataFrame
     zero counts served (Solr returns every bucket), rows in bucket
     order."""
     cnts = np.zeros(n_buckets, np.int64)
-    if res is not None:
-        for o, c in zip(res["ord"].to_numpy(), res["cnt"].to_numpy()):
-            o = int(o)
-            if 0 <= o < n_buckets:
-                cnts[o] += int(c)
+    for o, c in zip(res["ord"].to_numpy(), res["cnt"].to_numpy()):
+        o = int(o)
+        if 0 <= o < n_buckets:
+            cnts[o] += int(c)
     buckets = np.int64(start) + np.arange(n_buckets, dtype=np.int64) * np.int64(gap)
     return local_relation(
         spark, {"bucket": buckets, "cnt": cnts}, "bucket long, cnt long"
@@ -1331,7 +1332,7 @@ def _stats_row(n: int, s: float, ss: float, mn: float, mx: float, round_to: int)
 def _stats_answer(spark, res, round_to: int) -> DataFrame:
     """Finish of wand_stats_search: the one merged moment row (see
     _stats_row); no row when nothing matched."""
-    if res is None or int(res["cnt"].iloc[0]) <= 0:
+    if not len(res) or int(res["cnt"].iloc[0]) <= 0:
         return empty_df(spark, _STATS_SCHEMA)
     r = res.iloc[0]
     cnt, min_v, max_v, sum_v, mean, std = _stats_row(
@@ -1353,8 +1354,6 @@ def _facet_query_counts(spark, res) -> DataFrame:
     """Finish of wand_facet_query_search: per-name count sums (zero
     counts served), rows in name order."""
     schema = "name string, cnt long"
-    if res is None:
-        return empty_df(spark, schema)
     agg: dict = {}
     for nm, c in zip(res["name"], res["cnt"].to_numpy()):
         agg[nm] = agg.get(nm, 0) + int(c)
@@ -1372,8 +1371,6 @@ def _stats_facet(spark, res, gens, facet_col: str, round_to: int) -> DataFrame:
     _stats_row per non-empty value, rows in value order ASC NULLS
     FIRST."""
     schema = f"{facet_col} string, " + _STATS_SCHEMA
-    if res is None:
-        return empty_df(spark, schema)
     dmap = _ord_dicts(gens, facet_col)
     acc: dict = {}
     for g, o, c, sv, ssv, mnv, mxv in zip(
@@ -1423,8 +1420,6 @@ def _percentiles(spark, res, percentiles: list[float]) -> DataFrame:
     import math
 
     schema = "pct double, value long"
-    if res is None:
-        return empty_df(spark, schema)
     hist: dict = {}
     for o, c in zip(res["ord"].to_numpy(), res["cnt"].to_numpy()):
         o = int(o)
@@ -1455,8 +1450,6 @@ def _group_topn(
     schema = (
         f"grp_rank int, {group_col} string, pos int, doc_id long, score double"
     )
-    if res is None:
-        return empty_df(spark, schema)
     dmap = _ord_dicts(gens, group_col)
     groups: dict = {}
     for g, o, d, s in zip(
@@ -1490,12 +1483,11 @@ def _apply_per_segment(
     plan: _Plan,
     per_segment,
     schema: str,
-    merge=None,
+    merge,
 ) -> DataFrame:
     """The Spark plan of a per-segment Arrow kernel over the unified
     frame, on ``plan``'s Spark strategy (_serving_plan), its outputs
-    merged per partition by ``merge`` (see _partials; None keeps every
-    kernel row):
+    merged per partition by ``merge`` (see _partials):
 
     - "exchange": groupBy(seg).applyInPandas; the shuffle moves only
       the term-pruned rows, and the merge is a mapInPandas in the same
@@ -1518,12 +1510,10 @@ def _apply_per_segment(
                 if parts else None
             )
             if res is not None:
-                yield res if merge is None else merge(res)
+                yield merge(res)
 
         return unified.coalesce(1).mapInPandas(all_segments, schema=schema)
     out = unified.groupBy("seg").applyInPandas(per_segment, schema=schema)
-    if merge is None:
-        return out
 
     def merged(batches):
         parts = [p for p in batches if len(p)]
@@ -1712,21 +1702,15 @@ def delete_by_query(
     Idempotent: already-tombstoned docs never match (the evaluator
     strips them at decode time), so re-running deletes nothing new.
     """
-    si = SegmentIndex.load(path)
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, si, query, field_segments
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_boolean_topk(pdf, tree, field_ctx, 1 << 40, k1, b)
-
-    if plan.strategy == "local":
-        res = _kernel_pdf(unified, per_segment)
-        ids = [] if res is None else [int(d) for d in res["doc_id"]]
-    else:
-        matches = _apply_per_segment(unified, plan, per_segment, _TOPK_SCHEMA)
-        rows = matches.select("doc_id").limit(max_ids + 1).collect()
-        ids = [r["doc_id"] for r in rows]
+    # the match set as ids, cut at max_ids + 1 per segment and per
+    # merge: enough to tell an over-cap delete on every strategy
+    cut = max_ids + 1
+    ids = _serve(spark, SegmentIndex.load(path), query, _Collector(
+        "doc_id long",
+        lambda m: pd.DataFrame({"doc_id": m.docs[:cut]}),
+        lambda res: res.head(cut),
+        lambda res: res["doc_id"].tolist(),
+    ), k1, b, field_segments)
     if len(ids) > max_ids:
         raise ValueError(
             f"delete_by_query matched more than max_ids={max_ids} docs — "
@@ -2452,7 +2436,7 @@ def _phrase_frames(
         for t, (v, _c) in st.items():
             dfs[t] = dfs.get(t, 0) + int(v)
     if any(dfs.get(t, 0) == 0 for t in term_list):
-        return _empty_topk()
+        return _empty(_TOPK_SCHEMA)
     n, avgdl = _gen_stats(gens, pooled)
     plan = _serving_plan(
         [(si, term_list) for _, si in gens], True, stats_list=all_stats
@@ -2467,34 +2451,58 @@ def _phrase_frames(
     return _serve_topk(unified, plan, per_segment, k, round_to)
 
 
-def _segment_boolean_topk(
+@dataclass
+class _Match:
+    """One segment's match (_segment_match), the one input every
+    collector reads: the tree's sorted, tombstone-stripped ``docs``
+    and their ``scores``, the segment's generation ``gen``, its
+    decoded docvalues (``dvs``: column -> values, ``dv_lo``: column ->
+    first doc id) and the closures that scored it (``evaluate`` a
+    subtree, ``bm25`` one term) for collectors that score more."""
+
+    docs: np.ndarray
+    scores: np.ndarray
+    gen: int
+    dvs: dict
+    dv_lo: dict
+    evaluate: Callable
+    bm25: Callable
+
+    def values(self, *cols: str) -> tuple:
+        """(docs, scores, one value array per column) of the matched
+        docs that hold a value in every docvalues stream ``cols``: ids
+        outside a stream's range drop out, and so do TOMBSTONE slots
+        (compacted deletions — the sentinel would corrupt every count
+        and moment, and a 2^48 ordinal would size a bincount)."""
+        keep = np.ones(len(self.docs), bool)
+        raw = []
+        for c in cols:
+            arr = self.dvs.get(c, np.array([], np.int64))
+            ids = self.docs - self.dv_lo.get(c, 0)
+            ok = (ids >= 0) & (ids < len(arr))
+            v = np.full(len(ids), TOMBSTONE)
+            v[ok] = arr[ids[ok]]
+            keep &= v != TOMBSTONE
+            raw.append(v)
+        return (self.docs[keep], self.scores[keep], *(v[keep] for v in raw))
+
+
+def _segment_match(
     pdf: pd.DataFrame,
     tree,
     field_ctx: dict[str, dict],
-    k: int,
     k1: float,
     b: float,
-    facet_ord_col: str | None = None,
-    boost_terms: list[tuple[str, float]] | None = None,
-    boost_fn_spec: tuple | None = None,
-    collapse_ord_col: str | None = None,
-    round_to: int = 5,
-    only_doc_ids: np.ndarray | None = None,
-    facet_range_spec: tuple | None = None,
-    stats_col: str | None = None,
-    collapse_limit: int = 1,
-    count_trees: list | None = None,
-    stats_facet_spec: tuple | None = None,
-    hist_col: str | None = None,
-) -> pd.DataFrame:
+) -> _Match:
     """Per-segment boolean-tree evaluation over decoded postings.
 
     Boolean algebra (Or=union-sum, And=intersection-sum, Not=
     complement) is doc-LOCAL, and segments partition docs by range, so
-    evaluating the tree independently per segment and merging top-k is
-    exact — the same argument that makes WAND's per-segment fan-out
-    correct. Leaves score BM25 from the decoded postings; node ops are
-    numpy set algebra on (sorted docs, scores) pairs.
+    evaluating the tree independently per segment and merging the
+    collectors' partials is exact — the same argument that makes
+    WAND's per-segment fan-out correct. Leaves score BM25 from the
+    decoded postings; node ops are numpy set algebra on (sorted docs,
+    scores) pairs.
 
     ``field_ctx`` maps field name -> {"idfs", "avgdl"} ("" = default
     field); rows in ``pdf`` carry a matching ``fld`` tag. FieldQuery
@@ -2503,11 +2511,12 @@ def _segment_boolean_topk(
     segment-local because all per-field indexes share the doc space).
     Range nodes evaluate over the intrinsic doc_id key (constant score
     1.0, the ConstantScoreRangeQuery semantic); stored-column ranges
-    need the flat path's corpus.
+    need the flat path's corpus. A segment without default-field
+    doclens matches nothing.
     """
     from ..query import ast as qast
 
-    empty = _topk_frame(np.array([], np.int64), np.array([], np.float64), k)
+    gen = int(pdf["seg"].iloc[0]) // 1_000_000
     dls_by_field: dict[str, np.ndarray] = {}
     doc_lo_by_field: dict[str, int] = {}
     for r in _records(
@@ -2517,28 +2526,10 @@ def _segment_boolean_topk(
         dls_by_field[f] = _decode_doclens(r["data"])
         doc_lo_by_field[f] = int(r["doc_lo"])
     if "" not in dls_by_field:
-        if (
-            facet_ord_col is not None
-            or facet_range_spec is not None
-            or hist_col is not None
-        ):
-            return _empty_facet()
-        if collapse_ord_col is not None:
-            return _empty_collapse()
-        if stats_col is not None:
-            return _empty_stats()
-        if stats_facet_spec is not None:
-            return _empty_stats_facet()
-        if count_trees is not None:
-            # every name still gets a row so zero-count facet queries
-            # survive the cross-segment sum (Solr serves 0 counts)
-            return pd.DataFrame(
-                {
-                    "name": [nm for nm, _ in count_trees],
-                    "cnt": np.zeros(len(count_trees), np.int64),
-                }
-            )
-        return empty
+        none = (np.array([], np.int64), np.array([], np.float64))
+        return _Match(
+            *none, gen, {}, {}, lambda node, fld="": none, lambda t, fld: none
+        )
     doc_lo = doc_lo_by_field[""]
     dls = dls_by_field[""]
     # dl=0 docs never match (no tokens); TOMBSTONE slots are
@@ -2752,25 +2743,32 @@ def _segment_boolean_topk(
     # a tombstoned doc contributes nothing to any OTHER doc's score
     if deleted.size and len(docs):
         docs, scores = _strip_deleted(docs, deleted, scores)
-    if count_trees is not None:
-        # facet.query: |main docset ∩ fq docset| per named subquery.
-        # The main docset is already tombstone-stripped, so the
-        # intersection never resurrects a deleted doc. One row per
-        # name ALWAYS (zero counts included — Solr serves them).
-        names, cnts = [], []
-        for nm, fq_tree in count_trees:
-            fd, _ = evaluate(fq_tree)
-            names.append(nm)
-            cnts.append(np.intersect1d(docs, fd, assume_unique=True).size)
-        return pd.DataFrame({"name": names, "cnt": np.asarray(cnts, np.int64)})
-    if only_doc_ids is not None and len(docs):
+    return _Match(docs, scores, gen, dvs, dv_lo, evaluate, bm25)
+
+
+# ---------------------------------------------------------------------------
+# collectors: what each surface reads from a segment's match. Each
+# collect emits one partial of its collector's schema, bounded by k,
+# the facet vocabulary or the bucket count — never the match set.
+# ---------------------------------------------------------------------------
+
+
+def _collect_topk(
+    m: _Match,
+    k: int,
+    boost_terms: tuple = (),
+    boost_fn: tuple | None = None,
+    only: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """The segment's top ``k`` (doc_id, score) rows (_topk_frame),
+    after the ``only`` allowlist and the boosts."""
+    docs, scores = m.docs, m.scores
+    if only is not None and len(docs):
         # second-pass scoring for a bounded candidate page (ReRank):
         # keep only the allowlisted docs and return ALL of them — the
-        # caller owns ranking; the per-segment output is at most
-        # |allowlist| rows
-        keep = np.isin(docs, only_doc_ids, assume_unique=True)
+        # caller passes k = |allowlist| and owns ranking
+        keep = np.isin(docs, only, assume_unique=True)
         docs, scores = docs[keep], scores[keep]
-        k = len(only_doc_ids)
     # boosted SHOULD clauses over the tree's match docset — the
     # feedback final query (seed MUST + expansion SHOULD,
     # UnsupervisedFeedbackHelper.java:110-118): candidates stay the
@@ -2778,240 +2776,207 @@ def _segment_boolean_topk(
     # co-occurs. Doc-local, so per-segment evaluation stays exact.
     if boost_terms and len(docs):
         for t, bst in boost_terms:
-            d, s = bm25(t, "")
+            d, s = m.bm25(t, "")
             mask = np.isin(d, docs, assume_unique=True)
             if mask.any():
                 idx = np.searchsorted(docs, d[mask])
                 scores[idx] += bst * s[mask]
-    if boost_fn_spec is not None and len(docs):
+    if boost_fn is not None and len(docs):
         # BoostedQuery's multiplicative ValueSource (MoreLikeThisHelper
         # .java:131-145) — applied BEFORE top-k so the boost decides
         # which docs make the k; values from the intrinsic doc_id or
         # the segment's packed docvalues stream
-        bcol, bfn = boost_fn_spec
+        bcol, bfn = boost_fn
         if bcol == "doc_id":
             vals = docs.astype(np.float64)
         else:
-            if bcol not in dvs:
+            if bcol not in m.dvs:
                 raise ValueError(
                     f"segment frame lacks the {bcol!r} docvalues stream "
                     "for boost_fn"
                 )
-            vals = dvs[bcol][docs - dv_lo[bcol]].astype(np.float64)
+            vals = m.dvs[bcol][docs - m.dv_lo[bcol]].astype(np.float64)
         # flat twin parity: the flat boolean surfaces hand
         # _apply_boost_fn a 5-decimal-rounded base score
         # (unsupervised_feedback / execute_query round their output
         # with F.round = decimal HALF_UP), so the multiplier applies
         # to the identically-rounded base here too
         scores = _spark_round(scores, 5) * np.asarray(bfn(vals), np.float64)
-    if facet_ord_col is not None:
-        if len(docs) == 0 or facet_ord_col not in dvs:
-            return _empty_facet()
-        ords_arr = dvs[facet_ord_col]
-        f_lo = dv_lo[facet_ord_col]
-        ids = docs - f_lo
-        valid = (ids >= 0) & (ids < len(ords_arr))
-        hit_ords = ords_arr[ids[valid]].astype(np.int64)
-        # guard: a TOMBSTONE ordinal (compacted deletion) must never
-        # reach bincount — it would allocate a 2^48-slot array
-        hit_ords = hit_ords[hit_ords != TOMBSTONE]
-        counts = np.bincount(hit_ords)
-        nz = np.flatnonzero(counts)
-        return pd.DataFrame(
-            {"ord": nz.astype(np.int64), "cnt": counts[nz].astype(np.int64)}
-        )
-    if facet_range_spec is not None:
-        # range faceting (facet.range): bucket the matched docs'
-        # numeric docvalues into [start + i*gap, start + (i+1)*gap);
-        # per-segment partials are at most n_buckets rows, merged by
-        # sum — the ordinal-facet shape with arithmetic in place of
-        # the dictionary
-        f_col, f_start, f_gap, f_nb, f_end = facet_range_spec
-        if len(docs) == 0 or f_col not in dvs:
-            return _empty_facet()
-        arr = dvs[f_col]
-        ids = docs - dv_lo[f_col]
-        valid = (ids >= 0) & (ids < len(arr))
-        raw = arr[ids[valid]]
-        # TOMBSTONE slots are compacted-away deletions — same guard as
-        # the ordinal-facet block; [start, end) enforced explicitly so
-        # a non-gap-aligned end never spills into the last bucket
-        raw = raw[raw != TOMBSTONE]
-        vals = raw.astype(np.float64)
-        buckets = np.floor((vals - f_start) / f_gap).astype(np.int64)
-        ok = (buckets >= 0) & (buckets < f_nb) & (vals < f_end)
-        counts = np.bincount(buckets[ok], minlength=f_nb)
-        nz = np.flatnonzero(counts)
-        return pd.DataFrame(
-            {"ord": nz.astype(np.int64), "cnt": counts[nz].astype(np.int64)}
-        )
-    if stats_col is not None:
-        # stats component (StatsComponent): one mergeable moment row
-        # per segment — count/sum/sum-of-squares/min/max; mean and
-        # stddev derive exactly at merge time
-        if len(docs) == 0 or stats_col not in dvs:
-            return _empty_stats()
-        arr = dvs[stats_col]
-        ids = docs - dv_lo[stats_col]
-        valid = (ids >= 0) & (ids < len(arr))
-        raw = arr[ids[valid]]
-        # TOMBSTONE sentinel (2^48-1) would corrupt every moment —
-        # same strip as the facet/collapse blocks
-        raw = raw[raw != TOMBSTONE]
-        if len(raw) == 0:
-            return _empty_stats()
-        vals = raw.astype(np.float64)
-        return pd.DataFrame(
-            {
-                "cnt": np.array([len(vals)], np.int64),
-                "s": np.array([vals.sum()], np.float64),
-                "ss": np.array([(vals * vals).sum()], np.float64),
-                "mn": np.array([vals.min()], np.float64),
-                "mx": np.array([vals.max()], np.float64),
-            }
-        )
-    if hist_col is not None:
-        # exact value histogram of the matched docset — (value, cnt)
-        # rows bounded by the segment's distinct-value count, the
-        # mergeable basis for exact percentiles (stats.percentiles)
-        if len(docs) == 0 or hist_col not in dvs:
-            return _empty_facet()
-        arr = dvs[hist_col]
-        ids = docs - dv_lo[hist_col]
-        valid = (ids >= 0) & (ids < len(arr))
-        raw = arr[ids[valid]]
-        raw = raw[raw != TOMBSTONE]
-        if len(raw) == 0:
-            return _empty_facet()
-        uniq, cnts = np.unique(raw, return_counts=True)
-        return pd.DataFrame(
-            {"ord": uniq.astype(np.int64), "cnt": cnts.astype(np.int64)}
-        )
-    if stats_facet_spec is not None:
-        # stats.facet: the stats moment row computed PER facet
-        # ordinal — at most |segment facet vocab| rows leave the
-        # kernel, merged by (gen, ord) then by value upstream
-        s_col, f_col = stats_facet_spec
-        if len(docs) == 0 or s_col not in dvs or f_col not in dvs:
-            return _empty_stats_facet()
-        vals_arr = dvs[s_col]
-        ords_arr = dvs[f_col]
-        ids_v = docs - dv_lo[s_col]
-        ids_o = docs - dv_lo[f_col]
-        valid = (
-            (ids_v >= 0)
-            & (ids_v < len(vals_arr))
-            & (ids_o >= 0)
-            & (ids_o < len(ords_arr))
-        )
-        raw = vals_arr[ids_v[valid]]
-        hit_ords = ords_arr[ids_o[valid]].astype(np.int64)
-        # TOMBSTONE in either stream = compacted deletion
-        live = (raw != TOMBSTONE) & (hit_ords != TOMBSTONE)
-        raw, hit_ords = raw[live], hit_ords[live]
-        if len(raw) == 0:
-            return _empty_stats_facet()
-        vals = raw.astype(np.float64)
-        uniq, inv = np.unique(hit_ords, return_inverse=True)
-        s = np.zeros(len(uniq), np.float64)
-        np.add.at(s, inv, vals)
-        ss = np.zeros(len(uniq), np.float64)
-        np.add.at(ss, inv, vals * vals)
-        mn = np.full(len(uniq), np.inf, np.float64)
-        np.minimum.at(mn, inv, vals)
-        mx = np.full(len(uniq), -np.inf, np.float64)
-        np.maximum.at(mx, inv, vals)
-        return pd.DataFrame(
-            {
-                "ord": uniq.astype(np.int64),
-                "cnt": np.bincount(inv).astype(np.int64),
-                "s": s,
-                "ss": ss,
-                "mn": mn,
-                "mx": mx,
-            }
-        )
-    if collapse_ord_col is not None:
-        # field collapse (CollapsingQParserPlugin): the segment's
-        # winner per group ordinal — (rounded-score desc, doc_id asc),
-        # the same total order the client sees, so cross-segment
-        # merging by max is exact. At most |segment group vocab| rows
-        # leave the kernel, never the match set.
-        if len(docs) == 0 or collapse_ord_col not in dvs:
-            return _empty_collapse()
-        ords_arr = dvs[collapse_ord_col]
-        c_lo = dv_lo[collapse_ord_col]
-        ids = docs - c_lo
-        valid = (ids >= 0) & (ids < len(ords_arr))
-        docs_v, scores_v = docs[valid], scores[valid]
-        hit_ords = ords_arr[ids[valid]].astype(np.int64)
-        live = hit_ords != TOMBSTONE
-        docs_v, scores_v, hit_ords = docs_v[live], scores_v[live], hit_ords[live]
-        if len(docs_v) == 0:
-            return _empty_collapse()
-        scores_r = _spark_round(scores_v, round_to)
-        # lexsort: last key is primary -> (ord, -score, doc_id)
-        order = np.lexsort((docs_v, -scores_r, hit_ords))
-        o_s, d_s, s_s = hit_ords[order], docs_v[order], scores_r[order]
-        _, first, counts = np.unique(o_s, return_index=True, return_counts=True)
-        if collapse_limit <= 1:
-            keep = first
-        else:
-            # result grouping (group.limit=n): top-n per ordinal —
-            # rank within each ordinal run, keep ranks < n
-            ranks = np.arange(len(o_s)) - np.repeat(first, counts)
-            keep = np.flatnonzero(ranks < collapse_limit)
-        return pd.DataFrame(
-            {
-                "ord": o_s[keep].astype(np.int64),
-                "doc_id": d_s[keep].astype(np.int64),
-                "score": s_s[keep].astype(np.float64),
-            }
-        )
-    if len(docs) == 0:
-        return empty
     return _topk_frame(docs, scores, k)
 
 
-def _empty_facet() -> pd.DataFrame:
+def _collect_facet_query(m: _Match, trees: list) -> pd.DataFrame:
+    """facet.query: |main docset ∩ fq docset| per named subquery.
+    The main docset is already tombstone-stripped, so the
+    intersection never resurrects a deleted doc. One row per name
+    ALWAYS (zero counts included — Solr serves them, and they survive
+    the cross-segment sum)."""
+    return pd.DataFrame({
+        "name": [nm for nm, _ in trees],
+        "cnt": np.array(
+            [
+                np.intersect1d(m.docs, m.evaluate(t)[0], assume_unique=True).size
+                for _, t in trees
+            ],
+            np.int64,
+        ),
+    })
+
+
+def _collect_facet(m: _Match, col: str) -> pd.DataFrame:
+    """facet.field: (gen, ord, cnt) per ordinal the match hits."""
+    counts = np.bincount(m.values(col)[2])
+    nz = np.flatnonzero(counts)
+    return pd.DataFrame({
+        "gen": np.full(len(nz), m.gen, np.int64),
+        "ord": nz.astype(np.int64),
+        "cnt": counts[nz].astype(np.int64),
+    })
+
+
+def _collect_range(
+    m: _Match, col: str, start: float, gap: float, n_buckets: int, end: float
+) -> pd.DataFrame:
+    """facet.range: bucket the matched docs' numeric docvalues into
+    [start + i*gap, start + (i+1)*gap); at most n_buckets (ord, cnt)
+    rows, merged by sum — the ordinal-facet shape with arithmetic in
+    place of the dictionary. [start, end) is enforced explicitly so a
+    non-gap-aligned end never spills into the last bucket."""
+    vals = m.values(col)[2].astype(np.float64)
+    buckets = np.floor((vals - start) / gap).astype(np.int64)
+    ok = (buckets >= 0) & (buckets < n_buckets) & (vals < end)
+    counts = np.bincount(buckets[ok], minlength=n_buckets)
+    nz = np.flatnonzero(counts)
     return pd.DataFrame(
-        {"ord": pd.Series([], dtype="int64"), "cnt": pd.Series([], dtype="int64")}
+        {"ord": nz.astype(np.int64), "cnt": counts[nz].astype(np.int64)}
     )
 
 
-def _empty_collapse() -> pd.DataFrame:
+_STATS_PARTIAL = "cnt long, s double, ss double, mn double, mx double"
+_TOP_PER_ORD_SCHEMA = "gen long, ord long, doc_id long, score double"
+
+
+def _collect_stats(m: _Match, col: str) -> pd.DataFrame:
+    """stats (StatsComponent): one mergeable moment row per segment —
+    count/sum/sum-of-squares/min/max; mean and stddev derive exactly
+    at merge time. A segment without values emits the merge's
+    identity (cnt 0, min +inf, max -inf)."""
+    vals = m.values(col)[2].astype(np.float64)
     return pd.DataFrame(
         {
-            "ord": pd.Series([], dtype="int64"),
-            "doc_id": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
+            "cnt": np.array([len(vals)], np.int64),
+            "s": np.array([vals.sum()], np.float64),
+            "ss": np.array([(vals * vals).sum()], np.float64),
+            "mn": np.array([vals.min(initial=np.inf)], np.float64),
+            "mx": np.array([vals.max(initial=-np.inf)], np.float64),
         }
     )
 
 
-def _empty_stats_facet() -> pd.DataFrame:
+def _collect_hist(m: _Match, col: str) -> pd.DataFrame:
+    """Exact value histogram of the matched docset — (value, cnt)
+    rows bounded by the segment's distinct-value count, the mergeable
+    basis for exact percentiles (stats.percentiles)."""
+    uniq, cnts = np.unique(m.values(col)[2], return_counts=True)
+    return pd.DataFrame(
+        {"ord": uniq.astype(np.int64), "cnt": cnts.astype(np.int64)}
+    )
+
+
+def _collect_stats_facet(m: _Match, s_col: str, f_col: str) -> pd.DataFrame:
+    """stats.facet: the stats moment row computed PER facet ordinal —
+    at most |segment facet vocab| rows, merged by (gen, ord) then by
+    value upstream."""
+    _, _, raw, hit_ords = m.values(s_col, f_col)
+    vals = raw.astype(np.float64)
+    uniq, inv = np.unique(hit_ords, return_inverse=True)
+    s = np.zeros(len(uniq), np.float64)
+    np.add.at(s, inv, vals)
+    ss = np.zeros(len(uniq), np.float64)
+    np.add.at(ss, inv, vals * vals)
+    mn = np.full(len(uniq), np.inf, np.float64)
+    np.minimum.at(mn, inv, vals)
+    mx = np.full(len(uniq), -np.inf, np.float64)
+    np.maximum.at(mx, inv, vals)
     return pd.DataFrame(
         {
-            "ord": pd.Series([], dtype="int64"),
-            "cnt": pd.Series([], dtype="int64"),
-            "s": pd.Series([], dtype="float64"),
-            "ss": pd.Series([], dtype="float64"),
-            "mn": pd.Series([], dtype="float64"),
-            "mx": pd.Series([], dtype="float64"),
+            "gen": np.full(len(uniq), m.gen, np.int64),
+            "ord": uniq.astype(np.int64),
+            "cnt": np.bincount(inv).astype(np.int64),
+            "s": s,
+            "ss": ss,
+            "mn": mn,
+            "mx": mx,
         }
     )
 
 
-def _empty_stats() -> pd.DataFrame:
+def _collect_top_per_ord(
+    m: _Match, col: str, limit: int, round_to: int
+) -> pd.DataFrame:
+    """Field collapse (CollapsingQParserPlugin) and grouping: the
+    segment's best ``limit`` docs per group ordinal under
+    (rounded-score desc, doc_id asc), the same total order the client
+    sees, so cross-segment merging is exact. At most limit x |segment
+    group vocab| rows."""
+    docs_v, scores_v, hit_ords = m.values(col)
+    scores_r = _spark_round(scores_v, round_to)
+    # lexsort: last key is primary -> (ord, -score, doc_id)
+    order = np.lexsort((docs_v, -scores_r, hit_ords))
+    o_s, d_s, s_s = hit_ords[order], docs_v[order], scores_r[order]
+    _, first, counts = np.unique(o_s, return_index=True, return_counts=True)
+    if limit <= 1:
+        keep = first
+    else:
+        # result grouping (group.limit=n): top-n per ordinal —
+        # rank within each ordinal run, keep ranks < n
+        ranks = np.arange(len(o_s)) - np.repeat(first, counts)
+        keep = np.flatnonzero(ranks < limit)
     return pd.DataFrame(
         {
-            "cnt": pd.Series([], dtype="int64"),
-            "s": pd.Series([], dtype="float64"),
-            "ss": pd.Series([], dtype="float64"),
-            "mn": pd.Series([], dtype="float64"),
-            "mx": pd.Series([], dtype="float64"),
+            "gen": np.full(len(keep), m.gen, np.int64),
+            "ord": o_s[keep].astype(np.int64),
+            "doc_id": d_s[keep].astype(np.int64),
+            "score": s_s[keep].astype(np.float64),
         }
     )
+
+
+def _walk_query(tree) -> tuple[dict[str, set], set, bool]:
+    """One pass over a parsed query: (its term sets keyed by the
+    enclosing FieldQuery's field, "" for the default field; the fields
+    its Range clauses read, "doc_id" for a bare Range; whether it
+    holds a phrase). A field's dictionary only resolves terms under
+    ITS FieldQuery subtrees. A field without a packed index fetches
+    nothing: the kernel rejects its clause."""
+    from ..query import ast as qast
+    from ..query.compiler import _leaf_terms
+
+    terms: dict[str, set] = {}
+    ranges: set = set()
+    quote = False
+
+    def walk(node, fld: str) -> None:
+        nonlocal quote
+        if isinstance(node, (qast.Or, qast.And)):
+            walk(node.left, fld)
+            walk(node.right, fld)
+        elif isinstance(node, (qast.Not, qast.Quote)):
+            quote = quote or isinstance(node, qast.Quote)
+            walk(node.child, fld)
+        elif isinstance(node, qast.Range):
+            ranges.add("doc_id")
+        elif isinstance(node, qast.FieldQuery):
+            fname = node.field.rstrip(":")
+            if isinstance(node.child, qast.Range):
+                ranges.add(fname)
+            else:
+                walk(node.child, fname)
+        elif isinstance(node, qast.Operand):
+            terms.setdefault(fld, set()).update(_leaf_terms(node))
+
+    walk(tree, "")
+    return terms, ranges, quote
 
 
 def _prepare_boolean(
@@ -3039,8 +3004,6 @@ def _prepare_boolean(
     applied to the whole boolean path. Returns (tree, field_ctx,
     unified, plan): the kernel input and the serving plan it was built
     for (_serving_plan)."""
-    from ..query import ast as qast
-    from ..query.compiler import _leaf_terms
     from ..query.parser import parse_query
 
     gens: list[tuple[int, SegmentIndex]] = _as_gens(seg_index)
@@ -3059,67 +3022,26 @@ def _prepare_boolean(
                 "aligned doc ranges"
             )
 
-    def _has_quote(node) -> bool:
-        if isinstance(node, qast.Quote):
-            return True
-        if isinstance(node, (qast.Or, qast.And)):
-            return _has_quote(node.left) or _has_quote(node.right)
-        if isinstance(node, qast.Not):
-            return _has_quote(node.child)
-        if isinstance(node, qast.FieldQuery):
-            return _has_quote(node.child)
-        return False
-
     tree, _errors = parse_query(query)
-    # per-field term sets: a field's dictionary only resolves terms
-    # under ITS FieldQuery subtrees; everything else is default-field
-    def _field_terms(node, fld: str, out: dict) -> None:
-        if isinstance(node, (qast.Or, qast.And)):
-            _field_terms(node.left, fld, out)
-            _field_terms(node.right, fld, out)
-        elif isinstance(node, (qast.Not, qast.Quote)):
-            _field_terms(node.child, fld, out)
-        elif isinstance(node, qast.FieldQuery):
-            fname = node.field.rstrip(":")
-            nxt = fname if fname in field_segments else fld
-            if not isinstance(node.child, qast.Range):
-                _field_terms(node.child, nxt, out)
-        elif isinstance(node, qast.Operand):
-            out.setdefault(fld, set()).update(_leaf_terms(node))
-
-    by_field: dict[str, set] = {}
-    _field_terms(tree, "", by_field)
+    by_field, range_fields, with_subs = _walk_query(tree)
     if extra_terms:
         by_field.setdefault("", set()).update(extra_terms)
-    with_subs = _has_quote(tree)
-
-    def _range_fields(node, out: set) -> None:
-        if isinstance(node, (qast.Or, qast.And)):
-            _range_fields(node.left, out)
-            _range_fields(node.right, out)
-        elif isinstance(node, (qast.Not, qast.Quote)):
-            _range_fields(node.child, out)
-        elif isinstance(node, qast.Range):
-            out.add("doc_id")
-        elif isinstance(node, qast.FieldQuery):
-            if isinstance(node.child, qast.Range):
-                out.add(node.field.rstrip(":"))
-            else:
-                _range_fields(node.child, out)
-
-    range_fields: set = set()
-    _range_fields(tree, range_fields)
     # extra_dv_cols: value streams a caller needs beyond the tree's
-    # own Range fields (e.g. a boost_fn ValueSource column)
+    # own Range fields (a boost_fn ValueSource column, a stats column).
+    # ONE check of every stream the request reads, in every generation
     dv_needed = sorted((range_fields | set(extra_dv_cols)) - {"doc_id"})
     for _, si in gens:
-        not_packed = [c for c in dv_needed if c not in si.value_cols]
-        if not_packed:
-            raise ValueError(
-                f"packed range/boost over {not_packed} needs docvalues streams — "
-                f"rebuild with build_segments(..., value_cols={not_packed}) "
-                "or use the flat path (doc_id ranges are intrinsic)"
-            )
+        for cols, packed, kind, arg in (
+            (str_cols, si.string_cols, "an ordinal", "string_cols"),
+            (dv_needed, si.value_cols, "a numeric", "value_cols"),
+        ):
+            for c in cols:
+                if c not in packed:
+                    raise ValueError(
+                        f"packed serving over {c!r} needs {kind} docvalues "
+                        f"stream — rebuild with build_segments(..., {arg}="
+                        f"[{c!r}]) (doc_id ranges are intrinsic)"
+                    )
 
     # local-tier decision covers EVERYTHING this query will touch:
     # every field's term-pruned postings + doclens/deletes, plus the
@@ -3200,12 +3122,82 @@ def _prepare_boolean(
     return tree, field_ctx, _stack(frames, plan), plan
 
 
-def _boost_dv_cols(boost_fn: tuple | None) -> tuple:
-    """docvalues columns a boost_fn ValueSource needs fetched
-    (nothing for the intrinsic doc_id key)."""
-    if boost_fn is None or boost_fn[0] == "doc_id":
-        return ()
-    return (boost_fn[0],)
+@dataclass(frozen=True)
+class _Collector:
+    """What one surface reads from each segment's match (_serve), the
+    Lucene Collector / Solr SearchComponent of the packed path:
+    ``collect(match)`` -> one partial frame of DDL ``schema``;
+    ``merge`` folds partials (associative and idempotent, see
+    _partials); ``finish(merged partials, zero rows if none)`` -> the
+    surface's answer. ``str_cols``/``dv_cols`` name the ordinal/numeric
+    docvalues streams collect reads, ``extra_terms`` the default-field
+    terms it scores beyond the tree's own."""
+
+    schema: str
+    collect: Callable
+    merge: Callable
+    finish: Callable
+    str_cols: tuple = ()
+    dv_cols: tuple = ()
+    extra_terms: tuple = ()
+
+
+def _serve(
+    spark: SparkSession,
+    seg_index,
+    query: str,
+    collector: _Collector,
+    k1: float = 1.2,
+    b: float = 0.75,
+    field_segments: dict[str, SegmentIndex] | None = None,
+    field_sims: dict | None = None,
+):
+    """The one body of every boolean-family surface: prepare the
+    query with the collector's streams and terms (_prepare_boolean,
+    which rejects a stream some generation lacks), match it per
+    segment (_segment_match), collect and merge the partials on the
+    planned strategy (_partials) and finish them on the driver."""
+    tree, field_ctx, unified, plan = _prepare_boolean(
+        spark, seg_index, query, field_segments, field_sims,
+        str_cols=collector.str_cols, extra_terms=collector.extra_terms,
+        extra_dv_cols=collector.dv_cols,
+    )
+    # the kernels ship collect alone: finish holds the SparkSession
+    collect = collector.collect
+
+    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+        return collect(_segment_match(pdf, tree, field_ctx, k1, b))
+
+    return collector.finish(_partials(
+        unified, plan, per_segment, collector.schema, collector.merge
+    ))
+
+
+def _topk_collector(
+    k: int,
+    round_to: int,
+    boost_terms: list[tuple[str, float]] = (),
+    boost_fn: tuple | None = None,
+    only: np.ndarray | None = None,
+) -> _Collector:
+    """The (doc_id, score) top-k collector: per-partition and driver
+    merges are both the _topk_cut (so the TakeOrderedAndProject bound
+    of k rows per partition holds); finishes as the pandas answer.
+    ``boost_fn`` reads its docvalues column unless it is the intrinsic
+    doc_id."""
+    return _Collector(
+        _TOPK_SCHEMA,
+        functools.partial(
+            _collect_topk, k=k, boost_terms=boost_terms, boost_fn=boost_fn,
+            only=only,
+        ),
+        functools.partial(_topk_cut, k=k, round_to=round_to),
+        lambda res: res,
+        dv_cols=(
+            () if boost_fn is None or boost_fn[0] == "doc_id" else (boost_fn[0],)
+        ),
+        extra_terms=tuple(sorted({t for t, _ in boost_terms})),
+    )
 
 
 def wand_boolean_search(
@@ -3258,17 +3250,10 @@ def _boolean_top(
 ):
     """wand_boolean_search's pandas answer, before it crosses into
     the JVM."""
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        extra_dv_cols=_boost_dv_cols(boost_fn),
+    return _serve(
+        spark, seg_index, query, _topk_collector(k, round_to, boost_fn=boost_fn),
+        k1, b, field_segments, field_sims,
     )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_boolean_topk(
-            pdf, tree, field_ctx, k, k1, b, boost_fn_spec=boost_fn
-        )
-
-    return _serve_topk(unified, plan, per_segment, k, round_to)
 
 
 def wand_boolean_boosted_search(
@@ -3291,19 +3276,11 @@ def wand_boolean_boosted_search(
     one-job shape as wand_boolean_search — the expansion terms ride
     the same term-isin-pruned postings scan and the same per-segment
     Arrow stage; the merge stays k rows per segment."""
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        extra_terms=tuple(sorted({t for t, _ in boost_terms})),
-        extra_dv_cols=_boost_dv_cols(boost_fn),
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_boolean_topk(
-            pdf, tree, field_ctx, k, k1, b, boost_terms=boost_terms,
-            boost_fn_spec=boost_fn,
-        )
-
-    return _relation(spark, _serve_topk(unified, plan, per_segment, k, round_to))
+    return _relation(spark, _serve(
+        spark, seg_index, query,
+        _topk_collector(k, round_to, boost_terms=boost_terms, boost_fn=boost_fn),
+        k1, b, field_segments, field_sims,
+    ))
 
 
 def fetch_docs(
@@ -3487,31 +3464,13 @@ def wand_facet_search(
     each generation has its OWN ordinal dictionary, so partials carry
     the generation id, map through their generation's dictionary, and
     merge by VALUE — counts equal the compacted index's."""
-    gens = _as_gens(seg_index)
-    for _, si in gens:
-        if facet_col not in si.string_cols:
-            raise ValueError(
-                f"packed faceting over {facet_col!r} needs an ordinal "
-                "docvalues stream — rebuild with build_segments(..., "
-                f"string_cols=[{facet_col!r}])"
-            )
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        str_cols=(facet_col,),
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b, facet_ord_col=facet_col
-        )
-        out.insert(0, "gen", np.int64(int(pdf["seg"].iloc[0]) // 1_000_000))
-        return out
-
-    res = _partials(
-        unified, plan, per_segment, "gen long, ord long, cnt long",
+    return _serve(spark, seg_index, query, _Collector(
+        "gen long, ord long, cnt long",
+        functools.partial(_collect_facet, col=facet_col),
         functools.partial(_fold, keys=["gen", "ord"], how={"cnt": "sum"}),
-    )
-    return _facet_counts(spark, res, gens, facet_col)
+        lambda res: _facet_counts(spark, res, _as_gens(seg_index), facet_col),
+        str_cols=(facet_col,),
+    ), k1, b, field_segments, field_sims)
 
 
 def wand_collapse_search(
@@ -3548,32 +3507,17 @@ def wand_collapse_search(
     partials carry the generation id, map through their generation's
     own dictionary, and merge by VALUE — winners equal the compacted
     index's."""
-    gens = _as_gens(seg_index)
-    for _, si in gens:
-        if collapse_col not in si.string_cols:
-            raise ValueError(
-                f"packed collapse over {collapse_col!r} needs an ordinal "
-                "docvalues stream — rebuild with build_segments(..., "
-                f"string_cols=[{collapse_col!r}])"
-            )
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        str_cols=(collapse_col,),
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b,
-            collapse_ord_col=collapse_col, round_to=round_to,
-        )
-        out.insert(0, "gen", np.int64(int(pdf["seg"].iloc[0]) // 1_000_000))
-        return out
-
-    res = _partials(
-        unified, plan, per_segment, "gen long, ord long, doc_id long, score double",
+    return _serve(spark, seg_index, query, _Collector(
+        _TOP_PER_ORD_SCHEMA,
+        functools.partial(
+            _collect_top_per_ord, col=collapse_col, limit=1, round_to=round_to
+        ),
         functools.partial(_top_per_ord, limit=1),
-    )
-    return _collapse_topk(spark, res, gens, collapse_col, k)
+        lambda res: _collapse_topk(
+            spark, res, _as_gens(seg_index), collapse_col, k
+        ),
+        str_cols=(collapse_col,),
+    ), k1, b, field_segments, field_sims)
 
 
 def wand_facet_range_search(
@@ -3606,30 +3550,16 @@ def wand_facet_range_search(
     if gap <= 0 or end <= start:
         raise ValueError("facet.range needs gap > 0 and end > start")
     n_buckets = -(-(end - start) // gap)
-    gens = _as_gens(seg_index)
-    for _, si in gens:
-        if facet_col not in si.value_cols:
-            raise ValueError(
-                f"packed range faceting over {facet_col!r} needs a numeric "
-                "docvalues stream — rebuild with build_segments(..., "
-                f"value_cols=[{facet_col!r}])"
-            )
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        extra_dv_cols=(facet_col,),
-    )
-    spec = (facet_col, float(start), float(gap), int(n_buckets), float(end))
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b, facet_range_spec=spec
-        )
-
-    res = _partials(
-        unified, plan, per_segment, "ord long, cnt long",
+    return _serve(spark, seg_index, query, _Collector(
+        "ord long, cnt long",
+        functools.partial(
+            _collect_range, col=facet_col, start=float(start), gap=float(gap),
+            n_buckets=int(n_buckets), end=float(end),
+        ),
         functools.partial(_fold, keys=["ord"], how={"cnt": "sum"}),
-    )
-    return _range_counts(spark, res, int(start), int(gap), n_buckets)
+        lambda res: _range_counts(spark, res, int(start), int(gap), n_buckets),
+        dv_cols=(facet_col,),
+    ), k1, b, field_segments, field_sims)
 
 
 def wand_stats_search(
@@ -3654,30 +3584,13 @@ def wand_stats_search(
     (n-1)), StatsValuesFactory's formula. The matched docset never
     leaves the kernels. Returns one row, or none when nothing
     matched."""
-    gens = _as_gens(seg_index)
-    for _, si in gens:
-        if stats_col not in si.value_cols:
-            raise ValueError(
-                f"packed stats over {stats_col!r} needs a numeric "
-                "docvalues stream — rebuild with build_segments(..., "
-                f"value_cols=[{stats_col!r}])"
-            )
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        extra_dv_cols=(stats_col,),
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b, stats_col=stats_col
-        )
-
-    res = _partials(
-        unified, plan, per_segment,
-        "cnt long, s double, ss double, mn double, mx double",
+    return _serve(spark, seg_index, query, _Collector(
+        _STATS_PARTIAL,
+        functools.partial(_collect_stats, col=stats_col),
         functools.partial(_fold, keys=[], how=_MOMENTS),
-    )
-    return _stats_answer(spark, res, round_to)
+        lambda res: _stats_answer(spark, res, round_to),
+        dv_cols=(stats_col,),
+    ), k1, b, field_segments, field_sims)
 
 
 def wand_facet_query_search(
@@ -3704,61 +3617,38 @@ def wand_facet_query_search(
     sum. Facet queries may use terms, AND/OR/NOT, doc_id ranges, and
     docvalues-column ranges; phrases inside a facet query are
     rejected (the positions sub-stream fetch is main-tree-only)."""
-    from ..query import ast as qast
-    from ..query.compiler import _leaf_terms
     from ..query.parser import parse_query
 
     if not facet_queries:
         raise ValueError("facet.query needs at least one named subquery")
-
-    def _walk(node, terms: set, rfields: set) -> None:
-        if isinstance(node, (qast.Or, qast.And)):
-            _walk(node.left, terms, rfields)
-            _walk(node.right, terms, rfields)
-        elif isinstance(node, qast.Not):
-            _walk(node.child, terms, rfields)
-        elif isinstance(node, qast.Quote):
+    fq_trees: list[tuple[str, object]] = []
+    extra_terms: set = set()
+    range_fields: set = set()
+    for name, fq in sorted(facet_queries.items()):
+        t, _errors = parse_query(fq)
+        terms, ranges, quote = _walk_query(t)
+        if quote:
             raise ValueError(
                 "facet.query does not support phrases — use the main "
                 "query for positional clauses"
             )
-        elif isinstance(node, qast.FieldQuery):
-            fname = node.field.rstrip(":")
-            if isinstance(node.child, qast.Range):
-                if fname != "doc_id":
-                    rfields.add(fname)
-            else:
-                raise ValueError(
-                    "facet.query field clauses support ranges only "
-                    f"(got a term clause for field {fname!r})"
-                )
-        elif isinstance(node, qast.Operand):
-            terms.update(_leaf_terms(node))
-
-    fq_trees: list[tuple[str, object]] = []
-    extra_terms: set = set()
-    range_fields: set = set()
-    for name, fq in facet_queries.items():
-        t, _errors = parse_query(fq)
-        _walk(t, extra_terms, range_fields)
+        fields = sorted(set(terms) - {""})
+        if fields:
+            raise ValueError(
+                "facet.query field clauses support ranges only "
+                f"(got a term clause for field {fields[0]!r})"
+            )
+        extra_terms |= terms.get("", set())
+        range_fields |= ranges - {"doc_id"}
         fq_trees.append((name, t))
-    fq_trees.sort(key=lambda nt: nt[0])
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        extra_terms=tuple(sorted(extra_terms)),
-        extra_dv_cols=tuple(sorted(range_fields)),
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b, count_trees=fq_trees
-        )
-
-    res = _partials(
-        unified, plan, per_segment, "name string, cnt long",
+    return _serve(spark, seg_index, query, _Collector(
+        "name string, cnt long",
+        functools.partial(_collect_facet_query, trees=fq_trees),
         functools.partial(_fold, keys=["name"], how={"cnt": "sum"}),
-    )
-    return _facet_query_counts(spark, res)
+        lambda res: _facet_query_counts(spark, res),
+        dv_cols=tuple(sorted(range_fields)),
+        extra_terms=tuple(sorted(extra_terms)),
+    ), k1, b, field_segments, field_sims)
 
 
 def wand_stats_facet_search(
@@ -3788,40 +3678,16 @@ def wand_stats_facet_search(
     merged moments (StatsValuesFactory's corrected formula, the
     wand_stats_search math applied per bucket). Rows in value order
     ASC NULLS FIRST."""
-    gens = _as_gens(seg_index)
-    for _, si in gens:
-        if facet_col not in si.string_cols:
-            raise ValueError(
-                f"packed stats.facet over {facet_col!r} needs an ordinal "
-                "docvalues stream — rebuild with build_segments(..., "
-                f"string_cols=[{facet_col!r}])"
-            )
-        if stats_col not in si.value_cols:
-            raise ValueError(
-                f"packed stats.facet over {stats_col!r} needs a numeric "
-                "docvalues stream — rebuild with build_segments(..., "
-                f"value_cols=[{stats_col!r}])"
-            )
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        str_cols=(facet_col,), extra_dv_cols=(stats_col,),
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b,
-            stats_facet_spec=(stats_col, facet_col),
-        )
-        out.insert(0, "gen", np.int64(int(pdf["seg"].iloc[0]) // 1_000_000))
-        return out
-
-    res = _partials(
-        unified, plan, per_segment,
-        "gen long, ord long, cnt long, s double, ss double, "
-        "mn double, mx double",
+    return _serve(spark, seg_index, query, _Collector(
+        "gen long, ord long, " + _STATS_PARTIAL,
+        functools.partial(_collect_stats_facet, s_col=stats_col, f_col=facet_col),
         functools.partial(_fold, keys=["gen", "ord"], how=_MOMENTS),
-    )
-    return _stats_facet(spark, res, gens, facet_col, round_to)
+        lambda res: _stats_facet(
+            spark, res, _as_gens(seg_index), facet_col, round_to
+        ),
+        str_cols=(facet_col,),
+        dv_cols=(stats_col,),
+    ), k1, b, field_segments, field_sims)
 
 
 def wand_stats_percentiles_search(
@@ -3849,29 +3715,13 @@ def wand_stats_percentiles_search(
     than a digest — swap a mergeable digest into the kernel for
     genuinely unbounded columns, the derivation is unchanged."""
     _check_percentiles(percentiles)
-    gens = _as_gens(seg_index)
-    for _, si in gens:
-        if stats_col not in si.value_cols:
-            raise ValueError(
-                f"packed percentiles over {stats_col!r} needs a numeric "
-                "docvalues stream — rebuild with build_segments(..., "
-                f"value_cols=[{stats_col!r}])"
-            )
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        extra_dv_cols=(stats_col,),
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b, hist_col=stats_col
-        )
-
-    res = _partials(
-        unified, plan, per_segment, "ord long, cnt long",
+    return _serve(spark, seg_index, query, _Collector(
+        "ord long, cnt long",
+        functools.partial(_collect_hist, col=stats_col),
         functools.partial(_fold, keys=["ord"], how={"cnt": "sum"}),
-    )
-    return _percentiles(spark, res, percentiles)
+        lambda res: _percentiles(spark, res, percentiles),
+        dv_cols=(stats_col,),
+    ), k1, b, field_segments, field_sims)
 
 
 def wand_group_search(
@@ -3905,33 +3755,18 @@ def wand_group_search(
     ``group_limit`` must be >= 1 (ValueError on both tiers)."""
     if group_limit < 1:
         raise ValueError(f"group_limit must be >= 1, got {group_limit}")
-    gens = _as_gens(seg_index)
-    for _, si in gens:
-        if group_col not in si.string_cols:
-            raise ValueError(
-                f"packed grouping over {group_col!r} needs an ordinal "
-                "docvalues stream — rebuild with build_segments(..., "
-                f"string_cols=[{group_col!r}])"
-            )
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
-        str_cols=(group_col,),
-    )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b,
-            collapse_ord_col=group_col, round_to=round_to,
-            collapse_limit=group_limit,
-        )
-        out.insert(0, "gen", np.int64(int(pdf["seg"].iloc[0]) // 1_000_000))
-        return out
-
-    res = _partials(
-        unified, plan, per_segment, "gen long, ord long, doc_id long, score double",
+    return _serve(spark, seg_index, query, _Collector(
+        _TOP_PER_ORD_SCHEMA,
+        functools.partial(
+            _collect_top_per_ord, col=group_col, limit=group_limit,
+            round_to=round_to,
+        ),
         functools.partial(_top_per_ord, limit=group_limit),
-    )
-    return _group_topn(spark, res, gens, group_col, k_groups, group_limit)
+        lambda res: _group_topn(
+            spark, res, _as_gens(seg_index), group_col, k_groups, group_limit
+        ),
+        str_cols=(group_col,),
+    ), k1, b, field_segments, field_sims)
 
 
 def wand_scores_for_ids(
@@ -3972,21 +3807,11 @@ def _scores_for_ids(
     """wand_scores_for_ids' pandas answer, before it crosses into the
     JVM."""
     allow = np.unique(np.asarray([int(d) for d in doc_ids], np.int64))
-    tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
+    # each doc lives in one segment: a cut at |allowlist| keeps all
+    return _serve(
+        spark, seg_index, query, _topk_collector(len(allow), round_to, only=allow),
+        k1, b, field_segments, field_sims,
     )
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_boolean_topk(
-            pdf, tree, field_ctx, 0, k1, b, only_doc_ids=allow
-        )
-
-    res = _partials(
-        unified, plan, per_segment, _TOPK_SCHEMA,
-        # each doc lives in one segment: a cut at |allowlist| keeps all
-        functools.partial(_topk_cut, k=len(allow), round_to=round_to),
-    )
-    return _empty_topk() if res is None else res
 
 
 def wand_rerank_search(
@@ -5018,7 +4843,7 @@ def _wand_search_frames(
     if not dfs:
         # known empty before any frame is read: a driver-side answer on
         # both tiers, so handler tails over it schedule no job either
-        return _empty_topk()
+        return _empty(_TOPK_SCHEMA)
     n, avgdl = _gen_stats(gens, pooled)
 
     plan = _serving_plan(

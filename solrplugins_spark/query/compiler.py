@@ -244,7 +244,7 @@ class QueryCompiler:
         per-doc term->partial map, so the plan is one pruned scan ->
         ONE groupBy(doc_id) shuffle -> filter/project — the flat-path
         twin of the packed evaluator's single vectorized pass
-        (segments._segment_boolean_topk), instead of one shuffle/join
+        (segments._segment_match), instead of one shuffle/join
         per tree node. Quote/Range/FieldQuery leaves reference other
         frames (positions, stored corpus, per-field indexes) and keep
         the join algebra.

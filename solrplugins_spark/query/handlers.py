@@ -403,8 +403,9 @@ def packed_mlt_handler(
     ``matchOffset``; fetches match_offset+1 rows, one execution)."""
     from ..index.segments import (
         _as_gens,
+        _TOPK_SCHEMA,
         _boolean_top,
-        _empty_topk,
+        _empty,
         _relation,
         _wand_search_frames,
         fetch_docs_local,
@@ -446,7 +447,7 @@ def packed_mlt_handler(
             pooled=is_multi,
         )
         if boosts
-        else _empty_topk()
+        else _empty(_TOPK_SCHEMA)
     )
     # the answer is a pre-sorted (score desc, doc_id asc) driver-side
     # frame of <= k+|seeds| rows on both tiers: the seed-exclusion +

@@ -291,6 +291,8 @@ def test_facet_query_rejects_phrase_and_empty(spark, tiny_index, sf_segments):
         wand_facet_query_search(
             spark, sf_segments, "w0000", {"p": '"w0000 w0001"'}
         )
+    with pytest.raises(ValueError, match="term clause for field 'role'"):
+        wand_facet_query_search(spark, sf_segments, "w0000", {"r": "role:user"})
 
 
 def test_stats_facet_flat_matches_brute(

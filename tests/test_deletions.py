@@ -22,6 +22,7 @@ import shutil
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import tier
 
 from solrplugins_spark.index.builder import build_index
 from solrplugins_spark.index.segments import (
@@ -258,11 +259,15 @@ def test_payload_similarity_excludes_dead(spark, tmp_path):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_delete_by_query(spark, del_setup, tmp_path):
+@pytest.mark.parametrize("budget", [None, 0], ids=["local", "spark"])
+def test_delete_by_query(spark, del_setup, tmp_path, monkeypatch, budget):
     """Solr deleteByQuery: the packed boolean evaluator picks the dead
     set; queries afterwards exclude exactly the matched docs; a rerun
-    is a no-op (already-tombstoned docs never match again)."""
+    is a no-op (already-tombstoned docs never match again). Checked on
+    the local tier and on the Spark path (budget 0)."""
     from solrplugins_spark.index.segments import delete_by_query
+
+    tier(monkeypatch, budget)
 
     src = del_setup["root"] / "base"
     shutil.copytree(src, tmp_path / "q")

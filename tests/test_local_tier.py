@@ -196,20 +196,21 @@ def test_packed_mlt_handler_local_zero_jobs(spark, lt, monkeypatch):
 
 FQ = "zephyrblade or w0003"
 FACETS = {
-    "facet": lambda spark, si: S.wand_facet_search(spark, si, FQ, "role"),
-    "collapse": lambda spark, si: S.wand_collapse_search(spark, si, FQ, "role", k=2),
-    "range": lambda spark, si: S.wand_facet_range_search(
-        spark, si, FQ, "turn_idx", 0, 24, 4),
-    "stats": lambda spark, si: S.wand_stats_search(spark, si, FQ, "turn_idx"),
-    "facet_query": lambda spark, si: S.wand_facet_query_search(
-        spark, si, FQ,
+    "facet": lambda spark, si, q=FQ: S.wand_facet_search(spark, si, q, "role"),
+    "collapse": lambda spark, si, q=FQ: S.wand_collapse_search(
+        spark, si, q, "role", k=2),
+    "range": lambda spark, si, q=FQ: S.wand_facet_range_search(
+        spark, si, q, "turn_idx", 0, 24, 4),
+    "stats": lambda spark, si, q=FQ: S.wand_stats_search(spark, si, q, "turn_idx"),
+    "facet_query": lambda spark, si, q=FQ: S.wand_facet_query_search(
+        spark, si, q,
         {"w3": "w0003", "early": "turn_idx:[0 TO 5]", "nz": "not zephyrblade"}),
-    "stats_facet": lambda spark, si: S.wand_stats_facet_search(
-        spark, si, FQ, "turn_idx", "role"),
-    "percentiles": lambda spark, si: S.wand_stats_percentiles_search(
-        spark, si, FQ, "turn_idx", [0.9, 0.25, 0.5, 0.25]),
-    "group": lambda spark, si: S.wand_group_search(
-        spark, si, FQ, "role", k_groups=3, group_limit=2),
+    "stats_facet": lambda spark, si, q=FQ: S.wand_stats_facet_search(
+        spark, si, q, "turn_idx", "role"),
+    "percentiles": lambda spark, si, q=FQ: S.wand_stats_percentiles_search(
+        spark, si, q, "turn_idx", [0.9, 0.25, 0.5, 0.25]),
+    "group": lambda spark, si, q=FQ: S.wand_group_search(
+        spark, si, q, "role", k_groups=3, group_limit=2),
 }
 
 
@@ -333,3 +334,32 @@ def test_merges_match_pandas_reference():
             pd.testing.assert_frame_equal(
                 S._top_per_ord(wins, limit), top_ref(wins, limit)
             )
+
+
+# ---- empty answers: one documented shape on every path --------------
+
+SURFACES = {
+    **FACETS,
+    "boolean": lambda spark, si, q=FQ: S.wand_boolean_search(spark, si, q, k=10),
+    "scores_for_ids": lambda spark, si, q=FQ: S.wand_scores_for_ids(
+        spark, si, q, [1, 2, 3, 700]),
+}
+
+
+@pytest.mark.parametrize("path", ["local", "single_stage", "exchange"])
+@pytest.mark.parametrize("name", sorted(SURFACES))
+def test_empty_answer_on_every_path(spark, lt, monkeypatch, name, path):
+    """A query that matches nothing (an unknown term) gets each
+    surface's documented empty answer on the local, single-stage and
+    exchange paths: zero rows with the public schema, except the full
+    zero lattice for facet.range and one zero-count row per name for
+    facet.query."""
+    tier(monkeypatch, None if path == "local" else 0, exchange=path == "exchange")
+    surface = SURFACES[name]
+    got = surface(spark, lt["seg"], "zzzznotaterm")
+    assert got.schema == surface(spark, lt["seg"]).schema, name
+    want = {
+        "range": [(bucket, 0) for bucket in range(0, 24, 4)],
+        "facet_query": [("early", 0), ("nz", 0), ("w3", 0)],
+    }.get(name, [])
+    assert [tuple(r) for r in got.collect()] == want, name
