@@ -47,6 +47,8 @@ from pyspark.sql import functions as F
 from ..session import _schemas, empty_df, local_relation
 from .builder import InvertedIndex
 from .codec import (
+    BLOCK,
+    decode_block_positions,
     decode_blocks,
     decode_payloads,
     decode_positions,
@@ -646,14 +648,14 @@ def _as_gens(seg_index) -> list:
 # stage, so the 100-TB plan shape is untouched.
 #
 # The tiers differ only in WHERE the kernels run. A boolean-family
-# surface is one _Collector served by _serve: each segment's query is
-# matched once (_segment_match), the collector's collect turns the
-# match into a partial, ONE associative merge folds the partials
-# (_partials) and ONE driver-side finish (the top-k cut, the
-# facet/stats/group tails) answers: in-process on the local tier;
-# inside the kernels' own stage, then one collect, on the Spark
-# strategies. So every strategy serves the same rows in the same order
-# because they run the same collect, merge and finish code, not
+# surface (phrase search too) is one _Collector served by _serve:
+# each segment's query is matched once (_segment_match), the
+# collector's collect turns the match into a partial, ONE associative
+# merge folds the partials (_partials) and ONE driver-side finish (the
+# top-k cut, the facet/stats/group tails) answers: in-process on the
+# local tier; inside the kernels' own stage, then one collect, on the
+# Spark strategies. So every strategy serves the same rows in the same
+# order because they run the same collect, merge and finish code, not
 # because tests pin a pair of twins; the tier tests
 # (tests/test_local_tier.py) stay as end-to-end checks of the two ways
 # the kernel inputs are read.
@@ -967,14 +969,13 @@ def _serving_plan(
     return _Plan("exchange", est)
 
 
-def _gen_stats(
-    gens: list[tuple[int, "SegmentIndex"]], pooled: bool
-) -> tuple[int, float]:
-    """(n_docs, avgdl) to score with: the one index's own, or pooled
-    over generations (disjoint doc sets: n sums, avgdl is the
-    token-weighted mean). Read after the query's sidecar lookup, which
-    refreshes a handle whose manifest changed."""
-    if not pooled:
+def _gen_stats(gens: list[tuple[int, "SegmentIndex"]]) -> tuple[int, float]:
+    """(n_docs, avgdl) to score with: one generation's own manifest
+    stats (the value flat ``index.avgdl`` serves), pooled over several
+    (disjoint doc sets: n sums, avgdl is the token-weighted mean). Read
+    after the query's sidecar lookup, which refreshes a handle whose
+    manifest changed."""
+    if len(gens) == 1:
         si = gens[0][1]
         return si.n_docs, si.avgdl
     n = sum(si.n_docs for _, si in gens)
@@ -1202,23 +1203,6 @@ def _topk_cut(
     return pd.DataFrame({"doc_id": ids[order], "score": scores[order]})
 
 
-def _serve_topk(
-    unified,
-    plan: _Plan,
-    per_segment,
-    k: int,
-    round_to: int,
-    after: tuple[float, int] | None = None,
-) -> pd.DataFrame:
-    """Run a (doc_id, score) top-k kernel: per-partition and driver
-    merges are both the _topk_cut (so the TakeOrderedAndProject bound
-    of k rows per partition holds); returns the pandas answer."""
-    return _partials(
-        unified, plan, per_segment, _TOPK_SCHEMA,
-        functools.partial(_topk_cut, k=k, round_to=round_to, after=after),
-    )
-
-
 def _relation(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
     """A surface's (doc_id, score) answer as a DataFrame: it crosses
     into the JVM here, once, as a local relation."""
@@ -1350,13 +1334,13 @@ def _stats_answer(spark, res, round_to: int) -> DataFrame:
     )
 
 
-def _facet_query_counts(spark, res) -> DataFrame:
-    """Finish of wand_facet_query_search: per-name count sums (zero
-    counts served), rows in name order."""
+def _facet_query_counts(spark, res, names: list[str]) -> DataFrame:
+    """Finish of wand_facet_query_search: per-name count sums, one row
+    per name in ``names`` (zero counts served), rows in name order."""
     schema = "name string, cnt long"
-    agg: dict = {}
+    agg = dict.fromkeys(names, 0)
     for nm, c in zip(res["name"], res["cnt"].to_numpy()):
-        agg[nm] = agg.get(nm, 0) + int(c)
+        agg[nm] += int(c)
     names = sorted(agg)
     return local_relation(
         spark,
@@ -2210,7 +2194,7 @@ def _sloppy_chain_docs(
     slot_data: list[tuple[np.ndarray, np.ndarray, np.ndarray]],
     doc_lo: int,
     slop: int,
-    cand_docs: np.ndarray | None = None,
+    cand_docs: np.ndarray,
 ) -> np.ndarray:
     """LOCAL doc ids holding an in-order occurrence chain of the
     phrase slots whose window holds at most ``slop`` extra positions
@@ -2225,8 +2209,8 @@ def _sloppy_chain_docs(
     the FIRST next-slot position past its current end — greedy-minimal
     extension is exact (for a fixed start, the minimal reachable end
     minimizes the final window), and chains already past the slop
-    budget are pruned, so the live set only shrinks. ``cand_docs``
-    (global ids) optionally pre-filters the seeds."""
+    budget are pruned, so the live set only shrinks. Only docs of
+    ``cand_docs`` (global ids) seed chains."""
     M = np.int64(1) << np.int64(32)
     keys = []
     for docs, tfs, pos in slot_data:
@@ -2236,9 +2220,7 @@ def _sloppy_chain_docs(
             np.int64
         )
         keys.append(k)
-    cur = keys[0]
-    if cand_docs is not None:
-        cur = cur[np.isin(cur // M, cand_docs.astype(np.int64) - doc_lo)]
+    cur = keys[0][np.isin(keys[0] // M, cand_docs.astype(np.int64) - doc_lo)]
     starts = cur
     for j in range(1, len(keys)):
         kj = keys[j]
@@ -2253,202 +2235,26 @@ def _sloppy_chain_docs(
     return np.unique(starts // M)
 
 
-def _segment_phrase_topk(
-    pdf: pd.DataFrame,
-    phrase: list[str],
-    dfs: dict[str, int],
-    k: int,
-    k1: float,
-    b: float,
-    n: int,
-    avgdl: float,
-    slop: int = 0,
-) -> pd.DataFrame:
-    """Per-segment exact phrase match + member-term BM25 scoring.
-
-    Adjacency via position-set intersection: encode (local_doc, pos-i)
-    as a single int64 key per phrase slot i; a doc contains the phrase
-    iff the key intersection over all slots is non-empty — the
-    PhraseQuery/SpanNearQuery mechanism (RecursiveDescentParser
-    .java:90-107 quoted semantics) vectorized over the whole segment.
-    Scores match the flat compiler._phrase: sum of member-term BM25
-    partials (query/compiler.py)."""
-    from .codec import BLOCK, decode_block_positions
-
-    dl_row = pdf[pdf["_kind"] == "dl"]
-    posts = pdf[pdf["_kind"] == "post"]
-    empty = _topk_frame(np.array([], np.int64), np.array([], np.float64), k)
-    if len(dl_row) == 0 or len(posts) == 0:
-        return empty
-    doc_lo = int(dl_row["doc_lo"].iloc[0])
-    dls = _decode_doclens(dl_row["data"].iloc[0])
-
-    rows: dict[str, object] = {}
-    for row in _records(
-        posts, ["term", "data", "df", "block_last", "block_off", "pos_off", "pos_data"]
-    ):
-        if row["pos_data"] is None:
-            raise ValueError("packed index lacks positions (codec<3 build)")
-        rows[row["term"]] = row
-    if any(t not in rows for t in phrase):
-        return empty
-
-    # process slots rarest-term-first: the first term decodes fully and
-    # fixes the candidate docs; every later term decodes ONLY the
-    # blocks that can hold a candidate (block_last searchsorted +
-    # per-block position decode) — a phrase containing a head term
-    # never pays the head term's full decode (the skip-data shape of
-    # BinaryTermExistsValueSource.java:128-147 applied to positions)
-    M = np.int64(1) << np.int64(32)  # local doc ids < seg_size << 2^32
-    slots = sorted(range(len(phrase)), key=lambda i: (dfs[phrase[i]], phrase[i]))
-    decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    keys = None
-    cand_docs: np.ndarray | None = None
-    for slot in slots:
-        t = phrase[slot]
-        if t in decoded:
-            docs, tfs, pos = decoded[t]
-        elif cand_docs is None:
-            row = rows[t]
-            docs, tfs = decode_postings(row["data"])
-            pos = decode_positions(row["pos_data"], tfs)
-            decoded[t] = (docs, tfs, pos)
-        else:
-            row = rows[t]
-            block_last = np.asarray(row["block_last"], dtype=np.int64)
-            need = np.unique(np.searchsorted(block_last, cand_docs))
-            need = need[need < len(block_last)]
-            if len(need) == 0:
-                return empty
-            n_total = int(row["df"])
-            docs, tfs = decode_blocks(
-                row["data"], need,
-                np.asarray(row["block_off"], dtype=np.int64),
-                block_last, n_total,
-            )
-            counts = [min(BLOCK, n_total - int(i) * BLOCK) for i in need]
-            bounds = np.cumsum([0] + counts)
-            tfs_by_block = [
-                tfs[bounds[j]:bounds[j + 1]] for j in range(len(need))
-            ]
-            pos = decode_block_positions(
-                row["pos_data"], need,
-                np.asarray(row["pos_off"], dtype=np.int64), tfs_by_block,
-            )
-            decoded[t] = (docs, tfs, pos)
-        if slop == 0:
-            k_i = np.repeat(docs - doc_lo, tfs) * M + (pos - slot)
-            keys = k_i if keys is None else np.intersect1d(
-                keys, k_i, assume_unique=True
-            )
-            if keys.size == 0:
-                return empty
-            cand_docs = np.unique(keys // M) + doc_lo
-        else:
-            # sloppy phrase: the position-shift key intersection only
-            # encodes EXACT adjacency, so candidates narrow at the doc
-            # level (must hold every term); the window test runs on the
-            # survivors below. Block-skip decode still applies — later
-            # terms decode only candidate-covering blocks, and
-            # intersecting with a partial decode is exact because every
-            # candidate lies inside the decoded blocks.
-            cand_docs = docs if cand_docs is None else np.intersect1d(
-                cand_docs, docs, assume_unique=True
-            )
-            if cand_docs.size == 0:
-                return empty
-    # liveDocs: tombstoned docs leave the hit set before scoring (the
-    # phrase path is exact — no pruning depends on the dropped docs)
-    hit_docs = _strip_deleted(cand_docs, _deleted_from_pdf(pdf))
-    if hit_docs.size == 0:
-        return empty
-    if slop > 0:
-        local = _sloppy_chain_docs(
-            [decoded[t] for t in phrase], doc_lo, slop, hit_docs
-        )
-        if local.size == 0:
-            return empty
-        hit_docs = local + doc_lo
-    hit_local = hit_docs - doc_lo
-
-    # member-term BM25 over the phrase docs (distinct terms, boost 1);
-    # every term's decoded subset covers the hits (hits shrink
-    # monotonically after each term's decode)
-    scores = np.zeros(hit_docs.size, np.float64)
-    dl_hit = dls[hit_local].astype(np.float64)
-    for t in sorted(set(phrase)):
-        docs, tfs, _ = decoded[t]
-        mask = np.isin(docs, hit_docs, assume_unique=True)
-        d, tf = docs[mask], tfs[mask].astype(np.float64)
-        idx = np.searchsorted(hit_docs, d)
-        idf = float(np.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)))
-        scores[idx] += idf * tf * (k1 + 1.0) / (
-            tf + k1 * (1.0 - b + b * dl_hit[idx] / avgdl)
-        )
-    return _topk_frame(hit_docs, scores, k)
-
-
-def wand_phrase_search(
-    spark: SparkSession,
-    seg_index: SegmentIndex,
-    phrase_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_to: int = 5,
-    slop: int = 0,
-) -> DataFrame:
-    """Quoted-phrase top-k over packed v3 segments (positions
-    sub-stream): per-segment position-intersection + member-term BM25,
-    k rows per segment merged globally. Rank-identical to the flat
-    positional path (tests/test_segments_v3.py). ``slop > 0`` relaxes
-    exact adjacency to ordered span-near (`"a b"~n`): doc-level
-    candidate narrowing keeps the rarest-first block-skip decode, then
-    the in-order chain window test runs on the survivors
-    (_sloppy_chain_docs)."""
-    return _relation(spark, _phrase_frames(
-        spark, [(0, seg_index)], phrase_terms, k, k1, b, round_to, slop,
-        pooled=False,
-    ))
-
-
-def _phrase_frames(
-    spark: SparkSession,
-    gens: list[tuple[int, SegmentIndex]],
-    phrase_terms: list[str],
-    k: int,
-    k1: float,
-    b: float,
-    round_to: int,
-    slop: int,
-    pooled: bool,
-):
-    """Shared body of wand_phrase_search(_multi): global df summed over
-    the generations' sidecars; ``pooled`` aggregates n and avgdl across
-    generations (token-weighted), else the one index's own stats.
-    Returns the pandas answer (_serve_topk)."""
-    term_list = sorted(set(phrase_terms))
-    all_stats = [_sidecar_stats(si, term_list) for _, si in gens]
-    dfs: dict[str, int] = {}
-    for st in all_stats:
-        if st is None:
-            raise ValueError("phrase search needs the termstats sidecar (codec v3)")
-        for t, (v, _c) in st.items():
-            dfs[t] = dfs.get(t, 0) + int(v)
-    if any(dfs.get(t, 0) == 0 for t in term_list):
-        return _empty(_TOPK_SCHEMA)
-    n, avgdl = _gen_stats(gens, pooled)
-    plan = _serving_plan(
-        [(si, term_list) for _, si in gens], True, stats_list=all_stats
+def _candidate_blocks(
+    row: dict, cand: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(docs, tfs, positions) of the blocks of posting ``row`` that can
+    hold a doc of ``cand`` (sorted global ids): intersecting with them
+    is exact, and other blocks cost no decode — the skip data of
+    BinaryTermExistsValueSource.java:128-147 applied to positions."""
+    block_last = np.asarray(row["block_last"], dtype=np.int64)
+    need = np.unique(np.searchsorted(block_last, cand))
+    need = need[need < len(block_last)]
+    n_total = int(row["df"])
+    docs, tfs = decode_blocks(
+        row["data"], need, row["block_off"], block_last, n_total
     )
-    unified = _unified_frame(spark, gens, term_list, plan, with_subs=True)
-
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_phrase_topk(
-            pdf, list(phrase_terms), dfs, k, k1, b, n, avgdl, slop=slop
-        )
-
-    return _serve_topk(unified, plan, per_segment, k, round_to)
+    bounds = np.concatenate([[0], np.cumsum(np.minimum(BLOCK, n_total - need * BLOCK))])
+    pos = decode_block_positions(
+        row["pos_data"], need, row["pos_off"],
+        [tfs[bounds[j]:bounds[j + 1]] for j in range(len(need))],
+    )
+    return docs, tfs, pos
 
 
 @dataclass
@@ -2458,7 +2264,8 @@ class _Match:
     and their ``scores``, the segment's generation ``gen``, its
     decoded docvalues (``dvs``: column -> values, ``dv_lo``: column ->
     first doc id) and the closures that scored it (``evaluate`` a
-    subtree, ``bm25`` one term) for collectors that score more."""
+    subtree, ``bm25`` one term, reading the segment's memoized
+    decodes) for collectors that score more."""
 
     docs: np.ndarray
     scores: np.ndarray
@@ -2494,15 +2301,24 @@ def _segment_match(
     k1: float,
     b: float,
 ) -> _Match:
-    """Per-segment boolean-tree evaluation over decoded postings.
+    """Per-segment boolean-tree evaluation over posting rows.
 
     Boolean algebra (Or=union-sum, And=intersection-sum, Not=
     complement) is doc-LOCAL, and segments partition docs by range, so
     evaluating the tree independently per segment and merging the
     collectors' partials is exact — the same argument that makes
-    WAND's per-segment fan-out correct. Leaves score BM25 from the
-    decoded postings; node ops are numpy set algebra on (sorted docs,
-    scores) pairs.
+    WAND's per-segment fan-out correct. Node ops are numpy set algebra
+    on (sorted docs, scores) pairs; leaves score BM25 from rows decoded
+    on first use and memoized per (field, term).
+
+    Quote is the packed path's one phrase matcher: terms go
+    rarest-first by segment df, the first decodes in full and fixes
+    the candidates, and later terms decode only candidate blocks
+    (_candidate_blocks), so a head term never pays its full decode.
+    Exact phrases intersect (local_doc, pos - slot) keys; ``"a b"~n``
+    narrows at the doc level, then tests the ordered span-near window
+    (_sloppy_chain_docs). Hits score the flat _phrase way: member-term
+    BM25 summed over the decoded postings, which cover every hit.
 
     ``field_ctx`` maps field name -> {"idfs", "avgdl"} ("" = default
     field); rows in ``pdf`` carry a matching ``fld`` tag. FieldQuery
@@ -2511,11 +2327,14 @@ def _segment_match(
     segment-local because all per-field indexes share the doc space).
     Range nodes evaluate over the intrinsic doc_id key (constant score
     1.0, the ConstantScoreRangeQuery semantic); stored-column ranges
-    need the flat path's corpus. A segment without default-field
-    doclens matches nothing.
+    need the flat path's corpus. ``*:*`` matches every live doc with
+    score 0. A segment without default-field doclens matches nothing.
     """
+    from ..analysis.tokenizer import tokenize_pandas
     from ..query import ast as qast
+    from ..query.compiler import is_match_all
 
+    none = (np.array([], np.int64), np.array([], np.float64))
     gen = int(pdf["seg"].iloc[0]) // 1_000_000
     dls_by_field: dict[str, np.ndarray] = {}
     doc_lo_by_field: dict[str, int] = {}
@@ -2526,7 +2345,6 @@ def _segment_match(
         dls_by_field[f] = _decode_doclens(r["data"])
         doc_lo_by_field[f] = int(r["doc_lo"])
     if "" not in dls_by_field:
-        none = (np.array([], np.int64), np.array([], np.float64))
         return _Match(
             *none, gen, {}, {}, lambda node, fld="": none, lambda t, fld: none
         )
@@ -2545,35 +2363,42 @@ def _segment_match(
         dvs[r["term"]] = _decode_doclens(r["data"])
         dv_lo[r["term"]] = int(r["doc_lo"])
 
-    posts = pdf[pdf["_kind"] == "post"]
-    has_pos = "pos_data" in posts.columns
+    rows = {
+        (r["fld"], r["term"]): r
+        for r in _records(
+            pdf[pdf["_kind"] == "post"],
+            ["fld", "term", "df", "data", "block_last", "block_off",
+             "pos_off", "pos_data"],
+            {"fld": ""},
+        )
+    }
     decoded: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
-    positions: dict[tuple[str, str], np.ndarray] = {}
-    for r in _records(posts, ["fld", "term", "data", "pos_data"], {"fld": ""}):
-        f = r["fld"]
-        docs_tfs = decode_postings(r["data"])
-        decoded[(f, r["term"])] = docs_tfs
-        if has_pos and r["pos_data"] is not None:
-            positions[(f, r["term"])] = decode_positions(r["pos_data"], docs_tfs[1])
 
-    def bm25(term: str, fld: str) -> tuple[np.ndarray, np.ndarray]:
+    def postings(key: tuple[str, str]) -> tuple[np.ndarray, np.ndarray]:
+        """One posting row's (docs, tfs), decoded once."""
+        if key not in decoded:
+            decoded[key] = decode_postings(rows[key]["data"])
+        return decoded[key]
+
+    def score(term: str, fld: str, docs: np.ndarray, tfs: np.ndarray) -> np.ndarray:
+        """BM25 of ``term`` in field ``fld`` over the given postings."""
         ctx = field_ctx.get(fld, field_ctx[""])
-        idfs, avgdl = ctx["idfs"], ctx["avgdl"]
         # per-field k1/b (SchemaSimilarityFactory overrides); fall back
         # to the query-level globals
         fk1 = ctx.get("k1", k1)
         fb = ctx.get("b", b)
-        fdls = dls_by_field.get(fld, dls)
-        f_lo = doc_lo_by_field.get(fld, doc_lo)
-        if (fld, term) not in decoded or term not in idfs:
-            return np.array([], np.int64), np.array([], np.float64)
-        docs, tfs = decoded[(fld, term)]
         tf = tfs.astype(np.float64)
-        dl = fdls[docs - f_lo].astype(np.float64)
-        s = idfs[term] * tf * (fk1 + 1.0) / (
-            tf + fk1 * (1.0 - fb + fb * dl / avgdl)
+        dl = dls_by_field.get(fld, dls)[docs - doc_lo_by_field.get(fld, doc_lo)]
+        return ctx["idfs"].get(term, 0.0) * tf * (fk1 + 1.0) / (
+            tf + fk1 * (1.0 - fb + fb * dl.astype(np.float64) / ctx["avgdl"])
         )
-        return docs, s
+
+    def bm25(term: str, fld: str) -> tuple[np.ndarray, np.ndarray]:
+        idfs = field_ctx.get(fld, field_ctx[""])["idfs"]
+        if (fld, term) not in rows or term not in idfs:
+            return none
+        docs, tfs = postings((fld, term))
+        return docs, score(term, fld, docs, tfs)
 
     def union_sum(l, r):
         docs = np.concatenate([l[0], r[0]])
@@ -2626,7 +2451,7 @@ def _segment_match(
         lo = int(max(lo_edge, np.ceil(lo)))
         hi = int(min(hi_edge, np.floor(hi)))
         if hi < lo:
-            return np.array([], np.int64), np.array([], np.float64)
+            return none
         docs = np.arange(lo, hi + 1, dtype=np.int64)
         # compacted deletions hold TOMBSTONE in the doclen stream —
         # a doc_id range must not resurrect them (dl=0 docs DO match:
@@ -2635,13 +2460,11 @@ def _segment_match(
         return docs, np.ones(len(docs), np.float64)
 
     def evaluate(node, fld: str = ""):
-        from ..analysis.tokenizer import tokenize_pandas
-
+        if is_match_all(node):
+            return all_docs, np.zeros(len(all_docs), np.float64)
         if isinstance(node, qast.Operand):
-            if node.value == "*:*":
-                return all_docs, np.zeros(len(all_docs), np.float64)
             toks = sorted(set(tokenize_pandas(pd.Series([node.value]))[0]))
-            acc = (np.array([], np.int64), np.array([], np.float64))
+            acc = none
             for t in toks:
                 acc = union_sum(acc, bm25(t, fld))
             return acc
@@ -2684,54 +2507,55 @@ def _segment_match(
             return evaluate(node.child, fname)
         if isinstance(node, qast.Quote):
             phrase = list(tokenize_pandas(pd.Series([node.child.evaluate()]))[0])
-            f_lo = doc_lo_by_field.get(fld, doc_lo)
-            # distinguish "term has no postings here" (empty match, fine)
-            # from "postings exist but the positions sub-stream doesn't"
-            # (index built without positions — raise like the phrase
-            # path, never silently return empty)
+            # a term without postings here matches nothing; one whose
+            # postings lack positions raises, never silently empty
             for t in phrase:
-                if (fld, t) in decoded and (fld, t) not in positions:
+                if (fld, t) in rows and rows[(fld, t)]["pos_data"] is None:
                     raise ValueError(
                         f"packed index for field {fld or 'default'!r} "
                         "lacks positions (codec<3 build) — phrase "
                         "queries need build_index(positions=True)"
                     )
-            if not phrase or any((fld, t) not in positions for t in phrase):
-                return np.array([], np.int64), np.array([], np.float64)
-            slop_q = getattr(node, "slop", 0)
-            if slop_q > 0:
-                # `"a b"~n` ordered span-near: in-order chain window
-                # test over the already-decoded positions
-                local = _sloppy_chain_docs(
-                    [
-                        (*decoded[(fld, t)], positions[(fld, t)])
-                        for t in phrase
-                    ],
-                    f_lo,
-                    slop_q,
-                )
-                if local.size == 0:
-                    return np.array([], np.int64), np.array([], np.float64)
-                hits = local + f_lo
-            else:
-                M = np.int64(1) << np.int64(32)
-                keys = None
-                for i, t in enumerate(phrase):
-                    docs, tfs = decoded[(fld, t)]
-                    doc_per_pos = np.repeat(docs - f_lo, tfs)
-                    k_i = doc_per_pos * M + (positions[(fld, t)] - i)
-                    keys = k_i if keys is None else np.intersect1d(keys, k_i)
-                    if keys.size == 0:
-                        return np.array([], np.int64), np.array([], np.float64)
-                hits = np.unique(keys // M) + f_lo
-            # flat compiler semantics: member-term BM25 summed on hits
-            acc = (hits, np.zeros(len(hits), np.float64))
+            if not phrase or any((fld, t) not in rows for t in phrase):
+                return none
+            f_lo = doc_lo_by_field.get(fld, doc_lo)
+            M = np.int64(1) << np.int64(32)  # local doc ids < seg_size << 2^32
+            got: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+            keys = hits = None
+            dfs = [int(rows[(fld, t)]["df"]) for t in phrase]
+            for slot in sorted(range(len(phrase)), key=lambda i: (dfs[i], phrase[i])):
+                t = phrase[slot]
+                if hits is None:
+                    docs, tfs = postings((fld, t))
+                    pos = decode_positions(rows[(fld, t)]["pos_data"], tfs)
+                    got[t] = (docs, tfs, pos)
+                elif t not in got:
+                    got[t] = _candidate_blocks(rows[(fld, t)], hits)
+                docs, tfs, pos = got[t]
+                if node.slop == 0:
+                    k_i = np.repeat(docs - f_lo, tfs) * M + (pos - slot)
+                    keys = k_i if keys is None else np.intersect1d(
+                        keys, k_i, assume_unique=True
+                    )
+                    hits = np.unique(keys // M) + f_lo
+                else:
+                    hits = docs if hits is None else np.intersect1d(
+                        hits, docs, assume_unique=True
+                    )
+                if hits.size == 0:
+                    return none
+            if node.slop > 0:
+                hits = _sloppy_chain_docs(
+                    [got[t] for t in phrase], f_lo, node.slop, hits
+                ) + f_lo
+            scores = np.zeros(hits.size, np.float64)
             for t in sorted(set(phrase)):
-                d, s = bm25(t, fld)
-                mask = np.isin(d, hits, assume_unique=True)
-                idx = np.searchsorted(acc[0], d[mask])
-                acc[1][idx] += s[mask]
-            return acc
+                docs, tfs, _ = got[t]
+                mask = np.isin(docs, hits, assume_unique=True)
+                scores[np.searchsorted(hits, docs[mask])] += score(
+                    t, fld, docs[mask], tfs[mask]
+                )
+            return hits, scores
         raise ValueError(
             f"packed boolean path supports Operand/And/Or/Not/Quote/"
             f"FieldQuery/Range; got {type(node).__name__}"
@@ -2747,9 +2571,10 @@ def _segment_match(
 
 
 # ---------------------------------------------------------------------------
-# collectors: what each surface reads from a segment's match. Each
-# collect emits one partial of its collector's schema, bounded by k,
-# the facet vocabulary or the bucket count — never the match set.
+# collectors: what each surface reads from a segment's match (phrase
+# search is the top-k collector over a one-phrase tree). Each collect
+# emits one partial of its collector's schema, bounded by k, the facet
+# vocabulary or the bucket count — never the match set.
 # ---------------------------------------------------------------------------
 
 
@@ -2950,7 +2775,7 @@ def _walk_query(tree) -> tuple[dict[str, set], set, bool]:
     ITS FieldQuery subtrees. A field without a packed index fetches
     nothing: the kernel rejects its clause."""
     from ..query import ast as qast
-    from ..query.compiler import _leaf_terms
+    from ..query.compiler import _leaf_terms, is_match_all
 
     terms: dict[str, set] = {}
     ranges: set = set()
@@ -2958,6 +2783,8 @@ def _walk_query(tree) -> tuple[dict[str, set], set, bool]:
 
     def walk(node, fld: str) -> None:
         nonlocal quote
+        if is_match_all(node):
+            return
         if isinstance(node, (qast.Or, qast.And)):
             walk(node.left, fld)
             walk(node.right, fld)
@@ -2979,10 +2806,35 @@ def _walk_query(tree) -> tuple[dict[str, set], set, bool]:
     return terms, ranges, quote
 
 
+def _can_match(node, field_ctx: dict[str, dict], fld: str = "") -> bool:
+    """False when the tree provably matches no doc, from the field
+    contexts alone: a term clause needs one token with an idf, a
+    phrase all of its tokens; Or and And follow the algebra; Not (so
+    an and-not's negated side), Range and ``*:*`` can always match. A
+    field without a context defers to the kernel, which rejects it."""
+    from ..analysis.tokenizer import tokenize_pandas
+    from ..query import ast as qast
+    from ..query.compiler import is_match_all
+
+    if isinstance(node, (qast.Or, qast.And)):
+        sides = [_can_match(c, field_ctx, fld) for c in (node.left, node.right)]
+        return any(sides) if isinstance(node, qast.Or) else all(sides)
+    if isinstance(node, qast.FieldQuery) and not is_match_all(node):
+        fname = node.field.rstrip(":")
+        return fname not in field_ctx or _can_match(node.child, field_ctx, fname)
+    if isinstance(node, (qast.Operand, qast.Quote)) and not is_match_all(node):
+        quote = isinstance(node, qast.Quote)
+        text = node.child.evaluate() if quote else node.value
+        toks = tokenize_pandas(pd.Series([text]))[0]
+        hit = [t in field_ctx[fld]["idfs"] for t in toks]
+        return bool(hit) and all(hit) if quote else any(hit)
+    return True
+
+
 def _prepare_boolean(
     spark: SparkSession,
     seg_index: SegmentIndex,
-    query: str,
+    query,
     field_segments: dict[str, SegmentIndex] | None = None,
     field_sims: dict | None = None,
     str_cols: tuple = (),
@@ -3001,9 +2853,11 @@ def _prepare_boolean(
     generations' sidecars, n/avgdl aggregate globally, and every
     generation's segments stack into the one unified frame with
     namespaced seg ids — the wand_search_multi statistics contract
-    applied to the whole boolean path. Returns (tree, field_ctx,
-    unified, plan): the kernel input and the serving plan it was built
-    for (_serving_plan)."""
+    applied to the whole boolean path. ``query`` is a query string or
+    a parsed tree. Returns (tree, field_ctx, unified, plan): the
+    kernel input and the serving plan it was built for
+    (_serving_plan); ``unified`` is None, and nothing is read, when
+    the tree can match no doc (_can_match)."""
     from ..query.parser import parse_query
 
     gens: list[tuple[int, SegmentIndex]] = _as_gens(seg_index)
@@ -3022,7 +2876,7 @@ def _prepare_boolean(
                 "aligned doc ranges"
             )
 
-    tree, _errors = parse_query(query)
+    tree = parse_query(query)[0] if isinstance(query, str) else query
     by_field, range_fields, with_subs = _walk_query(tree)
     if extra_terms:
         by_field.setdefault("", set()).update(extra_terms)
@@ -3043,54 +2897,37 @@ def _prepare_boolean(
                         f"[{c!r}]) (doc_id ranges are intrinsic)"
                     )
 
-    # local-tier decision covers EVERYTHING this query will touch:
-    # every field's term-pruned postings + doclens/deletes, plus the
-    # docvalues / ordinal stream directories the tree or caller needs.
-    # ONE sidecar read per (field, generation) feeds both the byte
-    # estimate and the idf context below.
+    # ONE sidecar read per (field, generation) feeds both the idf
+    # context and the serving plan's byte estimate, which covers
+    # EVERYTHING this query will touch: every field's term-pruned
+    # postings + doclens/deletes, plus the docvalues / ordinal stream
+    # directories the tree or caller needs
+    fields = [("", gens)] + [(f, [(0, si)]) for f, si in sorted(field_segments.items())]
     local_pairs: list = []
     pair_stats: list = []
-    stats_by: dict = {}
-    for fname, fsi in [("", seg_index)] + sorted(field_segments.items()):
-        f_terms = sorted(by_field.get(fname, set()))
-        for gid, si in (gens if fname == "" else [(0, fsi)]):
-            st = _sidecar_stats(si, f_terms)
-            local_pairs.append((si, f_terms))
-            pair_stats.append(st)
-            stats_by[(fname, gid)] = st
-    local_streams = [
-        (si, _dv_rel(col)) for col in dv_needed for _, si in gens
-    ] + [
-        (si, _dv_rel(col, "docvalues_str")) for col in str_cols for _, si in gens
-    ]
-    plan = _serving_plan(
-        local_pairs, with_subs, local_streams, stats_list=pair_stats
-    )
-
     field_ctx: dict[str, dict] = {}
-    frames: list = []
-    for fname, fsi in [("", seg_index)] + sorted(field_segments.items()):
-        f_gens = gens if fname == "" else [(0, fsi)]
-        terms = sorted(by_field.get(fname, set()))
+    for fname, f_gens in fields:
+        f_terms = sorted(by_field.get(fname, set()))
         dfs: dict[str, int] = {}
-        for gid, _si in f_gens:
-            d = stats_by[(fname, gid)] if terms else {}
-            if d is None:
+        for _gid, si in f_gens:
+            st = _sidecar_stats(si, f_terms)
+            if st is None and f_terms:
                 raise ValueError(
                     f"boolean packed search needs the termstats sidecar "
                     f"(field {fname or 'default'!r})"
                 )
-            for t, (v, _c) in d.items():
+            local_pairs.append((si, f_terms))
+            pair_stats.append(st)
+            for t, (v, _c) in (st or {}).items():
                 dfs[t] = dfs.get(t, 0) + int(v)
-        n = sum(si.n_docs for _, si in f_gens)
-        total_tokens = sum(si.avgdl * si.n_docs for _, si in f_gens)
+        n, avgdl = _gen_stats(f_gens)
         field_ctx[fname] = {
             "idfs": {
                 t: float(np.log(1.0 + (n - d + 0.5) / (d + 0.5)))
                 for t, d in dfs.items()
                 if d > 0
             },
-            "avgdl": total_tokens / n if n else 0.0,
+            "avgdl": avgdl,
         }
         # per-field k1/b (``field_sims``: field -> Similarity) — the
         # SchemaSimilarityFactory per-field override mechanism. The
@@ -3106,11 +2943,23 @@ def _prepare_boolean(
                 )
             field_ctx[fname]["k1"] = float(fsim.k1)
             field_ctx[fname]["b"] = float(fsim.b)
-        frames.append(_unified_frame(
-            spark, f_gens, terms or ["\x00none"], plan,
-            with_subs=with_subs, field=fname,
-        ))
-    frames += [
+    if not _can_match(tree, field_ctx):
+        return tree, field_ctx, None, None
+    local_streams = [
+        (si, _dv_rel(col)) for col in dv_needed for _, si in gens
+    ] + [
+        (si, _dv_rel(col, "docvalues_str")) for col in str_cols for _, si in gens
+    ]
+    plan = _serving_plan(
+        local_pairs, with_subs, local_streams, stats_list=pair_stats
+    )
+    frames = [
+        _unified_frame(
+            spark, f_gens, sorted(by_field.get(fname, ())) or ["\x00none"],
+            plan, with_subs=with_subs, field=fname,
+        )
+        for fname, f_gens in fields
+    ] + [
         _dv_frame(
             spark, si, col, with_subs, plan, subdir=subdir,
             seg_offset=gen_id * 1_000_000,
@@ -3145,23 +2994,28 @@ class _Collector:
 def _serve(
     spark: SparkSession,
     seg_index,
-    query: str,
+    query,
     collector: _Collector,
     k1: float = 1.2,
     b: float = 0.75,
     field_segments: dict[str, SegmentIndex] | None = None,
     field_sims: dict | None = None,
 ):
-    """The one body of every boolean-family surface: prepare the
-    query with the collector's streams and terms (_prepare_boolean,
-    which rejects a stream some generation lacks), match it per
-    segment (_segment_match), collect and merge the partials on the
-    planned strategy (_partials) and finish them on the driver."""
+    """The one body of every boolean-family surface, phrase search
+    included: prepare the query (a string or a parsed tree) with the
+    collector's streams and terms (_prepare_boolean, which rejects a
+    stream some generation lacks), match it per segment
+    (_segment_match), collect and merge the partials on the planned
+    strategy (_partials) and finish them on the driver. A tree that
+    can match no doc finishes zero partials before any frame is read:
+    no job on any strategy."""
     tree, field_ctx, unified, plan = _prepare_boolean(
         spark, seg_index, query, field_segments, field_sims,
         str_cols=collector.str_cols, extra_terms=collector.extra_terms,
         extra_dv_cols=collector.dv_cols,
     )
+    if unified is None:
+        return collector.finish(_empty(collector.schema))
     # the kernels ship collect alone: finish holds the SparkSession
     collect = collector.collect
 
@@ -3280,6 +3134,33 @@ def wand_boolean_boosted_search(
         spark, seg_index, query,
         _topk_collector(k, round_to, boost_terms=boost_terms, boost_fn=boost_fn),
         k1, b, field_segments, field_sims,
+    ))
+
+
+def wand_phrase_search(
+    spark: SparkSession,
+    seg_index: SegmentIndex,
+    phrase_terms: list[str],
+    k: int = 10,
+    k1: float = 1.2,
+    b: float = 0.75,
+    round_to: int = 5,
+    slop: int = 0,
+) -> DataFrame:
+    """Quoted-phrase top-k over packed v3 segments (positions
+    sub-stream): the one-clause boolean query ``"t0 t1 .."~slop``,
+    served like every boolean query by _segment_match's phrase matcher
+    (rarest-first block-skip decode, position intersection,
+    member-term BM25) and the top-k collector. Rank-identical to the
+    flat positional path (tests/test_segments_v3.py). ``slop > 0``
+    relaxes exact adjacency to ordered span-near (`"a b"~n`). Phrase
+    terms are analyzer tokens; the clause analyzes them again, as the
+    flat execute_query('"…"') does."""
+    from ..query.ast import Operand, Quote
+
+    return _relation(spark, _serve(
+        spark, seg_index, Quote(Operand(" ".join(phrase_terms)), slop),
+        _topk_collector(k, round_to), k1, b,
     ))
 
 
@@ -3645,7 +3526,7 @@ def wand_facet_query_search(
         "name string, cnt long",
         functools.partial(_collect_facet_query, trees=fq_trees),
         functools.partial(_fold, keys=["name"], how={"cnt": "sum"}),
-        lambda res: _facet_query_counts(spark, res),
+        lambda res: _facet_query_counts(spark, res, [nm for nm, _ in fq_trees]),
         dv_cols=tuple(sorted(range_fields)),
         extra_terms=tuple(sorted(extra_terms)),
     ), k1, b, field_segments, field_sims)
@@ -4471,14 +4352,16 @@ def wand_phrase_search_multi(
 ) -> DataFrame:
     """Quoted-phrase top-k across MULTIPLE packed generations (before
     compaction) with GLOBAL statistics — the phrase analogue of
-    wand_search_multi: generation doc sets are disjoint, so each
-    generation's segments run the positional intersection + member-term
-    BM25 independently (with summed df and token-weighted avgdl) and
-    the k-rows-per-segment partials merge globally. Identical to
-    querying the compacted index (tests)."""
-    return _relation(spark, _phrase_frames(
-        spark, list(enumerate(seg_indexes)), phrase_terms, k, k1, b,
-        round_to, 0, pooled=True,
+    wand_search_multi: wand_phrase_search's one-clause query over the
+    generation list, whose disjoint doc sets each run the phrase
+    matcher independently (with summed df and token-weighted avgdl)
+    before the k-rows-per-segment partials merge globally. Identical
+    to querying the compacted index (tests)."""
+    from ..query.ast import Operand, Quote
+
+    return _relation(spark, _serve(
+        spark, list(seg_indexes), Quote(Operand(" ".join(phrase_terms))),
+        _topk_collector(k, round_to), k1, b,
     ))
 
 
@@ -4509,7 +4392,7 @@ def wand_search_multi(
         spark, list(enumerate(seg_indexes)), terms_boosts,
         k=k, k1=k1, b=b, round_to=round_to, sim=sim,
         min_should_match=min_should_match, boost_fn=boost_fn,
-        after=after, pooled=True,
+        after=after,
     ))
 
 
@@ -4532,7 +4415,7 @@ def wand_search(
     no job) -> parquet scan with term-isin pushdown (few rows per
     segment) -> per-segment pruned scoring in one Arrow batch -> a
     k-row top-k cut per partition in the same stage -> one collect and
-    the same cut on the driver (_serve_topk): ONE Spark job. At 10^12
+    the same cut on the driver (_topk_cut): ONE Spark job. At 10^12
     docs this is the query fast path: work per segment is bounded by
     the query's posting sizes, the merge is k rows per partition.
 
@@ -4569,7 +4452,7 @@ def wand_search(
         spark, [(0, seg_index)], terms_boosts,
         k=k, k1=k1, b=b, round_to=round_to, sim=sim,
         min_should_match=min_should_match, boost_fn=boost_fn,
-        after=after, pooled=False,
+        after=after,
     ))
 
 
@@ -4781,12 +4664,11 @@ def _wand_search_frames(
     min_should_match: int = 1,
     boost_fn: tuple | None = None,
     after: tuple[float, int] | None = None,
-    pooled: bool = False,
 ):
-    """Shared body of wand_search(_multi); ``pooled`` scores with
-    statistics pooled over the generations (_gen_stats). Returns the
-    pandas answer on both tiers (a known-empty one before any frame is
-    read); the public surfaces convert it once (_relation)."""
+    """Shared body of wand_search(_multi), scoring with the
+    generations' (n, avgdl) (_gen_stats). Returns the pandas answer on
+    both tiers (a known-empty one before any frame is read); the
+    public surfaces convert it once (_relation)."""
     term_list = sorted({t for t, _ in terms_boosts})
     boosts: dict[str, float] = {}
     for t, w in terms_boosts:
@@ -4844,7 +4726,7 @@ def _wand_search_frames(
         # known empty before any frame is read: a driver-side answer on
         # both tiers, so handler tails over it schedule no job either
         return _empty(_TOPK_SCHEMA)
-    n, avgdl = _gen_stats(gens, pooled)
+    n, avgdl = _gen_stats(gens)
 
     plan = _serving_plan(
         [(si, term_list) for _, si in gens], with_subs,
@@ -4894,9 +4776,12 @@ def _wand_search_frames(
                 after=cursor,
             )
 
-    # the after re-check of the top-k cut is idempotent on the same
-    # exact rounding the kernel filtered on
-    return _serve_topk(unified, plan, per_segment, k, round_to, after=after)
+    # the cut merges every partition and the driver (k rows each); its
+    # after re-check is idempotent on the kernel's exact rounding
+    return _partials(
+        unified, plan, per_segment, _TOPK_SCHEMA,
+        functools.partial(_topk_cut, k=k, round_to=round_to, after=after),
+    )
 
 
 def describe_index(path: str) -> dict:

@@ -36,6 +36,14 @@ import pandas as pd
 MATCH_ALL = "*:*"
 
 
+def is_match_all(node: ast.Expression) -> bool:
+    """`*:*` (every doc, score 0): the operand error recovery leaves,
+    or the FieldQuery('*:', Operand('*')) parse_query reads it as."""
+    if isinstance(node, ast.FieldQuery) and node.field == "*:":
+        return isinstance(node.child, ast.Operand) and node.child.value == "*"
+    return isinstance(node, ast.Operand) and node.value == MATCH_ALL
+
+
 def phrase_match_docs(index: InvertedIndex, phrase_terms: list[str]) -> DataFrame:
     """DocSet containing the exact phrase, from positional postings.
 
@@ -118,9 +126,9 @@ def _leaf_count(node: ast.Expression) -> int:
 
 def _leaf_terms(node: ast.Expression) -> list[str]:
     """All analyzed terms under positive + negative leaves."""
+    if is_match_all(node):
+        return []
     if isinstance(node, ast.Operand):
-        if node.value == MATCH_ALL:
-            return []
         return list(tokenize_pandas(pd.Series([node.value]))[0])
     if isinstance(node, (ast.Or, ast.And)):
         return _leaf_terms(node.left) + _leaf_terms(node.right)
@@ -135,7 +143,7 @@ def _fusable(node: ast.Expression) -> bool:
     """True when the tree holds only term operands + And/Or/Not —
     the shapes whose boolean algebra needs no frame other than the
     leaf-term partials (and possibly the corpus docset)."""
-    if isinstance(node, ast.Operand):
+    if isinstance(node, ast.Operand) or is_match_all(node):
         return True  # incl. match-all (constant matched=True, score 0)
     if isinstance(node, (ast.Or, ast.And)):
         return _fusable(node.left) and _fusable(node.right)
@@ -148,8 +156,10 @@ def _zero_term_match(node: ast.Expression) -> bool:
     """Matched-value of the tree for a doc holding ZERO query terms —
     True means the complement is reachable and the fused plan must
     start from the corpus docset, not just the aggregated hits."""
+    if is_match_all(node):
+        return True
     if isinstance(node, ast.Operand):
-        return node.value == MATCH_ALL
+        return False
     if isinstance(node, ast.Or):
         return _zero_term_match(node.left) or _zero_term_match(node.right)
     if isinstance(node, ast.And):
@@ -188,9 +198,9 @@ def _eval_tree(node: ast.Expression, lookup) -> tuple:
     contributes its score only when it matches; NOT contributes
     matched-complement with score 0; AND-with-NOT is subtraction
     (the positive side's score carries)."""
+    if is_match_all(node):
+        return F.lit(True), F.lit(0.0)
     if isinstance(node, ast.Operand):
-        if node.value == MATCH_ALL:
-            return F.lit(True), F.lit(0.0)
         toks = sorted(set(tokenize_pandas(pd.Series([node.value]))[0]))
         if not toks:
             return F.lit(False), F.lit(0.0)
@@ -281,6 +291,8 @@ class QueryCompiler:
 
     # -- node handlers -------------------------------------------------
     def _compile(self, node: ast.Expression, partials: DataFrame | None) -> DataFrame:
+        if is_match_all(node):
+            return self.index.doclen.select("doc_id").withColumn("score", F.lit(0.0))
         if isinstance(node, ast.Operand):
             return self._operand(node, partials)
         if isinstance(node, ast.Or):
@@ -374,8 +386,6 @@ class QueryCompiler:
         )
 
     def _operand(self, node: ast.Operand, partials: DataFrame | None) -> DataFrame:
-        if node.value == MATCH_ALL:
-            return self.index.doclen.select("doc_id").withColumn("score", F.lit(0.0))
         toks = sorted(set(tokenize_pandas(pd.Series([node.value]))[0]))
         if not toks or partials is None:
             return self.index.doclen.select("doc_id").withColumn(

@@ -411,8 +411,8 @@ def packed_mlt_handler(
         fetch_docs_local,
     )
 
-    is_multi = isinstance(seg_index, (list, tuple))
-    first = seg_index[0] if is_multi else seg_index
+    gens = _as_gens(seg_index)
+    first = gens[0][1]
     if like_text is None and seed_doc_ids is None:
         if match_query is None:
             raise ValueError(
@@ -442,9 +442,8 @@ def packed_mlt_handler(
     # let seeds displace more than |seeds| rows
     top = (
         _wand_search_frames(
-            spark, _as_gens(seg_index), boosts, k=k + len(seed_ids),
+            spark, gens, boosts, k=k + len(seed_ids),
             min_should_match=params.min_should_match, boost_fn=boost_fn,
-            pooled=is_multi,
         )
         if boosts
         else _empty(_TOPK_SCHEMA)

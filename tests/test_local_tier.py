@@ -341,6 +341,8 @@ def test_merges_match_pandas_reference():
 SURFACES = {
     **FACETS,
     "boolean": lambda spark, si, q=FQ: S.wand_boolean_search(spark, si, q, k=10),
+    "phrase": lambda spark, si, q=FQ: S.wand_phrase_search(
+        spark, si, q.split(" or "), k=10),
     "scores_for_ids": lambda spark, si, q=FQ: S.wand_scores_for_ids(
         spark, si, q, [1, 2, 3, 700]),
 }
@@ -353,13 +355,21 @@ def test_empty_answer_on_every_path(spark, lt, monkeypatch, name, path):
     surface's documented empty answer on the local, single-stage and
     exchange paths: zero rows with the public schema, except the full
     zero lattice for facet.range and one zero-count row per name for
-    facet.query."""
+    facet.query. The query is known empty from the termstats sidecar,
+    so answering and collecting it takes no Spark job on any path."""
     tier(monkeypatch, None if path == "local" else 0, exchange=path == "exchange")
     surface = SURFACES[name]
-    got = surface(spark, lt["seg"], "zzzznotaterm")
+    out = []
+
+    def answer():
+        got = surface(spark, lt["seg"], "zzzznotaterm")
+        out.append((got, [tuple(r) for r in got.collect()]))
+
+    assert count_jobs(spark, answer, f"empty-{name}-{path}") == 0, name
+    got, rows = out[0]
     assert got.schema == surface(spark, lt["seg"]).schema, name
     want = {
         "range": [(bucket, 0) for bucket in range(0, 24, 4)],
         "facet_query": [("early", 0), ("nz", 0), ("w3", 0)],
     }.get(name, [])
-    assert [tuple(r) for r in got.collect()] == want, name
+    assert rows == want, name

@@ -109,6 +109,70 @@ def test_packed_phrase_three_terms(spark, pos_index, pos_segments, tiny_corpus_p
     assert np.allclose(packed["score"], flat["score"], atol=1e-5)
 
 
+# rare-term docs of the head-term index: "rare head" in RARE_BEFORE,
+# "rare tail head" in the others; "head" is in every one of 2,048 docs
+RARE_BEFORE = (5, 700, 1030, 2000)
+RARE_APART = (300, 1500)
+
+
+@pytest.fixture(scope="module")
+def head_segments(spark, tmp_path_factory):
+    """Two segments of 1,024 docs, so the head term spans 8 posting
+    blocks per segment and "rare" sits in 3 docs of each."""
+    rows = []
+    for d in range(2048):
+        if d in RARE_BEFORE:
+            text = "rare head tail"
+        elif d in RARE_APART:
+            text = "rare tail head"
+        else:
+            text = "filler head tail" + (" misc" if d % 7 == 0 else "")
+        rows.append((d, text))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = tmp_path_factory.mktemp("segv3_head") / "idx"
+    return build_segments(
+        build_index(docs, positions=True), str(out), seg_size=1024, groups=1
+    )
+
+
+def test_phrase_decode_stays_pruned(spark, head_segments, monkeypatch):
+    """A rare + head phrase never decodes the head term in full, as a
+    phrase search or as a clause of a boolean query: the rare term
+    decodes first and fixes the candidates, and the head term decodes
+    only the blocks that hold them (3 of its 8 per segment)."""
+    from solrplugins_spark.index import segments as S
+
+    full, blocks = [], []
+    real_full, real_blocks = S.decode_postings, S.decode_blocks
+
+    def decode_postings(data):
+        out = real_full(data)
+        full.append(len(out[0]))
+        return out
+
+    def decode_blocks(data, block_ids, *args):
+        blocks.append(len(block_ids))
+        return real_blocks(data, block_ids, *args)
+
+    # the local tier runs the kernels in this process, where the
+    # counting decoders are installed
+    tier(monkeypatch, None)
+    monkeypatch.setattr(S, "decode_postings", decode_postings)
+    monkeypatch.setattr(S, "decode_blocks", decode_blocks)
+    for name, run in {
+        "phrase": lambda: S.wand_phrase_search(
+            spark, head_segments, ["rare", "head"], k=10),
+        "boolean": lambda: S.wand_boolean_search(
+            spark, head_segments, '"rare head" or misc', k=10),
+    }.items():
+        full.clear()
+        blocks.clear()
+        got = [r["doc_id"] for r in run().collect()]
+        assert got[: len(RARE_BEFORE)] == list(RARE_BEFORE), name
+        assert full and max(full) < 1024, (name, full)
+        assert blocks and max(blocks) <= 3, (name, blocks)
+
+
 @pytest.fixture(scope="module")
 def payload_setup(spark, tmp_path_factory):
     rows = []
@@ -230,6 +294,8 @@ def test_compact_packed_matches_batch(spark, tiny_corpus, tiny_corpus_pd, tmp_pa
         "{t0} and {t1} or {t2}",
         "not {t0}",
         "{t0} {t1}",  # adjacency = OR
+        "*:*",  # match-all, score 0
+        "{t0} and *:*",
     ],
 )
 def test_packed_boolean_matches_flat(spark, pos_index, pos_segments, tiny_corpus_pd, q):
