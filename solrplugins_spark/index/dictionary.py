@@ -24,7 +24,7 @@ Statistics semantics match Lucene: df/cf are build-time values that
 IGNORE tombstones until compaction purges them (Lucene's docFreq also
 counts deleted docs until merge), and multi-generation dictionaries
 sum df/cf across generations because generations hold disjoint doc
-sets — the same driver-side summing contract ``_wand_search_frames``
+sets — the same driver-side summing contract ``_prepare_boolean``
 uses for query-time idf.
 """
 

@@ -647,9 +647,11 @@ def _as_gens(seg_index) -> list:
 # (head terms at 10^12 docs, large indexes) the kernels run as a Spark
 # stage, so the 100-TB plan shape is untouched.
 #
-# The tiers differ only in WHERE the kernels run. A boolean-family
-# surface (phrase search too) is one _Collector served by _serve:
-# each segment's query is matched once (_segment_match), the
+# The tiers differ only in WHERE the kernels run. Every packed top-k
+# and boolean-family surface (bag search, cursor pages, /mlt and
+# phrase search too) is one _Collector served by _serve: a term bag is
+# one more query (_Terms), each segment's query is matched once
+# (_segment_match; the top-k collector prunes a plain-BM25 bag), the
 # collector's collect turns the match into a partial, ONE associative
 # merge folds the partials (_partials) and ONE driver-side finish (the
 # top-k cut, the facet/stats/group tails) answers: in-process on the
@@ -1916,35 +1918,6 @@ def _segment_topk_core(
     return acc_docs, acc_scores, stats
 
 
-def _segment_topk(
-    pdf: pd.DataFrame,
-    boosts: dict[str, float],
-    idfs: dict[str, float],
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-) -> pd.DataFrame:
-    """Exact top-k for one segment (see _segment_topk_core)."""
-    kind = pdf["_kind"].to_numpy()
-    dl_at = np.flatnonzero(kind == "dl")
-    post_at = np.flatnonzero(kind == "post")
-    if len(dl_at) == 0 or len(post_at) == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    doc_lo = int(pdf["doc_lo"].to_numpy()[dl_at[0]])
-    dls = _decode_doclens(pdf["data"].to_numpy()[dl_at[0]])
-    term_rows = _records(
-        pdf.iloc[post_at],
-        ["term", "data", "df", "block_last", "block_max", "block_off"],
-    )
-    acc_docs, acc_scores, _ = _segment_topk_core(
-        term_rows, dls, doc_lo, boosts, idfs, k, k1, b, avgdl,
-        deleted=_deleted_from_pdf(pdf),
-    )
-    return _topk_frame(acc_docs, acc_scores, k)
-
-
 def _sim_scores_np(sim, tf, dl, df, n, avgdl, payload=None):
     """Vectorized Similarity.score_expr (query/scorer.py) in numpy —
     identical formulas so packed-path results are rank-identical to
@@ -2003,126 +1976,6 @@ def _topk_frame(acc_docs: np.ndarray, acc_scores: np.ndarray, k: int) -> pd.Data
     top = min(k, len(acc_docs))
     order = np.lexsort((acc_docs, -np.round(acc_scores, 12)))[:top]
     return pd.DataFrame({"doc_id": acc_docs[order], "score": acc_scores[order]})
-
-
-def _segment_topk_sim(
-    pdf: pd.DataFrame,
-    boosts: dict[str, float],
-    dfs: dict[str, int],
-    k: int,
-    sim,
-    n: int,
-    avgdl: float,
-    min_should_match: int = 1,
-    boost_fn_spec: tuple | None = None,
-    after: tuple[float, int, int] | None = None,
-) -> pd.DataFrame:
-    """Exact per-segment top-k for an arbitrary Similarity (payload /
-    classic / toggle variants) — decodes the full posting (+ payload
-    sub-stream when the similarity uses it) per query term. The
-    block-max pruned path stays specialized to BM25; these variants
-    are exact by construction.
-
-    ``after``: (score, doc_id, round_to) searchAfter cursor — docs at
-    or before the cursor in (rounded-score desc, doc_id asc) order
-    are dropped BEFORE the per-segment truncation, so page N+1's
-    candidates are never lost to page N's top-k cut. Applied to the
-    FINAL score (post boost_fn), the order the client paginates in.
-
-    ``boost_fn_spec``: (value_col, fn) — BoostedQuery's multiplicative
-    ValueSource (MoreLikeThisHelper.java:131-145): fn is a vectorized
-    np.ndarray -> np.ndarray over the per-doc values of ``value_col``
-    ("doc_id" = the intrinsic key; any other name reads the segment's
-    packed docvalues stream), multiplied into every candidate's score
-    BEFORE top-k — the boost decides which docs make the k.
-
-    ``min_should_match``: docs matching fewer than mm DISTINCT query
-    terms are dropped BEFORE top-k (BooleanQuery.setMinimumNumber
-    ShouldMatch; MoreLikeThis.java:147's configurable mm). Match
-    counts are segment-local facts (a doc's postings for every term
-    live in its doc-range segment), so the per-segment filter + global
-    k-row merge stays exact — the same argument as scoring."""
-    dl_row = pdf[pdf["_kind"] == "dl"]
-    posts = pdf[pdf["_kind"] == "post"]
-    if len(dl_row) == 0 or len(posts) == 0:
-        return _topk_frame(np.array([], np.int64), np.array([], np.float64), k)
-    doc_lo = int(dl_row["doc_lo"].iloc[0])
-    dls = _decode_doclens(dl_row["data"].iloc[0])
-    deleted = _deleted_from_pdf(pdf)
-
-    acc_docs = np.array([], dtype=np.int64)
-    acc_scores = np.array([], dtype=np.float64)
-    acc_counts = np.array([], dtype=np.int64)
-    for row in _records(posts, ["term", "data", "pay_data"]):
-        t = row["term"]
-        docs, tfs = decode_postings(row["data"])
-        payload = None
-        if sim.use_payload:
-            if row["pay_data"] is None:
-                # match the phrase path's fail-fast ('packed index lacks
-                # positions') rather than silently dropping the payload
-                # factor and diverging from the flat path
-                raise ValueError(
-                    "packed index lacks payloads (built without the "
-                    f"payload sub-stream) — cannot score term '{t}' with "
-                    "a payload similarity"
-                )
-            payload = decode_payloads(row["pay_data"])
-        if deleted.size:
-            if payload is not None:
-                docs, tfs, payload = _strip_deleted(docs, deleted, tfs, payload)
-            else:
-                docs, tfs = _strip_deleted(docs, deleted, tfs)
-            if len(docs) == 0:
-                continue
-        scores = boosts[t] * _sim_scores_np(
-            sim, tfs, dls[docs - doc_lo], float(dfs[t]), float(n), avgdl,
-            payload=payload,
-        )
-        all_docs = np.concatenate([acc_docs, docs])
-        all_scores = np.concatenate([acc_scores, scores])
-        # one posting row per distinct term, so each occurrence adds
-        # exactly 1 to the doc's matched-clause count
-        all_counts = np.concatenate(
-            [acc_counts, np.ones(len(docs), dtype=np.int64)]
-        )
-        uniq, inv = np.unique(all_docs, return_inverse=True)
-        summed = np.zeros(len(uniq), np.float64)
-        np.add.at(summed, inv, all_scores)
-        counted = np.zeros(len(uniq), np.int64)
-        np.add.at(counted, inv, all_counts)
-        acc_docs, acc_scores, acc_counts = uniq, summed, counted
-    if min_should_match > 1:
-        keep = acc_counts >= min_should_match
-        acc_docs, acc_scores = acc_docs[keep], acc_scores[keep]
-    if boost_fn_spec is not None and len(acc_docs):
-        value_col, fn = boost_fn_spec
-        if value_col == "doc_id":
-            vals = acc_docs.astype(np.float64)
-        else:
-            dv_rows = pdf[(pdf["_kind"] == "dv") & (pdf["term"] == value_col)]
-            if len(dv_rows) == 0:
-                raise ValueError(
-                    f"segment frame lacks the {value_col!r} docvalues "
-                    "stream for boost_fn"
-                )
-            arr = _decode_doclens(dv_rows["data"].iloc[0])
-            lo = int(dv_rows["doc_lo"].iloc[0])
-            # tombstoned docs were stripped from the postings above,
-            # so every remaining candidate holds a real value
-            vals = arr[acc_docs - lo].astype(np.float64)
-        boost = np.asarray(fn(vals), np.float64)
-        if boost.shape != acc_scores.shape:
-            raise ValueError(
-                "boost_fn must map an (n,) value array to an (n,) "
-                f"boost array; got {boost.shape} for {acc_scores.shape}"
-            )
-        acc_scores = acc_scores * boost
-    if after is not None and len(acc_docs):
-        s_a, d_a, rt = after
-        keep = _cursor_keep(acc_scores, acc_docs, s_a, d_a, rt)
-        acc_docs, acc_scores = acc_docs[keep], acc_scores[keep]
-    return _topk_frame(acc_docs, acc_scores, k)
 
 
 def _spark_round(scores: np.ndarray, rt: int) -> np.ndarray:
@@ -2257,23 +2110,72 @@ def _candidate_blocks(
     return docs, tfs, pos
 
 
+def _sum_by_doc(parts: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(sorted docs, summed scores, how many parts hold each doc) of
+    (docs, scores) parts, each doc-unique; scores add in part order."""
+    docs = np.concatenate([np.array([], np.int64)] + [d for d, _ in parts])
+    uniq, inv, counts = np.unique(docs, return_inverse=True, return_counts=True)
+    summed = np.zeros(len(uniq), np.float64)
+    np.add.at(summed, inv, np.concatenate([np.array([])] + [s for _, s in parts]))
+    return uniq, summed, counts
+
+
+@dataclass(frozen=True)
+class _Terms:
+    """A weighted term bag, Lucene's BooleanQuery of boosted SHOULD
+    TermQuery clauses with a minShouldMatch (MLTQuery.java:46-58): the
+    query of wand_search(_multi), cursor pages and packed /mlt.
+    ``terms`` holds distinct analyzer tokens (never analyzed again)
+    with their weights, sorted by term; a doc scores the weighted sum
+    of the terms it holds and matches when it holds at least ``mm``
+    of them — a segment-local count (a doc's postings all live in its
+    segment), so per-segment cuts stay exact."""
+
+    terms: tuple
+    mm: int = 1
+
+    @classmethod
+    def of(cls, terms_boosts, mm: int = 1) -> "_Terms":
+        """The bag of (term, weight) pairs; a repeated term sums its
+        weights."""
+        w: dict[str, float] = {}
+        for t, wt in terms_boosts:
+            w[t] = w.get(t, 0.0) + float(wt)
+        return cls(tuple(sorted(w.items())), int(mm))
+
+
 @dataclass
 class _Match:
     """One segment's match (_segment_match), the one input every
-    collector reads: the tree's sorted, tombstone-stripped ``docs``
-    and their ``scores``, the segment's generation ``gen``, its
-    decoded docvalues (``dvs``: column -> values, ``dv_lo``: column ->
-    first doc id) and the closures that scored it (``evaluate`` a
-    subtree, ``bm25`` one term, reading the segment's memoized
-    decodes) for collectors that score more."""
+    collector reads: the matched ``tree``, its sorted, tombstone-stripped
+    ``docs`` and their ``scores`` (computed by ``run`` on first read,
+    so a collector that prunes never evaluates the tree), the segment's
+    generation ``gen``, its decoded docvalues (``dvs``: column ->
+    values, ``dv_lo``: column -> first doc id) and the closures that
+    score over the segment's memoized decodes: ``evaluate`` a subtree,
+    ``term_scores`` one weighted term, ``prune(k)`` the block-max top
+    k of a plain-BM25 bag (None for any other tree)."""
 
-    docs: np.ndarray
-    scores: np.ndarray
+    tree: object
     gen: int
     dvs: dict
     dv_lo: dict
     evaluate: Callable
-    bm25: Callable
+    term_scores: Callable
+    prune: Callable
+    run: Callable
+
+    @functools.cached_property
+    def _result(self) -> tuple[np.ndarray, np.ndarray]:
+        return self.run()
+
+    @property
+    def docs(self) -> np.ndarray:
+        return self._result[0]
+
+    @property
+    def scores(self) -> np.ndarray:
+        return self._result[1]
 
     def values(self, *cols: str) -> tuple:
         """(docs, scores, one value array per column) of the matched
@@ -2298,8 +2200,6 @@ def _segment_match(
     pdf: pd.DataFrame,
     tree,
     field_ctx: dict[str, dict],
-    k1: float,
-    b: float,
 ) -> _Match:
     """Per-segment boolean-tree evaluation over posting rows.
 
@@ -2308,8 +2208,14 @@ def _segment_match(
     evaluating the tree independently per segment and merging the
     collectors' partials is exact — the same argument that makes
     WAND's per-segment fan-out correct. Node ops are numpy set algebra
-    on (sorted docs, scores) pairs; leaves score BM25 from rows decoded
-    on first use and memoized per (field, term).
+    on (sorted docs, scores) pairs; leaves score from rows decoded on
+    first use and memoized per (field, term), with one rule: weight x
+    the field's Similarity (_sim_scores_np, the flat score_expr).
+
+    A _Terms bag is the weighted union-sum of its terms, cut to docs
+    holding at least ``mm`` of them; ``prune`` serves a plain-BM25
+    bag at mm <= 1 by block-max scoring over the undecoded rows
+    (_segment_topk_core) instead.
 
     Quote is the packed path's one phrase matcher: terms go
     rarest-first by segment df, the first decodes in full and fixes
@@ -2318,35 +2224,43 @@ def _segment_match(
     Exact phrases intersect (local_doc, pos - slot) keys; ``"a b"~n``
     narrows at the doc level, then tests the ordered span-near window
     (_sloppy_chain_docs). Hits score the flat _phrase way: member-term
-    BM25 summed over the decoded postings, which cover every hit.
+    scores summed over the decoded postings, which cover every hit.
 
-    ``field_ctx`` maps field name -> {"idfs", "avgdl"} ("" = default
-    field); rows in ``pdf`` carry a matching ``fld`` tag. FieldQuery
-    nodes switch the scoring context to that field's postings/doclens/
-    stats (the per-field index routing of the flat QueryCompiler,
-    segment-local because all per-field indexes share the doc space).
-    Range nodes evaluate over the intrinsic doc_id key (constant score
-    1.0, the ConstantScoreRangeQuery semantic); stored-column ranges
-    need the flat path's corpus. ``*:*`` matches every live doc with
-    score 0. A segment without default-field doclens matches nothing.
+    ``field_ctx`` maps field name -> {"dfs", "n", "avgdl", "sim"} (""
+    = default field); rows in ``pdf`` carry a matching ``fld`` tag.
+    FieldQuery nodes switch the scoring context to that field's
+    postings/doclens/stats (the per-field index routing of the flat
+    QueryCompiler, segment-local because all per-field indexes share
+    the doc space). Range nodes evaluate over the intrinsic doc_id key
+    (constant score 1.0, the ConstantScoreRangeQuery semantic);
+    stored-column ranges need the flat path's corpus. ``*:*`` matches
+    every live doc with score 0. A segment without default-field
+    doclens matches nothing.
     """
     from ..analysis.tokenizer import tokenize_pandas
     from ..query import ast as qast
     from ..query.compiler import is_match_all
+    from ..query.scorer import Similarity
 
     none = (np.array([], np.int64), np.array([], np.float64))
     gen = int(pdf["seg"].iloc[0]) // 1_000_000
+    # one split of the segment frame by row kind: positions, not
+    # boolean-mask copies of the frame
+    kind = pdf["_kind"].to_numpy()
+
+    def rows_of(k: str, keys: list[str]) -> list[dict]:
+        return _records(pdf.iloc[np.flatnonzero(kind == k)], keys, {"fld": ""})
+
     dls_by_field: dict[str, np.ndarray] = {}
     doc_lo_by_field: dict[str, int] = {}
-    for r in _records(
-        pdf[pdf["_kind"] == "dl"], ["fld", "data", "doc_lo"], {"fld": ""}
-    ):
+    for r in rows_of("dl", ["fld", "data", "doc_lo"]):
         f = r["fld"]
         dls_by_field[f] = _decode_doclens(r["data"])
         doc_lo_by_field[f] = int(r["doc_lo"])
     if "" not in dls_by_field:
         return _Match(
-            *none, gen, {}, {}, lambda node, fld="": none, lambda t, fld: none
+            tree, gen, {}, {}, lambda node, fld="": none,
+            lambda t, fld, weight=1.0: none, lambda k: None, lambda: none,
         )
     doc_lo = doc_lo_by_field[""]
     dls = dls_by_field[""]
@@ -2359,17 +2273,16 @@ def _segment_match(
 
     dvs: dict[str, np.ndarray] = {}
     dv_lo: dict[str, int] = {}
-    for r in _records(pdf[pdf["_kind"] == "dv"], ["term", "data", "doc_lo"]):
+    for r in rows_of("dv", ["term", "data", "doc_lo"]):
         dvs[r["term"]] = _decode_doclens(r["data"])
         dv_lo[r["term"]] = int(r["doc_lo"])
 
     rows = {
         (r["fld"], r["term"]): r
-        for r in _records(
-            pdf[pdf["_kind"] == "post"],
-            ["fld", "term", "df", "data", "block_last", "block_off",
-             "pos_off", "pos_data"],
-            {"fld": ""},
+        for r in rows_of(
+            "post",
+            ["fld", "term", "df", "data", "block_last", "block_max",
+             "block_off", "pos_off", "pos_data", "pay_data"],
         )
     }
     decoded: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
@@ -2380,33 +2293,38 @@ def _segment_match(
             decoded[key] = decode_postings(rows[key]["data"])
         return decoded[key]
 
-    def score(term: str, fld: str, docs: np.ndarray, tfs: np.ndarray) -> np.ndarray:
-        """BM25 of ``term`` in field ``fld`` over the given postings."""
+    def score(
+        term: str, fld: str, docs: np.ndarray, tfs: np.ndarray, payload=None
+    ) -> np.ndarray:
+        """``term``'s scores in field ``fld`` over the given postings."""
         ctx = field_ctx.get(fld, field_ctx[""])
-        # per-field k1/b (SchemaSimilarityFactory overrides); fall back
-        # to the query-level globals
-        fk1 = ctx.get("k1", k1)
-        fb = ctx.get("b", b)
-        tf = tfs.astype(np.float64)
         dl = dls_by_field.get(fld, dls)[docs - doc_lo_by_field.get(fld, doc_lo)]
-        return ctx["idfs"].get(term, 0.0) * tf * (fk1 + 1.0) / (
-            tf + fk1 * (1.0 - fb + fb * dl.astype(np.float64) / ctx["avgdl"])
+        return _sim_scores_np(
+            ctx["sim"], tfs, dl, float(ctx["dfs"][term]), float(ctx["n"]),
+            ctx["avgdl"], payload=payload,
         )
 
-    def bm25(term: str, fld: str) -> tuple[np.ndarray, np.ndarray]:
-        idfs = field_ctx.get(fld, field_ctx[""])["idfs"]
-        if (fld, term) not in rows or term not in idfs:
+    def term_scores(term: str, fld: str, weight: float = 1.0):
+        """(docs, weight x scores) over ``term``'s full postings in
+        field ``fld``; nothing for a term without postings or df."""
+        ctx = field_ctx.get(fld, field_ctx[""])
+        row = rows.get((fld, term))
+        if row is None or term not in ctx["dfs"]:
             return none
         docs, tfs = postings((fld, term))
-        return docs, score(term, fld, docs, tfs)
-
-    def union_sum(l, r):
-        docs = np.concatenate([l[0], r[0]])
-        scores = np.concatenate([l[1], r[1]])
-        uniq, inv = np.unique(docs, return_inverse=True)
-        summed = np.zeros(len(uniq), np.float64)
-        np.add.at(summed, inv, scores)
-        return uniq, summed
+        payload = None
+        if ctx["sim"].use_payload:
+            if row["pay_data"] is None:
+                # fail fast (like a phrase over an index without
+                # positions) rather than silently dropping the payload
+                # factor and diverging from the flat path
+                raise ValueError(
+                    "packed index lacks payloads (built without the "
+                    f"payload sub-stream) — cannot score term '{term}' "
+                    "with a payload similarity"
+                )
+            payload = decode_payloads(row["pay_data"])
+        return docs, weight * score(term, fld, docs, tfs, payload)
 
     def range_eval(field: str, node) -> tuple[np.ndarray, np.ndarray]:
         """Constant-score 1.0 range docset (the flat compiler's
@@ -2460,16 +2378,21 @@ def _segment_match(
         return docs, np.ones(len(docs), np.float64)
 
     def evaluate(node, fld: str = ""):
+        if isinstance(node, _Terms):
+            docs, scores, held = _sum_by_doc(
+                [term_scores(t, fld, w) for t, w in node.terms]
+            )
+            keep = held >= node.mm
+            return docs[keep], scores[keep]
         if is_match_all(node):
             return all_docs, np.zeros(len(all_docs), np.float64)
         if isinstance(node, qast.Operand):
             toks = sorted(set(tokenize_pandas(pd.Series([node.value]))[0]))
-            acc = none
-            for t in toks:
-                acc = union_sum(acc, bm25(t, fld))
-            return acc
+            return _sum_by_doc([term_scores(t, fld) for t in toks])[:2]
         if isinstance(node, qast.Or):
-            return union_sum(evaluate(node.left, fld), evaluate(node.right, fld))
+            return _sum_by_doc(
+                [evaluate(node.left, fld), evaluate(node.right, fld)]
+            )[:2]
         if isinstance(node, qast.And):
             if isinstance(node.right, qast.Not):
                 ld, ls = evaluate(node.left, fld)
@@ -2561,13 +2484,35 @@ def _segment_match(
             f"FieldQuery/Range; got {type(node).__name__}"
         )
 
-    docs, scores = evaluate(tree)
-    # liveDocs: the tree's algebra is doc-local, so one strip of the
-    # final match set (before boosting / faceting / top-k) is exact —
-    # a tombstoned doc contributes nothing to any OTHER doc's score
-    if deleted.size and len(docs):
-        docs, scores = _strip_deleted(docs, deleted, scores)
-    return _Match(docs, scores, gen, dvs, dv_lo, evaluate, bm25)
+    def run() -> tuple[np.ndarray, np.ndarray]:
+        docs, scores = evaluate(tree)
+        # liveDocs: the tree's algebra is doc-local, so one strip of the
+        # final match set (before boosting / faceting / top-k) is exact —
+        # a tombstoned doc contributes nothing to any OTHER doc's score
+        if deleted.size and len(docs):
+            docs, scores = _strip_deleted(docs, deleted, scores)
+        return docs, scores
+
+    def prune(k: int):
+        ctx = field_ctx[""]
+        sim = ctx["sim"]
+        if not (
+            isinstance(tree, _Terms) and tree.mm <= 1
+            and sim == Similarity("bm25", k1=sim.k1, b=sim.b)
+        ):
+            return None
+        n, dfs = ctx["n"], ctx["dfs"]
+        idfs = {
+            t: float(np.log(1.0 + (n - d + 0.5) / (d + 0.5))) for t, d in dfs.items()
+        }
+        term_rows = [rows[("", t)] for t, _ in tree.terms if ("", t) in rows and t in dfs]
+        docs, scores, _ = _segment_topk_core(
+            term_rows, dls, doc_lo, dict(tree.terms), idfs, k, sim.k1, sim.b,
+            ctx["avgdl"], deleted=deleted,
+        )
+        return docs, scores
+
+    return _Match(tree, gen, dvs, dv_lo, evaluate, term_scores, prune, run)
 
 
 # ---------------------------------------------------------------------------
@@ -2584,9 +2529,17 @@ def _collect_topk(
     boost_terms: tuple = (),
     boost_fn: tuple | None = None,
     only: np.ndarray | None = None,
+    after: tuple[float, int, int] | None = None,
 ) -> pd.DataFrame:
     """The segment's top ``k`` (doc_id, score) rows (_topk_frame),
-    after the ``only`` allowlist and the boosts."""
+    after the ``only`` allowlist, the boosts and the ``after`` cursor
+    ((score, doc_id, round_to), _cursor_keep). With none of them a
+    plain-BM25 bag takes the block-max pruned top k (m.prune); every
+    other case reads the match's docs and scores."""
+    if only is None and not boost_terms and boost_fn is None and after is None:
+        top = m.prune(k)
+        if top is not None:
+            return _topk_frame(*top, k)
     docs, scores = m.docs, m.scores
     if only is not None and len(docs):
         # second-pass scoring for a bounded candidate page (ReRank):
@@ -2601,7 +2554,7 @@ def _collect_topk(
     # co-occurs. Doc-local, so per-segment evaluation stays exact.
     if boost_terms and len(docs):
         for t, bst in boost_terms:
-            d, s = m.bm25(t, "")
+            d, s = m.term_scores(t, "")
             mask = np.isin(d, docs, assume_unique=True)
             if mask.any():
                 idx = np.searchsorted(docs, d[mask])
@@ -2621,12 +2574,23 @@ def _collect_topk(
                     "for boost_fn"
                 )
             vals = m.dvs[bcol][docs - m.dv_lo[bcol]].astype(np.float64)
-        # flat twin parity: the flat boolean surfaces hand
+        # flat twin parity: a bag multiplies its raw sum (flat
+        # boosted_search); the flat boolean surfaces hand
         # _apply_boost_fn a 5-decimal-rounded base score
         # (unsupervised_feedback / execute_query round their output
-        # with F.round = decimal HALF_UP), so the multiplier applies
-        # to the identically-rounded base here too
-        scores = _spark_round(scores, 5) * np.asarray(bfn(vals), np.float64)
+        # with F.round = decimal HALF_UP), so a parsed tree multiplies
+        # the identically-rounded base here too
+        base = scores if isinstance(m.tree, _Terms) else _spark_round(scores, 5)
+        boost = np.asarray(bfn(vals), np.float64)
+        if boost.shape != base.shape:
+            raise ValueError(
+                "boost_fn must map an (n,) value array to an (n,) "
+                f"boost array; got {boost.shape} for {base.shape}"
+            )
+        scores = base * boost
+    if after is not None and len(docs):
+        keep = _cursor_keep(scores, docs, *after)
+        docs, scores = docs[keep], scores[keep]
     return _topk_frame(docs, scores, k)
 
 
@@ -2768,12 +2732,12 @@ def _collect_top_per_ord(
 
 
 def _walk_query(tree) -> tuple[dict[str, set], set, bool]:
-    """One pass over a parsed query: (its term sets keyed by the
-    enclosing FieldQuery's field, "" for the default field; the fields
-    its Range clauses read, "doc_id" for a bare Range; whether it
-    holds a phrase). A field's dictionary only resolves terms under
-    ITS FieldQuery subtrees. A field without a packed index fetches
-    nothing: the kernel rejects its clause."""
+    """One pass over a parsed query or a _Terms bag: (its term sets
+    keyed by the enclosing FieldQuery's field, "" for the default
+    field; the fields its Range clauses read, "doc_id" for a bare
+    Range; whether it holds a phrase). A field's dictionary only
+    resolves terms under ITS FieldQuery subtrees. A field without a
+    packed index fetches nothing: the kernel rejects its clause."""
     from ..query import ast as qast
     from ..query.compiler import _leaf_terms, is_match_all
 
@@ -2801,6 +2765,8 @@ def _walk_query(tree) -> tuple[dict[str, set], set, bool]:
                 walk(node.child, fname)
         elif isinstance(node, qast.Operand):
             terms.setdefault(fld, set()).update(_leaf_terms(node))
+        elif isinstance(node, _Terms):
+            terms.setdefault(fld, set()).update(t for t, _ in node.terms)
 
     walk(tree, "")
     return terms, ranges, quote
@@ -2808,14 +2774,16 @@ def _walk_query(tree) -> tuple[dict[str, set], set, bool]:
 
 def _can_match(node, field_ctx: dict[str, dict], fld: str = "") -> bool:
     """False when the tree provably matches no doc, from the field
-    contexts alone: a term clause needs one token with an idf, a
-    phrase all of its tokens; Or and And follow the algebra; Not (so
+    contexts alone: a term clause or a bag needs one token with a df,
+    a phrase all of its tokens; Or and And follow the algebra; Not (so
     an and-not's negated side), Range and ``*:*`` can always match. A
     field without a context defers to the kernel, which rejects it."""
     from ..analysis.tokenizer import tokenize_pandas
     from ..query import ast as qast
     from ..query.compiler import is_match_all
 
+    if isinstance(node, _Terms):
+        return any(t in field_ctx[fld]["dfs"] for t, _ in node.terms)
     if isinstance(node, (qast.Or, qast.And)):
         sides = [_can_match(c, field_ctx, fld) for c in (node.left, node.right)]
         return any(sides) if isinstance(node, qast.Or) else all(sides)
@@ -2826,7 +2794,7 @@ def _can_match(node, field_ctx: dict[str, dict], fld: str = "") -> bool:
         quote = isinstance(node, qast.Quote)
         text = node.child.evaluate() if quote else node.value
         toks = tokenize_pandas(pd.Series([text]))[0]
-        hit = [t in field_ctx[fld]["idfs"] for t in toks]
+        hit = [t in field_ctx[fld]["dfs"] for t in toks]
         return bool(hit) and all(hit) if quote else any(hit)
     return True
 
@@ -2835,30 +2803,38 @@ def _prepare_boolean(
     spark: SparkSession,
     seg_index: SegmentIndex,
     query,
+    k1: float = 1.2,
+    b: float = 0.75,
     field_segments: dict[str, SegmentIndex] | None = None,
     field_sims: dict | None = None,
+    sim=None,
     str_cols: tuple = (),
     extra_terms: tuple = (),
     extra_dv_cols: tuple = (),
 ):
-    """Shared preparation for the packed boolean paths: parse, build
-    per-field scoring contexts (sidecar dfs, avgdl, k1/b overrides)
-    and the unified per-segment frame (postings + doclens + docvalues
-    rows). ``extra_terms`` adds default-field terms beyond the tree's
-    own leaves to the postings fetch + idf context (the feedback
-    expansion SHOULD terms).
+    """Shared preparation for the packed top-k and boolean paths:
+    parse, build per-field scoring contexts (dfs, n, avgdl and the
+    Similarity to score with) and the unified per-segment frame
+    (postings + doclens + docvalues rows). ``extra_terms`` adds
+    default-field terms beyond the tree's own leaves to the postings
+    fetch + df context (the feedback expansion SHOULD terms).
 
     ``seg_index`` may be a LIST of SegmentIndex (streamed generations
     before compaction, disjoint doc sets): dfs sum across the
     generations' sidecars, n/avgdl aggregate globally, and every
     generation's segments stack into the one unified frame with
     namespaced seg ids — the wand_search_multi statistics contract
-    applied to the whole boolean path. ``query`` is a query string or
-    a parsed tree. Returns (tree, field_ctx, unified, plan): the
+    applied to the whole boolean path. ``query`` is a query string, a
+    parsed tree or a _Terms bag. A field scores with BM25 at (k1, b),
+    its ``field_sims`` k1/b override (BM25 only), or, for the default
+    field, ``sim`` (any Similarity). An index without the termstats
+    sidecar costs one postings-metadata job for its dfs and takes a
+    Spark strategy. Returns (tree, field_ctx, unified, plan): the
     kernel input and the serving plan it was built for
     (_serving_plan); ``unified`` is None, and nothing is read, when
     the tree can match no doc (_can_match)."""
     from ..query.parser import parse_query
+    from ..query.scorer import Similarity
 
     gens: list[tuple[int, SegmentIndex]] = _as_gens(seg_index)
     seg_index = gens[0][1]
@@ -2877,9 +2853,14 @@ def _prepare_boolean(
             )
 
     tree = parse_query(query)[0] if isinstance(query, str) else query
-    by_field, range_fields, with_subs = _walk_query(tree)
+    by_field, range_fields, quote = _walk_query(tree)
     if extra_terms:
         by_field.setdefault("", set()).update(extra_terms)
+    if sim is None:
+        sim = Similarity("bm25", k1=k1, b=b)
+    # the positions/payload sub-streams ride the scan only when a
+    # phrase or a payload similarity reads them
+    with_subs = quote or sim.use_payload
     # extra_dv_cols: value streams a caller needs beyond the tree's
     # own Range fields (a boost_fn ValueSource column, a stats column).
     # ONE check of every stream the request reads, in every generation
@@ -2897,7 +2878,7 @@ def _prepare_boolean(
                         f"[{c!r}]) (doc_id ranges are intrinsic)"
                     )
 
-    # ONE sidecar read per (field, generation) feeds both the idf
+    # ONE sidecar read per (field, generation) feeds both the df
     # context and the serving plan's byte estimate, which covers
     # EVERYTHING this query will touch: every field's term-pruned
     # postings + doclens/deletes, plus the docvalues / ordinal stream
@@ -2908,41 +2889,41 @@ def _prepare_boolean(
     field_ctx: dict[str, dict] = {}
     for fname, f_gens in fields:
         f_terms = sorted(by_field.get(fname, set()))
+        f_stats = [_sidecar_stats(si, f_terms) for _, si in f_gens]
+        local_pairs += [(si, f_terms) for _, si in f_gens]
+        pair_stats += f_stats
+        if f_terms and None in f_stats:
+            # a pre-sidecar index: one postings-metadata job sums the
+            # field's dfs (no estimate, so the plan is a Spark one)
+            rows = (
+                _unified_frame(spark, f_gens, f_terms, _Plan("exchange", None))
+                .filter(F.col("_kind") == "post")
+                .groupBy("term").agg(F.sum("df").alias("df")).collect()
+            )
+            f_stats = [{r["term"]: (r["df"], None) for r in rows}]
         dfs: dict[str, int] = {}
-        for _gid, si in f_gens:
-            st = _sidecar_stats(si, f_terms)
-            if st is None and f_terms:
-                raise ValueError(
-                    f"boolean packed search needs the termstats sidecar "
-                    f"(field {fname or 'default'!r})"
-                )
-            local_pairs.append((si, f_terms))
-            pair_stats.append(st)
+        for st in f_stats:
             for t, (v, _c) in (st or {}).items():
                 dfs[t] = dfs.get(t, 0) + int(v)
         n, avgdl = _gen_stats(f_gens)
-        field_ctx[fname] = {
-            "idfs": {
-                t: float(np.log(1.0 + (n - d + 0.5) / (d + 0.5)))
-                for t, d in dfs.items()
-                if d > 0
-            },
-            "avgdl": avgdl,
-        }
         # per-field k1/b (``field_sims``: field -> Similarity) — the
-        # SchemaSimilarityFactory per-field override mechanism. The
-        # packed boolean path is BM25-specialized; other kinds run via
-        # wand_search(sim=...).
+        # SchemaSimilarityFactory per-field override mechanism, BM25
+        # variants only; other kinds score a bag via wand_search(sim=...)
         fsim = (field_sims or {}).get(fname)
-        if fsim is not None:
-            if getattr(fsim, "kind", "bm25") != "bm25":
-                raise ValueError(
-                    "packed boolean field_sims supports BM25 variants "
-                    f"(per-field k1/b); got kind={fsim.kind!r} for "
-                    f"field {fname or 'default'!r}"
-                )
-            field_ctx[fname]["k1"] = float(fsim.k1)
-            field_ctx[fname]["b"] = float(fsim.b)
+        if fsim is not None and getattr(fsim, "kind", "bm25") != "bm25":
+            raise ValueError(
+                "packed boolean field_sims supports BM25 variants "
+                f"(per-field k1/b); got kind={fsim.kind!r} for "
+                f"field {fname or 'default'!r}"
+            )
+        field_ctx[fname] = {
+            "dfs": {t: d for t, d in dfs.items() if d > 0},
+            "n": n,
+            "avgdl": avgdl,
+            "sim": sim if fsim is None else Similarity(
+                "bm25", k1=float(fsim.k1), b=float(fsim.b)
+            ),
+        }
     if not _can_match(tree, field_ctx):
         return tree, field_ctx, None, None
     local_streams = [
@@ -2980,7 +2961,8 @@ class _Collector:
     _partials); ``finish(merged partials, zero rows if none)`` -> the
     surface's answer. ``str_cols``/``dv_cols`` name the ordinal/numeric
     docvalues streams collect reads, ``extra_terms`` the default-field
-    terms it scores beyond the tree's own."""
+    terms it scores beyond the tree's own. ``empty`` marks an answer
+    known empty whatever matches (a k=0 page)."""
 
     schema: str
     collect: Callable
@@ -2989,6 +2971,7 @@ class _Collector:
     str_cols: tuple = ()
     dv_cols: tuple = ()
     extra_terms: tuple = ()
+    empty: bool = False
 
 
 def _serve(
@@ -3000,17 +2983,22 @@ def _serve(
     b: float = 0.75,
     field_segments: dict[str, SegmentIndex] | None = None,
     field_sims: dict | None = None,
+    sim=None,
 ):
-    """The one body of every boolean-family surface, phrase search
-    included: prepare the query (a string or a parsed tree) with the
-    collector's streams and terms (_prepare_boolean, which rejects a
-    stream some generation lacks), match it per segment
+    """The one body of every packed top-k and boolean-family surface
+    (bag search, cursor pages, /mlt and phrase search included):
+    prepare the query (a string, a parsed tree or a _Terms bag) with
+    the collector's streams and terms (_prepare_boolean, which rejects
+    a stream some generation lacks), match it per segment
     (_segment_match), collect and merge the partials on the planned
-    strategy (_partials) and finish them on the driver. A tree that
-    can match no doc finishes zero partials before any frame is read:
-    no job on any strategy."""
+    strategy (_partials) and finish them on the driver. ``sim`` scores
+    the default field (BM25 at k1/b when None). A collector whose
+    answer is known empty, and a tree that can match no doc, finish
+    zero partials before any frame is read: no job on any strategy."""
+    if collector.empty:
+        return collector.finish(_empty(collector.schema))
     tree, field_ctx, unified, plan = _prepare_boolean(
-        spark, seg_index, query, field_segments, field_sims,
+        spark, seg_index, query, k1, b, field_segments, field_sims, sim,
         str_cols=collector.str_cols, extra_terms=collector.extra_terms,
         extra_dv_cols=collector.dv_cols,
     )
@@ -3020,11 +3008,18 @@ def _serve(
     collect = collector.collect
 
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return collect(_segment_match(pdf, tree, field_ctx, k1, b))
+        return collect(_segment_match(pdf, tree, field_ctx))
 
     return collector.finish(_partials(
         unified, plan, per_segment, collector.schema, collector.merge
     ))
+
+
+def _check_k(k: int) -> None:
+    """A page size follows flat limit(k): 0 is the empty page, a
+    negative size is an error raised before anything is read."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
 
 
 def _topk_collector(
@@ -3033,24 +3028,29 @@ def _topk_collector(
     boost_terms: list[tuple[str, float]] = (),
     boost_fn: tuple | None = None,
     only: np.ndarray | None = None,
+    after: tuple[float, int] | None = None,
 ) -> _Collector:
     """The (doc_id, score) top-k collector: per-partition and driver
     merges are both the _topk_cut (so the TakeOrderedAndProject bound
     of k rows per partition holds); finishes as the pandas answer.
     ``boost_fn`` reads its docvalues column unless it is the intrinsic
-    doc_id."""
+    doc_id. ``after``: a (score, doc_id) searchAfter cursor, applied
+    in each segment before its cut and again in the merge."""
+    _check_k(k)
     return _Collector(
         _TOPK_SCHEMA,
         functools.partial(
             _collect_topk, k=k, boost_terms=boost_terms, boost_fn=boost_fn,
             only=only,
+            after=None if after is None else (float(after[0]), int(after[1]), round_to),
         ),
-        functools.partial(_topk_cut, k=k, round_to=round_to),
+        functools.partial(_topk_cut, k=k, round_to=round_to, after=after),
         lambda res: res,
         dv_cols=(
             () if boost_fn is None or boost_fn[0] == "doc_id" else (boost_fn[0],)
         ),
         extra_terms=tuple(sorted({t for t, _ in boost_terms})),
+        empty=k == 0,
     )
 
 
@@ -3388,6 +3388,7 @@ def wand_collapse_search(
     partials carry the generation id, map through their generation's
     own dictionary, and merge by VALUE — winners equal the compacted
     index's."""
+    _check_k(k)
     return _serve(spark, seg_index, query, _Collector(
         _TOP_PER_ORD_SCHEMA,
         functools.partial(
@@ -3398,6 +3399,7 @@ def wand_collapse_search(
             spark, res, _as_gens(seg_index), collapse_col, k
         ),
         str_cols=(collapse_col,),
+        empty=k == 0,
     ), k1, b, field_segments, field_sims)
 
 
@@ -3729,11 +3731,14 @@ def wand_rerank_search(
     ``k`` must be <= ``rerank_docs`` (Solr serves reranked rows from
     within the reRankDocs prefix; the below-N tail keeps base order —
     a page past N is a base-query cursor page, not a rerank)."""
+    _check_k(k)
     if k > rerank_docs:
         raise ValueError(
             f"rerank serves from the top-{rerank_docs} prefix; page size "
             f"k={k} exceeds it — raise rerank_docs or page the base query"
         )
+    if k == 0:
+        return empty_df(spark, _TOPK_SCHEMA)
     # pass 1: the base top-N as a driver-side frame (bounded:
     # rerank_docs rows)
     base = _boolean_top(
@@ -4379,7 +4384,8 @@ def wand_search_multi(
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
     """Top-k across MULTIPLE packed indexes (e.g. streamed generations
-    before compaction) with GLOBAL statistics.
+    before compaction) with GLOBAL statistics: wand_search's bag over
+    the generation list.
 
     Generations hold disjoint doc sets, so df sums and avgdl is the
     token-weighted mean; each generation's segments are scored
@@ -4388,11 +4394,10 @@ def wand_search_multi(
     (tests/test_streaming_payloads.py) — querying never has to wait
     for compaction.
     """
-    return _relation(spark, _wand_search_frames(
-        spark, list(enumerate(seg_indexes)), terms_boosts,
-        k=k, k1=k1, b=b, round_to=round_to, sim=sim,
-        min_should_match=min_should_match, boost_fn=boost_fn,
-        after=after,
+    return _relation(spark, _serve(
+        spark, list(seg_indexes), _Terms.of(terms_boosts, min_should_match),
+        _topk_collector(k, round_to, boost_fn=boost_fn, after=after),
+        k1, b, sim=sim,
     ))
 
 
@@ -4409,50 +4414,52 @@ def wand_search(
     boost_fn: tuple | None = None,
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
-    """Distributed top-k over packed segments.
+    """Distributed top-k of a weighted term bag over packed segments:
+    the _Terms query (boosted SHOULD clauses, a repeated term summing
+    its weights) served by _serve with the top-k collector.
 
     Plan: term->df from the build-time sidecar (driver-side pyarrow,
     no job) -> parquet scan with term-isin pushdown (few rows per
-    segment) -> per-segment pruned scoring in one Arrow batch -> a
-    k-row top-k cut per partition in the same stage -> one collect and
-    the same cut on the driver (_topk_cut): ONE Spark job. At 10^12
-    docs this is the query fast path: work per segment is bounded by
-    the query's posting sizes, the merge is k rows per partition.
+    segment) -> per-segment scoring in one Arrow batch -> a k-row
+    top-k cut per partition in the same stage -> one collect and the
+    same cut on the driver (_topk_cut): ONE Spark job, none on the
+    local tier. At 10^12 docs this is the query fast path: work per
+    segment is bounded by the query's posting sizes, the merge is k
+    rows per partition.
 
     ``sim``: any query.scorer.Similarity — plain BM25 takes the
-    block-max pruned path; payload/classic/toggle variants run the
-    exact per-segment scorer over the codec-v3 sub-streams,
+    block-max pruned path (_segment_topk_core); payload/classic/toggle
+    variants score the full match over the codec-v3 sub-streams,
     rank-identical to the flat path.
 
     ``min_should_match``: drop docs matching fewer than mm distinct
     query terms (BooleanQuery minShouldMatch; the reference's
-    configurable mm, MoreLikeThis.java:147). mm>1 runs the exact
-    per-segment scorer (counting clause matches requires every query
-    term's postings regardless), rank-identical to the flat
-    search_terms(min_should_match=mm).
+    configurable mm, MoreLikeThis.java:147), rank-identical to the
+    flat search_terms(min_should_match=mm). mm>1 scores the full match
+    (counting clause matches needs every term's postings).
 
     ``boost_fn``: (value_col, fn) — BoostedQuery at the serve tier
     (the flat handlers.boosted_search twin; MoreLikeThisHelper
     .java:131-145): fn is a vectorized np.ndarray -> np.ndarray
     ValueSource over ``value_col`` ("doc_id", or any column packed
     via build_segments(..., value_cols=[...])), multiplied into every
-    candidate's score BEFORE ranking. Runs the exact per-segment
-    scorer — an unbounded multiplier invalidates block-max bounds.
+    candidate's raw score BEFORE ranking. Scores the full match — an
+    unbounded multiplier invalidates block-max bounds.
     ``after``: (score, doc_id) searchAfter cursor (Lucene
     IndexSearcher.searchAfter / Solr cursorMark) — return the k docs
     strictly after that position in (score desc, doc_id asc) order.
-    The cursor filter runs INSIDE the per-segment kernel before its
-    top-k cut, so every page costs k rows per segment at any depth —
-    OFFSET paging would refetch offset+k rows per segment per page,
-    the deep-paging anti-pattern at 10^12 docs. Cursor pages route to
-    the exact scorer (the block-max heap prunes against the
-    unfiltered top-k, which would drop page-2 docs).
+    The cursor filter runs in each segment before its top-k cut, so
+    every page costs k rows per segment at any depth — OFFSET paging
+    would refetch offset+k rows per segment per page, the deep-paging
+    anti-pattern at 10^12 docs. Cursor pages score the full match
+    (the block-max heap prunes against the unfiltered top-k, which
+    would drop page-2 docs). ``k=0`` answers an empty page with no
+    read; a negative ``k`` raises ValueError.
     """
-    return _relation(spark, _wand_search_frames(
-        spark, [(0, seg_index)], terms_boosts,
-        k=k, k1=k1, b=b, round_to=round_to, sim=sim,
-        min_should_match=min_should_match, boost_fn=boost_fn,
-        after=after,
+    return _relation(spark, _serve(
+        spark, seg_index, _Terms.of(terms_boosts, min_should_match),
+        _topk_collector(k, round_to, boost_fn=boost_fn, after=after),
+        k1, b, sim=sim,
     ))
 
 
@@ -4629,158 +4636,6 @@ def _dv_frame(
     return _stream_rows(
         _scan(spark, si, _dv_rel(col, subdir), DOCLEN_SCHEMA + ", group int"),
         "dv", "", col, seg_offset, with_subs,
-    )
-
-
-def _gen_dfs(
-    gens: list[tuple[int, SegmentIndex]], term_list: list[str], posts_fallback
-) -> dict[str, int]:
-    """Global df per query term: sum of each generation's sidecar
-    (driver-side pyarrow, zero Spark jobs); falls back to one
-    postings-metadata job for pre-sidecar indexes."""
-    dfs: dict[str, int] | None = {}
-    for _, si in gens:
-        d = _sidecar_dfs(si, term_list)
-        if d is None:
-            dfs = None
-            break
-        for t, v in d.items():
-            dfs[t] = dfs.get(t, 0) + int(v)
-    if dfs is None:
-        df_rows = posts_fallback().groupBy("term").agg(F.sum("df").alias("df")).collect()
-        dfs = {r["term"]: int(r["df"]) for r in df_rows}
-    return dfs
-
-
-def _wand_search_frames(
-    spark: SparkSession,
-    gens: list[tuple[int, SegmentIndex]],
-    terms_boosts: list[tuple[str, float]],
-    k: int,
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_to: int = 5,
-    sim=None,
-    min_should_match: int = 1,
-    boost_fn: tuple | None = None,
-    after: tuple[float, int] | None = None,
-):
-    """Shared body of wand_search(_multi), scoring with the
-    generations' (n, avgdl) (_gen_stats). Returns the pandas answer on
-    both tiers (a known-empty one before any frame is read); the
-    public surfaces convert it once (_relation)."""
-    term_list = sorted({t for t, _ in terms_boosts})
-    boosts: dict[str, float] = {}
-    for t, w in terms_boosts:
-        boosts[t] = boosts.get(t, 0.0) + float(w)
-
-    # the pruned block-max path is specialized to plain BM25 at mm=1;
-    # other similarity variants (payload/classic/toggles), mm>1
-    # (needs per-doc matched-clause counts, so every query term's
-    # postings decode anyway), and boost_fn (an unbounded multiplier
-    # invalidates the block-max upper bounds) run the exact
-    # per-segment scorer over the v3 sub-streams
-    # searchAfter also routes to the exact scorer: the block-max core
-    # prunes against ITS OWN unfiltered top-k heap, which would drop
-    # exactly the deeper docs a page-2 cursor needs
-    plain_bm25 = min_should_match <= 1 and boost_fn is None and after is None and (
-        sim is None
-        or (
-            sim.kind == "bm25"
-            and sim.use_tf and sim.use_idf and sim.use_norm
-            and not sim.use_payload
-        )
-    )
-    # sub-stream columns only when the scorer will read them (payload
-    # similarity) — parquet column pruning skips pos/pay bytes for
-    # classic/toggle sims and the mm>1 BM25 path
-    with_subs = sim is not None and sim.use_payload
-    value_col = (
-        boost_fn[0] if boost_fn is not None and boost_fn[0] != "doc_id" else None
-    )
-    if value_col is not None:
-        for _, si in gens:
-            if value_col not in si.value_cols:
-                raise ValueError(
-                    f"boost_fn over {value_col!r} needs a docvalues "
-                    "stream — rebuild with build_segments(..., "
-                    f"value_cols=[{value_col!r}]) (doc_id is intrinsic)"
-                )
-    # ONE sidecar lookup feeds both the local-tier byte estimate and the
-    # idf stats below
-    gen_stats = [_sidecar_stats(si, term_list) for _, si in gens]
-    if all(st is not None for st in gen_stats):
-        dfs = {}
-        for st in gen_stats:
-            for t, (d, _c) in st.items():
-                dfs[t] = dfs.get(t, 0) + int(d)
-    else:
-        dfs = _gen_dfs(
-            gens, term_list,
-            lambda: _unified_frame(
-                spark, gens, term_list, _Plan("exchange", None)
-            ).filter(F.col("_kind") == "post"),
-        )
-    dfs = {t: d for t, d in dfs.items() if d > 0}
-    if not dfs:
-        # known empty before any frame is read: a driver-side answer on
-        # both tiers, so handler tails over it schedule no job either
-        return _empty(_TOPK_SCHEMA)
-    n, avgdl = _gen_stats(gens)
-
-    plan = _serving_plan(
-        [(si, term_list) for _, si in gens], with_subs,
-        [(si, _dv_rel(value_col)) for _, si in gens if value_col is not None],
-        stats_list=gen_stats,
-    )
-    frames = [_unified_frame(spark, gens, term_list, plan, with_subs=with_subs)]
-    if value_col is not None:
-        frames += [
-            _dv_frame(
-                spark, si, value_col, with_subs, plan,
-                seg_offset=gen_id * 1_000_000,
-            )
-            for gen_id, si in gens
-        ]
-    unified = _stack(frames, plan)
-
-    if plain_bm25:
-        if sim is not None:
-            k1, b = sim.k1, sim.b
-        idfs = {
-            t: float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
-            for t, df in dfs.items()
-        }
-
-        def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _segment_topk(pdf, boosts, idfs, k, k1, b, avgdl)
-
-    else:
-        if sim is None:
-            # mm>1 over plain BM25: the exact scorer needs a Similarity
-            from ..query.scorer import Similarity
-
-            sim = Similarity(kind="bm25", k1=k1, b=b)
-
-        cursor = (
-            (float(after[0]), int(after[1]), round_to)
-            if after is not None
-            else None
-        )
-
-        def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _segment_topk_sim(
-                pdf, boosts, dfs, k, sim, n, avgdl,
-                min_should_match=min_should_match,
-                boost_fn_spec=boost_fn,
-                after=cursor,
-            )
-
-    # the cut merges every partition and the driver (k rows each); its
-    # after re-check is idempotent on the kernel's exact rounding
-    return _partials(
-        unified, plan, per_segment, _TOPK_SCHEMA,
-        functools.partial(_topk_cut, k=k, round_to=round_to, after=after),
     )
 
 

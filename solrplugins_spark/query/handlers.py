@@ -387,13 +387,15 @@ def packed_mlt_handler(
 
     Job shape matches the flat path's bounded driver crossings: one
     docstore point read (seed texts), zero jobs for df (sidecar), one
-    wand_search execution of the expansion query, seed docs excluded
-    (MoreLikeThisHelper.java:152-160) by over-fetching k+|seeds| then
-    anti-filtering — exact, since seeds can displace at most |seeds|
-    rows of the true top-k. ``seg_index`` may be a list of generations
-    (wand_search_multi global statistics). ``params.min_should_match``
-    threads through to the packed scorer (mm>1 takes the exact
-    per-segment path — MoreLikeThis.java:147's mm is configurable).
+    execution of the expansion query — the boosted term bag wand_search
+    serves (_Terms through _serve with the top-k collector) — seed docs
+    excluded (MoreLikeThisHelper.java:152-160) by over-fetching
+    k+|seeds| then anti-filtering — exact, since seeds can displace at
+    most |seeds| rows of the true top-k. ``seg_index`` may be a list of
+    generations (wand_search_multi global statistics).
+    ``params.min_should_match`` is the bag's mm (mm>1 scores the full
+    match — MoreLikeThis.java:147's mm is configurable). ``k=0``
+    answers an empty page; a negative ``k`` raises ValueError.
 
     Seed selection mirrors the flat handler's reference precedence
     (DiceMoreLikeThisHandler.java:184-221): ``like_text`` (content
@@ -403,16 +405,17 @@ def packed_mlt_handler(
     ``matchOffset``; fetches match_offset+1 rows, one execution)."""
     from ..index.segments import (
         _as_gens,
-        _TOPK_SCHEMA,
         _boolean_top,
-        _empty,
+        _check_k,
         _relation,
-        _wand_search_frames,
+        _serve,
+        _Terms,
+        _topk_collector,
         fetch_docs_local,
     )
 
-    gens = _as_gens(seg_index)
-    first = gens[0][1]
+    _check_k(k)
+    first = _as_gens(seg_index)[0][1]
     if like_text is None and seed_doc_ids is None:
         if match_query is None:
             raise ValueError(
@@ -436,17 +439,15 @@ def packed_mlt_handler(
     if not interesting_terms_detail:
         terms = terms.select("term", "score")  # mlt.interestingTerms=list
     boosts = [(t, float(s)) for t, s in zip(queue["term"], queue["score"])]
-    # boost_fn rides into the wand execution (multiplied BEFORE
-    # ranking, the flat mlt_handler's _apply_boost_fn semantics); the
-    # k+|seeds| over-fetch stays exact — a per-doc multiplier cannot
-    # let seeds displace more than |seeds| rows
-    top = (
-        _wand_search_frames(
-            spark, gens, boosts, k=k + len(seed_ids),
-            min_should_match=params.min_should_match, boost_fn=boost_fn,
-        )
-        if boosts
-        else _empty(_TOPK_SCHEMA)
+    # the expansion query is the bag of boosted terms, served like
+    # wand_search (an empty bag matches nothing and reads nothing);
+    # boost_fn rides into it (multiplied BEFORE ranking, the flat
+    # mlt_handler's _apply_boost_fn semantics); the k+|seeds|
+    # over-fetch stays exact — a per-doc multiplier cannot let seeds
+    # displace more than |seeds| rows — and a k=0 page reads nothing
+    top = _serve(
+        spark, seg_index, _Terms.of(boosts, params.min_should_match),
+        _topk_collector(k + len(seed_ids) if k else 0, 5, boost_fn=boost_fn),
     )
     # the answer is a pre-sorted (score desc, doc_id asc) driver-side
     # frame of <= k+|seeds| rows on both tiers: the seed-exclusion +

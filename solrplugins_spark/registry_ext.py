@@ -3004,9 +3004,9 @@ def q_wand_boosted_fn(spark, sf_dir):
     docvalues stream — fn(v) = v % 7 + 1 applied BEFORE ranking, per
     MoreLikeThisHelper.java:131-145. Proves function boosts never need
     the flat corpus at query time: the value comes from the packed
-    NumericDocValues analogue, the scorer is the exact per-segment
-    kernel (block-max bounds are invalid under an unbounded
-    multiplier, segments.py _wand_search_frames)."""
+    NumericDocValues analogue, the scorer reads the full per-segment
+    match (block-max bounds are invalid under an unbounded
+    multiplier, segments.py _collect_topk)."""
     import numpy as np
 
     from .index.segments import wand_search

@@ -99,8 +99,9 @@ def test_known_empty_answer_stays_driver_side_on_both_tiers(spark, eseg, monkeyp
     over it (seed exclusion, re-top-k) schedules no Spark job."""
     for budget in (None, 0):
         tier(monkeypatch, budget)
-        top = S._wand_search_frames(
-            spark, [(0, eseg)], [("xxnosuchtermxx", 1.0)], k=10
+        top = S._serve(
+            spark, eseg, S._Terms.of([("xxnosuchtermxx", 1.0)]),
+            S._topk_collector(10, 5),
         )
         assert isinstance(top, pd.DataFrame) and top.empty
 

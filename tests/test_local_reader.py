@@ -236,7 +236,7 @@ def test_reader_concurrent_first_queries(seg, tiny_corpus_pd, monkeypatch):
     import threading
 
     terms = [(t, 1.0) for t in _top_terms(tiny_corpus_pd["text"], 40)[25:28]]
-    want = S._wand_search_frames(None, [(0, seg)], terms, k=10)
+    want = S._serve(None, seg, S._Terms.of(terms), S._topk_collector(10, 5))
     fresh = S.SegmentIndex.load(seg.path)
     loads = Counter()
     real_read_stream = S._read_stream
@@ -252,7 +252,9 @@ def test_reader_concurrent_first_queries(seg, tiny_corpus_pd, monkeypatch):
     def query():
         try:
             start.wait(timeout=30)
-            results.append(S._wand_search_frames(None, [(0, fresh)], terms, k=10))
+            results.append(
+                S._serve(None, fresh, S._Terms.of(terms), S._topk_collector(10, 5))
+            )
         except Exception as e:  # surfaced by the assertion below
             errors.append(e)
 

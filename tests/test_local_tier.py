@@ -10,6 +10,7 @@ from conftest import count_jobs, tier
 
 from solrplugins_spark.index import segments as S
 from solrplugins_spark.index.builder import build_index, mint_doc_ids
+from solrplugins_spark.query.handlers import packed_mlt_handler
 
 
 @pytest.fixture(scope="module")
@@ -340,6 +341,8 @@ def test_merges_match_pandas_reference():
 
 SURFACES = {
     **FACETS,
+    "bag": lambda spark, si, q=FQ: S.wand_search(
+        spark, si, [(t, 1.0) for t in q.split(" or ")], k=10),
     "boolean": lambda spark, si, q=FQ: S.wand_boolean_search(spark, si, q, k=10),
     "phrase": lambda spark, si, q=FQ: S.wand_phrase_search(
         spark, si, q.split(" or "), k=10),
@@ -373,3 +376,54 @@ def test_empty_answer_on_every_path(spark, lt, monkeypatch, name, path):
         "facet_query": [("early", 0), ("nz", 0), ("w3", 0)],
     }.get(name, [])
     assert rows == want, name
+
+
+# ---- page size: flat limit(k) on every top-k surface -----------------
+
+BAG = [("zephyrblade", 2.0), ("w0003", 1.0)]
+PAGES = {
+    "bag": lambda spark, f, k: S.wand_search(spark, f["seg"], BAG, k=k),
+    "bag_mm2": lambda spark, f, k: S.wand_search(
+        spark, f["seg"], BAG, k=k, min_should_match=2),
+    "bag_multi": lambda spark, f, k: S.wand_search_multi(
+        spark, [f["seg"]], BAG, k=k),
+    "boolean": lambda spark, f, k: S.wand_boolean_search(spark, f["seg"], FQ, k=k),
+    "boosted": lambda spark, f, k: S.wand_boolean_boosted_search(
+        spark, f["seg"], FQ, [("w0100", 0.5)], k=k),
+    "phrase": lambda spark, f, k: S.wand_phrase_search(
+        spark, f["seg"], f["phrase"], k=k),
+    "collapse": lambda spark, f, k: S.wand_collapse_search(
+        spark, f["seg"], FQ, "role", k=k),
+    "rerank": lambda spark, f, k: S.wand_rerank_search(
+        spark, f["seg"], FQ, "w0100", k=k, rerank_docs=30),
+    "mlt": lambda spark, f, k: packed_mlt_handler(
+        spark, f["seg"], [0, 1], k=k)["docs"],
+}
+
+
+@pytest.mark.parametrize("path", ["local", "single_stage", "exchange"])
+@pytest.mark.parametrize("name", sorted(PAGES))
+def test_page_size_follows_limit(spark, lt, monkeypatch, name, path):
+    """A top-k surface's ``k`` follows flat limit(k) on the local,
+    single-stage and exchange paths: k=0 is the empty page with the
+    public schema and no Spark job, and a negative k raises
+    ValueError before anything is read."""
+    tier(monkeypatch, None if path == "local" else 0, exchange=path == "exchange")
+    page = PAGES[name]
+    out = []
+
+    def answer():
+        got = page(spark, lt, 0)
+        out.append((got, got.collect()))
+
+    assert count_jobs(spark, answer, f"k0-{name}-{path}") == 0, name
+    got, rows = out[0]
+    assert rows == [] and got.schema == page(spark, lt, 3).schema, name
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("read before the page-size check")
+
+    monkeypatch.setattr(S, "_sidecar_stats", no_read)
+    monkeypatch.setattr(S, "fetch_docs_local", no_read)
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        page(spark, lt, -1)

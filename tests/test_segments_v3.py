@@ -359,6 +359,31 @@ def test_wand_query_is_one_action(spark, pos_segments, tmp_path):
     assert with_sidecar < without, (with_sidecar, without)
 
 
+def test_boolean_query_without_sidecar_equals_sidecar_answer(
+    spark, pos_segments, tiny_corpus_pd, tmp_path
+):
+    """An index without the termstats sidecar serves a boolean query
+    too: one postings-metadata job sums its dfs, and its rows equal
+    the sidecar answer."""
+    import shutil
+
+    from solrplugins_spark.index.segments import SegmentIndex, wand_boolean_search
+
+    nosc = tmp_path / "nosidecar"
+    shutil.copytree(pos_segments.path, nosc)
+    shutil.rmtree(nosc / "termstats")
+    seg2 = SegmentIndex(
+        path=str(nosc), n_docs=pos_segments.n_docs, avgdl=pos_segments.avgdl,
+        n_segments=pos_segments.n_segments, seg_size=pos_segments.seg_size,
+    )
+    t0, t1 = _corpus_terms(tiny_corpus_pd)
+    for q in (f"{t0} or {t1}", f'"{t0} {t1}" or zephyrblade', f"{t0} and not {t1}"):
+        want = wand_boolean_search(spark, pos_segments, q, k=10).toPandas()
+        got = wand_boolean_search(spark, seg2, q, k=10).toPandas()
+        assert len(want), q
+        pd.testing.assert_frame_equal(got, want), q
+
+
 def test_compact_packed_resume(spark, tiny_corpus, tiny_corpus_pd, tmp_path):
     """A killed compaction resumes from the manifest: completed groups
     are untouched (mtime preserved), missing groups are rebuilt, and
@@ -999,9 +1024,10 @@ def test_exchange_strategy_parity_all_surfaces(
     spark, tiny_corpus, tiny_corpus_pd, tmp_path, monkeypatch
 ):
     """Every converted serving surface must produce identical results
-    on BOTH Spark strategies (single-stage, what small test indexes get
-    at budget 0, vs the at-scale groupBy(seg) exchange) — covers the
-    surfaces (facets, phrase, multi-gen, delete) that the small-index
+    on the local tier and BOTH Spark strategies (single-stage, what
+    small test indexes get at budget 0, vs the at-scale groupBy(seg)
+    exchange) — covers the surfaces (facets, phrase, multi-gen, the
+    bag shapes that score the full match, delete) that the small-index
     plan would otherwise leave exchange-untested."""
     import shutil
 
@@ -1027,6 +1053,11 @@ def test_exchange_strategy_parity_all_surfaces(
     toks = [t for t in row["text"].lower().split() if len(t) > 1]
     phrase = toks[:2]
     q = f"{toks[0]} OR {toks[1]}"
+    # the bag shapes that score the full match: mm=2, a classic
+    # similarity, a boost_fn and a page-2 cursor
+    bag = [(toks[0], 1.0), (toks[1], 2.0), (toks[2], 0.5)]
+    p1 = wand_search(spark, seg, bag, k=5).collect()
+    cursor = (float(p1[-1]["score"]), int(p1[-1]["doc_id"]))
 
     def run_all():
         return {
@@ -1040,13 +1071,31 @@ def test_exchange_strategy_parity_all_surfaces(
                 spark, [seg], [(toks[0], 1.0), (toks[1], 2.0)], k=10
             ).toPandas(),
             "boolean": wand_boolean_search(spark, seg, q, k=10).toPandas(),
+            "bag_mm2": wand_search(
+                spark, seg, bag, k=10, min_should_match=2
+            ).toPandas(),
+            "bag_classic": wand_search(
+                spark, seg, bag, k=10, sim=ClassicDice
+            ).toPandas(),
+            "bag_boost_fn": wand_search(
+                spark, seg, bag, k=10,
+                boost_fn=("doc_id", lambda v: np.mod(v, 7.0) + 1.0),
+            ).toPandas(),
+            "bag_page2": wand_search(
+                spark, seg, bag, k=5, after=cursor
+            ).toPandas(),
         }
 
+    tier(monkeypatch, None)
+    local = run_all()
+    tier(monkeypatch, 0)
     single = run_all()
     tier(monkeypatch, 0, exchange=True)
     exchanged = run_all()
+    assert len(single["bag_mm2"]) and len(single["bag_page2"])
     for name in single:
         pd.testing.assert_frame_equal(single[name], exchanged[name]), name
+        pd.testing.assert_frame_equal(single[name], local[name]), name
 
     # delete_by_query's per-segment match job on the exchange path
     info = delete_by_query(spark, str(tmp_path / "x"), f'"{phrase[0]} {phrase[1]}"')
