@@ -3635,9 +3635,13 @@ def wand_group_search(
     member and explodes the k_groups winners back to rows. Returns
     (grp_rank, group_col, pos, doc_id, score), rows in (grp_rank, pos)
     order.
-    ``group_limit`` must be >= 1 (ValueError on both tiers)."""
+    ``group_limit`` must be >= 1 and ``k_groups`` >= 0 (ValueError on
+    both tiers, before anything is read); ``k_groups=0`` answers no
+    group with no read."""
     if group_limit < 1:
         raise ValueError(f"group_limit must be >= 1, got {group_limit}")
+    if k_groups < 0:
+        raise ValueError(f"k_groups must be >= 0, got {k_groups}")
     return _serve(spark, seg_index, query, _Collector(
         _TOP_PER_ORD_SCHEMA,
         functools.partial(
@@ -3649,6 +3653,7 @@ def wand_group_search(
             spark, res, _as_gens(seg_index), group_col, k_groups, group_limit
         ),
         str_cols=(group_col,),
+        empty=k_groups == 0,
     ), k1, b, field_segments, field_sims)
 
 

@@ -394,6 +394,8 @@ PAGES = {
         spark, f["seg"], f["phrase"], k=k),
     "collapse": lambda spark, f, k: S.wand_collapse_search(
         spark, f["seg"], FQ, "role", k=k),
+    "group": lambda spark, f, k: S.wand_group_search(
+        spark, f["seg"], FQ, "role", k_groups=k),
     "rerank": lambda spark, f, k: S.wand_rerank_search(
         spark, f["seg"], FQ, "w0100", k=k, rerank_docs=30),
     "mlt": lambda spark, f, k: packed_mlt_handler(
@@ -425,5 +427,5 @@ def test_page_size_follows_limit(spark, lt, monkeypatch, name, path):
 
     monkeypatch.setattr(S, "_sidecar_stats", no_read)
     monkeypatch.setattr(S, "fetch_docs_local", no_read)
-    with pytest.raises(ValueError, match="k must be >= 0"):
+    with pytest.raises(ValueError, match=r"k(_groups)? must be >= 0"):
         page(spark, lt, -1)
