@@ -96,8 +96,7 @@ class SegmentIndex:
     # stored-field columns (build_segments store_cols) — fetch_docs
     store_cols: tuple = ()
     # docstore DDL ("doc_id bigint, text string, ...") recorded at
-    # build time so fetch_docs passes an explicit read schema —
-    # parquet footer inference would cost one Spark job per request
+    # build time: the schema fetch_docs answers under
     store_schema: str | None = None
     # tokenizer settings the flat index was built with — the packed
     # /mlt and /uf handlers re-analyze stored seed text and MUST
@@ -1206,8 +1205,8 @@ def _topk_cut(
 
 
 def _relation(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
-    """A surface's (doc_id, score) answer as a DataFrame: it crosses
-    into the JVM here, once, as a local relation."""
+    """A surface's (doc_id, score) answer as a DataFrame: held; it
+    crosses into the JVM on its first Spark use (local_relation)."""
     return local_relation(spark, out, _TOPK_SCHEMA)
 
 
@@ -1375,8 +1374,6 @@ def _stats_facet(spark, res, gens, facet_col: str, round_to: int) -> DataFrame:
             a[3] = min(a[3], float(mnv))
             a[4] = max(a[4], float(mxv))
     vals = [v for v in _null_first_sorted(acc) if acc[v][0] > 0]
-    if not vals:
-        return empty_df(spark, schema)
     rows = [_stats_row(*acc[v], round_to) for v in vals]
     return local_relation(
         spark,
@@ -1419,8 +1416,6 @@ def _percentiles(spark, res, percentiles: list[float]) -> DataFrame:
         if idx < len(values):
             out_p.append(p)
             out_v.append(np.int64(values[idx]))
-    if not out_p:
-        return empty_df(spark, schema)
     return local_relation(
         spark, {"pct": np.array(out_p, np.float64), "value": out_v}, schema
     )
@@ -3171,66 +3166,16 @@ def fetch_docs(
 ) -> DataFrame:
     """Stored-field retrieval from the packed index — the
     ir.document(docNum) analogue (MoreLikeThis.java:1113-1145): rows
-    for a bounded doc-id set (a top-k result page) from the
-    seg-partitioned docstore. The seg-isin predicate prunes to the
-    segments actually hit (partition pruning) and the doc_id filter
-    pushes into those files' row groups — a point-read pattern, never
-    a corpus scan."""
-    gens = _as_gens(seg_index)
-    for _, si in gens:
-        if not si.store_cols:
-            raise ValueError(
-                "packed index has no docstore — rebuild with "
-                "build_segments(..., store_cols=[...])"
-            )
-    if len({si.store_cols for _, si in gens}) > 1:
-        raise ValueError(
-            "fetch_docs across generations needs identical store_cols; "
-            f"got {[si.store_cols for _, si in gens]}"
-        )
-    ids = [int(d) for d in doc_ids]
-    out = None
-    for _, si in gens:
-        # liveDocs: tombstoned ids are not retrievable (driver-side
-        # bounded read of the tombstone streams, same contract as the
-        # sidecar; post-compaction the docstore rows are gone anyway)
-        tombs = _load_tombstones(si.path)
-        if tombs:
-            dead = set(
-                int(x) for v in tombs.values() for x in v
-            )
-            ids_g = [d for d in ids if d not in dead]
-        else:
-            ids_g = ids
-        if not ids_g:
-            continue
-        # generations hold disjoint doc sets: each point read prunes to
-        # the segments the ids COULD live in; ids outside this
-        # generation's doc range just match nothing
-        segs = sorted({d // si.seg_size for d in ids_g})
-        base = os.path.join(si.path, "docstore")
-        rd = spark.read.option("basePath", base)
-        if si.store_schema:
-            # explicit schema (recorded at build time): skips the
-            # footer-inference Spark job a bare parquet read pays —
-            # the point read stays a single job
-            rd = rd.schema(si.store_schema + ", seg int, group int")
-        f = (
-            rd.parquet(base)
-            .filter(F.col("seg").isin(segs))
-            .filter(F.col("doc_id").isin(ids_g))
-            .drop("seg", "group")
-        )
-        out = f if out is None else out.unionByName(f)
-    if out is None:
-        # every requested id was tombstoned: empty frame, stable schema
-        _, si0 = gens[0]
-        schema = (
-            si0.store_schema
-            or ("doc_id bigint, " + ", ".join(f"{c} string" for c in si0.store_cols))
-        )
-        return empty_df(spark, schema)
-    return out
+    for a bounded doc-id set (a top-k result page), tombstoned ids
+    excluded, in doc_id order. The rows are ``fetch_docs_local``'s
+    driver-side point read (zero Spark jobs), held under the docstore
+    DDL recorded at build; an index built before the DDL was recorded
+    keeps the parquet types of what it read."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    tbl = _docstore_read(seg_index, doc_ids)
+    schema = _as_gens(seg_index)[0][1].store_schema
+    return local_relation(spark, tbl, schema or from_arrow_schema(tbl.schema))
 
 
 def fetch_docs_local(seg_index, doc_ids: list[int], columns: list[str] | None = None):
@@ -3246,13 +3191,21 @@ def fetch_docs_local(seg_index, doc_ids: list[int], columns: list[str] | None = 
     and paying a Spark job (scheduling + stage round-trip, ~0.3 s on
     a loaded driver) for a point read of a handful of rows was the
     difference between a 3-job and a 2-job /uf (BENCH/BASELINE.md
-    r06). The dataset is constructed from the EXPLICIT
-    group=<seg%groups>/seg=<seg> directories derived from the
-    requested ids — never the docstore root, whose recursive listing
-    would be O(total segments) driver work on a large index. Returns
-    a pandas frame (doc_id + requested columns), tombstoned ids
-    excluded — identical rows to ``fetch_docs(...).toPandas()``
-    (tests/test_segments_v3.py)."""
+    r06). Returns a pandas frame (doc_id + requested columns),
+    tombstoned ids excluded, rows in doc_id order — the rows
+    ``fetch_docs`` holds."""
+    return _docstore_read(seg_index, doc_ids, columns).to_pandas()
+
+
+def _docstore_read(seg_index, doc_ids, columns=None):
+    """The live docstore rows for ``doc_ids`` as an Arrow table, in
+    doc_id order (with no live row, a long doc_id and string columns,
+    the schema an index built before its docstore DDL was recorded
+    answers under). The dataset is constructed from the EXPLICIT
+    group=<seg%groups>/seg=<seg> directories derived from the requested
+    ids — never the docstore root, whose recursive listing would be
+    O(total segments) driver work on a large index."""
+    import pyarrow as pa
     import pyarrow.dataset as ds
 
     gens = _as_gens(seg_index)
@@ -3262,17 +3215,21 @@ def fetch_docs_local(seg_index, doc_ids: list[int], columns: list[str] | None = 
                 "packed index has no docstore — rebuild with "
                 "build_segments(..., store_cols=[...])"
             )
-    # same contract as fetch_docs: mixed store_cols across generations
-    # would pd.concat into a silent NaN-filled column union
+    # mixed store_cols across generations would concatenate into a
+    # silent null-filled column union
     if len({si.store_cols for _, si in gens}) > 1:
         raise ValueError(
-            "fetch_docs_local across generations needs identical "
+            "fetch_docs across generations needs identical "
             f"store_cols; got {[si.store_cols for _, si in gens]}"
         )
+    cols = ["doc_id"] + [
+        c for c in (columns or list(gens[0][1].store_cols)) if c != "doc_id"
+    ]
     ids = [int(d) for d in doc_ids]
-    frames = []
-    for _, si in gens:
-        # the index's reader holds the tombstone stream and manifest
+    tables = []
+    for _, si in gens if ids else []:
+        # the index's reader holds the tombstone stream and manifest;
+        # liveDocs: tombstoned ids are not retrievable
         rd = si.reader()
         tombs = _tombstones_by_seg(rd.stream("deletes"))
         if tombs:
@@ -3297,26 +3254,14 @@ def fetch_docs_local(seg_index, doc_ids: list[int], columns: list[str] | None = 
                     for f in sorted(os.listdir(d))
                     if f.endswith(".parquet")
                 )
-        if not files:
-            continue
-        cols = ["doc_id"] + [
-            c for c in (columns or list(si.store_cols)) if c != "doc_id"
-        ]
-        dset = ds.dataset(files, format="parquet")
-        tbl = dset.to_table(
-            columns=cols, filter=ds.field("doc_id").isin(ids_g)
-        )
-        frames.append(tbl.to_pandas())
-    import pandas as pd
-
-    if not frames:
-        _, si0 = gens[0]
-        cols = ["doc_id"] + [
-            c for c in (columns or list(si0.store_cols)) if c != "doc_id"
-        ]
-        return pd.DataFrame({c: [] for c in cols})
-    out = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-    return out.sort_values("doc_id", kind="stable").reset_index(drop=True)
+        if files:
+            tables.append(ds.dataset(files, format="parquet").to_table(
+                columns=cols, filter=ds.field("doc_id").isin(ids_g)
+            ))
+    if not tables:
+        types = {c: pa.string() for c in cols} | {"doc_id": pa.int64()}
+        return pa.schema(list(types.items())).empty_table()
+    return pa.concat_tables(tables, promote_options="permissive").sort_by("doc_id")
 
 
 def wand_facet_search(
@@ -4022,8 +3967,7 @@ def compact_packed(
         if seg_indexes
         else set()
     )
-    # carry the docstore read schema, projected to the carried columns
-    # (fetch_docs on the compacted index keeps its one-job point read)
+    # carry the docstore schema, projected to the carried columns
     st_schema = None
     if st_common:
         src = next((s.store_schema for s in seg_indexes if s.store_schema), None)

@@ -16,8 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..session import empty_df, local_relation
+from ..session import _schemas, local_relation
 from ..index.builder import InvertedIndex
 from .feedback import unsupervised_feedback
 from .mlt import (
@@ -225,6 +226,7 @@ def packed_select_handler(
              "facet_<field>": (value, cnt), ...}.
     """
     from ..index.segments import (
+        _TOPK_SCHEMA,
         _boolean_top,
         _relation,
         fetch_docs_local,
@@ -250,15 +252,10 @@ def packed_select_handler(
             ["score", "doc_id"], ascending=[False, True]
         )
         if first.store_schema:
-            extra = ", ".join(
-                c
-                for c in first.store_schema.split(", ")
-                if not c.startswith("doc_id ")
-            )
-            schema = "doc_id bigint, score double" + (
-                ", " + extra if extra else ""
-            )
-            docs = local_relation(spark, merged, schema)
+            docs = local_relation(spark, merged, StructType(
+                _schemas(_TOPK_SCHEMA)[0].fields
+                + [f for f in _schemas(first.store_schema)[0] if f.name != "doc_id"]
+            ))
         else:
             docs = spark.createDataFrame(merged)
     else:
@@ -451,8 +448,8 @@ def packed_mlt_handler(
     )
     # the answer is a pre-sorted (score desc, doc_id asc) driver-side
     # frame of <= k+|seeds| rows on both tiers: the seed-exclusion +
-    # re-top-k tail is a mask and a slice, and the page crosses into
-    # the JVM once
+    # re-top-k tail is a mask and a slice, and the page is held on the
+    # driver (it crosses into the JVM only on a Spark use)
     hits = top[~top["doc_id"].isin(seed_ids)].head(k)
     out: dict[str, DataFrame] = {
         "docs": _relation(spark, hits), "interesting_terms": terms,
@@ -464,37 +461,23 @@ def packed_mlt_handler(
                 f"packed /mlt facets need stored columns {missing} — "
                 "rebuild with build_segments(..., store_cols=[...])"
             )
-        ids = hits["doc_id"].tolist()
         # facets count over the RESULT page (DiceMoreLikeThisHandler
         # .java:263-271): k rows — one DRIVER-SIDE docstore point read
         # covers all requested fields, zero Spark jobs
-        page = (
-            fetch_docs_local(seg_index, ids, columns=list(facet_fields))
-            if ids
-            else None
-        )
+        ids = hits["doc_id"].tolist()
+        page = fetch_docs_local(seg_index, ids, columns=list(facet_fields))
         # facet column types come from the docstore's recorded DDL —
         # inference would fail on an all-NULL page column and would
         # lose the declared type in general
-        store_types = {}
-        if first.store_schema:
-            for fld in first.store_schema.split(", "):
-                n_, _, t_ = fld.partition(" ")
-                store_types[n_] = t_
+        store = _schemas(first.store_schema)[0] if first.store_schema else None
         for field in facet_fields:
-            ddl = f"{field} {store_types.get(field, 'string')}, cnt long"
-            if page is None:
-                out[f"facet_{field}"] = empty_df(spark, ddl)
-            else:
-                counts = (
-                    page.groupby(field, dropna=False)
-                    .size()
-                    .reset_index(name="cnt")
-                )
-                counts[field] = counts[field].astype(object).where(
-                    counts[field].notna(), None
-                )
-                out[f"facet_{field}"] = local_relation(spark, counts, ddl)
+            ftype = store[field].dataType.simpleString() if store else "string"
+            ddl = f"{field} {ftype}, cnt long"
+            counts = page.groupby(field, dropna=False).size().reset_index(name="cnt")
+            counts[field] = counts[field].astype(object).where(
+                counts[field].notna(), None
+            )
+            out[f"facet_{field}"] = local_relation(spark, counts, ddl)
     return out
 
 

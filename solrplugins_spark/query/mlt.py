@@ -31,7 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import empty_df
+from ..session import empty_df, local_relation
 from ..index.builder import InvertedIndex
 from .scorer import BM25, Similarity, score_terms
 
@@ -155,13 +155,9 @@ def _interesting_terms_driver(
         ).select(index.text_col).collect()
     ]
     counts = seed_term_counts(texts, index.tok_kwargs)
-    if not counts:
-        return empty_df(spark, out_schema)
     df_map = resolve_df(index, sorted(counts))
     out = mlt_queue(counts, df_map, index.n_docs, params, round_to)
-    if len(out) == 0:
-        return empty_df(spark, out_schema)
-    return spark.createDataFrame(out, schema=out_schema)
+    return local_relation(spark, out, out_schema)
 
 
 def interesting_terms(
@@ -305,15 +301,11 @@ def interesting_terms_text(
     out_schema = "term string, tf long, df long, score double, raw_weight double"
     texts = [like_text] if isinstance(like_text, str) else list(like_text)
     counts = seed_term_counts(texts, index.tok_kwargs)
-    if not counts:
-        return empty_df(spark, out_schema)
     df_map = {
         t: d for t, d in resolve_df(index, sorted(counts)).items() if d > 0
     }
     out = mlt_queue(counts, df_map, index.n_docs, params, round_to)
-    if len(out) == 0:
-        return empty_df(spark, out_schema)
-    return spark.createDataFrame(out, schema=out_schema)
+    return local_relation(spark, out, out_schema)
 
 
 def more_like_text(

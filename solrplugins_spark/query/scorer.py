@@ -178,12 +178,6 @@ PayloadIdf = Similarity(
 )
 
 
-def _query_terms_df(spark, terms_boosts: list[tuple[str, float]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(t, float(b)) for t, b in terms_boosts], "term string, boost double"
-    )
-
-
 def score_terms_df(
     index: InvertedIndex,
     boosts_df: DataFrame,

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory tuned for the engine, and the held answers
+(``local_relation``) every bounded driver-side answer is returned as.
 
 Local mode is a correctness harness; the configs below are the ones
 that matter at cluster scale too (AQE, Arrow, shuffle partitions).
@@ -8,9 +9,20 @@ from __future__ import annotations
 
 import functools
 import os
+import threading
 import warnings
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
+from pyspark.sql.types import AtomicType, StructType, TimestampType, _parse_datatype_string
+
+try:
+    from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+except ImportError:  # PySpark < 4.0: answers are built eagerly (_hold)
+    _ClassicDataFrame = object
 
 
 def get_spark(
@@ -87,7 +99,13 @@ def get_spark(
     return spark
 
 
-_FALLBACK_WARNED = False
+_WARNED: set[str] = set()
+
+
+def _warn_once(key: str, message: str) -> None:
+    if key not in _WARNED:
+        _WARNED.add(key)
+        warnings.warn(message, RuntimeWarning, stacklevel=3)
 
 
 @functools.lru_cache(maxsize=256)
@@ -95,72 +113,140 @@ def _schemas(ddl: str):
     """(StructType, Arrow schema) for a DDL string, parsed once per
     process: ``createDataFrame(..., schema="<ddl>")`` re-parses the
     string in the JVM on every call (~10 ms a relation, measured)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-
     struct = _parse_datatype_string(ddl)
     return struct, to_arrow_schema(struct)
 
 
-def local_relation(spark: SparkSession, data, schema):
-    """A bounded driver-side answer as a DataFrame that plans as
-    ``LocalRelation``: it collects on the driver with no Spark job.
+class _Held(_ClassicDataFrame):
+    """A bounded answer held on the driver as an Arrow table (``_hold``).
+    ``collect``, ``toPandas``, ``count``, ``take``/``head``/``first``,
+    ``isEmpty``, ``columns``, ``schema``, ``dtypes`` and a ``select`` of
+    column names read the table, with no py4j call. Any other operation
+    reads ``_jdf``, built on that first read, once, by ``_eager``."""
 
-    The one place a local-tier answer crosses into the JVM. ``data`` is
-    a pandas frame, a dict of columns, or None for an empty relation;
-    ``schema`` is a DDL string (its StructType and Arrow schema are
-    parsed once and cached) or a StructType. The rows become an Arrow
-    table with that schema, and the table becomes the relation, so the
-    JVM neither re-parses a schema nor infers one.
+    def __getattr__(self, name: str):
+        if name != "_jdf":
+            return super().__getattr__(name)
+        d = self.__dict__
+        with d["_lock"]:
+            if "_jdf" not in d:
+                d["_jdf"] = _eager(d["_session"], d["_table"], d["_struct"])._jdf
+        return d["_jdf"]
 
-    ``spark.createDataFrame([], schema)`` would plan a LogicalRDD whose
-    every ``collect()`` schedules one job (measured 0.30 s/1 job ->
-    0.024 s/0 jobs for an empty answer). If this PySpark lacks the
-    Arrow-table path, the relation is built by ``createDataFrame`` from
-    the rows instead (an empty one then takes the RDD path), with one
-    warning per process.
-    """
-    global _FALLBACK_WARNED
+    @property
+    def schema(self):
+        return self._schema
+
+    def collect(self):
+        return self.take(self._table.num_rows)
+
+    def take(self, num: int):
+        if num < 0:  # Spark's limit raises
+            return super().take(num)
+        return ArrowTableToRowsConversion.convert(self._table.slice(0, num), self._struct)
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def isEmpty(self) -> bool:
+        return self._table.num_rows == 0
+
+    def select(self, *cols):
+        names = cols[0] if len(cols) == 1 and isinstance(cols[0], list) else cols
+        fields = {f.name: f for f in self._struct.fields}
+        if not names or not all(isinstance(c, str) and c in fields for c in names):
+            return super().select(*cols)
+        return local_relation(self._session, self._table,
+                              StructType([fields[c] for c in names]))
+
+    def toPandas(self):
+        # PandasConversionMixin.toPandas's Arrow path; a timestamp or
+        # nested column needs the session's time zone or struct mode
+        # (py4j reads), so it takes the mixin (fed by _collect_as_arrow)
+        fields = self._struct.fields
+        if not fields or not all(isinstance(f.dataType, AtomicType) and not
+                                 isinstance(f.dataType, TimestampType) for f in fields):
+            return super().toPandas()
+        pdf = self._table.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+        return pd.concat([_create_converter_to_pandas(f.dataType, f.nullable)(pser)
+                          for (_, pser), f in zip(pdf.items(), fields)], axis="columns")
+
+    def _collect_as_arrow(self, split_batches=False, empty_list_if_zero_records=True):
+        if self._table.num_rows or empty_list_if_zero_records:
+            return [b for b in self._table.to_batches() if b.num_rows]
+        return [pa.RecordBatch.from_pylist([], schema=self._table.schema)]
+
+
+def _hold(spark: SparkSession, table, struct):
+    """``table`` held as a DataFrame of ``struct``; None where this
+    PySpark's classic constructor does not set ``_session`` and
+    ``_jdf`` (another layout, or Spark Connect)."""
+    if _ClassicDataFrame is object or getattr(spark, "_jsparkSession", None) is None:
+        return None
+    df = object.__new__(_Held)
     try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+        _ClassicDataFrame.__init__(df, None, spark)
+    except (TypeError, AttributeError):
+        return None
+    d = df.__dict__
+    if d.pop("_jdf", 0) is not None or d.get("_session") is not spark:
+        return None
+    # _schema is a copy: the answer hands it to its callers
+    d.update(_table=table, _struct=struct, _lock=threading.Lock(),
+             _schema=StructType(list(struct.fields)))
+    return df
 
-        if isinstance(schema, StructType):
-            struct, arrow_schema = schema, to_arrow_schema(schema)
-        else:
-            struct, arrow_schema = _schemas(schema)
-        if data is None:
-            table = arrow_schema.empty_table()
-        elif isinstance(data, dict):
-            table = pa.table(data, schema=arrow_schema)
-        else:
-            table = pa.Table.from_pandas(
-                data, schema=arrow_schema, preserve_index=False
-            )
-        # a copy: the DataFrame hands its schema object to its callers
-        return spark.createDataFrame(table, schema=StructType(struct.fields))
-    except (ImportError, TypeError) as e:
-        if not _FALLBACK_WARNED:
-            _FALLBACK_WARNED = True
-            warnings.warn(
-                "local_relation: no Arrow-table DataFrame path "
-                f"({type(e).__name__}: {e}); answers are built with "
-                "createDataFrame from rows, and empty ones schedule a "
-                "Spark job on collect",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        if data is None:
-            data = []
-        elif isinstance(data, dict):
-            import pandas as pd
 
-            data = pd.DataFrame(data)
-        return spark.createDataFrame(data, schema)
+def _eager(spark: SparkSession, table, struct):
+    """``table`` as a ``LocalRelation`` DataFrame: where an answer
+    crosses into the JVM (``createDataFrame([], schema)`` would plan a
+    LogicalRDD whose every ``collect()`` schedules a job). Without the
+    Arrow-table path the rows go through ``createDataFrame`` (an empty
+    answer then takes the RDD path), with one warning per process."""
+    schema = StructType(list(struct.fields))
+    try:
+        return spark.createDataFrame(table, schema=schema)
+    except TypeError as e:
+        _warn_once("rows", "local_relation: no Arrow-table DataFrame path "
+                   f"({type(e).__name__}: {e}); answers are built with "
+                   "createDataFrame from rows, and empty ones schedule a "
+                   "Spark job on collect")
+        return spark.createDataFrame(list(zip(*table.to_pydict().values())), schema)
+
+
+def local_relation(spark: SparkSession, data, schema):
+    """A bounded driver-side answer as a DataFrame, held on the driver
+    (``_Held``): it crosses into the JVM on its first Spark use.
+
+    ``data`` is a pandas frame, a dict of columns, an Arrow table, or
+    None for an empty answer; ``schema`` is a DDL string (parsed once
+    and cached) or a StructType. Frames and dicts become an Arrow table
+    column by column under the flat engine's rule: NaN stays NaN in a
+    floating column and None is null; elsewhere pandas' missing values
+    are null. Where this PySpark cannot hold an answer, it is built at
+    once (``_eager``), with one warning per process.
+    """
+    if isinstance(schema, StructType):
+        struct, arrow_schema = schema, to_arrow_schema(schema)
+    else:
+        struct, arrow_schema = _schemas(schema)
+    if data is None:
+        table = arrow_schema.empty_table()
+    elif isinstance(data, pa.Table):
+        table = data.select(arrow_schema.names).cast(arrow_schema)
+    else:
+        table = pa.table([
+            pa.array(data[f.name], f.type, from_pandas=not pa.types.is_floating(f.type))
+            for f in arrow_schema
+        ], schema=arrow_schema)
+    held = _hold(spark, table, struct)
+    if held is None:
+        _warn_once("held", "local_relation: no classic DataFrame to hold answers "
+                   "in; every answer crosses into the JVM when it is built")
+        held = _eager(spark, table, struct)
+    return held
 
 
 def empty_df(spark: SparkSession, schema):
-    """Empty DataFrame that plans as ``LocalRelation <empty>`` (see
-    ``local_relation``)."""
+    """An empty held answer (see ``local_relation``)."""
     return local_relation(spark, None, schema)

@@ -8,8 +8,8 @@ with a (score, doc_id) cursor must tile the full deterministic
 flat and packed paths, through score ties at the page boundary, and
 across multiple generations with global stats.
 
-The packed kernel applies the cursor BEFORE the per-segment top-k cut
-(segments.py::_segment_topk_sim), so every page costs k rows per
+The packed top-k collector applies the cursor BEFORE the per-segment
+top-k cut (segments.py::_collect_topk), so every page costs k rows per
 segment at any depth; these tests page to exhaustion to prove no doc
 is lost to an earlier page's truncation.
 """

@@ -121,10 +121,13 @@ def test_local_relation_fallback_warns_once(spark, monkeypatch):
         return real(self, data, *args, **kwargs)
 
     monkeypatch.setattr(type(spark), "createDataFrame", no_arrow_tables)
-    monkeypatch.setattr(session, "_FALLBACK_WARNED", False)
+    monkeypatch.setattr(session, "_WARNED", set())
+    # a held answer crosses into the JVM on its first Spark use
+    df = empty_df(spark, "doc_id long, score double")
     with pytest.warns(RuntimeWarning, match="Arrow-table"):
-        df = empty_df(spark, "doc_id long, score double")
+        df._jdf
     assert df.collect() == []
+    assert df.orderBy("doc_id").collect() == []
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        empty_df(spark, "doc_id long, score double")  # warned once already
+        empty_df(spark, "doc_id long, score double")._jdf  # warned once already

@@ -7,6 +7,8 @@ rank-identical to the flat index (round-1 verdict item #2):
 - RecursiveDescentParser.java:90-107 — quoted-phrase semantics.
 """
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -668,9 +670,20 @@ def test_packed_docstore_fetch(spark, tiny_corpus, tmp_path):
         want.reset_index(drop=True),
         check_dtype=False,
     )
-    # partition pruning reaches the plan
-    plan = fetch_docs(spark, seg, ids)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "seg" in plan
+    # the rows a partition-pruned Spark point read of the docstore
+    # returns, column order and types included
+    base = os.path.join(seg.path, "docstore")
+    scan = (
+        spark.read.option("basePath", base)
+        .schema(seg.store_schema + ", seg int, group int")
+        .parquet(base)
+        .filter(F.col("seg").isin(sorted({d // seg.seg_size for d in ids})))
+        .filter(F.col("doc_id").isin(ids))
+        .drop("seg", "group")
+    )
+    held = fetch_docs(spark, seg, ids)
+    assert held.schema == scan.schema
+    assert held.collect() == scan.orderBy("doc_id").collect()
 
     seg_plain = build_segments(idx, str(tmp_path / "plain"), seg_size=64, groups=2)
     with pytest.raises(ValueError, match="docstore"):
@@ -826,13 +839,13 @@ def test_packed_feedback_multi_generation(spark, tiny_corpus, tiny_corpus_pd, tm
     assert np.allclose(got["score"], want["score"], atol=1e-9)
 
 
-def test_docstore_schema_recorded_and_point_read_is_one_job(
+def test_docstore_schema_recorded_and_point_read_runs_no_job(
     spark, tiny_corpus, tmp_path
 ):
     """build_segments records the docstore DDL in the manifest so
-    fetch_docs passes an explicit read schema — the point read is ONE
-    Spark job (no parquet footer-inference job), load() round-trips
-    it, and compaction carries the projected schema."""
+    fetch_docs answers under it — the point read is driver-side, ZERO
+    Spark jobs to fetch and collect — load() round-trips it, and
+    compaction carries the projected schema."""
     from solrplugins_spark.index.segments import (
         SegmentIndex,
         build_segments,
@@ -855,7 +868,11 @@ def test_docstore_schema_recorded_and_point_read_is_one_job(
         "fd_probe",
     )
     assert len(rows) == 2
-    assert n == 1, n
+    assert n == 0, n
+    from pyspark.sql.types import _parse_datatype_string
+
+    assert fetch_docs(spark, seg, [0, 1]).schema == _parse_datatype_string(
+        seg.store_schema)
 
     compacted = compact_packed(spark, [seg], str(tmp_path / "ss_c"))
     assert compacted.store_schema == seg.store_schema
