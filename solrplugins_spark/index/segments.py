@@ -41,6 +41,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -203,6 +204,85 @@ def _write_manifest(path: str, m: dict) -> None:
     os.replace(tmp, _manifest_path(path))
 
 
+_POSTINGS_COLS = [f.split()[0] for f in POSTINGS_SCHEMA.split(", ")]
+
+
+def _postings_row(
+    seg: int, term: str, docs: np.ndarray, tfs: np.ndarray,
+    positions: list | None = None, payloads: np.ndarray | None = None,
+) -> tuple:
+    """One POSTINGS_SCHEMA row: a (seg, term) posting list with its
+    block skip data and, when given, its positions/payload
+    sub-streams — the one postings encoder of build_segments and
+    compact_packed."""
+    data, block_last, block_max, block_off = encode_postings(docs, tfs)
+    pos_off = pos_data = pay_data = None
+    if positions is not None:
+        pos_data, po = encode_positions(positions, tfs)
+        pos_off = po.tolist()
+    if payloads is not None:
+        pay_data = encode_payloads(payloads)
+    return (
+        int(seg), term, len(docs), int(tfs.sum()),
+        block_last.tolist(), block_max.tolist(),
+        block_off.tolist(), data, pos_off, pos_data, pay_data,
+    )
+
+
+def _encode_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Encode every (seg, term) group in one pandas frame (rows
+    already sorted by seg, term, doc_id). Optional `positions` /
+    `payload` input columns become the v3 sub-streams."""
+    has_pos = "positions" in pdf.columns
+    has_pay = "payload" in pdf.columns
+    return pd.DataFrame(
+        [
+            _postings_row(
+                seg, term, g["doc_id"].to_numpy(), g["tf"].to_numpy(),
+                list(g["positions"]) if has_pos else None,
+                g["payload"].to_numpy() if has_pay else None,
+            )
+            for (seg, term), g in pdf.groupby(["seg", "term"], sort=False)
+        ],
+        columns=_POSTINGS_COLS,
+    )
+
+
+def _dense_row(seg: int, doc_lo: int, dense: np.ndarray) -> pd.DataFrame:
+    """One DOCLEN_SCHEMA row: a segment's dense per-doc values as one
+    varint stream — the doclens, docvalues and ordinal streams of
+    build_segments and compact_packed."""
+    return pd.DataFrame(
+        {
+            "seg": [seg],
+            "doc_lo": [doc_lo],
+            "n": [len(dense)],
+            "dl_data": [varint_encode(dense.astype(np.uint64)).tobytes()],
+        }
+    )
+
+
+def _encode_dense(pdf: pd.DataFrame, col: str, seg_size: int) -> pd.DataFrame:
+    """One segment's (seg, doc_id, ``col``) rows as its dense stream
+    (_dense_row): docs without a row (no tokens, no value) hold 0."""
+    seg = int(pdf["seg"].iloc[0])
+    doc_lo = seg * seg_size
+    docs = pdf["doc_id"].to_numpy()
+    vals = pdf[col].to_numpy()
+    if not np.issubdtype(vals.dtype, np.integer):
+        raise ValueError(
+            f"docvalues column {col!r} must be integer-typed "
+            f"(got {vals.dtype}) — floats would silently "
+            "truncate and diverge from the flat range filter; "
+            "cast explicitly or scale to integers first"
+        )
+    assert vals.min() >= 0, f"value_cols must be non-negative: {col}"
+    n = int(docs.max() - doc_lo + 1) if len(docs) else 0
+    dense = np.zeros(n, np.uint64)
+    dense[docs - doc_lo] = vals.astype(np.uint64)
+    return _dense_row(seg, doc_lo, dense)
+
+
 def build_segments(
     index: InvertedIndex,
     out_path: str,
@@ -338,39 +418,6 @@ def build_segments(
     with_seg = index.postings.withColumn("seg", seg_col)
     dl_with_seg = index.doclen.withColumn("seg", seg_col)
 
-    def _encode_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Encode every (seg, term) group in one pandas frame (rows
-        already sorted by seg, term, doc_id). Optional `positions` /
-        `payload` input columns become the v3 sub-streams."""
-        has_pos = "positions" in pdf.columns
-        has_pay = "payload" in pdf.columns
-        rows = []
-        for (seg, term), g in pdf.groupby(["seg", "term"], sort=False):
-            docs = g["doc_id"].to_numpy()
-            tfs = g["tf"].to_numpy()
-            data, block_last, block_max, block_off = encode_postings(docs, tfs)
-            pos_off, pos_data, pay_data = None, None, None
-            if has_pos:
-                pos_data, po = encode_positions(list(g["positions"]), tfs)
-                pos_off = po.tolist()
-            if has_pay:
-                pay_data = encode_payloads(g["payload"].to_numpy())
-            rows.append(
-                (
-                    int(seg), term, len(docs), int(tfs.sum()),
-                    block_last.tolist(), block_max.tolist(),
-                    block_off.tolist(), data, pos_off, pos_data, pay_data,
-                )
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "seg", "term", "df", "cf",
-                "block_last", "block_max", "block_off", "data",
-                "pos_off", "pos_data", "pay_data",
-            ],
-        )
-
     def encode_partition(batches):
         """ONE python stage per partition: Arrow batches can split a
         (seg, term) group, so the trailing group of each batch is
@@ -391,23 +438,6 @@ def build_segments(
                 yield _encode_rows(head)
         if carry is not None and len(carry):
             yield _encode_rows(carry)
-
-    def encode_doclens(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["seg"].iloc[0])
-        doc_lo = seg * seg_size
-        docs = pdf["doc_id"].to_numpy()
-        dls = pdf["dl"].to_numpy()
-        n = int(docs.max() - doc_lo + 1) if len(docs) else 0
-        dense = np.zeros(n, np.uint64)  # docs with no tokens keep dl=0
-        dense[docs - doc_lo] = dls.astype(np.uint64)
-        return pd.DataFrame(
-            {
-                "seg": [seg],
-                "doc_lo": [doc_lo],
-                "n": [n],
-                "dl_data": [varint_encode(dense).tobytes()],
-            }
-        )
 
     # lineage doc counts for every pending group in ONE aggregation —
     # counting inside the loop cost one full doclen scan PER GROUP
@@ -459,40 +489,10 @@ def build_segments(
         def _write_doclens(g=g):
             dg = dl_with_seg.filter(F.col("seg") % groups == g)
             dg.groupBy("seg").applyInPandas(
-                encode_doclens, schema=DOCLEN_SCHEMA
+                lambda pdf: _encode_dense(pdf, "dl", seg_size), schema=DOCLEN_SCHEMA
             ).write.mode("overwrite").partitionBy("seg").parquet(
                 os.path.join(out_path, "doclens", f"group={g}")
             )
-
-        def _make_encode_values(_col: str):
-            # factory, NOT a default arg: applyInPandas dispatches on
-            # arity, and a 2-arg function would be called as (key, pdf)
-            def encode_values(pdf: pd.DataFrame) -> pd.DataFrame:
-                seg = int(pdf["seg"].iloc[0])
-                v_lo = seg * seg_size
-                docs = pdf["doc_id"].to_numpy()
-                vals = pdf[_col].to_numpy()
-                if not np.issubdtype(vals.dtype, np.integer):
-                    raise ValueError(
-                        f"docvalues column {_col!r} must be integer-typed "
-                        f"(got {vals.dtype}) — floats would silently "
-                        "truncate and diverge from the flat range filter; "
-                        "cast explicitly or scale to integers first"
-                    )
-                assert vals.min() >= 0, f"value_cols must be non-negative: {_col}"
-                n = int(docs.max() - v_lo + 1) if len(docs) else 0
-                dense = np.zeros(n, np.uint64)
-                dense[docs - v_lo] = vals.astype(np.uint64)
-                return pd.DataFrame(
-                    {
-                        "seg": [seg],
-                        "doc_lo": [v_lo],
-                        "n": [n],
-                        "dl_data": [varint_encode(dense).tobytes()],
-                    }
-                )
-
-            return encode_values
 
         def _write_values(vc, g=g):
             (
@@ -500,7 +500,10 @@ def build_segments(
                 .withColumn("seg", seg_col)
                 .filter(F.col("seg") % groups == g)
                 .groupBy("seg")
-                .applyInPandas(_make_encode_values(vc), schema=DOCLEN_SCHEMA)
+                .applyInPandas(
+                    lambda pdf: _encode_dense(pdf, vc, seg_size),
+                    schema=DOCLEN_SCHEMA,
+                )
                 .write.mode("overwrite")
                 .partitionBy("seg")
                 .parquet(os.path.join(out_path, "docvalues", vc, f"group={g}"))
@@ -534,7 +537,10 @@ def build_segments(
                 ords.withColumn("seg", seg_col)
                 .filter(F.col("seg") % groups == g)
                 .groupBy("seg")
-                .applyInPandas(_make_encode_values("_ord"), schema=DOCLEN_SCHEMA)
+                .applyInPandas(
+                    lambda pdf: _encode_dense(pdf, "_ord", seg_size),
+                    schema=DOCLEN_SCHEMA,
+                )
                 .write.mode("overwrite")
                 .partitionBy("seg")
                 .parquet(
@@ -627,8 +633,10 @@ def _as_gens(seg_index) -> list:
     """Normalize a SegmentIndex-or-generation-list into the
     [(gen_id, SegmentIndex)] shape every multi-generation surface
     consumes — the ONE place the generation contract (list = streamed
-    deltas with disjoint doc sets; gen ids namespace seg ids by
-    gen_id*1e6) is encoded."""
+    deltas with disjoint doc sets, gen_id = list position) is encoded.
+    The kernel input carries gen_id as its own ``gen`` column beside
+    ``seg``, so segment ids of any size never collide across
+    generations."""
     if isinstance(seg_index, (list, tuple)):
         return list(enumerate(seg_index))
     return [(0, seg_index)]
@@ -645,6 +653,17 @@ def _as_gens(seg_index) -> list:
 # bounded top-k never launches a distributed job. Above the byte budget
 # (head terms at 10^12 docs, large indexes) the kernels run as a Spark
 # stage, so the 100-TB plan shape is untouched.
+#
+# The kernel input is ONE Arrow table per (generation, segment), the
+# view a Lucene segment reader gives its scorer (postings, norms,
+# liveDocs): the _KERNEL_COLS rows of its term-pruned postings, its
+# doclens, tombstones and docvalues, tagged with ``gen`` and ``seg``.
+# Both tiers stack the same parts (_stack): the local tier from the
+# reader's pyarrow tables, the Spark strategies from the same scans,
+# handed to the kernels by groupBy("gen", "seg").applyInArrow or, in
+# one task, coalesce(1).mapInArrow and the local tier's split
+# (_by_segment). Partials, merges and finishes are Arrow tables too,
+# up to the held answer (local_relation).
 #
 # The tiers differ only in WHERE the kernels run. Every packed top-k
 # and boolean-family surface (bag search, cursor pages, /mlt and
@@ -671,9 +690,9 @@ def _as_gens(seg_index) -> list:
 # - contents: the pyarrow datasets of postings and termstats (discovered
 #   once), the byte size of every stream directory the estimate counts
 #   (stat-walked once, so a query walks nothing), and the doclens,
-#   tombstone, docvalues and ordinal streams plus the facet
-#   dictionaries, each read whole on its first use and kept while the
-#   bound below allows. The Spark strategies use the termstats dataset
+#   tombstone, docvalues and ordinal streams (Arrow tables) plus the
+#   facet dictionaries, each read whole on its first use and kept while
+#   the bound below allows. The Spark strategies use the termstats dataset
 #   and the dictionaries (the facet finishes map ordinals through them
 #   everywhere). Term-pruned postings stay a per-query read.
 # - memory bound: the streams and dictionaries that ALL open readers of
@@ -721,21 +740,18 @@ def _dir_bytes(path: str) -> int:
 
 
 def _read_stream(path: str, rel: str, hive: bool = True):
-    """(seg, doc_lo, data) columns of one dense per-segment stream
-    directory (doclens, deletes, docvalues, ordinal streams) read with
-    pyarrow; None if the directory is absent."""
+    """One dense per-segment stream directory (doclens, deletes,
+    docvalues, ordinal streams) as an Arrow table of (seg, doc_lo,
+    data) read with pyarrow; None if the directory is absent."""
     import pyarrow.dataset as ds
 
     d = os.path.join(path, rel)
     if not os.path.isdir(d):
         return None
-    tbl = ds.dataset(
+    return ds.dataset(
         d, format="parquet", partitioning="hive" if hive else None
-    ).to_table(columns=["seg", "doc_lo", "dl_data"])
-    return (
-        tbl.column("seg").to_numpy().astype(np.int64),
-        tbl.column("doc_lo").to_numpy().astype(np.int64),
-        tbl.column("dl_data").to_numpy(zero_copy_only=False),
+    ).to_table(columns=["seg", "doc_lo", "dl_data"]).rename_columns(
+        ["seg", "doc_lo", "data"]
     )
 
 
@@ -775,14 +791,8 @@ _HELD = _Held()
 
 
 def _stream_nbytes(st) -> int:
-    """In-memory bytes of one (seg, doc_lo, data) stream."""
-    if st is None:
-        return 0
-    seg, doc_lo, data = st
-    return (
-        seg.nbytes + doc_lo.nbytes + data.nbytes
-        + sum(sys.getsizeof(b) for b in data)
-    )
+    """In-memory bytes of one stream table (_read_stream)."""
+    return 0 if st is None else st.nbytes
 
 
 def _dict_nbytes(d: dict) -> int:
@@ -848,9 +858,9 @@ class _LocalReader:
         )
 
     def stream(self, rel: str):
-        """(seg, doc_lo, data) of one dense stream, read once if it
-        fits the _HELD pool; None if absent (the deletes stream of an
-        undeleted index)."""
+        """One dense stream's Arrow table (_read_stream), read once if
+        it fits the _HELD pool; None if absent (the deletes stream of
+        an undeleted index)."""
         return self._cached(
             ("stream", rel),
             lambda: _read_stream(self.path, rel, hive=rel != "deletes"),
@@ -945,16 +955,16 @@ def _serving_plan(
     same per-segment kernels then run one of three ways:
 
     - "local": the byte estimate is at most the local-tier budget
-      (_local_tier_budget; 0 never goes local). The kernel input is a
-      pandas frame read on the driver and the kernels run in-process:
+      (_local_tier_budget; 0 never goes local). The kernel input is an
+      Arrow table read on the driver and the kernels run in-process:
       zero Spark jobs.
     - "single_stage": a Spark strategy over at most
       SINGLE_STAGE_MAX_SEGMENTS segments whose estimate (if any) is at
-      most ONE_CORE_BYTES: coalesce(1) + mapInPandas scores every
+      most ONE_CORE_BYTES: coalesce(1) + mapInArrow scores every
       segment in one task — no exchange, one scheduling wave.
     - "exchange": everything else (many segments, or a frame too big
-      for one core): groupBy(seg).applyInPandas scores segments in
-      parallel across executors, the 10^12-doc shape.
+      for one core): groupBy("gen", "seg").applyInArrow scores
+      segments in parallel across executors, the 10^12-doc shape.
 
     Without a termstats sidecar there is no estimate, so the request
     takes a Spark strategy."""
@@ -984,137 +994,82 @@ def _gen_stats(gens: list[tuple[int, "SegmentIndex"]]) -> tuple[int, float]:
     return n, total_tokens / n if n else 0.0
 
 
-_UNIFIED_COLS = [
-    "seg", "_kind", "fld", "term", "df",
-    "block_last", "block_max", "block_off", "doc_lo", "data",
-]
+# The kernel input's columns, declared once (see the serving block
+# comment): a part fills only the columns it has (postings: term, df,
+# block_*, data; streams: doc_lo, data; docvalues: term = the column)
+# and _stack null-fills the rest. The sub-stream columns ride along
+# only when a phrase or a payload similarity reads them.
 _SUB_COLS = ["pos_off", "pos_data", "pay_data"]
+_KERNEL_COLS = [
+    "gen", "seg", "_kind", "fld", "term", "df",
+    "block_last", "block_max", "block_off", "doc_lo", "data",
+] + _SUB_COLS
 
 
-def _unified_part(
-    seg: np.ndarray, kind: str, field: str, with_subs: bool, cols: dict
-) -> pd.DataFrame:
-    """One _kind slice of the local unified frame in ONE constructor,
-    with every column of the Spark twin present (None-filled where that
-    kind has no data) so the kernels see the exact applyInPandas
-    shape. ``seg`` is already generation-namespaced."""
-    n = len(seg)
-    none = np.full(n, None, dtype=object)
-    data = {
-        "seg": seg,
-        "_kind": np.full(n, kind, dtype=object),
-        "fld": np.full(n, field, dtype=object),
-    }
-    for c in _UNIFIED_COLS[3:] + (_SUB_COLS if with_subs else []):
-        data[c] = cols.get(c, none)
-    return pd.DataFrame(data)
-
-
-def _unified_pdf(
-    gens: list[tuple[int, "SegmentIndex"]],
-    term_list: list[str],
-    with_subs: bool = False,
-    field: str = "",
-) -> pd.DataFrame:
-    """Local-tier twin of _unified_frame: the SAME rows (term-pruned
-    postings + doclens + tombstones, per-generation seg namespacing,
-    identical column set and within-segment row order — postings files
-    are (seg, term)-sorted) assembled driver-side from each index's
-    reader: the postings read is the only per-query I/O."""
-    import pyarrow.dataset as ds
-
-    if not term_list:
-        term_list = ["\x00none"]  # empty isin crashes pyarrow's set bind
-    post_cols = [
-        "seg", "term", "df", "block_last", "block_max", "block_off", "data",
-    ] + (_SUB_COLS if with_subs else [])
-    parts: list[pd.DataFrame] = []
-    for gen_id, si in gens:
-        tbl = si.reader(check=False).dataset("postings").to_table(
-            columns=post_cols, filter=ds.field("term").isin(term_list)
-        )
-        cols = {
-            c: tbl.column(c).to_numpy(zero_copy_only=False)
-            for c in post_cols[1:]
-        }
-        cols["df"] = cols["df"].astype(np.int64)
-        seg = tbl.column("seg").to_numpy().astype(np.int64)
-        parts.append(
-            _unified_part(seg + gen_id * 1_000_000, "post", field, with_subs, cols)
-        )
-    for kind, rel in (("dl", "doclens"), ("del", "deletes")):
-        for gen_id, si in gens:
-            st = si.reader(check=False).stream(rel)
-            if st is None:
-                continue
-            seg, doc_lo, data = st
-            parts.append(
-                _unified_part(
-                    seg + gen_id * 1_000_000, kind, field, with_subs,
-                    {"doc_lo": doc_lo, "data": data},
-                )
-            )
-    return pd.concat(parts, ignore_index=True)
-
-
-def _dv_pdf(
-    si: "SegmentIndex",
-    col: str,
-    with_subs: bool,
-    subdir: str = "docvalues",
-    seg_offset: int = 0,
-) -> pd.DataFrame:
-    """Local-tier twin of _dv_frame (one numeric/ordinal docvalues
-    stream shaped as _kind='dv' rows), from the index's reader."""
-    rel = _dv_rel(col, subdir)
-    st = si.reader(check=False).stream(rel)
-    if st is None:
-        raise FileNotFoundError(f"no {rel!r} stream under {si.path!r}")
-    seg, doc_lo, data = st
-    return _unified_part(
-        seg + seg_offset, "dv", "", with_subs,
-        {"term": np.full(len(seg), col, dtype=object), "doc_lo": doc_lo, "data": data},
-    )
-
-
-def _stack(frames: list, plan: _Plan):
-    """One unified frame from parts built for ``plan``."""
+def _stack(parts: list, plan: _Plan):
+    """One kernel input from parts built for ``plan``: an Arrow table
+    on the local tier, a DataFrame on the Spark strategies; columns a
+    part lacks are null, in _KERNEL_COLS order."""
     if plan.strategy == "local":
-        return pd.concat(frames, ignore_index=True)
-    return functools.reduce(DataFrame.unionByName, frames)
+        tbl = pa.concat_tables(parts, promote_options="default")
+        return tbl.select([c for c in _KERNEL_COLS if c in tbl.column_names])
+    df = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    )
+    return df.select(*[c for c in _KERNEL_COLS if c in df.columns])
 
 
-def _kernel_pdf(unified_pdf: pd.DataFrame, per_segment) -> pd.DataFrame | None:
-    """Run the per-segment kernel over a pandas unified frame, one
-    segment group at a time (what groupBy(seg).applyInPandas does):
-    the local tier's kernel pass, and the single-stage strategy's
-    inside its one task. None when no segment produced rows."""
+def _tagged(tbl, gen: int, kind: str, field: str, term: str | None = None):
+    """A local kernel-input part: ``tbl``'s columns with its gen,
+    _kind, fld (and a docvalues part's term) tags."""
+    n = tbl.num_rows
+    tags = {
+        "gen": pa.array(np.full(n, gen, np.int64)),
+        "_kind": pa.repeat(pa.scalar(kind), n),
+        "fld": pa.repeat(pa.scalar(field), n),
+    }
+    if term is not None:
+        tags["term"] = pa.repeat(pa.scalar(term), n)
+    for name, col in tags.items():
+        tbl = tbl.append_column(name, col)
+    return tbl
+
+
+def _by_segment(tbl, per_segment):
+    """Run ``per_segment`` over each (gen, seg) group of a kernel-input
+    table — what groupBy("gen", "seg").applyInArrow does — and stack
+    its non-empty outputs; None when there are none. The local tier's
+    kernel pass, and the single-stage strategy's inside its one task.
+    Groups run in (gen, seg) order, each with its rows in input order
+    (np.lexsort is stable)."""
     outs = []
-    if len(unified_pdf):
-        for _, g in unified_pdf.groupby("seg", sort=False):
-            out = per_segment(g.reset_index(drop=True))
-            if len(out):
+    if tbl.num_rows:
+        gen, seg = tbl.column("gen").to_numpy(), tbl.column("seg").to_numpy()
+        order = np.lexsort((seg, gen))
+        g, s = gen[order], seg[order]
+        cuts = np.flatnonzero((g[1:] != g[:-1]) | (s[1:] != s[:-1])) + 1
+        for rows in np.split(order, cuts):
+            out = per_segment(tbl.take(rows))
+            if out.num_rows:
                 outs.append(out)
-    if not outs:
-        return None
-    return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+    return pa.concat_tables(outs) if outs else None
 
 
 _TOPK_SCHEMA = "doc_id long, score double"
 
 
-def _empty(schema: str) -> pd.DataFrame:
-    """A zero-row frame of DDL ``schema`` (its dtypes from the Arrow
-    schema local_relation caches for the same DDL). Driver-side only:
-    parsing a DDL needs the active session."""
-    return _schemas(schema)[1].empty_table().to_pandas()
+def _empty(schema: str):
+    """A zero-row Arrow table of DDL ``schema`` (the Arrow schema
+    local_relation caches for the same DDL). Driver-side only: parsing
+    a DDL needs the active session."""
+    return _schemas(schema)[1].empty_table()
 
 
 def _partials(unified, plan: _Plan, per_segment, schema: str, merge):
     """Run the per-segment kernels over ``unified`` (built for
     ``plan``) and return their partials merged by ``merge``
     (associative and idempotent: partials -> partials of the same
-    ``schema``) as one driver-side pandas frame, a zero-row one of
+    ``schema``) as one driver-side Arrow table, a zero-row one of
     ``schema`` when no segment produced rows.
 
     On the "local" strategy the kernels and the merge run in-process.
@@ -1125,12 +1080,12 @@ def _partials(unified, plan: _Plan, per_segment, schema: str, merge):
     Solr's distributed search. Every strategy then finishes the merged
     partials with the same code."""
     if plan.strategy == "local":
-        res = _kernel_pdf(unified, per_segment)
+        res = _by_segment(unified, per_segment)
     else:
         res = _apply_per_segment(
             unified, plan, per_segment, schema, merge
-        ).toPandas()
-    if res is None or not len(res):
+        ).toArrow()
+    if res is None or not res.num_rows:
         return _empty(schema)
     return merge(res)
 
@@ -1138,7 +1093,7 @@ def _partials(unified, plan: _Plan, per_segment, schema: str, merge):
 _FOLDS = {"sum": np.add, "min": np.minimum, "max": np.maximum}
 
 
-def _fold(res: pd.DataFrame, keys: list[str], how: dict) -> pd.DataFrame:
+def _fold(res: pa.Table, keys: list[str], how: dict) -> pa.Table:
     """Merge of count/moment partials: rows grouped by ``keys`` (one
     row for all of them when empty) in key order, each column of
     ``how`` folded with its "sum" / "min" / "max". Integer counts and
@@ -1165,10 +1120,10 @@ def _fold(res: pd.DataFrame, keys: list[str], how: dict) -> pd.DataFrame:
         acc = np.zeros(len(first), v.dtype) if f == "sum" else v[first].copy()
         _FOLDS[f].at(acc, inv, v)
         out[c] = acc
-    return pd.DataFrame(out)
+    return pa.table(out)
 
 
-def _top_per_ord(res: pd.DataFrame, limit: int) -> pd.DataFrame:
+def _top_per_ord(res: pa.Table, limit: int) -> pa.Table:
     """Merge of collapse/group partials: the best ``limit`` rows of
     each (gen, ord) under (score desc, doc_id asc); scores are already
     kernel-rounded, so every segment's winners compare exactly."""
@@ -1180,31 +1135,31 @@ def _top_per_ord(res: pd.DataFrame, limit: int) -> pd.DataFrame:
     )
     rank = np.arange(len(order)) - np.repeat(starts, np.diff(np.append(starts, len(order))))
     keep = order[rank < limit]
-    return pd.DataFrame({c: v[keep] for c, v in cols.items()})
+    return pa.table({c: v[keep] for c, v in cols.items()})
 
 
 def _topk_cut(
-    res: pd.DataFrame,
+    res: pa.Table,
     k: int,
     round_to: int,
     after: tuple[float, int] | None = None,
-) -> pd.DataFrame:
+) -> pa.Table:
     """Merge AND finish of a (doc_id, score) top-k: round (_spark_round
     IS F.round, exact HALF_UP, idempotent) -> cursor re-check -> the
     (score desc, doc_id asc) lexsort -> the first k — rows in that
     order. Internal consumers (rerank passes, handler seed exclusion)
-    use the frame as is; public surfaces convert it once (_relation)."""
-    ids = res["doc_id"].to_numpy(np.int64)
-    scores = _spark_round(res["score"].to_numpy(np.float64), round_to)
+    use the table as is; public surfaces hold it once (_relation)."""
+    ids = res["doc_id"].to_numpy()
+    scores = _spark_round(res["score"].to_numpy(), round_to)
     if after is not None:
         s_a, d_a = float(after[0]), int(after[1])
         keep = (scores < s_a) | ((scores == s_a) & (ids > d_a))
         ids, scores = ids[keep], scores[keep]
     order = np.lexsort((ids, -scores))[: min(k, len(ids))]
-    return pd.DataFrame({"doc_id": ids[order], "score": scores[order]})
+    return pa.table({"doc_id": ids[order], "score": scores[order]})
 
 
-def _relation(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
+def _relation(spark: SparkSession, out: pa.Table) -> DataFrame:
     """A surface's (doc_id, score) answer as a DataFrame: held; it
     crosses into the JVM on its first Spark use (local_relation)."""
     return local_relation(spark, out, _TOPK_SCHEMA)
@@ -1317,9 +1272,9 @@ def _stats_row(n: int, s: float, ss: float, mn: float, mx: float, round_to: int)
 def _stats_answer(spark, res, round_to: int) -> DataFrame:
     """Finish of wand_stats_search: the one merged moment row (see
     _stats_row); no row when nothing matched."""
-    if not len(res) or int(res["cnt"].iloc[0]) <= 0:
+    if not len(res) or int(res["cnt"][0].as_py()) <= 0:
         return empty_df(spark, _STATS_SCHEMA)
-    r = res.iloc[0]
+    r = res.slice(0, 1).to_pylist()[0]
     cnt, min_v, max_v, sum_v, mean, std = _stats_row(
         int(r["cnt"]), float(r["s"]), float(r["ss"]), float(r["mn"]),
         float(r["mx"]), round_to,
@@ -1340,7 +1295,7 @@ def _facet_query_counts(spark, res, names: list[str]) -> DataFrame:
     per name in ``names`` (zero counts served), rows in name order."""
     schema = "name string, cnt long"
     agg = dict.fromkeys(names, 0)
-    for nm, c in zip(res["name"], res["cnt"].to_numpy()):
+    for nm, c in zip(res["name"].to_pylist(), res["cnt"].to_numpy()):
         agg[nm] += int(c)
     names = sorted(agg)
     return local_relation(
@@ -1468,40 +1423,39 @@ def _apply_per_segment(
 ) -> DataFrame:
     """The Spark plan of a per-segment Arrow kernel over the unified
     frame, on ``plan``'s Spark strategy (_serving_plan), its outputs
-    merged per partition by ``merge`` (see _partials):
+    merged per partition by ``merge`` (see _partials) and cast to
+    ``schema``:
 
-    - "exchange": groupBy(seg).applyInPandas; the shuffle moves only
-      the term-pruned rows, and the merge is a mapInPandas in the same
-      stage as the kernels, so it adds no job.
-    - "single_stage": coalesce(1) + mapInPandas groups in-process and
-      merges — the same kernels, no exchange, one scheduling wave
-      instead of two. coalesce(1) and never coalesce(n): a segment's
-      postings and doclen rows live in different FILES, so any n > 1
-      could split a segment across partitions and score it on partial
-      inputs.
+    - "exchange": groupBy("gen", "seg").applyInArrow; the shuffle
+      moves only the term-pruned rows, and the merge is a mapInArrow
+      in the same stage as the kernels, so it adds no job.
+    - "single_stage": coalesce(1) + mapInArrow splits the rows into
+      segments in-process (_by_segment) and merges — the same kernels,
+      no exchange, one scheduling wave instead of two. coalesce(1) and
+      never coalesce(n): a segment's postings and doclen rows live in
+      different FILES, so any n > 1 could split a segment across
+      partitions and score it on partial inputs.
 
     The "local" strategy never gets here: _partials runs the same
-    kernels and the same merge in-process (_kernel_pdf)."""
+    kernels and the same merge in-process (_by_segment)."""
+    arrow_schema = _schemas(schema)[1]
+
+    def merged(batches, kernels=lambda tbl: tbl):
+        batches = [b for b in batches if b.num_rows]
+        res = kernels(pa.Table.from_batches(batches)) if batches else None
+        if res is not None and res.num_rows:
+            yield from merge(res).cast(arrow_schema).to_batches()
+
     if plan.strategy == "single_stage":
-
-        def all_segments(batches):
-            parts = [p for p in batches if len(p)]
-            res = (
-                _kernel_pdf(pd.concat(parts, ignore_index=True), per_segment)
-                if parts else None
-            )
-            if res is not None:
-                yield merge(res)
-
-        return unified.coalesce(1).mapInPandas(all_segments, schema=schema)
-    out = unified.groupBy("seg").applyInPandas(per_segment, schema=schema)
-
-    def merged(batches):
-        parts = [p for p in batches if len(p)]
-        if parts:
-            yield merge(pd.concat(parts, ignore_index=True))
-
-    return out.mapInPandas(merged, schema=schema)
+        return unified.coalesce(1).mapInArrow(
+            functools.partial(
+                merged, kernels=lambda tbl: _by_segment(tbl, per_segment)
+            ),
+            schema=schema,
+        )
+    return unified.groupBy("gen", "seg").applyInArrow(
+        lambda tbl: per_segment(tbl).cast(arrow_schema), schema=schema
+    ).mapInArrow(merged, schema=schema)
 
 
 def _decode_doclens(dl_data: bytes) -> np.ndarray:
@@ -1547,16 +1501,15 @@ def _deletes_dir(path: str) -> str:
 
 
 def _tombstones_by_seg(stream) -> dict[int, np.ndarray]:
-    """seg -> sorted unique absolute deleted doc ids from the
-    (seg, doc_lo, data) columns of a deletes stream (None = no
-    deletions)."""
+    """seg -> sorted unique absolute deleted doc ids from a deletes
+    stream table (_read_stream; None = no deletions)."""
     if stream is None:
         return {}
     out: dict[int, list] = {}
-    for seg, lo, blob in zip(*stream):
-        out.setdefault(int(seg), []).append(
-            _decode_tombstones(bytes(blob), int(lo))
-        )
+    for seg, lo, blob in zip(
+        *(stream[c].to_numpy() for c in ("seg", "doc_lo", "data"))
+    ):
+        out.setdefault(int(seg), []).append(_decode_tombstones(blob, int(lo)))
     return {
         s: np.unique(np.concatenate(parts)) for s, parts in out.items()
     }
@@ -1688,9 +1641,9 @@ def delete_by_query(
     cut = max_ids + 1
     ids = _serve(spark, SegmentIndex.load(path), query, _Collector(
         "doc_id long",
-        lambda m: pd.DataFrame({"doc_id": m.docs[:cut]}),
-        lambda res: res.head(cut),
-        lambda res: res["doc_id"].tolist(),
+        lambda m: pa.table({"doc_id": m.docs[:cut]}),
+        lambda res: res.slice(0, cut),
+        lambda res: res["doc_id"].to_pylist(),
     ), k1, b, field_segments)
     if len(ids) > max_ids:
         raise ValueError(
@@ -1699,34 +1652,6 @@ def delete_by_query(
             "corpus (or raise max_ids explicitly)"
         )
     return delete_docs(path, ids)
-
-
-def _records(
-    frame: pd.DataFrame, keys: list[str], defaults: dict | None = None
-) -> list[dict]:
-    """Rows of ``frame`` as {key: value} dicts, read column by column
-    (iterrows builds a Series per row); a key whose column is absent
-    reads as its ``defaults`` entry (None)."""
-    cols = [
-        frame[c].to_numpy() if c in frame.columns
-        else [(defaults or {}).get(c)] * len(frame)
-        for c in keys
-    ]
-    return [dict(zip(keys, vals)) for vals in zip(*cols)]
-
-
-def _deleted_from_pdf(pdf: pd.DataFrame) -> np.ndarray:
-    """Union of this segment's tombstone rows (_kind='del') — sorted
-    absolute doc ids; empty when the index has no deletions. Per-field
-    frames may stack duplicate del rows; np.unique dedups."""
-    if "_kind" not in pdf.columns:
-        return np.array([], np.int64)
-    at = np.flatnonzero(pdf["_kind"].to_numpy() == "del")
-    if len(at) == 0:
-        return np.array([], np.int64)
-    data, lo = pdf["data"].to_numpy(), pdf["doc_lo"].to_numpy()
-    parts = [_decode_tombstones(data[i], int(lo[i])) for i in at]
-    return np.unique(np.concatenate(parts))
 
 
 def _strip_deleted(
@@ -1960,17 +1885,16 @@ def _sim_scores_np(sim, tf, dl, df, n, avgdl, payload=None):
     return s
 
 
-def _topk_frame(acc_docs: np.ndarray, acc_scores: np.ndarray, k: int) -> pd.DataFrame:
+def _topk_frame(acc_docs: np.ndarray, acc_scores: np.ndarray, k: int) -> pa.Table:
     """Deterministic per-segment top-k: full (score desc, doc asc)
     lexsort, NOT argpartition — among tied scores (e.g. the score-0
     complement of a NOT query) the k chosen must be the lowest doc ids
     or the global merge diverges from the flat path's tie-break."""
-    if len(acc_docs) == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    top = min(k, len(acc_docs))
-    order = np.lexsort((acc_docs, -np.round(acc_scores, 12)))[:top]
-    return pd.DataFrame({"doc_id": acc_docs[order], "score": acc_scores[order]})
+    order = np.lexsort((acc_docs, -np.round(acc_scores, 12)))[:k]
+    return pa.table({
+        "doc_id": pa.array(acc_docs[order], pa.int64()),
+        "score": pa.array(acc_scores[order], pa.float64()),
+    })
 
 
 def _spark_round(scores: np.ndarray, rt: int) -> np.ndarray:
@@ -2192,7 +2116,7 @@ class _Match:
 
 
 def _segment_match(
-    pdf: pd.DataFrame,
+    tbl: pa.Table,
     tree,
     field_ctx: dict[str, dict],
 ) -> _Match:
@@ -2221,8 +2145,9 @@ def _segment_match(
     (_sloppy_chain_docs). Hits score the flat _phrase way: member-term
     scores summed over the decoded postings, which cover every hit.
 
+    ``tbl`` is one (gen, seg) group of the kernel input (_KERNEL_COLS).
     ``field_ctx`` maps field name -> {"dfs", "n", "avgdl", "sim"} (""
-    = default field); rows in ``pdf`` carry a matching ``fld`` tag.
+    = default field); rows in ``tbl`` carry a matching ``fld`` tag.
     FieldQuery nodes switch the scoring context to that field's
     postings/doclens/stats (the per-field index routing of the flat
     QueryCompiler, segment-local because all per-field indexes share
@@ -2238,13 +2163,18 @@ def _segment_match(
     from ..query.scorer import Similarity
 
     none = (np.array([], np.int64), np.array([], np.float64))
-    gen = int(pdf["seg"].iloc[0]) // 1_000_000
-    # one split of the segment frame by row kind: positions, not
-    # boolean-mask copies of the frame
-    kind = pdf["_kind"].to_numpy()
+    gen = tbl["gen"][0].as_py()
+    kind = tbl["_kind"].to_numpy()
 
     def rows_of(k: str, keys: list[str]) -> list[dict]:
-        return _records(pdf.iloc[np.flatnonzero(kind == k)], keys, {"fld": ""})
+        """The ``keys`` of this segment's ``k`` rows, read column by
+        column (an absent sub-stream column reads None)."""
+        part = tbl.take(np.flatnonzero(kind == k))
+        cols = [
+            part[c].to_numpy() if c in part.column_names else [None] * len(part)
+            for c in keys
+        ]
+        return [dict(zip(keys, vals)) for vals in zip(*cols)]
 
     dls_by_field: dict[str, np.ndarray] = {}
     doc_lo_by_field: dict[str, int] = {}
@@ -2264,7 +2194,12 @@ def _segment_match(
     all_docs = doc_lo + np.flatnonzero(
         (dls > 0) & (dls != TOMBSTONE)
     ).astype(np.int64)
-    deleted = _deleted_from_pdf(pdf)
+    # the union of the segment's tombstone rows; per-field parts stack
+    # duplicate del rows, np.unique dedups
+    deleted = np.unique(np.concatenate([np.array([], np.int64)] + [
+        _decode_tombstones(r["data"], int(r["doc_lo"]))
+        for r in rows_of("del", ["data", "doc_lo"])
+    ]))
 
     dvs: dict[str, np.ndarray] = {}
     dv_lo: dict[str, int] = {}
@@ -2525,7 +2460,7 @@ def _collect_topk(
     boost_fn: tuple | None = None,
     only: np.ndarray | None = None,
     after: tuple[float, int, int] | None = None,
-) -> pd.DataFrame:
+) -> pa.Table:
     """The segment's top ``k`` (doc_id, score) rows (_topk_frame),
     after the ``only`` allowlist, the boosts and the ``after`` cursor
     ((score, doc_id, round_to), _cursor_keep). With none of them a
@@ -2589,14 +2524,14 @@ def _collect_topk(
     return _topk_frame(docs, scores, k)
 
 
-def _collect_facet_query(m: _Match, trees: list) -> pd.DataFrame:
+def _collect_facet_query(m: _Match, trees: list) -> pa.Table:
     """facet.query: |main docset ∩ fq docset| per named subquery.
     The main docset is already tombstone-stripped, so the
     intersection never resurrects a deleted doc. One row per name
     ALWAYS (zero counts included — Solr serves them, and they survive
     the cross-segment sum)."""
-    return pd.DataFrame({
-        "name": [nm for nm, _ in trees],
+    return pa.table({
+        "name": pa.array([nm for nm, _ in trees], pa.string()),
         "cnt": np.array(
             [
                 np.intersect1d(m.docs, m.evaluate(t)[0], assume_unique=True).size
@@ -2607,11 +2542,11 @@ def _collect_facet_query(m: _Match, trees: list) -> pd.DataFrame:
     })
 
 
-def _collect_facet(m: _Match, col: str) -> pd.DataFrame:
+def _collect_facet(m: _Match, col: str) -> pa.Table:
     """facet.field: (gen, ord, cnt) per ordinal the match hits."""
     counts = np.bincount(m.values(col)[2])
     nz = np.flatnonzero(counts)
-    return pd.DataFrame({
+    return pa.table({
         "gen": np.full(len(nz), m.gen, np.int64),
         "ord": nz.astype(np.int64),
         "cnt": counts[nz].astype(np.int64),
@@ -2620,7 +2555,7 @@ def _collect_facet(m: _Match, col: str) -> pd.DataFrame:
 
 def _collect_range(
     m: _Match, col: str, start: float, gap: float, n_buckets: int, end: float
-) -> pd.DataFrame:
+) -> pa.Table:
     """facet.range: bucket the matched docs' numeric docvalues into
     [start + i*gap, start + (i+1)*gap); at most n_buckets (ord, cnt)
     rows, merged by sum — the ordinal-facet shape with arithmetic in
@@ -2631,7 +2566,7 @@ def _collect_range(
     ok = (buckets >= 0) & (buckets < n_buckets) & (vals < end)
     counts = np.bincount(buckets[ok], minlength=n_buckets)
     nz = np.flatnonzero(counts)
-    return pd.DataFrame(
+    return pa.table(
         {"ord": nz.astype(np.int64), "cnt": counts[nz].astype(np.int64)}
     )
 
@@ -2640,13 +2575,13 @@ _STATS_PARTIAL = "cnt long, s double, ss double, mn double, mx double"
 _TOP_PER_ORD_SCHEMA = "gen long, ord long, doc_id long, score double"
 
 
-def _collect_stats(m: _Match, col: str) -> pd.DataFrame:
+def _collect_stats(m: _Match, col: str) -> pa.Table:
     """stats (StatsComponent): one mergeable moment row per segment —
     count/sum/sum-of-squares/min/max; mean and stddev derive exactly
     at merge time. A segment without values emits the merge's
     identity (cnt 0, min +inf, max -inf)."""
     vals = m.values(col)[2].astype(np.float64)
-    return pd.DataFrame(
+    return pa.table(
         {
             "cnt": np.array([len(vals)], np.int64),
             "s": np.array([vals.sum()], np.float64),
@@ -2657,17 +2592,17 @@ def _collect_stats(m: _Match, col: str) -> pd.DataFrame:
     )
 
 
-def _collect_hist(m: _Match, col: str) -> pd.DataFrame:
+def _collect_hist(m: _Match, col: str) -> pa.Table:
     """Exact value histogram of the matched docset — (value, cnt)
     rows bounded by the segment's distinct-value count, the mergeable
     basis for exact percentiles (stats.percentiles)."""
     uniq, cnts = np.unique(m.values(col)[2], return_counts=True)
-    return pd.DataFrame(
+    return pa.table(
         {"ord": uniq.astype(np.int64), "cnt": cnts.astype(np.int64)}
     )
 
 
-def _collect_stats_facet(m: _Match, s_col: str, f_col: str) -> pd.DataFrame:
+def _collect_stats_facet(m: _Match, s_col: str, f_col: str) -> pa.Table:
     """stats.facet: the stats moment row computed PER facet ordinal —
     at most |segment facet vocab| rows, merged by (gen, ord) then by
     value upstream."""
@@ -2682,7 +2617,7 @@ def _collect_stats_facet(m: _Match, s_col: str, f_col: str) -> pd.DataFrame:
     np.minimum.at(mn, inv, vals)
     mx = np.full(len(uniq), -np.inf, np.float64)
     np.maximum.at(mx, inv, vals)
-    return pd.DataFrame(
+    return pa.table(
         {
             "gen": np.full(len(uniq), m.gen, np.int64),
             "ord": uniq.astype(np.int64),
@@ -2697,7 +2632,7 @@ def _collect_stats_facet(m: _Match, s_col: str, f_col: str) -> pd.DataFrame:
 
 def _collect_top_per_ord(
     m: _Match, col: str, limit: int, round_to: int
-) -> pd.DataFrame:
+) -> pa.Table:
     """Field collapse (CollapsingQParserPlugin) and grouping: the
     segment's best ``limit`` docs per group ordinal under
     (rounded-score desc, doc_id asc), the same total order the client
@@ -2716,7 +2651,7 @@ def _collect_top_per_ord(
         # rank within each ordinal run, keep ranks < n
         ranks = np.arange(len(o_s)) - np.repeat(first, counts)
         keep = np.flatnonzero(ranks < limit)
-    return pd.DataFrame(
+    return pa.table(
         {
             "gen": np.full(len(keep), m.gen, np.int64),
             "ord": o_s[keep].astype(np.int64),
@@ -2817,8 +2752,8 @@ def _prepare_boolean(
     ``seg_index`` may be a LIST of SegmentIndex (streamed generations
     before compaction, disjoint doc sets): dfs sum across the
     generations' sidecars, n/avgdl aggregate globally, and every
-    generation's segments stack into the one unified frame with
-    namespaced seg ids — the wand_search_multi statistics contract
+    generation's segments stack into the one kernel input under their
+    own ``gen`` tag — the wand_search_multi statistics contract
     applied to the whole boolean path. ``query`` is a query string, a
     parsed tree or a _Terms bag. A field scores with BM25 at (k1, b),
     its ``field_sims`` k1/b override (BM25 only), or, for the default
@@ -2931,18 +2866,14 @@ def _prepare_boolean(
     )
     frames = [
         _unified_frame(
-            spark, f_gens, sorted(by_field.get(fname, ())) or ["\x00none"],
-            plan, with_subs=with_subs, field=fname,
+            spark, f_gens, sorted(by_field.get(fname, ())), plan,
+            with_subs=with_subs, field=fname,
         )
         for fname, f_gens in fields
     ] + [
-        _dv_frame(
-            spark, si, col, with_subs, plan, subdir=subdir,
-            seg_offset=gen_id * 1_000_000,
-        )
+        _dv_frame(spark, gens, col, plan, subdir=subdir)
         for cols, subdir in ((dv_needed, "docvalues"), (str_cols, "docvalues_str"))
         for col in cols
-        for gen_id, si in gens
     ]
     return tree, field_ctx, _stack(frames, plan), plan
 
@@ -3002,8 +2933,8 @@ def _serve(
     # the kernels ship collect alone: finish holds the SparkSession
     collect = collector.collect
 
-    def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        return collect(_segment_match(pdf, tree, field_ctx))
+    def per_segment(tbl: pa.Table) -> pa.Table:
+        return collect(_segment_match(tbl, tree, field_ctx))
 
     return collector.finish(_partials(
         unified, plan, per_segment, collector.schema, collector.merge
@@ -3027,7 +2958,7 @@ def _topk_collector(
 ) -> _Collector:
     """The (doc_id, score) top-k collector: per-partition and driver
     merges are both the _topk_cut (so the TakeOrderedAndProject bound
-    of k rows per partition holds); finishes as the pandas answer.
+    of k rows per partition holds); finishes as the Arrow answer.
     ``boost_fn`` reads its docvalues column unless it is the intrinsic
     doc_id. ``after``: a (score, doc_id) searchAfter cursor, applied
     in each segment before its cut and again in the merge."""
@@ -3097,8 +3028,7 @@ def _boolean_top(
     field_sims: dict | None = None,
     boost_fn: tuple | None = None,
 ):
-    """wand_boolean_search's pandas answer, before it crosses into
-    the JVM."""
+    """wand_boolean_search's Arrow answer, before it is held."""
     return _serve(
         spark, seg_index, query, _topk_collector(k, round_to, boost_fn=boost_fn),
         k1, b, field_segments, field_sims,
@@ -3637,8 +3567,7 @@ def _scores_for_ids(
     field_segments: dict[str, SegmentIndex] | None = None,
     field_sims: dict | None = None,
 ):
-    """wand_scores_for_ids' pandas answer, before it crosses into the
-    JVM."""
+    """wand_scores_for_ids' Arrow answer, before it is held."""
     allow = np.unique(np.asarray([int(d) for d in doc_ids], np.int64))
     # each doc lives in one segment: a cut at |allowlist| keeps all
     return _serve(
@@ -3689,7 +3618,7 @@ def wand_rerank_search(
         )
     if k == 0:
         return empty_df(spark, _TOPK_SCHEMA)
-    # pass 1: the base top-N as a driver-side frame (bounded:
+    # pass 1: the base top-N as a driver-side table (bounded:
     # rerank_docs rows)
     base = _boolean_top(
         spark, seg_index, base_query, rerank_docs, k1, b, round_to,
@@ -3697,10 +3626,10 @@ def wand_rerank_search(
     )
     if not len(base):
         return empty_df(spark, _TOPK_SCHEMA)
-    ids = base["doc_id"].to_numpy(np.int64)
+    ids = base["doc_id"].to_numpy()
     # pass 2: the rerank tree against the N-id allowlist (bounded: at
     # most |base| rows)
-    rr_pdf = _scores_for_ids(
+    rr_top = _scores_for_ids(
         spark, seg_index, rerank_query, ids.tolist(), k1, b, round_to,
         field_segments, field_sims,
     )
@@ -3709,10 +3638,10 @@ def wand_rerank_search(
     # arithmetic over <= rerank_docs entries: rounding via _spark_round
     # == F.round (exact HALF_UP), ordering via the same (score desc,
     # doc_id asc) lexsort the packed kernels use.
-    rr = dict(zip(rr_pdf["doc_id"].tolist(), rr_pdf["score"].tolist()))
+    rr = dict(zip(rr_top["doc_id"].to_pylist(), rr_top["score"].to_pylist()))
     boost = np.array([rr.get(int(d), 0.0) for d in ids], np.float64)
     total = _spark_round(
-        base["score"].to_numpy(np.float64) + float(weight) * boost, round_to
+        base["score"].to_numpy() + float(weight) * boost, round_to
     )
     order = np.lexsort((ids, -total))[: min(k, len(ids))]
     return local_relation(
@@ -3780,21 +3709,12 @@ def compact_packed(
                 arr if prev is None else np.unique(np.concatenate([prev, arr]))
             )
 
-    posts = None
-    dls = None
-    for si in seg_indexes:
-        p = spark.read.option(
-            "basePath", os.path.join(si.path, "postings")
-        ).schema(POSTINGS_SCHEMA + ", group int").parquet(
-            os.path.join(si.path, "postings")
-        )
-        d = spark.read.option(
-            "basePath", os.path.join(si.path, "doclens")
-        ).schema(DOCLEN_SCHEMA + ", group int").parquet(
-            os.path.join(si.path, "doclens")
-        )
-        posts = p if posts is None else posts.unionByName(p)
-        dls = d if dls is None else dls.unionByName(d)
+    posts, dls = (
+        functools.reduce(DataFrame.unionByName, [
+            _scan(spark, si.path, rel, schema) for si in seg_indexes
+        ])
+        for rel, schema in (("postings", POSTINGS_SCHEMA), ("doclens", DOCLEN_SCHEMA))
+    )
 
     if del_by_seg:
         # Lucene merge semantics: the compacted index's stats count
@@ -3916,28 +3836,8 @@ def compact_packed(
                     pays = pays[keep]
                 if len(docs) == 0:
                     continue
-            data, block_last, block_max, block_off = encode_postings(docs, tfs)
-            pos_off = pos_data = pay_data = None
-            if pos_lists is not None:
-                pos_data, po = encode_positions(pos_lists, tfs)
-                pos_off = po.tolist()
-            if pays is not None:
-                pay_data = encode_payloads(pays)
-            rows.append(
-                (
-                    int(seg), term, len(docs), int(tfs.sum()),
-                    block_last.tolist(), block_max.tolist(),
-                    block_off.tolist(), data, pos_off, pos_data, pay_data,
-                )
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "seg", "term", "df", "cf",
-                "block_last", "block_max", "block_off", "data",
-                "pos_off", "pos_data", "pay_data",
-            ],
-        )
+            rows.append(_postings_row(seg, term, docs, tfs, pos_lists, pays))
+        return pd.DataFrame(rows, columns=_POSTINGS_COLS)
 
     n_segments = max(
         int(np.ceil(n_docs_space / seg_size)),
@@ -4100,33 +4000,16 @@ def compact_packed(
                 # sentinel in the dense streams is what keeps match-all
                 # / range / facet from resurrecting the doc
                 dense[idx] = TOMBSTONE
-            return pd.DataFrame(
-                {
-                    "seg": [seg],
-                    "doc_lo": [d_lo],
-                    "n": [n],
-                    "dl_data": [varint_encode(dense.astype(np.uint64)).tobytes()],
-                }
-            )
+            return _dense_row(seg, d_lo, dense)
 
         return merge_dense
 
     def _dv_streams(col: str, subdir: str) -> DataFrame:
-        out = None
-        for gi, si in enumerate(seg_indexes):
-            base = (
-                os.path.join(si.path, subdir, col)
-                if subdir == "docvalues"
-                else os.path.join(si.path, subdir, col, "streams")
-            )
-            d = (
-                spark.read.option("basePath", base)
-                .schema(DOCLEN_SCHEMA + ", group int")
-                .parquet(base)
-                .withColumn("gen", F.lit(gi))
-            )
-            out = d if out is None else out.unionByName(d)
-        return out
+        return functools.reduce(DataFrame.unionByName, [
+            _scan(spark, si.path, _dv_rel(col, subdir), DOCLEN_SCHEMA)
+            .withColumn("gen", F.lit(gi))
+            for gi, si in enumerate(seg_indexes)
+        ])
 
     for g in range(groups):
         if g in m["completed_groups"]:
@@ -4241,14 +4124,9 @@ def compact_packed(
             # deletions changed df: re-derive the sidecar from the
             # purged postings metadata (term, df, cf) — one
             # column-pruned job; only runs when tombstones were purged
-            merged_terms = (
-                spark.read.option(
-                    "basePath", os.path.join(out_path, "postings")
-                )
-                .schema(POSTINGS_SCHEMA + ", group int")
-                .parquet(os.path.join(out_path, "postings"))
-                .select("term", "df", "cf")
-            )
+            merged_terms = _scan(
+                spark, out_path, "postings", POSTINGS_SCHEMA
+            ).select("term", "df", "cf")
         else:
             # merged termstats sidecar: per-generation sidecars are
             # global for their generation; df/cf are additive over
@@ -4338,7 +4216,7 @@ def wand_search_multi(
 
     Generations hold disjoint doc sets, so df sums and avgdl is the
     token-weighted mean; each generation's segments are scored
-    independently (seg ids namespaced per generation) and the k-row
+    independently (each under its own gen tag) and the k-row
     partials merge globally. Results equal a compacted/batch index
     (tests/test_streaming_payloads.py) — querying never has to wait
     for compaction.
@@ -4461,44 +4339,35 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _scan(spark: SparkSession, si: SegmentIndex, rel: str, schema: str):
-    """One hive-partitioned stream directory of ``si`` as a Spark scan.
-    Explicit schemas: the layout is fixed by the codec, and schema
-    inference would cost a footer-read job per query."""
-    base = os.path.join(si.path, rel)
-    return spark.read.option("basePath", base).schema(schema).parquet(base)
+def _scan(spark: SparkSession, path: str, rel: str, schema: str):
+    """One (group=, seg=) hive-partitioned stream directory of the
+    index at ``path`` as a Spark scan of codec ``schema``. Explicit
+    schemas: the layout is fixed by the codec, and schema inference
+    would cost a footer-read job per query."""
+    base = os.path.join(path, rel)
+    return (
+        spark.read.option("basePath", base).schema(schema + ", group int")
+        .parquet(base)
+    )
 
 
-_NULL_POSTING_COLS = (
-    "CAST(NULL AS bigint) AS df",
-    "CAST(NULL AS array<bigint>) AS block_last",
-    "CAST(NULL AS array<int>) AS block_max",
-    "CAST(NULL AS array<bigint>) AS block_off",
-)
-_NULL_SUB_COLS = (
-    "CAST(NULL AS array<bigint>) AS pos_off",
-    "CAST(NULL AS binary) AS pos_data",
-    "CAST(NULL AS binary) AS pay_data",
-)
+def _tags(gen: int, kind: str, field: str) -> tuple:
+    """The gen, seg, _kind and fld columns of a Spark kernel-input part."""
+    return (
+        f"CAST({int(gen)} AS bigint) AS gen", "seg",
+        f"{_sql_str(kind)} AS _kind", f"{_sql_str(field)} AS fld",
+    )
 
 
-def _stream_rows(
-    stream, kind: str, field: str, term: str | None, seg_offset: int,
-    with_subs: bool,
-):
-    """A dense per-segment stream (doclens, deletes, docvalues) as
-    unified-frame rows, in ONE selectExpr: ``seg_offset`` namespaces
-    seg ids per generation, ``term`` tags docvalues rows with their
-    column (NULL otherwise)."""
+def _stream_rows(stream, gen: int, kind: str, field: str, term: str | None = None):
+    """A dense per-segment stream (doclens, deletes, docvalues) as a
+    Spark kernel-input part, in ONE selectExpr; ``term`` tags
+    docvalues rows with their column."""
     return stream.selectExpr(
-        f"seg + {int(seg_offset)} AS seg",
-        f"{_sql_str(kind)} AS _kind",
-        f"{_sql_str(field)} AS fld",
-        ("CAST(NULL AS string)" if term is None else _sql_str(term)) + " AS term",
-        *_NULL_POSTING_COLS,
+        *_tags(gen, kind, field),
+        *(() if term is None else (f"{_sql_str(term)} AS term",)),
         "doc_lo",
         "dl_data AS data",
-        *(_NULL_SUB_COLS if with_subs else ()),
     )
 
 
@@ -4510,9 +4379,12 @@ def _unified_frame(
     with_subs: bool = False,
     field: str = "",
 ):
-    """Postings (term-pruned scan) + doclen rows stacked into one frame
-    keyed by seg, for a single per-segment kernel stage. ``with_subs``
-    adds the v3 positions/payload sub-stream columns (left out of the
+    """Postings (term-pruned scan) + doclen rows of every generation,
+    stacked into one kernel input keyed by (gen, seg) (_stack): an
+    Arrow table from each index's reader on ``plan``'s "local"
+    strategy, else a Spark frame of the same rows — the postings read
+    is the only per-query I/O on the local tier. ``with_subs`` adds
+    the v3 positions/payload sub-stream columns (left out of the
     plain-BM25 scan so parquet column pruning skips those bytes).
     ``field`` tags every row (fld column) so per-field packed indexes
     over the SAME doc space can stack into one frame — same seg covers
@@ -4520,34 +4392,44 @@ def _unified_frame(
     (wand_boolean_search field_segments). Tombstone streams
     (delete_docs) ride the same frame as _kind='del' rows, so every
     kernel sees its segment's deletions in the same Arrow group.
-
-    Each part is one scan and one selectExpr (a handful of JVM round
-    trips, not one per column). On ``plan``'s "local" strategy it is
-    the pandas twin assembled driver-side (_unified_pdf)."""
+    Postings files are (seg, term)-sorted, so both tiers hand a
+    segment its rows in the same order."""
+    # an empty isin (pyarrow) or IN list (Spark SQL) does not bind:
+    # match nothing instead
+    term_list = term_list or ["\x00none"]
+    post_cols = [
+        "term", "df", "block_last", "block_max", "block_off", "data",
+    ] + (_SUB_COLS if with_subs else [])
     if plan.strategy == "local":
-        return _unified_pdf(gens, term_list, with_subs=with_subs, field=field)
-    # an empty IN list does not parse: match nothing instead
-    in_terms = "term IN (" + ", ".join(
-        _sql_str(t) for t in term_list or ["\x00none"]
-    ) + ")"
+        import pyarrow.dataset as ds
+
+        parts = [
+            _tagged(
+                si.reader(check=False).dataset("postings").to_table(
+                    columns=["seg"] + post_cols,
+                    filter=ds.field("term").isin(term_list),
+                ),
+                gen_id, "post", field,
+            )
+            for gen_id, si in gens
+        ]
+        parts += [
+            _tagged(st, gen_id, kind, field)
+            for kind, rel in (("dl", "doclens"), ("del", "deletes"))
+            for gen_id, si in gens
+            if (st := si.reader(check=False).stream(rel)) is not None
+        ]
+        return _stack(parts, plan)
+    in_terms = "term IN (" + ", ".join(_sql_str(t) for t in term_list) + ")"
     parts = [
-        _scan(spark, si, "postings", POSTINGS_SCHEMA + ", group int")
+        _scan(spark, si.path, "postings", POSTINGS_SCHEMA)
         .filter(in_terms)
-        .selectExpr(
-            f"seg + {gen_id * 1_000_000} AS seg",
-            "'post' AS _kind",
-            f"{_sql_str(field)} AS fld",
-            "term", "df", "block_last", "block_max", "block_off",
-            "CAST(NULL AS bigint) AS doc_lo",
-            "data",
-            *(_SUB_COLS if with_subs else ()),
-        )
+        .selectExpr(*_tags(gen_id, "post", field), *post_cols)
         for gen_id, si in gens
     ]
     parts += [
         _stream_rows(
-            _scan(spark, si, "doclens", DOCLEN_SCHEMA + ", group int"),
-            "dl", field, None, gen_id * 1_000_000, with_subs,
+            _scan(spark, si.path, "doclens", DOCLEN_SCHEMA), gen_id, "dl", field
         )
         for gen_id, si in gens
     ]
@@ -4556,36 +4438,38 @@ def _unified_frame(
     parts += [
         _stream_rows(
             spark.read.schema(DOCLEN_SCHEMA).parquet(_deletes_dir(si.path)),
-            "del", field, None, gen_id * 1_000_000, with_subs,
+            gen_id, "del", field,
         )
         for gen_id, si in gens
         if os.path.isdir(_deletes_dir(si.path))
     ]
-    return functools.reduce(DataFrame.unionByName, parts)
+    return _stack(parts, plan)
 
 
 def _dv_frame(
     spark: SparkSession,
-    si: SegmentIndex,
+    gens: list[tuple[int, SegmentIndex]],
     col: str,
-    with_subs: bool,
     plan: _Plan,
     subdir: str = "docvalues",
-    seg_offset: int = 0,
 ):
-    """Docvalues rows for one numeric/ordinal column, shaped like the
-    unified frame (_kind='dv', term=column name, data=varint dense
-    stream). ``seg_offset`` namespaces seg ids per generation, matching
-    _unified_frame's gen_id*1e6 scheme. On ``plan``'s "local" strategy
-    it is the pandas twin (_dv_pdf)."""
+    """Kernel-input rows of one numeric/ordinal docvalues column in
+    every generation (_kind='dv', term=column name, data=varint dense
+    stream), from each index's reader on ``plan``'s "local" strategy,
+    else from a Spark scan."""
+    rel = _dv_rel(col, subdir)
     if plan.strategy == "local":
-        return _dv_pdf(
-            si, col, with_subs, subdir=subdir, seg_offset=seg_offset
-        )
-    return _stream_rows(
-        _scan(spark, si, _dv_rel(col, subdir), DOCLEN_SCHEMA + ", group int"),
-        "dv", "", col, seg_offset, with_subs,
-    )
+        parts = []
+        for gen_id, si in gens:
+            st = si.reader(check=False).stream(rel)
+            if st is None:
+                raise FileNotFoundError(f"no {rel!r} stream under {si.path!r}")
+            parts.append(_tagged(st, gen_id, "dv", "", term=col))
+        return _stack(parts, plan)
+    return _stack([
+        _stream_rows(_scan(spark, si.path, rel, DOCLEN_SCHEMA), gen_id, "dv", "", col)
+        for gen_id, si in gens
+    ], plan)
 
 
 def describe_index(path: str) -> dict:

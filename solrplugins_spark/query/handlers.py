@@ -14,6 +14,8 @@ multiplicatively AFTER clause scoring, exactly like BoostedQuery.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -228,8 +230,8 @@ def packed_select_handler(
     from ..index.segments import (
         _TOPK_SCHEMA,
         _boolean_top,
+        _docstore_read,
         _relation,
-        fetch_docs_local,
         wand_facet_query_search,
         wand_facet_search,
         wand_stats_facet_search,
@@ -237,19 +239,24 @@ def packed_select_handler(
     )
 
     first = seg_index[0] if isinstance(seg_index, (list, tuple)) else seg_index
-    # the k-row page is a driver-side frame on both tiers
+    # the k-row page is a driver-side Arrow table on both tiers
     page = _boolean_top(
         spark, seg_index, query, k, k1=k1, b=b,
         field_segments=field_segments, field_sims=field_sims,
     )
-    ids = page["doc_id"].tolist()
+    ids = page["doc_id"].to_pylist()
     if with_stored and first.store_cols and ids:
-        # merge the stored fields via a DRIVER-SIDE docstore point read
-        # — zero further Spark jobs; the caller's collect serves from a
-        # local frame
-        stored = fetch_docs_local(seg_index, ids)
-        merged = page.merge(stored, on="doc_id", how="left").sort_values(
-            ["score", "doc_id"], ascending=[False, True]
+        # attach the stored fields, in page order, from a DRIVER-SIDE
+        # docstore point read — zero further Spark jobs; the caller's
+        # collect serves from the held table
+        stored = _docstore_read(seg_index, ids)
+        at = {d: i for i, d in enumerate(stored["doc_id"].to_pylist())}
+        fields = stored.drop_columns(["doc_id"]).take(
+            pa.array([at.get(d) for d in ids], pa.int64())
+        )
+        merged = pa.Table.from_arrays(
+            page.columns + fields.columns,
+            names=page.column_names + fields.column_names,
         )
         if first.store_schema:
             docs = local_relation(spark, merged, StructType(
@@ -420,9 +427,7 @@ def packed_mlt_handler(
             )
         seed_doc_ids = [
             _seed_at_offset(
-                lambda q, k: _boolean_top(spark, seg_index, q, k).to_dict(
-                    "records"
-                ),
+                lambda q, k: _boolean_top(spark, seg_index, q, k).to_pylist(),
                 match_query,
                 match_offset,
             )
@@ -447,10 +452,11 @@ def packed_mlt_handler(
         _topk_collector(k + len(seed_ids) if k else 0, 5, boost_fn=boost_fn),
     )
     # the answer is a pre-sorted (score desc, doc_id asc) driver-side
-    # frame of <= k+|seeds| rows on both tiers: the seed-exclusion +
-    # re-top-k tail is a mask and a slice, and the page is held on the
-    # driver (it crosses into the JVM only on a Spark use)
-    hits = top[~top["doc_id"].isin(seed_ids)].head(k)
+    # Arrow table of <= k+|seeds| rows on both tiers: the
+    # seed-exclusion + re-top-k tail is a mask and a slice, and the
+    # page is held on the driver (it crosses into the JVM only on a
+    # Spark use)
+    hits = top.filter(~np.isin(top["doc_id"].to_numpy(), seed_ids)).slice(0, k)
     out: dict[str, DataFrame] = {
         "docs": _relation(spark, hits), "interesting_terms": terms,
     }
@@ -464,7 +470,7 @@ def packed_mlt_handler(
         # facets count over the RESULT page (DiceMoreLikeThisHandler
         # .java:263-271): k rows — one DRIVER-SIDE docstore point read
         # covers all requested fields, zero Spark jobs
-        ids = hits["doc_id"].tolist()
+        ids = hits["doc_id"].to_pylist()
         page = fetch_docs_local(seg_index, ids, columns=list(facet_fields))
         # facet column types come from the docstore's recorded DDL —
         # inference would fail on an all-NULL page column and would
@@ -506,9 +512,9 @@ def packed_feedback_handler(
         wand_boolean_search,
     )
 
-    # the seed page is a driver-side frame on both tiers
+    # the seed page is a driver-side Arrow table on both tiers
     seeds = _boolean_top(spark, seg_index, query, max_seed_docs)
-    seed_ids = seeds["doc_id"].tolist()
+    seed_ids = seeds["doc_id"].to_pylist()
     queue = _packed_interesting_terms(
         spark, seg_index, seed_ids, params, text_col, tok_kwargs=tok_kwargs
     )

@@ -8,6 +8,7 @@ which collects driver-side with zero jobs."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from conftest import count_jobs, tier
 
@@ -95,15 +96,15 @@ def test_empty_df_matches_old_after_union(spark):
 
 def test_known_empty_answer_stays_driver_side_on_both_tiers(spark, eseg, monkeypatch):
     """An all-unknown-term expansion is answered before any frame is
-    read, as a driver-side frame on either tier — so the /mlt tail
-    over it (seed exclusion, re-top-k) schedules no Spark job."""
+    read, as a driver-side Arrow table on either tier — so the /mlt
+    tail over it (seed exclusion, re-top-k) schedules no Spark job."""
     for budget in (None, 0):
         tier(monkeypatch, budget)
         top = S._serve(
             spark, eseg, S._Terms.of([("xxnosuchtermxx", 1.0)]),
             S._topk_collector(10, 5),
         )
-        assert isinstance(top, pd.DataFrame) and top.empty
+        assert isinstance(top, pa.Table) and top.num_rows == 0
 
 
 def test_local_relation_fallback_warns_once(spark, monkeypatch):

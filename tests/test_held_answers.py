@@ -324,3 +324,33 @@ def test_local_tier_requests_make_no_py4j_call(spark, served, monkeypatch):
     for name, call in served.items():
         assert call().collect() is not None  # warm: reader, schemas
         assert py4j_calls(lambda: call().collect()) == 0, name
+
+
+def test_local_tier_requests_build_no_pandas_frame(spark, served, monkeypatch):
+    """On the local tier, a warm request of every collector
+    perfbench/stream.py serves reads, matches, merges and finishes in
+    Arrow: no pandas frame is built and none is concatenated."""
+    tier(monkeypatch, None)
+    made = Counter()
+    real_init, real_concat = pd.DataFrame.__init__, pd.concat
+
+    def init(self, *args, **kwargs):
+        made["DataFrame"] += 1
+        real_init(self, *args, **kwargs)
+
+    def concat(*args, **kwargs):
+        made["concat"] += 1
+        return real_concat(*args, **kwargs)
+
+    names = ["bag", "cursor", "phrase", "rerank", "boolean", "facet", "collapse",
+             "range", "stats", "facet_query", "stats_facet"]
+    for name in names:
+        served[name]().collect()  # warm: reader, schemas
+        monkeypatch.setattr(pd.DataFrame, "__init__", init)
+        monkeypatch.setattr(pd, "concat", concat)
+        try:
+            served[name]().collect()
+        finally:
+            monkeypatch.setattr(pd.DataFrame, "__init__", real_init)
+            monkeypatch.setattr(pd, "concat", real_concat)
+        assert not made, (name, dict(made))

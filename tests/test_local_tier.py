@@ -284,9 +284,14 @@ def test_facet_family_rows_identical_on_every_path(
 def test_merges_match_pandas_reference():
     """The numpy merges every tier shares (_fold, _top_per_ord) equal
     the plain pandas groupby they stand for, row for row, on random
-    partials (repeated keys, tied scores, string keys)."""
+    partials (repeated keys, tied scores, string keys): the Arrow
+    partials they merge, read back with to_pandas."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+
+    def arrow(pdf):
+        return pa.Table.from_pandas(pdf, preserve_index=False)
 
     rng = np.random.default_rng(7)
 
@@ -319,13 +324,13 @@ def test_merges_match_pandas_reference():
             (["gen", "ord"], S._MOMENTS), (["ord"], {"cnt": "sum"}), ([], S._MOMENTS),
         ):
             pd.testing.assert_frame_equal(
-                S._fold(part[keys + list(how)], keys, how),
+                S._fold(arrow(part[keys + list(how)]), keys, how).to_pandas(),
                 fold_ref(part[keys + list(how)], keys, how),
             )
         names = pd.DataFrame({"name": rng.choice(["b", "a", "c"], n).astype(object),
                               "cnt": ints(9)})
         pd.testing.assert_frame_equal(
-            S._fold(names, ["name"], {"cnt": "sum"}),
+            S._fold(arrow(names), ["name"], {"cnt": "sum"}).to_pandas(),
             fold_ref(names, ["name"], {"cnt": "sum"}),
         )
         wins = pd.DataFrame({"gen": ints(2), "ord": ints(4),
@@ -333,7 +338,7 @@ def test_merges_match_pandas_reference():
                              "score": ints(4).astype(np.float64)})
         for limit in (1, 2, 3):
             pd.testing.assert_frame_equal(
-                S._top_per_ord(wins, limit), top_ref(wins, limit)
+                S._top_per_ord(arrow(wins), limit).to_pandas(), top_ref(wins, limit)
             )
 
 

@@ -962,9 +962,9 @@ def test_single_stage_strategy_parity_and_plan(
     assert np.allclose(local["score"], exchanged["score"], atol=1e-12)
 
 
-_UNIFIED_FIELDS = [
-    ("seg", "int", True), ("_kind", "string", False), ("fld", "string", False),
-    ("term", "string", True), ("df", "bigint", True),
+_KERNEL_FIELDS = [
+    ("gen", "bigint", False), ("seg", "int", True), ("_kind", "string", False),
+    ("fld", "string", False), ("term", "string", True), ("df", "bigint", True),
     ("block_last", "array<bigint>", True), ("block_max", "array<int>", True),
     ("block_off", "array<bigint>", True), ("doc_lo", "bigint", True),
     ("data", "binary", True),
@@ -979,31 +979,25 @@ def _fields(df) -> list:
     return [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
 
 
-def _canon_rows(pdf) -> list:
-    """Rows of a unified frame comparable across Spark (toPandas) and
-    pyarrow assembly: NULL/NaN -> None, arrays -> tuples, numbers ->
-    int, sorted."""
+def _canon_rows(tbl) -> list:
+    """Rows of a kernel-input Arrow table, comparable across the Spark
+    strategies (toArrow) and the local tier: arrays -> tuples,
+    sorted."""
 
     def canon(v):
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            return None
-        if isinstance(v, (bytes, bytearray, memoryview)):
-            return bytes(v)
-        if isinstance(v, (list, tuple, np.ndarray)):
-            return tuple(int(x) for x in v)
-        if isinstance(v, (int, float, np.integer, np.floating)):
-            return int(v)
-        return v
+        return tuple(v) if isinstance(v, list) else v
 
-    rows = [tuple(canon(v) for v in r) for r in pdf.itertuples(index=False)]
-    return sorted(rows, key=repr)
+    cols = [tbl[c].to_pylist() for c in tbl.column_names]
+    return sorted((tuple(canon(v) for v in r) for r in zip(*cols)), key=repr)
 
 
-def test_spark_unified_frame_schema_and_rows(spark, pos_index, tiny_corpus_pd, tmp_path):
-    """_unified_frame / _dv_frame keep their column types and
-    nullability (pinned below) and serve exactly the rows the local
-    tier assembles with pyarrow — across two generations, a field tag,
-    a tombstone stream and the positions sub-streams."""
+def test_spark_kernel_input_matches_local(spark, pos_index, tiny_corpus_pd, tmp_path):
+    """The Arrow table the Spark strategies hand the kernels (the
+    stacked frame as toArrow reads it, the rows applyInArrow groups)
+    keeps its column types and nullability (pinned below) and has the
+    local tier's columns, Arrow types and rows for the same request —
+    across two generations, a field tag, a tombstone stream, numeric
+    and ordinal docvalues and the positions sub-streams."""
     from solrplugins_spark.index import segments as segmod
 
     seg = build_segments(
@@ -1014,27 +1008,24 @@ def test_spark_unified_frame_schema_and_rows(spark, pos_index, tiny_corpus_pd, t
     seg = segmod.SegmentIndex.load(seg.path)
     gens = [(0, seg), (1, seg)]
     terms = _corpus_terms(tiny_corpus_pd, n=2) + ["it's \\ a \"quoted\" term"]
-    spark_plan = segmod._Plan("exchange", None)
+
+    def kernel_input(plan, subs):
+        return segmod._stack([
+            segmod._unified_frame(spark, gens, terms, plan, with_subs=subs, field="f"),
+            segmod._dv_frame(spark, gens, "turn_idx", plan),
+            segmod._dv_frame(spark, gens, "role", plan, subdir="docvalues_str"),
+        ], plan)
+
     for subs in (False, True):
-        want = _UNIFIED_FIELDS + (_SUB_FIELDS if subs else [])
-        u = segmod._unified_frame(
-            spark, gens, terms, spark_plan, with_subs=subs, field="f"
-        )
-        assert _fields(u) == want
-        assert set(u.toPandas()["_kind"]) == {"post", "dl", "del"}
-        assert _canon_rows(u.toPandas()) == _canon_rows(
-            segmod._unified_pdf(gens, terms, with_subs=subs, field="f")
-        )
-        dv_want = [("term", "string", False) if f[0] == "term" else f for f in want]
-        for col, subdir in (("turn_idx", "docvalues"), ("role", "docvalues_str")):
-            d = segmod._dv_frame(
-                spark, seg, col, subs, spark_plan, subdir=subdir,
-                seg_offset=1_000_000,
-            )
-            assert _fields(d) == dv_want
-            assert _canon_rows(d.toPandas()) == _canon_rows(
-                segmod._dv_pdf(seg, col, subs, subdir=subdir, seg_offset=1_000_000)
-            )
+        u = kernel_input(segmod._Plan("exchange", None), subs)
+        assert _fields(u) == _KERNEL_FIELDS + (_SUB_FIELDS if subs else [])
+        spark_tbl = u.toArrow()
+        local = kernel_input(segmod._Plan("local", None), subs)
+        assert local.column_names == spark_tbl.column_names == [f[0] for f in _fields(u)]
+        assert local.schema.types == spark_tbl.schema.types
+        assert set(local["_kind"].to_pylist()) == {"post", "dl", "del", "dv"}
+        assert set(local["gen"].to_pylist()) == {0, 1}
+        assert _canon_rows(spark_tbl) == _canon_rows(local)
 
 
 def test_exchange_strategy_parity_all_surfaces(
