@@ -1048,8 +1048,10 @@ def _by_segment(tbl, per_segment):
         order = np.lexsort((seg, gen))
         g, s = gen[order], seg[order]
         cuts = np.flatnonzero((g[1:] != g[:-1]) | (s[1:] != s[:-1])) + 1
-        for rows in np.split(order, cuts):
-            out = per_segment(tbl.take(rows))
+        # one group (the common single-segment request) needs no take
+        groups = [tbl] if not len(cuts) else map(tbl.take, np.split(order, cuts))
+        for group in groups:
+            out = per_segment(group)
             if out.num_rows:
                 outs.append(out)
     return pa.concat_tables(outs) if outs else None
@@ -2169,7 +2171,9 @@ def _segment_match(
     def rows_of(k: str, keys: list[str]) -> list[dict]:
         """The ``keys`` of this segment's ``k`` rows, read column by
         column (an absent sub-stream column reads None)."""
-        part = tbl.take(np.flatnonzero(kind == k))
+        part = tbl.select(
+            [c for c in keys if c in tbl.column_names]
+        ).take(np.flatnonzero(kind == k))
         cols = [
             part[c].to_numpy() if c in part.column_names else [None] * len(part)
             for c in keys
@@ -2826,7 +2830,10 @@ def _prepare_boolean(
             # a pre-sidecar index: one postings-metadata job sums the
             # field's dfs (no estimate, so the plan is a Spark one)
             rows = (
-                _unified_frame(spark, f_gens, f_terms, _Plan("exchange", None))
+                _stack(
+                    _unified_parts(spark, f_gens, f_terms, _Plan("exchange", None)),
+                    _Plan("exchange", None),
+                )
                 .filter(F.col("_kind") == "post")
                 .groupBy("term").agg(F.sum("df").alias("df")).collect()
             )
@@ -2864,18 +2871,20 @@ def _prepare_boolean(
     plan = _serving_plan(
         local_pairs, with_subs, local_streams, stats_list=pair_stats
     )
-    frames = [
-        _unified_frame(
+    parts = [
+        part
+        for fname, f_gens in fields
+        for part in _unified_parts(
             spark, f_gens, sorted(by_field.get(fname, ())), plan,
             with_subs=with_subs, field=fname,
         )
-        for fname, f_gens in fields
     ] + [
-        _dv_frame(spark, gens, col, plan, subdir=subdir)
+        part
         for cols, subdir in ((dv_needed, "docvalues"), (str_cols, "docvalues_str"))
         for col in cols
+        for part in _dv_parts(spark, gens, col, plan, subdir=subdir)
     ]
-    return tree, field_ctx, _stack(frames, plan), plan
+    return tree, field_ctx, _stack(parts, plan), plan
 
 
 @dataclass(frozen=True)
@@ -4371,7 +4380,7 @@ def _stream_rows(stream, gen: int, kind: str, field: str, term: str | None = Non
     )
 
 
-def _unified_frame(
+def _unified_parts(
     spark: SparkSession,
     gens: list[tuple[int, SegmentIndex]],
     term_list: list[str],
@@ -4379,10 +4388,10 @@ def _unified_frame(
     with_subs: bool = False,
     field: str = "",
 ):
-    """Postings (term-pruned scan) + doclen rows of every generation,
-    stacked into one kernel input keyed by (gen, seg) (_stack): an
-    Arrow table from each index's reader on ``plan``'s "local"
-    strategy, else a Spark frame of the same rows — the postings read
+    """Kernel-input parts (_stack stacks them, keyed by (gen, seg)):
+    postings (term-pruned scan) + doclen rows of every generation, as
+    Arrow tables from each index's reader on ``plan``'s "local"
+    strategy, else as Spark frames of the same rows — the postings read
     is the only per-query I/O on the local tier. ``with_subs`` adds
     the v3 positions/payload sub-stream columns (left out of the
     plain-BM25 scan so parquet column pruning skips those bytes).
@@ -4419,7 +4428,7 @@ def _unified_frame(
             for gen_id, si in gens
             if (st := si.reader(check=False).stream(rel)) is not None
         ]
-        return _stack(parts, plan)
+        return parts
     in_terms = "term IN (" + ", ".join(_sql_str(t) for t in term_list) + ")"
     parts = [
         _scan(spark, si.path, "postings", POSTINGS_SCHEMA)
@@ -4443,17 +4452,17 @@ def _unified_frame(
         for gen_id, si in gens
         if os.path.isdir(_deletes_dir(si.path))
     ]
-    return _stack(parts, plan)
+    return parts
 
 
-def _dv_frame(
+def _dv_parts(
     spark: SparkSession,
     gens: list[tuple[int, SegmentIndex]],
     col: str,
     plan: _Plan,
     subdir: str = "docvalues",
 ):
-    """Kernel-input rows of one numeric/ordinal docvalues column in
+    """Kernel-input parts of one numeric/ordinal docvalues column in
     every generation (_kind='dv', term=column name, data=varint dense
     stream), from each index's reader on ``plan``'s "local" strategy,
     else from a Spark scan."""
@@ -4465,11 +4474,11 @@ def _dv_frame(
             if st is None:
                 raise FileNotFoundError(f"no {rel!r} stream under {si.path!r}")
             parts.append(_tagged(st, gen_id, "dv", "", term=col))
-        return _stack(parts, plan)
-    return _stack([
+        return parts
+    return [
         _stream_rows(_scan(spark, si.path, rel, DOCLEN_SCHEMA), gen_id, "dv", "", col)
         for gen_id, si in gens
-    ], plan)
+    ]
 
 
 def describe_index(path: str) -> dict:

@@ -945,7 +945,9 @@ def test_single_stage_strategy_parity_and_plan(
     single = out["df"].toPandas()
     # the kernels' input and stage: term filter pushed to parquet;
     # scan -> coalesce(1) -> mapInPandas with zero exchanges
-    unified = segmod._unified_frame(spark, [(0, pos_segments)], pairs[0][1], serving)
+    unified = segmod._stack(
+        segmod._unified_parts(spark, [(0, pos_segments)], pairs[0][1], serving), serving
+    )
     assert "PushedFilters: [In(term" in plan_of(unified), plan_of(unified)
     stage = segmod._apply_per_segment(
         unified, serving, lambda pdf: pdf, "seg int", merge=lambda res: res
@@ -1010,11 +1012,12 @@ def test_spark_kernel_input_matches_local(spark, pos_index, tiny_corpus_pd, tmp_
     terms = _corpus_terms(tiny_corpus_pd, n=2) + ["it's \\ a \"quoted\" term"]
 
     def kernel_input(plan, subs):
-        return segmod._stack([
-            segmod._unified_frame(spark, gens, terms, plan, with_subs=subs, field="f"),
-            segmod._dv_frame(spark, gens, "turn_idx", plan),
-            segmod._dv_frame(spark, gens, "role", plan, subdir="docvalues_str"),
-        ], plan)
+        return segmod._stack(
+            segmod._unified_parts(spark, gens, terms, plan, with_subs=subs, field="f")
+            + segmod._dv_parts(spark, gens, "turn_idx", plan)
+            + segmod._dv_parts(spark, gens, "role", plan, subdir="docvalues_str"),
+            plan,
+        )
 
     for subs in (False, True):
         u = kernel_input(segmod._Plan("exchange", None), subs)
